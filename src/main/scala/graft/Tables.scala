@@ -11,36 +11,25 @@ import org.apache.spark.sql.functions._
   * partitioned-directory scans; nothing here assumes a single file.
   */
 object Tables {
-  val names: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
-  private val cachedTables =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-
-  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
-    cachedTables.get((dir, name)).getOrElse {
-      if (name == "events") events(spark, dir)
-      else spark.read.parquet(s"$dir/$name.parquet")
-    }
-  }
-
-  /** Pin the scalar-typed star-schema tables for a dir in executor
-    * memory (Bench-time opt-in; SURVEY.md §6 "reuse a cached base
+  /** The scalar-typed star-schema tables — the only tables [[table]]
+    * memoizes with [[Memo]] on (SURVEY.md §6 "reuse a cached base
     * DataFrame per table"). documents/embeddings/events stay on the
     * vectorized parquet reader: deserializing array/text columns out
     * of the in-memory cache measured SLOWER than re-scanning parquet
-    * (simhash 2.7s → 9.1s when cached). Correctness paths (Verify)
-    * run uncached.
+    * (simhash 2.7s → 9.1s when cached).
     */
-  def enableCaching(spark: SparkSession, dir: String): Unit =
+  val star: Seq[String] =
     Seq("region", "nation", "customer", "supplier", "part", "orders", "lineitem")
-      .foreach { n =>
-        val df = table(spark, dir, n).cache()
-        df.count() // materialize before timing starts
-        cachedTables((dir, n)) = df
-      }
+
+  val names: Seq[String] = star ++ Seq("events", "documents", "embeddings")
+
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    graft.functions.GraftFunctions.register(spark)
+    def read =
+      if (name == "events") events(spark, dir)
+      else spark.read.parquet(s"$dir/$name.parquet")
+    if (star.contains(name)) Memo(spark, "Tables.table", (dir, name))(read) else read
+  }
 
   /** Load `events` and normalize `ts` to session-timezone TimestampType
     * regardless of how the fixture generation wrote it. Fixtures have

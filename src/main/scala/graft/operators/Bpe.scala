@@ -139,6 +139,58 @@ object Bpe {
     merges.toSeq
   }
 
+  /** [[trainMerges]] over `dir`'s documents table for consumers that
+    * treat the merges as an input artifact (q_x_bpe_encode) — a
+    * production pipeline trains the tokenizer once per corpus snapshot
+    * and every downstream job loads the merge table. With [[graft.Memo]]
+    * off (Verify and every spec) each call trains fresh.
+    *
+    * With the memo on, PREFIX reuse: greedy training is incremental —
+    * merge k depends only on merges 1..k−1 — so trainMerges(docs, n)
+    * equals trainMerges(docs, m).take(n) for any m ≥ n (BpeSpec pins
+    * this). The memo holds the longest list trained so far per
+    * (session, dir, textCol) and serves shorter requests as prefixes:
+    * q_x_bpe's 24-merge training covers q_x_bpe_encode's 16-merge
+    * request outright. An early-stopped list (fewer merges than
+    * requested — the vocabulary merged out) is complete by
+    * construction and serves ANY request.
+    */
+  def trainedMerges(spark: SparkSession, dir: String, textCol: String,
+      numMerges: Int): Seq[Merge] = {
+    val held = mergeMemo(spark, dir, textCol)
+    held.get match {
+      case Some(stored) if covers(stored, numMerges) => stored._2.take(numMerges)
+      case _ =>
+        val merges = trainMerges(
+          graft.Tables.table(spark, dir, "documents"), textCol, numMerges)
+        held.set(Some((numMerges, merges)))
+        merges
+    }
+  }
+
+  /** Publish a list trained for `numMerges` (write-through from q_x_bpe,
+    * whose declared output is the merge table and so always trains
+    * fresh): kept only if it extends what the memo already holds.
+    * A no-op with [[graft.Memo]] off.
+    */
+  def storeMerges(spark: SparkSession, dir: String, textCol: String,
+      numMerges: Int, merges: Seq[Merge]): Unit = {
+    val held = mergeMemo(spark, dir, textCol)
+    if (!held.get.exists(covers(_, numMerges))) held.set(Some((numMerges, merges)))
+  }
+
+  // (n, merges) = the list trained for a request of n merges; it
+  // answers a request for k when k ≤ n, or when merges.length < n
+  // (training stopped early, so the list is complete for any k)
+  private def covers(stored: (Int, Seq[Merge]), k: Int): Boolean =
+    stored._1 >= k || stored._2.length < stored._1
+
+  // memo off: a fresh empty holder per call, so nothing is reused
+  private def mergeMemo(spark: SparkSession, dir: String, textCol: String) =
+    graft.Memo(spark, "Bpe.trainedMerges", (dir, textCol))(
+      new java.util.concurrent.atomic.AtomicReference(
+        Option.empty[(Int, Seq[Merge])]))
+
   /** Merge-pair → rank lookup, built ONCE per merge list — callers on
     * per-word hot paths ([[encodeStats]]'s UDF) hoist this out of the
     * loop instead of rebuilding it per word. */

@@ -40,30 +40,19 @@ object Components {
     * @param nodes one column `id` — any orderable type (long, string,
     *              ...); the id keeps its native type end-to-end, so
     *              string-id corpora are never silently nulled by a
-    *              cast. Isolated nodes allowed (own cluster). Edge
-    *              endpoints must be drawn from `nodes` (every caller
-    *              derives edges from the node table).
+    *              cast. Isolated nodes allowed (own cluster).
     * @param edges columns `a`, `b`, same type as `id` — undirected;
     *              direction and duplicates are normalized internally.
-    * @param jumpsPerRound pointer jumps folded into each round (≥ 1).
-    *   Extra jumps deepen pointer compression per round at the cost of
-    *   one more label-sized self-join each. Since r18 every jump input
-    *   is lineage-cut, so chained jumps are ADDITIVE in executed work
-    *   (the pre-r18 form re-executed the fold subtree ~2^j times; see
-    *   dev/NOTES.md round-12 log). Measured r18 on the fixture's
-    *   cos-0.4 graph: j=2 did NOT reduce the 10-round count (label
-    *   pointers there don't form deep chains — see the id-random
-    *   caveat above), so the default stays 1; the knob remains for
-    *   graphs whose ids align with topology.
+    *              Every endpoint must be a `nodes` id (every caller
+    *              derives edges from the node table); an endpoint
+    *              outside `nodes` fails the run as non-convergence
+    *              instead of being labeled.
     * @return (id, cluster_id) — cluster_id = min id in the component
     *         under the type's natural ordering.
     */
   def connectedComponents(
       spark: SparkSession, nodes: DataFrame, edges: DataFrame,
-      maxIters: Int = 25, jumpsPerRound: Int = 1): DataFrame = {
-    require(jumpsPerRound >= 1,
-      s"jumpsPerRound must be >= 1 (got $jumpsPerRound): 0 would silently " +
-        "disable pointer jumping, degrading convergence to O(diameter) rounds")
+      maxIters: Int = 25): DataFrame = {
     // Materialize the (possibly expensive) edge derivation ONCE — both
     // the direction-normalizing union below and every loop round would
     // otherwise re-execute the upstream candidate-pair computation
@@ -91,14 +80,9 @@ object Components {
       .agg(min(col("dst")).as("lbl"))
       .transform(Checkpoints.truncate(_))
 
-    // Dev-only per-round timing (graft.IterProbe sets the property):
-    // each round ends in a real action, so construct-vs-action wall
-    // time separates driver planning cost from execution cost.
-    val probe = sys.props.get("graft.roundProbe").contains("true")
     var converged = false
     var iter = 0
     while (!converged && iter < maxIters) {
-      val tRound0 = System.nanoTime()
       // (1) neighbor-min: pull each neighbor's current label; the
       // self-loop row pulls the node's own label, so min() includes it
       // and max(when(dst = src)) recovers it as `prev` for the
@@ -117,31 +101,27 @@ object Components {
         // convergence count (same lazy-cut-in-one-action shape as the
         // round cut itself)
         .transform(Checkpoints.truncate(_, eager = false))
-      // (2) pointer jump(s): lbl := lbl(lbl), jumpsPerRound times;
-      // `prev` rides along so the convergence test below is a narrow
-      // scan of the checkpointed result, not an extra shuffle join
-      // against the old labels. Each jump result is itself lazily cut
-      // so chained jumps stay additive (no in-round subtree doubling).
-      // lazy checkpoint + count in ONE action: the full-scan convergence
-      // count materializes the checkpoint blocks as it runs (an eager
-      // checkpoint plus a separate isEmpty job was two actions per
-      // round — pure scheduler latency at fixture scale; measured r6).
-      val next = (1 to jumpsPerRound).foldLeft(afterEdges) {
-          (cur, j) =>
-            val jump = cur.select(col("id").as("jid"), col("lbl").as("jlbl"))
-            val folded = cur.join(jump, col("lbl") === col("jid"), "left")
-              .select(col("id"), col("prev"),
-                least(col("lbl"), coalesce(col("jlbl"), col("lbl"))).as("lbl"))
-            if (j < jumpsPerRound)
-              folded.transform(Checkpoints.truncate(_, eager = false))
-            else folded
-        }
+      // (2) pointer jump: lbl := lbl(lbl). One jump per round — r18
+      // measured a second jump NOT reducing the 10-round count on the
+      // fixture's cos-0.4 graph (label pointers there don't form deep
+      // chains; see the id-random caveat above). `prev` rides along so
+      // the convergence test below is a narrow scan of the
+      // checkpointed result, not an extra shuffle join against the
+      // old labels. Lazy checkpoint + count in ONE action: the
+      // full-scan convergence count materializes the checkpoint blocks
+      // as it runs (an eager checkpoint plus a separate isEmpty job
+      // was two actions per round — pure scheduler latency at fixture
+      // scale; measured r6).
+      val jump = afterEdges.select(col("id").as("jid"), col("lbl").as("jlbl"))
+      val next = afterEdges.join(jump, col("lbl") === col("jid"), "left")
+        .select(col("id"), col("prev"),
+          least(col("lbl"), coalesce(col("jlbl"), col("lbl"))).as("lbl"))
         .transform(Checkpoints.truncate(_, eager = false))
-      val tBuilt = System.nanoTime()
-      converged = next.filter(col("lbl") =!= col("prev")).count() == 0
-      if (probe) println(f"[roundprobe] cc round=$iter%d " +
-        f"build=${(tBuilt - tRound0) / 1e9}%.3f " +
-        f"action=${(System.nanoTime() - tBuilt) / 1e9}%.3f")
+      // null-safe: an edge endpoint missing from `nodes` has no
+      // self-loop row, so its `prev` is always NULL — it must keep the
+      // loop running (and fail the convergence require), not drop out
+      // of the test as an unknown comparison
+      converged = next.filter(!(col("lbl") <=> col("prev"))).count() == 0
       lbl = next.select(col("id"), col("lbl"))
       iter += 1
     }

@@ -7,49 +7,26 @@ import org.apache.spark.sql.functions._
   * graph over the `embeddings` fixture — the [[DupGraph]] pattern for
   * the vector modality. Four declared queries consume cosine edges
   * (q_x_cos_pairs, q_x_semantic_dedup at 0.4; q_x_triangles,
-  * q_x_dbscan at 0.3); with caching OFF (default, the Verify path)
-  * every caller builds a fresh [[Similarity.blockedCosinePairs]] plan
-  * and stands alone against its oracle.
+  * q_x_dbscan at 0.3); with [[graft.Memo]] off (default, the Verify
+  * path) every caller builds a fresh [[Similarity.blockedCosinePairs]]
+  * plan and stands alone against its oracle.
   *
-  * Bench opts into [[enableCaching]]: one O(N·B) block join per
-  * (dir, threshold) per run, served from a MEMORY_AND_DISK cache. At
+  * With the memo on (Bench): one O(N·B) block join per (session, dir,
+  * threshold) per run, served persisted MEMORY_AND_DISK. At
   * 100 TB this is "materialize the semantic edge table once per
   * corpus snapshot" — the edge set is bounded by near-dup density,
   * tiny next to the corpus, and every graph consumer (dedup, triangle
   * census, density clustering) reads the same persisted table.
   */
 object CosGraph {
-  @volatile private var cachingEnabled = false
-  // keyed by session identity: a cached DataFrame is bound to the
-  // session that built it
-  private val cache =
-    scala.collection.concurrent.TrieMap.empty[(String, String, Long), DataFrame]
-
-  /** Bench-time opt-in; Verify/specs leave this off. */
-  def enableCaching(): Unit = cachingEnabled = true
-
-  /** Drop cached edge frames and disable caching — for tools that
-    * recreate sessions in-process.
-    */
-  def reset(): Unit = {
-    cachingEnabled = false
-    cache.values.foreach(df =>
-      try df.unpersist(blocking = false) catch { case _: Throwable => () })
-    cache.clear()
-  }
 
   /** All embedding pairs with cosine ≥ threshold:
     * (id_a, id_b, cos), id_a < id_b, cos rounded 9dp.
     */
-  def pairs(spark: SparkSession, dir: String, threshold: Double): DataFrame = {
-    def build = Similarity.blockedCosinePairs(
-      spark, graft.Tables.table(spark, dir, "embeddings"), threshold)
-    if (cachingEnabled)
-      cache.getOrElseUpdate(
-        (System.identityHashCode(spark).toString, dir,
-          math.round(threshold * 1000000L)), build.cache())
-    else build
-  }
+  def pairs(spark: SparkSession, dir: String, threshold: Double): DataFrame =
+    graft.Memo(spark, "CosGraph.pairs", (dir, threshold))(
+      Similarity.blockedCosinePairs(
+        spark, graft.Tables.table(spark, dir, "embeddings"), threshold))
 
   /** [[pairs]] as a bare (a, b) edge list for the graph operators. */
   def edges(spark: SparkSession, dir: String, threshold: Double): DataFrame =

@@ -13,14 +13,14 @@ import org.apache.spark.sql.functions._
   *                                 §7.4 determinism convention)
   *   m = avg(value)               (the daily mean)
   *
-  * With caching OFF (the default — the Verify path and every spec)
-  * each caller builds a fresh plan and stands alone against its
+  * With [[graft.Memo]] off (the default — the Verify path and every
+  * spec) each caller builds a fresh plan and stands alone against its
   * oracle; Catalyst's column pruning drops the unused aggregate
   * expressions AND the unused scan columns, so a count-only consumer
   * still reads only (event_type, ts) from parquet.
   *
-  * Bench opts into [[enableCaching]]: the grain is computed once per
-  * (session, dir) and served from a dataset cache — the r14 verdict's
+  * With the memo on (Bench), the grain is computed once per
+  * (session, dir) and served persisted — the r14 verdict's
   * q_x_pacf wobble was ~20 queries each re-running the same
   * corpus-sized daily aggregate, so the per-query cost (and its
   * variance) was dominated by repeated identical work. At 100 TB this
@@ -29,25 +29,6 @@ import org.apache.spark.sql.functions._
   * rows, KB-scale forever), not an executor-memory cache.
   */
 object DayGrain {
-  @volatile private var cachingEnabled = false
-  // keyed by session identity: a cached DataFrame is bound to the
-  // session that built it (same convention as DupGraph/CosGraph)
-  private val cache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-
-  /** Bench-time opt-in; Verify/specs leave this off. */
-  def enableCaching(): Unit = cachingEnabled = true
-
-  /** Drop cached frames and disable caching — for tools that recreate
-    * sessions in-process.
-    */
-  def reset(): Unit = {
-    cachingEnabled = false
-    cache.values.foreach(df =>
-      try df.unpersist(blocking = false) catch { case _: Throwable => () })
-    cache.clear()
-  }
-
   /** The full grain: (event_type, day, c, v, m). Schema-adaptive: on
     * an events table WITHOUT a value column (spec gap fixtures are
     * minimal (event_type, ts) parquets) only c is computed, so
@@ -56,8 +37,8 @@ object DayGrain {
     * table fail with the same unresolved-column error a direct
     * sum(value) always did.
     */
-  def frame(spark: SparkSession, dir: String): DataFrame = {
-    def build = {
+  def frame(spark: SparkSession, dir: String): DataFrame =
+    graft.Memo(spark, "DayGrain", dir) {
       val ev = graft.Tables.table(spark, dir, "events")
       val aggs = Seq(count(lit(1)).as("c")) ++
         (if (ev.columns.contains("value"))
@@ -66,11 +47,6 @@ object DayGrain {
       ev.groupBy(col("event_type"), to_date(col("ts")).as("day"))
         .agg(aggs.head, aggs.tail: _*)
     }
-    if (cachingEnabled)
-      cache.getOrElseUpdate(
-        (System.identityHashCode(spark).toString, dir), build.cache())
-    else build
-  }
 
   /** (event_type, day, c) — the daily count series. */
   def counts(spark: SparkSession, dir: String): DataFrame =

@@ -8,39 +8,19 @@ import org.apache.spark.sql.functions._
   * ([[Dedup.exactJaccardPairs]]). Five declared queries consume this
   * same edge set (q_x_allpairs_jaccard, q_x_dup_clusters,
   * q_x_pagerank, q_x_split_safe, q_x_dedup_keep); each remains
-  * independently declarable — with caching OFF (the default, and the
-  * Verify path) every caller builds a fresh plan and stands alone
-  * against its oracle.
+  * independently declarable — with [[graft.Memo]] off (the default,
+  * and the Verify path) every caller builds a fresh plan and stands
+  * alone against its oracle.
   *
-  * Bench opts into [[enableCaching]]: the pairs frame is computed once
-  * per (dir, threshold) and served from a MEMORY_AND_DISK dataset
-  * cache, which is exactly the reuse a production pipeline would get
-  * by materializing the dup graph once per corpus snapshot. At 100 TB
-  * that materialization is a persisted table (the edge set is tiny
+  * With the memo on (Bench), the pairs frame is computed once
+  * per (session, dir, threshold) and served persisted, which is
+  * exactly the reuse a production pipeline would get by materializing
+  * the dup graph once per corpus snapshot. At 100 TB that
+  * materialization is a persisted table (the edge set is tiny
   * relative to the corpus — bounded by near-dup density), not an
   * executor-memory cache.
   */
 object DupGraph {
-  @volatile private var cachingEnabled = false
-  // keyed by session UUID too: a cached DataFrame is bound to the
-  // session that built it — serving it to a later, different session
-  // would throw at action time
-  private val cache =
-    scala.collection.concurrent.TrieMap.empty[(String, String, Long), DataFrame]
-
-  /** Bench-time opt-in; Verify/specs leave this off. */
-  def enableCaching(): Unit = cachingEnabled = true
-
-  /** Drop all cached edge frames and disable caching — for tools that
-    * recreate sessions in-process.
-    */
-  def reset(): Unit = {
-    cachingEnabled = false
-    (cache.values ++ ccCache.values).foreach(df =>
-      try df.unpersist(blocking = false) catch { case _: Throwable => () })
-    cache.clear()
-    ccCache.clear()
-  }
 
   /** Word-trigram shingle SETS of the documents table — the element
     * space every near-dup query in this family shares. Served from
@@ -56,48 +36,32 @@ object DupGraph {
   /** All document pairs with word-trigram Jaccard ≥ threshold:
     * (doc_a, doc_b, jaccard), doc_a < doc_b, no false negatives.
     */
-  def pairs(spark: SparkSession, dir: String, threshold: Double): DataFrame = {
-    def build = Dedup.exactJaccardPairs(
-      trigramSets(spark, dir), "doc_id", "g", threshold)
-    if (cachingEnabled)
-      cache.getOrElseUpdate(
-        (System.identityHashCode(spark).toString, dir,
-          math.round(threshold * 1000000L)), build.cache())
-    else build
-  }
+  def pairs(spark: SparkSession, dir: String, threshold: Double): DataFrame =
+    graft.Memo(spark, "DupGraph.pairs", (dir, threshold))(
+      Dedup.exactJaccardPairs(trigramSets(spark, dir), "doc_id", "g", threshold))
 
   /** [[pairs]] as a bare (a, b) edge list for the graph operators. */
   def edges(spark: SparkSession, dir: String, threshold: Double): DataFrame =
     pairs(spark, dir, threshold)
       .select(col("doc_a").as("a"), col("doc_b").as("b"))
 
-  // cluster assignments get their own cache map: same key shape as
-  // the edge cache but a different derivation level
-  private val ccCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String, Long), DataFrame]
-
   /** Connected-component assignment of every document over [[edges]]
     * at `threshold`: (doc_id, cluster_id), cluster_id = min doc_id of
     * the component. FOUR declared queries consume this same frame
     * (q_x_dup_clusters, q_x_dup_stats, q_x_split_safe, q_x_dedup_keep
     * — each previously re-ran the full O(log d)-round CC). Memoized
-    * per (session, dir, threshold) under the same bench opt-in as
-    * [[pairs]]: at 100 TB the cluster assignment is the second table a
-    * production pipeline materializes next to the edge set (tiny —
+    * per (session, dir, threshold) like [[pairs]]: at 100 TB the
+    * cluster assignment is the second table a production pipeline
+    * materializes next to the edge set (tiny —
     * one row per doc id, no payload), read by every downstream
-    * curation job. With caching OFF every caller builds a fresh
+    * curation job. With the memo off every caller builds a fresh
     * standalone CC plan and stands alone against its oracle.
     */
-  def clusters(spark: SparkSession, dir: String, threshold: Double): DataFrame = {
-    def build = Components.connectedComponents(
-      spark,
-      graft.Tables.table(spark, dir, "documents").select(col("doc_id").as("id")),
-      edges(spark, dir, threshold))
-      .select(col("id").as("doc_id"), col("cluster_id"))
-    if (cachingEnabled)
-      ccCache.getOrElseUpdate(
-        (System.identityHashCode(spark).toString, dir,
-          math.round(threshold * 1000000L)), build.cache())
-    else build
-  }
+  def clusters(spark: SparkSession, dir: String, threshold: Double): DataFrame =
+    graft.Memo(spark, "DupGraph.clusters", (dir, threshold))(
+      Components.connectedComponents(
+        spark,
+        graft.Tables.table(spark, dir, "documents").select(col("doc_id").as("id")),
+        edges(spark, dir, threshold))
+        .select(col("id").as("doc_id"), col("cluster_id")))
 }

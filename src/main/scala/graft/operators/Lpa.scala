@@ -28,7 +28,10 @@ object Lpa {
 
   /** @param nodes one column `id` (any orderable type)
     * @param edges columns `a`, `b`, same type — undirected, normalized
-    *              internally
+    *              internally. Every endpoint must be a `nodes` id: an
+    *              endpoint outside `nodes` is not rejected — it joins
+    *              the label table after the first round, so it appears
+    *              in the output and can shift its neighbors' labels.
     * @return (id, community) — community = the converged label (a
     *         vertex id, NOT guaranteed to be the community minimum)
     */

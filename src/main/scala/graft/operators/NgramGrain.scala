@@ -22,13 +22,13 @@ import graft.functions.TextFunctions
   * re-ran the same regex tokenize + n-gram build + array_distinct
   * over the full corpus.
   *
-  * With caching OFF (the default — the Verify path and every spec)
-  * each caller builds a fresh standalone plan against its oracle;
+  * With [[graft.Memo]] off (the default — the Verify path and every
+  * spec) each caller builds a fresh standalone plan against its oracle;
   * Catalyst prunes the source column (and its scan bytes) out of
   * consumers that never read it.
   *
-  * Bench opts into [[enableCaching]]: the sets frame is computed once
-  * per (session, dir, n) and served from a dataset cache; postings
+  * With the memo on (Bench), the sets frame is computed once per
+  * (session, dir, n) and served persisted; postings
   * remain a cheap explode over the cached arrays. At 100 TB this
   * materialization is the tokenized-corpus table a production
   * pipeline persists once per crawl snapshot (linear in corpus size,
@@ -41,25 +41,6 @@ import graft.functions.TextFunctions
   * same unresolved-column error a direct col("source") always did.
   */
 object NgramGrain {
-  @volatile private var cachingEnabled = false
-  // keyed by session identity: a cached DataFrame is bound to the
-  // session that built it (same convention as DupGraph/DayGrain)
-  private val cache =
-    scala.collection.concurrent.TrieMap.empty[(String, String, Int), DataFrame]
-
-  /** Bench-time opt-in; Verify/specs leave this off. */
-  def enableCaching(): Unit = cachingEnabled = true
-
-  /** Drop cached frames and disable caching — for tools that recreate
-    * sessions in-process.
-    */
-  def reset(): Unit = {
-    cachingEnabled = false
-    cache.values.foreach(df =>
-      try df.unpersist(blocking = false) catch { case _: Throwable => () })
-    cache.clear()
-  }
-
   private def build(spark: SparkSession, dir: String, n: Int): DataFrame = {
     val docs = graft.Tables.table(spark, dir, "documents")
     val cols = Seq(col("doc_id")) ++
@@ -72,11 +53,7 @@ object NgramGrain {
     * word n-grams).
     */
   def frame(spark: SparkSession, dir: String, n: Int = 3): DataFrame =
-    if (cachingEnabled)
-      cache.getOrElseUpdate(
-        (System.identityHashCode(spark).toString, dir, n),
-        build(spark, dir, n).cache())
-    else build(spark, dir, n)
+    graft.Memo(spark, "NgramGrain", (dir, n))(build(spark, dir, n))
 
   /** (doc_id, g: array<string>) — the per-doc distinct shingle sets
     * ([[DupGraph.trigramSets]]' contract at n = 3).
@@ -84,7 +61,7 @@ object NgramGrain {
   def sets(spark: SparkSession, dir: String, n: Int = 3): DataFrame =
     frame(spark, dir, n).select(col("doc_id"), col("g"))
 
-  /** [[sets]] BYPASSING the bench cache — always a fresh fused
+  /** [[sets]] BYPASSING the memo — always a fresh fused
     * scan+tokenize plan. For the prefix-filter containment-join
     * consumers, scanning the corpus-sized cached array column is
     * measurably SLOWER than recomputing the grams fused into the

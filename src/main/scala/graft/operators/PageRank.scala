@@ -33,6 +33,9 @@ object PageRank {
     *              nodes allowed (they hold the floor rank (1−d)/N).
     * @param edges columns `a`, `b`, same type as `id` — undirected;
     *              direction and duplicates normalized internally.
+    *              Every endpoint must be a `nodes` id: an endpoint
+    *              outside `nodes` is not rejected — it surfaces as an
+    *              extra output row whose rank is NULL.
     * @return (id, rank) after exactly `iters` rounds.
     */
   def pageRank(spark: SparkSession, nodes: DataFrame, edges: DataFrame,
@@ -50,7 +53,7 @@ object PageRank {
     val n = broadcast(nodes.agg(count(lit(1)).as("n")))
     // cut once: `base` re-enters every round's plan, and without the
     // cut each round re-analyzes the node scan + crossJoin subtree —
-    // pure driver planning cost at fixture scale (IterProbe, r12)
+    // pure driver planning cost at fixture scale (measured r12)
     val base = nodes.select(col("id")).crossJoin(n)
       .transform(Checkpoints.truncate(_, eager = false))
     var ranks = base.select(col("id"), (lit(1.0) / col("n")).as("rank"))

@@ -184,14 +184,14 @@ object Pq {
       memoKey: Option[String] = None): DataFrame = {
     require(rerankFactor >= 1, s"rerankFactor must be >= 1, got $rerankFactor")
     graft.functions.GraftFunctions.register(spark)
-    // memoKey names the corpus (e.g. the fixture dir); with bench
-    // caching on, train + encode run once per (corpus, params) and the
-    // timed reruns score against the pinned index — the production
-    // shape (index trained once per snapshot, codes table persisted).
+    // memoKey names the corpus (e.g. the fixture dir); with graft.Memo
+    // on, train + encode run once per (corpus, params) and the timed
+    // reruns score against the pinned index — the production shape
+    // (index trained once per snapshot, codes table persisted).
     // Verify/specs pass no key and build fresh.
     def memo(part: String)(build: => DataFrame): DataFrame =
       memoKey.fold(build)(mk =>
-        AnnCache.memo(spark, s"pq-$part:$mk:m=$m,k=$kCodes,iters=$iters")(build))
+        graft.Memo(spark, s"Pq.$part", (mk, m, kCodes, iters))(build))
     val cb = memo("codebook")(train(spark, corpus, m, kCodes, iters))
     val codes = memo("codes")(encode(corpus, cb, m))
 

@@ -1761,10 +1761,10 @@ object Extensions {
     "q_x_bpe" -> ((s, d) => {
       import s.implicits._
       val merges = graft.operators.Bpe.trainMerges(table(s, d, "documents"), "text", 24)
-      // publish to the bench-time memo (write-through; no-op when
-      // caching is off): q_x_bpe_encode's 16-merge request is a
-      // PREFIX of this 24-merge list, so it never needs to re-train
-      graft.operators.BpeCache.store(s, d, "text", 24, merges)
+      // publish to the memo (write-through; no-op when graft.Memo is
+      // off): q_x_bpe_encode's 16-merge request is a PREFIX of this
+      // 24-merge list, so it never needs to re-train
+      graft.operators.Bpe.storeMerges(s, d, "text", 24, merges)
       merges
         .toDF()
         .select(col("rank"), col("left"), col("right"), col("freq"))
@@ -1782,11 +1782,11 @@ object Extensions {
     "q_x_bpe_encode" -> ((s, d) => {
       val docs = table(s, d, "documents")
       // merges are an INPUT artifact here (the query's output is the
-      // encode stats) — served from the bench-time memo, which
-      // q_x_bpe's 24-merge training already covers by prefix
-      // (BpeCache scaladoc; BpeSpec pins the prefix property).
-      // Caching off (Verify/specs): trains fresh, exactly as before.
-      val merges = graft.operators.BpeCache.trainedMerges(s, d, "text", 16)
+      // encode stats) — served from graft.Memo, which q_x_bpe's
+      // 24-merge training already covers by prefix (Bpe.trainedMerges
+      // scaladoc; BpeSpec pins the prefix property). Memo off
+      // (Verify/specs): trains fresh.
+      val merges = graft.operators.Bpe.trainedMerges(s, d, "text", 16)
       graft.operators.Bpe.encodeStats(docs, "text", "lang", merges)
     }),
 

@@ -65,4 +65,16 @@ class ApiContractSpec extends SparkSuite {
     }
     assert(e.getMessage.contains("did not converge"), e.getMessage)
   }
+
+  test("connected components fails loudly on an edge endpoint missing from nodes") {
+    // 9 has no self-loop row, so its `prev` is always NULL: the
+    // convergence test must count it as unsettled (null-safe), never
+    // converge early and output a label for a node that is not a node
+    val nodes = (0L to 3L).toDF("id")
+    val edges = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 9L)).toDF("a", "b")
+    val e = intercept[IllegalArgumentException] {
+      Components.connectedComponents(spark, nodes, edges, maxIters = 5)
+    }
+    assert(e.getMessage.contains("did not converge"), e.getMessage)
+  }
 }

@@ -180,8 +180,8 @@ class BpeSpec extends SparkSuite {
 
   test("greedy training is prefix-stable: merges(n) == merges(m).take(n)") {
     // merge k depends only on merges 1..k-1, so a longer budget's list
-    // extends a shorter one exactly — the property BpeCache's prefix
-    // reuse (r17) rides. Checked on both the inline and fixture corpora.
+    // extends a shorter one exactly — the property Bpe.trainedMerges'
+    // prefix reuse (r17) rides. Checked on both the inline and fixture corpora.
     import spark.implicits._
     val inline = corpus.toDF("text")
     val m12 = Bpe.trainMerges(inline, "text", 12)
@@ -191,23 +191,22 @@ class BpeSpec extends SparkSuite {
     assert(Bpe.trainMerges(docs, "text", 8) == m16.take(8))
   }
 
-  test("BpeCache: off trains fresh; on serves prefixes and write-throughs") {
-    import graft.operators.BpeCache
-    BpeCache.reset()
-    val fresh = BpeCache.trainedMerges(spark, sfDir, "text", 6)
+  test("merge memo: off trains fresh; on serves prefixes, write-throughs") {
+    Memo.reset()
+    val fresh = Bpe.trainedMerges(spark, sfDir, "text", 6)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     assert(fresh == Bpe.trainMerges(docs, "text", 6),
-      "caching off must train fresh")
-    BpeCache.enableCaching()
+      "memo off must train fresh")
+    Memo.enable()
     try {
       val m10 = Bpe.trainMerges(docs, "text", 10)
-      BpeCache.store(spark, sfDir, "text", 10, m10)
+      Bpe.storeMerges(spark, sfDir, "text", 10, m10)
       // shorter request served as a prefix of the stored list
-      assert(BpeCache.trainedMerges(spark, sfDir, "text", 6) == m10.take(6))
+      assert(Bpe.trainedMerges(spark, sfDir, "text", 6) == m10.take(6))
       // longer request re-trains (and must still be prefix-consistent)
-      val m12 = BpeCache.trainedMerges(spark, sfDir, "text", 12)
+      val m12 = Bpe.trainedMerges(spark, sfDir, "text", 12)
       assert(m12.take(10) == m10)
-      assert(BpeCache.trainedMerges(spark, sfDir, "text", 12) == m12)
-    } finally BpeCache.reset()
+      assert(Bpe.trainedMerges(spark, sfDir, "text", 12) == m12)
+    } finally Memo.reset()
   }
 }

@@ -5,10 +5,10 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.DayGrain
 
-/** The shared (event_type, day) grain (operators.DayGrain): caching
-  * off (the Verify default) builds fresh standalone plans whose
-  * unused aggregate columns are PRUNED down to the parquet scan;
-  * caching on serves ONE frame per (session, dir); cached and
+/** The shared (event_type, day) grain (operators.DayGrain): with
+  * [[Memo]] off (the Verify default) it builds fresh standalone plans
+  * whose unused aggregate columns are PRUNED down to the parquet scan;
+  * memo on serves ONE frame per (session, dir); cached and
   * uncached results are identical, and both match a hand-built
   * aggregate. Resets state in finally so the shared test session
   * never leaks bench behavior into other suites.
@@ -19,7 +19,7 @@ class DayGrainSpec extends SparkSuite {
     df.collect().toSet
 
   test("counts/values/means match direct aggregates; cache serves one frame") {
-    DayGrain.reset()
+    Memo.reset()
     val direct = Tables.table(spark, sfDir, "events")
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("c"),
@@ -31,24 +31,24 @@ class DayGrainSpec extends SparkSuite {
     val fresh1 = DayGrain.counts(spark, sfDir)
     val fresh2 = DayGrain.counts(spark, sfDir)
     assert(fresh1.queryExecution.logical ne fresh2.queryExecution.logical,
-      "caching off must build standalone plans")
+      "memo off must build standalone plans")
     assert(rows(fresh1) == wantC)
     assert(rows(DayGrain.values(spark, sfDir)) == wantV)
 
-    DayGrain.enableCaching()
+    Memo.enable()
     try {
       val f1 = DayGrain.frame(spark, sfDir)
       val f2 = DayGrain.frame(spark, sfDir)
-      assert(f1 eq f2, "caching on must serve one frame per (session, dir)")
+      assert(f1 eq f2, "memo on must serve one frame per (session, dir)")
       assert(rows(DayGrain.counts(spark, sfDir)) == wantC,
         "cached counts must equal uncached")
       assert(rows(DayGrain.values(spark, sfDir)) == wantV,
         "cached values must equal uncached")
-    } finally DayGrain.reset()
+    } finally Memo.reset()
   }
 
   test("caching off prunes the value column out of count-only consumers") {
-    DayGrain.reset()
+    Memo.reset()
     val plan = DayGrain.counts(spark, sfDir).queryExecution.executedPlan match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
         a.initialPlan

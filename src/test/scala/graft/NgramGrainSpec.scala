@@ -7,9 +7,9 @@ import graft.functions.TextFunctions
 import graft.operators.NgramGrain
 
 /** The shared distinct word-n-gram grain (operators.NgramGrain):
-  * caching off (the Verify default) builds fresh standalone plans and
-  * prunes the source column out of consumers that never read it;
-  * caching on serves ONE frame per (session, dir, n); cached and
+  * with [[Memo]] off (the Verify default) it builds fresh standalone
+  * plans and prunes the source column out of consumers that never
+  * read it; memo on serves ONE frame per (session, dir, n); cached and
   * uncached results are identical, and both match the direct
   * tokenization expression they replaced. Resets state in finally so
   * the shared test session never leaks bench behavior into other
@@ -21,7 +21,7 @@ class NgramGrainSpec extends SparkSuite {
     df.collect().toSet
 
   test("sets/postings match direct tokenization; cache serves one frame") {
-    NgramGrain.reset()
+    Memo.reset()
     val direct3 = Tables.table(spark, sfDir, "documents")
       .select(col("doc_id"),
         array_distinct(TextFunctions.wordNgramsExpr("text", 3)).as("g"))
@@ -34,18 +34,18 @@ class NgramGrainSpec extends SparkSuite {
     val fresh1 = NgramGrain.sets(spark, sfDir, 3)
     val fresh2 = NgramGrain.sets(spark, sfDir, 3)
     assert(fresh1.queryExecution.logical ne fresh2.queryExecution.logical,
-      "caching off must build standalone plans")
+      "memo off must build standalone plans")
     assert(rows(fresh1) == wantSets)
     assert(rows(NgramGrain.postings(spark, sfDir, 3)) == wantPost)
     assert(rows(NgramGrain.postings(spark, sfDir, 5)) == wantPost5)
 
-    NgramGrain.enableCaching()
+    Memo.enable()
     try {
       val f1 = NgramGrain.frame(spark, sfDir, 3)
       val f2 = NgramGrain.frame(spark, sfDir, 3)
-      assert(f1 eq f2, "caching on must serve one frame per (session, dir, n)")
+      assert(f1 eq f2, "memo on must serve one frame per (session, dir, n)")
       val f5 = NgramGrain.frame(spark, sfDir, 5)
-      assert(f1 ne f5, "n must key the cache")
+      assert(f1 ne f5, "n must key the memo")
       assert(rows(NgramGrain.sets(spark, sfDir, 3)) == wantSets,
         "cached sets must equal uncached")
       assert(rows(NgramGrain.postings(spark, sfDir, 3)) == wantPost,
@@ -53,13 +53,13 @@ class NgramGrainSpec extends SparkSuite {
       val fr1 = NgramGrain.freshSets(spark, sfDir, 3)
       val fr2 = NgramGrain.freshSets(spark, sfDir, 3)
       assert(fr1.queryExecution.logical ne fr2.queryExecution.logical,
-        "freshSets must bypass the cache even when caching is on")
+        "freshSets must bypass the memo even when it is on")
       assert(rows(fr1) == wantSets, "freshSets must equal cached sets")
-    } finally NgramGrain.reset()
+    } finally Memo.reset()
   }
 
   test("caching off prunes source out of doc-grain consumers") {
-    NgramGrain.reset()
+    Memo.reset()
     val plan = NgramGrain.sets(spark, sfDir, 3)
       .queryExecution.executedPlan match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
@@ -80,7 +80,7 @@ class NgramGrainSpec extends SparkSuite {
   }
 
   test("schema-adaptive: a documents table without source still serves sets") {
-    NgramGrain.reset()
+    Memo.reset()
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_ngrain").toString
     Seq((1L, "a b c d"), (2L, "a b c d e"))
