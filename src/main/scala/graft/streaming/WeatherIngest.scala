@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -92,12 +93,37 @@ object WeatherIngest {
         array_join(col("r.weather.description"), ", ").as("weather_description"),
         col("r.main.temp").as("temperature"))
 
-  /** Full micro-batch: transform → intra-batch dedup (DISTINCT,
+  /** Full micro-batch: intra-batch dedup (DISTINCT,
     * weather-etl.py:155-158) → last-writer-wins merge into the target
     * on PK (time, city_name) (weather-etl.py:152-163). Idempotent:
     * merging the same batch twice is a no-op — the reference's replay
     * tolerance, asserted by property test.
+    *
+    * One scan of each side and one shuffle: target rows are tagged
+    * `p = 0` and batch rows `p = 1`, the union is hash-partitioned on
+    * the key, and both the DISTINCT and the per-key window reuse that
+    * partitioning; a key keeps the rows with its greatest `p`. The
+    * result equals `Upsert.upsert(target, batch.distinct(), keys)` on
+    * non-NULL keys (PropertiesSpec), without the anti-join's second
+    * pass over the batch.
+    *
+    * NULL keys fail loudly: the reference's PRIMARY KEY makes `time`
+    * and `city_name` NOT NULL (weather-etl.py:76,92), and a NULL-key
+    * row would never match, so every re-delivery would add a copy.
+    *
+    * Unchanged: when one batch holds two different rows for one key,
+    * both are kept, since DISTINCT drops only exact duplicates.
     */
-  def merge(target: DataFrame, batch: DataFrame): DataFrame =
-    graft.operators.Upsert.upsert(target, batch.distinct(), Seq("time", "city_name"))
+  def merge(target: DataFrame, batch: DataFrame): DataFrame = {
+    val keys = Seq(col("time"), col("city_name"))
+    target.withColumn("__p", lit(0)).unionByName(batch.withColumn("__p", lit(1)))
+      .filter(when(col("time").isNull || col("city_name").isNull,
+        raise_error(lit("WeatherIngest.merge: NULL in primary key (time, city_name)")))
+        .otherwise(lit(true)))
+      .repartition(keys: _*)
+      .distinct()
+      .withColumn("__max", max(col("__p")).over(Window.partitionBy(keys: _*)))
+      .filter(col("__p") === col("__max"))
+      .drop("__p", "__max")
+  }
 }

@@ -26,13 +26,17 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Scale design — the reason this exists instead of a driver-side
   * fetch + file drop: offsets are TICK COUNTS and InputPartitions
-  * carry (tick, city, file path) — never payload rows — so the
-  * driver ships O(#cities) strings per batch and each executor reads
-  * its own city's payload in parallel (≥2 partitions whenever ≥2
-  * cities poll). Admission control caps ticks per batch, so a replay
-  * of a month of recorded polls runs as bounded micro-batches instead
-  * of one giant catch-up batch; Trigger.AvailableNow drains to the
-  * tick count observed at query start and stops.
+  * carry (city, file path) lists — never payload rows — so the driver
+  * ships O(#cities) strings per batch and executors read the payloads.
+  * There is one partition per tick, not per file: a tick is about a
+  * dozen small files, so per-task scheduling and launch overhead
+  * dominates reading them, and one task per tick reads the whole poll
+  * cycle in one go. A multi-tick batch (a backfill) still gets one
+  * partition per tick, so it reads its ticks in parallel. Admission
+  * control caps ticks per batch, so a replay of a month of recorded
+  * polls runs as bounded micro-batches instead of one giant catch-up
+  * batch; Trigger.AvailableNow drains to the tick count observed at
+  * query start and stops.
   *
   * Output schema: (tick BIGINT, city STRING, body STRING) — `body`
   * feeds [[WeatherIngest.transform]] unchanged.
@@ -135,24 +139,22 @@ class WeatherReplayStream(path: String, maxTicks: Long)
 
   override def deserializeOffset(json: String): Offset = TickOffset(json.toLong)
 
-  /** One partition per (tick, city) payload FILE in (start, end] —
-    * paths only; executors read the bytes.
+  /** One partition per tick in (start, end] that has payload files,
+    * carrying that tick's (city, path) list in file-name order — paths
+    * only; executors read the bytes.
     */
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[TickOffset].ticks
     val e = end.asInstanceOf[TickOffset].ticks
     (s until e).flatMap { tick =>
       val dir = Paths.get(path, s"tick=$tick")
-      if (!Files.isDirectory(dir)) Seq.empty[InputPartition]
-      else {
-        val files = Files.list(dir).collect(Collectors.toList[Path]).asScala
-        files.filter(f => Files.isRegularFile(f) && f.getFileName.toString.endsWith(".json"))
+      val files =
+        if (!Files.isDirectory(dir)) Seq.empty
+        else Files.list(dir).collect(Collectors.toList[Path]).asScala.toSeq
+          .filter(f => Files.isRegularFile(f) && f.getFileName.toString.endsWith(".json"))
           .sortBy(_.getFileName.toString)
-          .map { f =>
-            val city = f.getFileName.toString.stripSuffix(".json")
-            WeatherFilePartition(tick, city, f.toAbsolutePath.toString): InputPartition
-          }.toSeq
-      }
+          .map(f => f.getFileName.toString.stripSuffix(".json") -> f.toAbsolutePath.toString)
+      if (files.isEmpty) None else Some(WeatherTickPartition(tick, files): InputPartition)
     }.toArray
   }
 
@@ -163,22 +165,25 @@ class WeatherReplayStream(path: String, maxTicks: Long)
   override def stop(): Unit = ()
 }
 
-case class WeatherFilePartition(tick: Long, city: String, filePath: String)
+/** One tick's payload files as (city, path), in file-name order. */
+case class WeatherTickPartition(tick: Long, files: Seq[(String, String)])
   extends InputPartition
 
 object WeatherReplayReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[WeatherFilePartition]
+    val p = partition.asInstanceOf[WeatherTickPartition]
     new PartitionReader[InternalRow] {
-      private var done = false
-      override def next(): Boolean = !done
-      override def get(): InternalRow = {
-        done = true
-        val body = new String(Files.readAllBytes(Paths.get(p.filePath)),
+      private val files = p.files.iterator
+      private var row: InternalRow = _
+      override def next(): Boolean = files.hasNext && {
+        val (city, file) = files.next()
+        val body = new String(Files.readAllBytes(Paths.get(file)),
           java.nio.charset.StandardCharsets.UTF_8)
-        new GenericInternalRow(Array[Any](
-          p.tick, UTF8String.fromString(p.city), UTF8String.fromString(body)))
+        row = new GenericInternalRow(Array[Any](
+          p.tick, UTF8String.fromString(city), UTF8String.fromString(body)))
+        true
       }
+      override def get(): InternalRow = row
       override def close(): Unit = ()
     }
   }

@@ -1,14 +1,17 @@
 package graft
 
 import org.scalacheck.{Gen, Prop, Test => SCTest}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
 import graft.operators.Upsert
+import graft.streaming.WeatherIngest
 
 /** Property-based tests (SURVEY.md §5.2 item 3) via raw ScalaCheck
   * (no scalatest-plus bridge in the offline cache): upsert idempotence
-  * and incoming-wins, dedup fixpoint, set-op algebra, jaccard bounds.
+  * and incoming-wins, the weather merge against its upsert model,
+  * dedup fixpoint, set-op algebra, jaccard bounds.
   */
 class PropertiesSpec extends SparkSuite {
   import spark.implicits._
@@ -71,6 +74,34 @@ class PropertiesSpec extends SparkSuite {
       merged.as("m").join(batch.as("b"), "k")
         .filter(col("m.v") =!= col("b.v")).isEmpty
     })
+  }
+
+  test("property: WeatherIngest.merge == upsert(target, batch.distinct()), idempotent") {
+    type W = (Int, String, String, Double)
+    def df(rs: Seq[W]): DataFrame =
+      rs.map { case (t, c, d, v) => (new java.sql.Timestamp(t * 300000L), c, d, v) }
+        .toDF("time", "city_name", "weather_description", "temperature")
+    def rows(d: DataFrame): Seq[String] = d.collect().map(_.toString).sorted.toSeq
+    // targets are what merge produces: distinct rows, non-NULL keys
+    def agrees(t: Seq[W], b: Seq[W]): Boolean = {
+      val target = df(t).distinct()
+      val batch = df(b)
+      val got = WeatherIngest.merge(target, batch)
+      val model = Upsert.upsert(target, batch.distinct(), Seq("time", "city_name"))
+      rows(got) == rows(model) && rows(WeatherIngest.merge(got, batch)) == rows(got)
+    }
+    // a tiny domain: most draws hold exact duplicates and keys with
+    // two values, in the batch and across target and batch
+    val wGen: Gen[W] = Gen.zip(Gen.choose(0, 2), Gen.oneOf("Delft", "Gouda"),
+      Gen.oneOf("mist", "rain"), Gen.oneOf(4.0, 7.5))
+    val wsGen = Gen.choose(0, 8).flatMap(Gen.listOfN(_, wGen))
+    check(Prop.forAll(wsGen, wsGen)(agrees))
+    val dup = (1, "Delft", "mist", 4.0)
+    val twoValues = Seq(dup, dup, (1, "Delft", "rain", 4.0), (2, "Gouda", "mist", 7.5))
+    assert(agrees(Nil, twoValues))
+    assert(agrees(twoValues, Nil))
+    assert(agrees(Seq(dup, (0, "Gouda", "rain", 7.5)), twoValues))
+    assert(agrees(Nil, Nil))
   }
 
   test("property: distinct is a fixpoint") {

@@ -59,6 +59,21 @@ class WeatherIngestSpec extends SparkSuite {
     assert(merged.collect().head.getDouble(3) === 9.9)
   }
 
+  test("merge fails loudly on a NULL key: a payload without name or dt") {
+    val out = java.nio.file.Files.createTempDirectory("graft-nullkey").toString
+    for ((p, i) <- Seq(payload.replace("\"name\": \"Rotterdam\",", ""),
+        payload.replace("\"dt\": 1704067200,", "")).zipWithIndex) {
+      assert(p != payload)
+      val batch = WeatherIngest.transform(
+        new WeatherIngest.ReplaySource(Seq(payload, p)).fetch(spark))
+      val e = intercept[Exception] {
+        WeatherIngest.merge(batch.filter("1 = 0"), batch).write.parquet(s"$out/$i")
+      }
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("(time, city_name)")), e)
+    }
+  }
+
   test("merge is idempotent end-to-end (run twice == run once)") {
     val batch = WeatherIngest.transform(
       new WeatherIngest.ReplaySource(Seq(payload)).fetch(spark))

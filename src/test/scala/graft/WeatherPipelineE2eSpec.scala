@@ -2,7 +2,10 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.RDDScanExec
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.streaming.WeatherIngest
@@ -13,7 +16,7 @@ import graft.streaming.WeatherIngest
   * (the reference's 5-min replay-tolerant merge, weather-etl.py:46,
   * 152-163).
   */
-class WeatherPipelineE2eSpec extends SparkSuite {
+class WeatherPipelineE2eSpec extends SparkSuite with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   // single line: the streaming text source yields one record per line
@@ -64,7 +67,7 @@ class WeatherPipelineE2eSpec extends SparkSuite {
     assert(replayed.except(after2).isEmpty && after2.except(replayed).isEmpty)
   }
 
-  test("DSv2 replay source: one micro-batch per tick, >=2 partitions, merge golden") {
+  test("DSv2 replay source: one batch, one partition per tick, merge golden") {
     val dir = Files.createTempDirectory("graft-dsv2").toString
     def write(tick: Int, city: String, dt: Long, temp: Double): Unit = {
       val d = java.nio.file.Paths.get(s"$dir/tick=$tick")
@@ -82,33 +85,89 @@ class WeatherPipelineE2eSpec extends SparkSuite {
     var target: DataFrame = null
     val batchParts = scala.collection.mutable.ArrayBuffer.empty[Int]
     val batchTicks = scala.collection.mutable.ArrayBuffer.empty[Seq[Long]]
+    def drain(maxTicks: Int): Unit = {
+      batchParts.clear(); batchTicks.clear()
+      val q = spark.readStream
+        .format(classOf[graft.streaming.WeatherReplayProvider].getName)
+        .option("path", dir)
+        .option("maxTicksPerBatch", maxTicks.toString)
+        .load()
+        .writeStream
+        .outputMode("append")
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          batchParts += batch.rdd.getNumPartitions
+          batchTicks += batch.select("tick").distinct().as[Long].collect().sorted.toSeq
+          val transformed = WeatherIngest.transform(batch.select("body").as[String])
+          val base = if (target == null) transformed.filter("1 = 0") else target
+          target = WeatherIngest.merge(base, transformed).cache()
+          target.count()
+          ()
+        }
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+    }
+    drain(1)
+
+    // admission control: one tick per micro-batch, in order
+    assert(batchTicks.toSeq === Seq(Seq(0L), Seq(1L)))
+    // one input partition per tick, whatever its number of city files
+    assert(batchParts.toSeq === Seq(1, 1))
+    // golden end state: 4 cities, Rotterdam overwritten by tick 1
+    assert(target.count() === 4)
+    assert(target.filter($"city_name" === "Rotterdam").collect().head.getDouble(3) === 9.9)
+    assert(target.filter($"city_name" === "Leiden").collect().head.getDouble(3) === 4.1)
+
+    // two ticks per batch: one batch, read as one partition per tick
+    target = null
+    drain(2)
+    assert(batchTicks.toSeq === Seq(Seq(0L, 1L)))
+    assert(batchParts.toSeq === Seq(2))
+  }
+
+  test("merge plan: one source scan, one shuffle, one input partition per tick") {
+    val dir = Files.createTempDirectory("graft-dsv2-plan").toString
+    val store = Files.createTempDirectory("graft-dsv2-plan-store").toString
+    for (tick <- 0 until 4; city <- Seq("Delft", "Gouda", "Leiden")) {
+      val d = java.nio.file.Paths.get(s"$dir/tick=$tick")
+      Files.createDirectories(d)
+      Files.writeString(d.resolve(s"$city.json"), payload(city, 1704067200L + 300L * tick, tick))
+    }
+    val schema = WeatherIngest.transform(spark.emptyDataset[String]).schema
+    var prev: Option[String] = None
+    val seen = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Int, Int)]
     val q = spark.readStream
       .format(classOf[graft.streaming.WeatherReplayProvider].getName)
       .option("path", dir)
+      .option("maxTicksPerBatch", "2")
       .load()
       .writeStream
       .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batchParts += batch.rdd.getNumPartitions
-        batchTicks += batch.select("tick").distinct().as[Long].collect().sorted.toSeq
-        val transformed = WeatherIngest.transform(batch.select("body").as[String])
-        val base = if (target == null) transformed.filter("1 = 0") else target
-        target = WeatherIngest.merge(base, transformed).cache()
-        target.count()
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        val ticks = batch.select("tick").distinct().count().toInt
+        val parts = batch.rdd.getNumPartitions
+        val base = prev.map(spark.read.schema(schema).parquet(_))
+          .getOrElse(spark.createDataFrame(java.util.List.of[Row](), schema))
+        val merged = WeatherIngest.merge(base,
+          WeatherIngest.transform(batch.select("body").as[String]))
+        merged.collect()
+        val plan = merged.queryExecution.executedPlan
+        assert(plan.isInstanceOf[AdaptiveSparkPlanExec], plan)
+        seen += ((ticks, parts,
+          collect(plan) { case s: RDDScanExec => s }.size,
+          collect(plan) { case e: ShuffleExchangeExec => e }.size))
+        merged.write.parquet(s"$store/v=$id")
+        prev = Some(s"$store/v=$id")
         ()
       }
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-
-    // admission control: one tick per micro-batch, in order
-    assert(batchTicks.toSeq === Seq(Seq(0L), Seq(1L)))
-    // partitioned by city file: 3 then 2 input partitions, never 1
-    assert(batchParts.toSeq === Seq(3, 2))
-    // golden end state: 4 cities, Rotterdam overwritten by tick 1
-    assert(target.count() === 4)
-    assert(target.filter($"city_name" === "Rotterdam").collect().head.getDouble(3) === 9.9)
-    assert(target.filter($"city_name" === "Leiden").collect().head.getDouble(3) === 4.1)
+    // (ticks, input partitions, source scans, shuffles) per batch. The
+    // micro-batch reaches foreachBatch as an RDD scan; the second
+    // batch's target is a parquet scan.
+    assert(seen.toSeq === Seq((2, 2, 1, 1), (2, 2, 1, 1)))
+    assert(spark.read.parquet(prev.get).count() === 12)
   }
 
   test("DSv2 replay source: restart resumes from committed tick offset") {
