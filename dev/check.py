@@ -2,6 +2,7 @@
 """Local stand-in for the driver's DuckDB-oracle compare (t2).
 
 Usage: python3 dev/check.py <verify_outdir> <sf_dir>
+       python3 dev/check.py --same <verify_outdir_a> <verify_outdir_b>
 
 Loads each <outdir>/<name>/ parquet written by graft.Verify via
 PYARROW (native objects: Decimal stays Decimal), runs the matching
@@ -13,6 +14,13 @@ the driver's hash treats Decimal('123.40') and 123.4 as DIFFERENT —
 output schemas must avoid DECIMAL (cast to DOUBLE at the end) so both
 engines produce the same canonical text. Dev tool only — the shipped
 Scala library never depends on this.
+
+--same compares two Verify output directories (e.g. before and after a
+refactor that must not change results): every query must have the same
+schema and the same rows in the same order, and both oracle_sql.json
+files must be equal as parsed JSON. Decoded values are compared, not
+parquet bytes: the footer's encoding-list order can differ between two
+writes of the same data.
 """
 import glob
 import json
@@ -79,9 +87,14 @@ def audit_types(con, oracle) -> int:
     return n_bad
 
 
-def main(outdir, sfdir):
+def load(outdir, name):
     import pyarrow as pa
     import pyarrow.parquet as pq
+    files = sorted(glob.glob(f"{outdir}/{name}/*.parquet"))
+    return pa.concat_tables([pq.read_table(f) for f in files]) if files else None
+
+
+def main(outdir, sfdir):
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sfdir}/{t}.parquet"
@@ -99,12 +112,11 @@ def main(outdir, sfdir):
         print(f"FAIL {name}: declared oracle but Verify wrote no output (query threw?)")
         n_fail += 1
     for name in qdirs:
-        files = sorted(glob.glob(f"{outdir}/{name}/*.parquet"))
-        if not files:
+        tbl = load(outdir, name)
+        if tbl is None:
             print(f"FAIL {name}: no parquet output")
             n_fail += 1
             continue
-        tbl = pa.concat_tables([pq.read_table(f) for f in files])
         got_cols = list(tbl.column_names)
         got = tbl.to_pylist()
         if name not in oracle:
@@ -149,5 +161,50 @@ def main(outdir, sfdir):
     return 1 if (n_fail or n_type_bad) else 0
 
 
+def same(out_a, out_b):
+    """Exit status 0 iff both Verify outputs hold the same results."""
+    n_diff = 0
+    oracles = []
+    for out in (out_a, out_b):
+        with open(f"{out}/oracle_sql.json") as f:
+            oracles.append(json.load(f))
+    if oracles[0] != oracles[1]:
+        a, b = oracles
+        keys = sorted(k for k in set(a) | set(b) if a.get(k) != b.get(k))
+        print(f"DIFF oracle_sql.json: {len(keys)} keys differ, first {keys[:5]}")
+        n_diff += 1
+    names = set()
+    for out in (out_a, out_b):
+        names |= {d for d in os.listdir(out) if os.path.isdir(os.path.join(out, d))}
+    # an oracle'd query that threw in Verify leaves no directory on either side
+    for name in sorted(set(oracles[0]) | set(oracles[1])):
+        if name not in names:
+            print(f"DIFF {name}: declared oracle but no output on either side")
+            n_diff += 1
+    for name in sorted(names):
+        ta, tb = load(out_a, name), load(out_b, name)
+        if ta is None or tb is None:
+            empty = [out for out, t in ((out_a, ta), (out_b, tb)) if t is None]
+            print(f"DIFF {name}: no parquet output in {', '.join(empty)}")
+            n_diff += 1
+        elif not ta.schema.equals(tb.schema):
+            print(f"DIFF {name}: schema\n  a: {ta.schema}\n  b: {tb.schema}")
+            n_diff += 1
+        else:
+            cols = ta.column_names
+            ra = [tuple(canon(r[c]) for c in cols) for r in ta.to_pylist()]
+            rb = [tuple(canon(r[c]) for c in cols) for r in tb.to_pylist()]
+            if ra != rb:
+                i = next((i for i, (x, y) in enumerate(zip(ra, rb)) if x != y),
+                         min(len(ra), len(rb)))
+                print(f"DIFF {name}: rows a={len(ra)} b={len(rb)}, first difference at row {i}")
+                n_diff += 1
+    print(f"\n{len(names)} queries compared, {len(oracles[0])} oracle entries, "
+          f"{n_diff} differences")
+    return 1 if n_diff else 0
+
+
 if __name__ == "__main__":
+    if sys.argv[1] == "--same":
+        sys.exit(same(sys.argv[2], sys.argv[3]))
     sys.exit(main(sys.argv[1], sys.argv[2]))

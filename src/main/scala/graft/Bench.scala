@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   // 1-minute loadavg from /proc — a contaminated host window (the
   // r12/r13/r14 "ghost regression" class: every query in the window
@@ -33,12 +32,7 @@ object Bench {
     val (busy0, steal0) = cpuJiffies()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftSparkExtensions)
-      .getOrCreate()
+    val spark = GraftSparkExtensions.localSession(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     // No sampling knobs: every query runs its full declared input.
     // (The pre-r6 nearDedup.sampleMod knob died with the unigram

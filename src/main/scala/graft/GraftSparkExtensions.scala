@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
@@ -109,4 +109,19 @@ class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => IntersectCountRewrite)
     ext.injectPlannerStrategy(_ => AsOfStrategy)
   }
+}
+
+object GraftSparkExtensions {
+
+  /** The local session every driver main runs: `n` cores, `n` shuffle
+    * partitions, UTC session time zone, no UI, graft extensions.
+    */
+  def localSession(n: Int): SparkSession =
+    SparkSession.builder()
+      .master(s"local[$n]")
+      .config("spark.sql.shuffle.partitions", n.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .withExtensions(new GraftSparkExtensions)
+      .getOrCreate()
 }

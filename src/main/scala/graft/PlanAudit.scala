@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FileSourceScanExec
 
 /** Dev-only plan audit: for every declared query, list each parquet
@@ -17,12 +16,7 @@ import org.apache.spark.sql.execution.FileSourceScanExec
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftSparkExtensions)
-      .getOrCreate()
+    val spark = GraftSparkExtensions.localSession(4)
     spark.sparkContext.setLogLevel("ERROR")
     val note = "AUDIT-NOTE RDDScanExec = a localCheckpoint()ed shared derivation " +
       "(Dedup/Components); its PRE-checkpoint plan projects only the needed " +

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Ivf, IvfPq, Pq, Similarity}
@@ -17,12 +16,7 @@ import graft.operators.{Ivf, IvfPq, Pq, Similarity}
 object Recall {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftSparkExtensions)
-      .getOrCreate()
+    val spark = GraftSparkExtensions.localSession(32)
     spark.sparkContext.setLogLevel("ERROR")
 
     val emb = Tables.table(spark, sfDir, "embeddings")

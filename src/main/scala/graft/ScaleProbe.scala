@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only scale probe for the cosine-graph family: prints the edge
@@ -14,13 +13,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val threshold = args.headOption.map(_.toDouble).getOrElse(0.3)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftSparkExtensions)
-      .getOrCreate()
+    val spark = GraftSparkExtensions.localSession(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val n = Tables.table(spark, dir, "embeddings").count()

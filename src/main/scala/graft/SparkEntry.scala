@@ -45,18 +45,26 @@ object SparkEntry {
       .orderBy(col("ws"))
   }
 
+  /** Every board query, each module listed once. Building it fails on
+    * a name that two declarations share.
+    */
+  private lazy val registry: Map[String, Query] = Query.registry(
+    Scalars.queries, Joins.queries, Aggregates.queries, Windows.queries,
+    SetOps.queries, StreamingBatch.queries, Extensions.queries, Stats.queries,
+    Round10.queries, Round10b.queries, Composites.queries, Round11.queries,
+    Round11b.queries, Round11c.queries, Round11d.queries, Round11e.queries,
+    Round11f.queries, Round11g.queries, Round11h.queries, Round11i.queries,
+    Round11j.queries, Round11k.queries, Round11l.queries, Round11m.queries,
+    Round12.queries, Round13.queries, Round14.queries, Round14b.queries)
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Scalars.defs ++ Joins.defs ++ Aggregates.defs ++ Windows.defs ++
-      SetOps.defs ++ StreamingBatch.defs ++ Extensions.defs ++ Stats.defs ++
-      Round10.defs ++ Round10b.defs ++ Composites.defs ++ Round11.defs ++ Round11b.defs ++ Round11c.defs ++ Round11d.defs ++ Round11e.defs ++ Round11f.defs ++ Round11g.defs ++ Round11h.defs ++ Round11i.defs ++ Round11j.defs ++ Round11k.defs ++ Round11l.defs ++ Round11m.defs ++ Round12.defs ++ Round13.defs ++ Round14.defs ++ Round14b.defs
+    registry.map { case (name, q) => name -> q.plan }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops
     * (approx sketches, LSH) → driver records a rows-only check.
     */
   def oracleSql: Map[String, String] =
-    Scalars.oracle ++ Joins.oracle ++ Aggregates.oracle ++ Windows.oracle ++
-      SetOps.oracle ++ StreamingBatch.oracle ++ Extensions.oracle ++ Stats.oracle ++
-      Round10.oracle ++ Round10b.oracle ++ Composites.oracle ++ Round11.oracle ++ Round11b.oracle ++ Round11c.oracle ++ Round11d.oracle ++ Round11e.oracle ++ Round11f.oracle ++ Round11g.oracle ++ Round11h.oracle ++ Round11i.oracle ++ Round11j.oracle ++ Round11k.oracle ++ Round11l.oracle ++ Round11m.oracle ++ Round12.oracle ++ Round13.oracle ++ Round14.oracle ++ Round14b.oracle
+    registry.collect { case (name, Query(_, _, Some(sql))) => name -> sql }
 }

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -21,12 +20,16 @@ import graft.Tables.table
   * keep the DECIMAL(18,4) product convention (§7.4).
   */
 object Composites {
-  type Q = (SparkSession, String) => DataFrame
-
   private def money4(c: org.apache.spark.sql.Column) = c.cast(DecimalType(18, 4))
   private def revenue =
     sum(money4(col("l_extendedprice") * (lit(1) - col("l_discount"))))
       .cast(DecimalType(18, 4)).cast("double")
+
+  /** A composite whose plan is Spark's own parse of its oracle SQL
+    * ([[graft.Sql.adhoc]]): both engines run the same text.
+    */
+  private def sameSql(name: String, sql: String): Query =
+    Query(name, (s, d) => graft.Sql.adhoc(s, d, sql), Some(sql))
 
   /** The three decorrelation composites (r10 verdict item 3) run the
     * SAME SQL text on both engines via [[graft.Sql.adhoc]]: the point
@@ -43,10 +46,10 @@ object Composites {
     * arithmetic forms are bit-identical across engines (exact integer
     * doubles; IEEE division), so the shared text stays hash-safe.
     */
-  private val decorrelated: Map[String, String] = Map(
+  private val decorrelated: Seq[Query] = Seq(
     // TPC-H Q18 (large-volume customers): semi join on an aggregated
     // HAVING subquery over the same fact it then re-joins.
-    "q_tpch_q18" ->
+    sameSql("q_tpch_q18",
       """SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice,
                 sum(l_quantity) AS sum_qty
          FROM customer, orders, lineitem
@@ -54,12 +57,12 @@ object Composites {
                               GROUP BY l_orderkey HAVING sum(l_quantity) > 300)
            AND c_custkey = o_custkey AND o_orderkey = l_orderkey
          GROUP BY c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice
-         ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""",
+         ORDER BY o_totalprice DESC, o_orderkey LIMIT 100"""),
 
     // TPC-H Q21 (suppliers who kept orders waiting): the EXISTS +
     // NOT EXISTS self-join chain on lineitem — a supplier's late line
     // on a multi-supplier 'F' order where NO OTHER supplier was late.
-    "q_tpch_q21" ->
+    sameSql("q_tpch_q21",
       """SELECT s_name, n_name, count(*) AS numwait
          FROM supplier, lineitem l1, orders, nation
          WHERE s_suppkey = l1.l_suppkey AND o_orderkey = l1.l_orderkey
@@ -74,12 +77,12 @@ object Composites {
                              AND l3.l_suppkey <> l1.l_suppkey
                              AND l3.l_shipdate > o3.o_orderdate + INTERVAL 60 DAY)
            AND s_nationkey = n_nationkey
-         GROUP BY s_name, n_name ORDER BY numwait DESC, s_name LIMIT 100""",
+         GROUP BY s_name, n_name ORDER BY numwait DESC, s_name LIMIT 100"""),
 
     // TPC-H Q2 (minimum-cost supplier): correlated scalar-min
     // subquery — the European supplier(s) hitting the region-wide
     // minimum unit price for each size-15 part.
-    "q_tpch_q2" ->
+    sameSql("q_tpch_q2",
       """SELECT DISTINCT s_acctbal, s_name, n_name, p_partkey, p_name
          FROM part, supplier, lineitem, nation, region
          WHERE p_partkey = l_partkey AND s_suppkey = l_suppkey
@@ -92,7 +95,7 @@ object Composites {
                WHERE l2.l_partkey = p_partkey AND s2.s_suppkey = l2.l_suppkey
                  AND s2.s_nationkey = n2.n_nationkey
                  AND n2.n_regionkey = r2.r_regionkey AND r2.r_name = 'EUROPE')
-         ORDER BY s_acctbal DESC, n_name, s_name, p_partkey LIMIT 100"""
+         ORDER BY s_acctbal DESC, n_name, s_name, p_partkey LIMIT 100""")
   )
 
   /** Round-11 TPC-H breadth wave — the remaining dial-a-shape
@@ -108,10 +111,10 @@ object Composites {
     * (a bare double avg is partition-order-dependent), and every
     * output is totally ordered.
     */
-  private val tpchWave2: Map[String, String] = Map(
+  private val tpchWave2: Seq[Query] = Seq(
     // TPC-H Q4 (order priority checking): EXISTS against the fact →
     // left-semi hash join; lateness = shipped >60 days after order.
-    "q_tpch_q4" ->
+    sameSql("q_tpch_q4",
       """SELECT o_orderpriority, count(*) AS order_count
          FROM orders
          WHERE o_orderdate >= TIMESTAMP '1996-07-01'
@@ -119,23 +122,23 @@ object Composites {
            AND EXISTS (SELECT 1 FROM lineitem
                        WHERE l_orderkey = o_orderkey
                          AND l_shipdate > o_orderdate + INTERVAL 60 DAY)
-         GROUP BY o_orderpriority ORDER BY o_orderpriority""",
+         GROUP BY o_orderpriority ORDER BY o_orderpriority"""),
 
     // TPC-H Q6 (forecasting revenue change): the pure scan-filter-agg
     // — one codegen'd stage, zero joins; the predicate constants are
     // exactly-representable doubles so BETWEEN never straddles an ulp.
-    "q_tpch_q6" ->
+    sameSql("q_tpch_q6",
       """SELECT CAST(CAST(sum(CAST(l_extendedprice * l_discount AS DECIMAL(18,4)))
                   AS DECIMAL(18,4)) AS DOUBLE) AS revenue
          FROM lineitem
          WHERE l_shipdate >= TIMESTAMP '1996-01-01'
            AND l_shipdate < TIMESTAMP '1997-01-01'
            AND l_discount >= 0.05 AND l_discount <= 0.07
-           AND l_quantity < 24""",
+           AND l_quantity < 24"""),
 
     // TPC-H Q7 (volume shipping): two-nation flow with a
     // double-aliased nation dim (n1 supplier side, n2 customer side).
-    "q_tpch_q7" ->
+    sameSql("q_tpch_q7",
       """SELECT supp_nation, cust_nation, l_year,
                 CAST(CAST(sum(volume) AS DECIMAL(18,4)) AS DOUBLE) AS revenue
          FROM (SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
@@ -150,12 +153,12 @@ object Composites {
                  AND l_shipdate >= TIMESTAMP '1996-01-01'
                  AND l_shipdate < TIMESTAMP '1998-01-01') shipping
          GROUP BY supp_nation, cust_nation, l_year
-         ORDER BY supp_nation, cust_nation, l_year""",
+         ORDER BY supp_nation, cust_nation, l_year"""),
 
     // TPC-H Q8 (national market share): NATION_6's share of AMERICA
     // ECONOMY-part revenue by order year — conditional share over a
     // 5-table join; both sums are exact decimals, one final division.
-    "q_tpch_q8" ->
+    sameSql("q_tpch_q8",
       """SELECT o_year,
                 round(CAST(sum(CASE WHEN nation = 'NATION_6' THEN volume
                                     ELSE CAST(0 AS DECIMAL(18,4)) END) AS DOUBLE) /
@@ -173,12 +176,12 @@ object Composites {
                  AND o_orderdate >= TIMESTAMP '1996-01-01'
                  AND o_orderdate < TIMESTAMP '1998-01-01'
                  AND p_type = 'ECONOMY') all_nations
-         GROUP BY o_year ORDER BY o_year""",
+         GROUP BY o_year ORDER BY o_year"""),
 
     // TPC-H Q12 (shipping modes / priority): l_shipmode doesn't exist
     // in the fixture → derived ship-delay buckets (FAST ≤30d, SLOW
     // ≤60d, LATE >60d) carry the same high/low-priority pivot.
-    "q_tpch_q12" ->
+    sameSql("q_tpch_q12",
       """SELECT delay_bucket,
                 CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
                               THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
@@ -192,24 +195,24 @@ object Composites {
                WHERE o_orderkey = l_orderkey
                  AND l_shipdate >= TIMESTAMP '1996-01-01'
                  AND l_shipdate < TIMESTAMP '1997-01-01') flagged
-         GROUP BY delay_bucket ORDER BY delay_bucket""",
+         GROUP BY delay_bucket ORDER BY delay_bucket"""),
 
     // TPC-H Q13 (customer order-count distribution): LEFT OUTER join
     // keeps zero-order customers; the o_comment NOT LIKE exclusion
     // becomes an order-priority exclusion (same join-condition-filter
     // shape: the predicate must ride INSIDE the outer join, not after
     // it, or the zero bucket vanishes).
-    "q_tpch_q13" ->
+    sameSql("q_tpch_q13",
       """SELECT c_count, count(*) AS custdist
          FROM (SELECT c_custkey, count(o_orderkey) AS c_count
                FROM customer LEFT OUTER JOIN orders
                  ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
                GROUP BY c_custkey) c_orders
-         GROUP BY c_count ORDER BY custdist DESC, c_count DESC""",
+         GROUP BY c_count ORDER BY custdist DESC, c_count DESC"""),
 
     // TPC-H Q14 (promo revenue share): conditional-over-total revenue
     // across the part join, one month window.
-    "q_tpch_q14" ->
+    sameSql("q_tpch_q14",
       """SELECT round(100.0 *
                   CAST(sum(CASE WHEN p_type = 'PROMO'
                                 THEN CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))
@@ -219,12 +222,12 @@ object Composites {
          FROM lineitem, part
          WHERE l_partkey = p_partkey
            AND l_shipdate >= TIMESTAMP '1996-09-01'
-           AND l_shipdate < TIMESTAMP '1996-10-01'""",
+           AND l_shipdate < TIMESTAMP '1996-10-01'"""),
 
     // TPC-H Q15 (top supplier): CTE revenue view + scalar-max
     // subquery — Catalyst evaluates the max once (subquery reuse),
     // never per row.
-    "q_tpch_q15" ->
+    sameSql("q_tpch_q15",
       """WITH revenue0 AS (
            SELECT l_suppkey AS supplier_no,
                   CAST(CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4)))
@@ -237,26 +240,26 @@ object Composites {
          FROM supplier, revenue0
          WHERE s_suppkey = supplier_no
            AND total_revenue = (SELECT max(total_revenue) FROM revenue0)
-         ORDER BY s_suppkey""",
+         ORDER BY s_suppkey"""),
 
     // TPC-H Q17 (small-quantity-order revenue): correlated per-part
     // avg → aggregate + equi join back on l_partkey; p_container
     // stands in as p_size. The threshold avg is a sum of
     // integer-valued quantities / count — exact, order-free.
-    "q_tpch_q17" ->
+    sameSql("q_tpch_q17",
       """SELECT round(CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)))
                   AS DECIMAL(18,2)) AS DOUBLE) / 7.0, 6) AS avg_yearly
          FROM lineitem, part
          WHERE p_partkey = l_partkey
            AND p_brand = 'Brand#23' AND p_size < 25
            AND l_quantity < (SELECT 0.3 * avg(l_quantity)
-                             FROM lineitem l2 WHERE l2.l_partkey = p_partkey)""",
+                             FROM lineitem l2 WHERE l2.l_partkey = p_partkey)"""),
 
     // TPC-H Q19 (discounted revenue, disjunctive predicates): the
     // OR-of-ANDs join predicate — Catalyst must still extract the
     // common p_partkey = l_partkey equi key and hash-join, pushing
     // the disjunction to a post-join filter (never a BNLJ).
-    "q_tpch_q19" ->
+    sameSql("q_tpch_q19",
       """SELECT CAST(CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4)))
                   AS DECIMAL(18,4)) AS DOUBLE) AS revenue
          FROM lineitem, part
@@ -266,7 +269,7 @@ object Composites {
             OR (p_brand = 'Brand#23' AND p_size >= 1 AND p_size <= 25
                 AND l_quantity >= 10 AND l_quantity <= 20)
             OR (p_brand = 'Brand#24' AND p_size >= 1 AND p_size <= 35
-                AND l_quantity >= 20 AND l_quantity <= 30))""",
+                AND l_quantity >= 20 AND l_quantity <= 30))"""),
 
     // TPC-H Q22 (global sales opportunity): NOT EXISTS (anti join) +
     // a scalar avg threshold; c_phone country codes become
@@ -275,7 +278,7 @@ object Composites {
     // form is empty at every SF). The threshold is an exact decimal
     // sum / count — a bare avg(double) differs across partition
     // orders.
-    "q_tpch_q22" ->
+    sameSql("q_tpch_q22",
       """SELECT cntrycode, count(*) AS numcust,
                 CAST(CAST(sum(CAST(c_acctbal AS DECIMAL(18,2)))
                      AS DECIMAL(18,2)) AS DOUBLE) AS totacctbal
@@ -290,7 +293,7 @@ object Composites {
                  AND NOT EXISTS (SELECT 1 FROM orders
                                  WHERE o_custkey = c_custkey
                                    AND o_orderpriority = '1-URGENT')) custsale
-         GROUP BY cntrycode ORDER BY cntrycode"""
+         GROUP BY cntrycode ORDER BY cntrycode""")
   )
 
   /** Round-11 TPC-H completion wave — the last four of the 22, all
@@ -308,7 +311,7 @@ object Composites {
     * integer-valued doubles (exact at any partition order); min over
     * doubles is order-free.
     */
-  private val tpchWave3: Map[String, String] = Map(
+  private val tpchWave3: Seq[Query] = Seq(
     // TPC-H Q9 (product-type profit): profit per supplier nation and
     // order year over the canonical 6-table star — supply cost rides
     // the part dim as a fixed retail margin (0.6 · p_retailprice
@@ -316,7 +319,7 @@ object Composites {
     // quantity sits on the 3dp grid, so the DECIMAL(18,4) cast is
     // never near a rounding midpoint — unit-price quotients are NOT
     // hash-safe here, measured).
-    "q_tpch_q9" ->
+    sameSql("q_tpch_q9",
       """SELECT nation, o_year,
                 CAST(CAST(sum(amount) AS DECIMAL(18,4)) AS DOUBLE) AS sum_profit
          FROM (SELECT n_name AS nation, CAST(year(o_orderdate) AS BIGINT) AS o_year,
@@ -326,13 +329,13 @@ object Composites {
                WHERE s_suppkey = l_suppkey AND p_partkey = l_partkey
                  AND o_orderkey = l_orderkey AND s_nationkey = n_nationkey
                  AND p_name LIKE '%red%') profit
-         GROUP BY nation, o_year ORDER BY nation, o_year DESC""",
+         GROUP BY nation, o_year ORDER BY nation, o_year DESC"""),
 
     // TPC-H Q11 (important stock): per-part shipped value for one
     // nation's suppliers, kept only above a fraction of the nation
     // total — the global threshold is a scalar subquery evaluated
     // once and broadcast.
-    "q_tpch_q11" ->
+    sameSql("q_tpch_q11",
       """SELECT l_partkey AS ps_partkey,
                 CAST(CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4)))
                      AS DECIMAL(18,4)) AS DOUBLE) AS value
@@ -347,14 +350,14 @@ object Composites {
                  FROM lineitem, supplier, nation
                  WHERE l_suppkey = s_suppkey AND s_nationkey = n_nationkey
                    AND n_name = 'NATION_3')
-         ORDER BY value DESC, ps_partkey""",
+         ORDER BY value DESC, ps_partkey"""),
 
     // TPC-H Q16 (parts/supplier relationship): distinct suppliers per
     // part attribute cell, excluding flagged suppliers via NOT IN —
     // s_acctbal < 0 stands in for the comment-LIKE complaint flag
     // (keys are never null, so the null-aware anti join is a plain
     // left-anti hash join).
-    "q_tpch_q16" ->
+    sameSql("q_tpch_q16",
       """SELECT p_brand, p_type, p_size,
                 count(DISTINCT l_suppkey) AS supplier_cnt
          FROM lineitem, part
@@ -364,14 +367,14 @@ object Composites {
            AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier
                                  WHERE s_acctbal < 0)
          GROUP BY p_brand, p_type, p_size
-         ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""",
+         ORDER BY supplier_cnt DESC, p_brand, p_type, p_size"""),
 
     // TPC-H Q20 (potential part promotion): suppliers who dominated a
     // red part's 1996 volume (>20% of all shipments of that part) —
     // the nested-IN chain with a correlated per-part aggregate; the
     // nationkey range plays the country-code role (the Q22
     // convention) so the result is non-degenerate at every SF.
-    "q_tpch_q20" ->
+    sameSql("q_tpch_q20",
       """SELECT s_name, s_acctbal
          FROM supplier, nation
          WHERE s_suppkey IN (
@@ -388,12 +391,10 @@ object Composites {
                    AND l2.l_shipdate >= TIMESTAMP '1996-01-01'
                    AND l2.l_shipdate < TIMESTAMP '1997-01-01'))
            AND s_nationkey = n_nationkey AND n_nationkey < 13
-         ORDER BY s_name"""
+         ORDER BY s_name""")
   )
 
-  val defs: Map[String, Q] = (decorrelated ++ tpchWave2 ++ tpchWave3).map { case (name, sql) =>
-    name -> ((s: SparkSession, d: String) => graft.Sql.adhoc(s, d, sql)): (String, Q)
-  } ++ Map(
+  val queries: Seq[Query] = decorrelated ++ tpchWave2 ++ tpchWave3 ++ Seq(
 
     // TPC-H Q1 (pricing summary report): the canonical single-pass
     // wide aggregate — 8 aggregates over 2 group keys, one codegen'd
@@ -401,7 +402,7 @@ object Composites {
     // sums in exact DECIMAL (2dp inputs; 4dp for the 2-factor
     // product, 6dp for the 3-factor charge), averages as one
     // decimal-sum / count division per engine.
-    "q_tpch_q1" -> ((s, d) =>
+    Query("q_tpch_q1", (s, d) =>
       table(s, d, "lineitem")
         .filter(col("l_shipdate") <= lit("1998-12-01").cast("timestamp"))
         .groupBy(col("l_returnflag"), col("l_linestatus"))
@@ -422,11 +423,24 @@ object Composites {
           round(sum(col("l_discount").cast(DecimalType(18, 2)))
             .cast(DecimalType(18, 2)).cast("double") / count(lit(1)), 6).as("avg_disc"),
           count(lit(1)).as("count_order"))
-        .orderBy(col("l_returnflag"), col("l_linestatus"))),
+        .orderBy(col("l_returnflag"), col("l_linestatus")), Some(
+      """SELECT l_returnflag, l_linestatus,
+                CAST(CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) AS sum_qty,
+                CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) AS sum_base_price,
+                CAST(CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DECIMAL(18,4)) AS DOUBLE) AS sum_disc_price,
+                CAST(CAST(sum(CAST(l_extendedprice * (1 - l_discount) * (1 + l_tax) AS DECIMAL(18,6))) AS DECIMAL(18,6)) AS DOUBLE) AS sum_charge,
+                round(CAST(CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) / count(*), 6) AS avg_qty,
+                round(CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) / count(*), 6) AS avg_price,
+                round(CAST(CAST(sum(CAST(l_discount AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) / count(*), 6) AS avg_disc,
+                count(*) AS count_order
+         FROM lineitem
+         WHERE l_shipdate <= TIMESTAMP '1998-12-01'
+         GROUP BY l_returnflag, l_linestatus
+         ORDER BY l_returnflag, l_linestatus""")),
 
     // TPC-H Q3 (shipping priority): top-10 unshipped BUILDING-segment
     // orders by revenue at the cutoff date.
-    "q_tpch_q3" -> ((s, d) =>
+    Query("q_tpch_q3", (s, d) =>
       table(s, d, "customer").filter(col("c_mktsegment") === "BUILDING")
         .join(table(s, d, "orders")
           .filter(col("o_orderdate") < lit("1996-03-15").cast("timestamp")),
@@ -439,11 +453,21 @@ object Composites {
         .orderBy(col("revenue").desc, col("o_orderdate"), col("l_orderkey"))
         .limit(10)
         .select(col("l_orderkey"), col("revenue"), col("o_orderdate"),
-          col("o_orderpriority"))),
+          col("o_orderpriority")), Some(
+      """SELECT l_orderkey,
+                CAST(CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DECIMAL(18,4)) AS DOUBLE) AS revenue,
+                o_orderdate, o_orderpriority
+         FROM customer, orders, lineitem
+         WHERE c_mktsegment = 'BUILDING' AND c_custkey = o_custkey
+           AND l_orderkey = o_orderkey
+           AND o_orderdate < TIMESTAMP '1996-03-15'
+           AND l_shipdate > TIMESTAMP '1996-03-15'
+         GROUP BY l_orderkey, o_orderdate, o_orderpriority
+         ORDER BY revenue DESC, o_orderdate, l_orderkey LIMIT 10""")),
 
     // TPC-H Q5 (local supplier volume): revenue from ASIA customers
     // served by a supplier in the SAME nation, by nation, one year.
-    "q_tpch_q5" -> ((s, d) =>
+    Query("q_tpch_q5", (s, d) =>
       table(s, d, "customer")
         .join(table(s, d, "orders")
           .filter(col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
@@ -460,11 +484,21 @@ object Composites {
           col("n_regionkey") === col("r_regionkey"))
         .groupBy(col("n_name"))
         .agg(revenue.as("revenue"))
-        .orderBy(col("revenue").desc, col("n_name"))),
+        .orderBy(col("revenue").desc, col("n_name")), Some(
+      """SELECT n_name,
+                CAST(CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DECIMAL(18,4)) AS DOUBLE) AS revenue
+         FROM customer, orders, lineitem, supplier, nation, region
+         WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
+           AND l_suppkey = s_suppkey AND c_nationkey = s_nationkey
+           AND s_nationkey = n_nationkey AND n_regionkey = r_regionkey
+           AND r_name = 'ASIA'
+           AND o_orderdate >= TIMESTAMP '1996-01-01'
+           AND o_orderdate < TIMESTAMP '1997-01-01'
+         GROUP BY n_name ORDER BY revenue DESC, n_name""")),
 
     // TPC-H Q10 (returned-item reporting): top-20 customers by lost
     // revenue from returned items in one quarter.
-    "q_tpch_q10" -> ((s, d) =>
+    Query("q_tpch_q10", (s, d) =>
       table(s, d, "customer")
         .join(table(s, d, "orders")
           .filter(col("o_orderdate") >= lit("1996-10-01").cast("timestamp") &&
@@ -479,50 +513,7 @@ object Composites {
         .orderBy(col("revenue").desc, col("c_custkey"))
         .limit(20)
         .select(col("c_custkey"), col("c_name"), col("revenue"),
-          col("c_acctbal"), col("n_name")))
-  )
-
-  val oracle: Map[String, String] = decorrelated ++ tpchWave2 ++ tpchWave3 ++ Map(
-    "q_tpch_q1" ->
-      """SELECT l_returnflag, l_linestatus,
-                CAST(CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) AS sum_qty,
-                CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) AS sum_base_price,
-                CAST(CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DECIMAL(18,4)) AS DOUBLE) AS sum_disc_price,
-                CAST(CAST(sum(CAST(l_extendedprice * (1 - l_discount) * (1 + l_tax) AS DECIMAL(18,6))) AS DECIMAL(18,6)) AS DOUBLE) AS sum_charge,
-                round(CAST(CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) / count(*), 6) AS avg_qty,
-                round(CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) / count(*), 6) AS avg_price,
-                round(CAST(CAST(sum(CAST(l_discount AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) / count(*), 6) AS avg_disc,
-                count(*) AS count_order
-         FROM lineitem
-         WHERE l_shipdate <= TIMESTAMP '1998-12-01'
-         GROUP BY l_returnflag, l_linestatus
-         ORDER BY l_returnflag, l_linestatus""",
-
-    "q_tpch_q3" ->
-      """SELECT l_orderkey,
-                CAST(CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DECIMAL(18,4)) AS DOUBLE) AS revenue,
-                o_orderdate, o_orderpriority
-         FROM customer, orders, lineitem
-         WHERE c_mktsegment = 'BUILDING' AND c_custkey = o_custkey
-           AND l_orderkey = o_orderkey
-           AND o_orderdate < TIMESTAMP '1996-03-15'
-           AND l_shipdate > TIMESTAMP '1996-03-15'
-         GROUP BY l_orderkey, o_orderdate, o_orderpriority
-         ORDER BY revenue DESC, o_orderdate, l_orderkey LIMIT 10""",
-
-    "q_tpch_q5" ->
-      """SELECT n_name,
-                CAST(CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DECIMAL(18,4)) AS DOUBLE) AS revenue
-         FROM customer, orders, lineitem, supplier, nation, region
-         WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-           AND l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-           AND s_nationkey = n_nationkey AND n_regionkey = r_regionkey
-           AND r_name = 'ASIA'
-           AND o_orderdate >= TIMESTAMP '1996-01-01'
-           AND o_orderdate < TIMESTAMP '1997-01-01'
-         GROUP BY n_name ORDER BY revenue DESC, n_name""",
-
-    "q_tpch_q10" ->
+          col("c_acctbal"), col("n_name")), Some(
       """SELECT c_custkey, c_name,
                 CAST(CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DECIMAL(18,4)) AS DOUBLE) AS revenue,
                 c_acctbal, n_name
@@ -532,6 +523,6 @@ object Composites {
            AND o_orderdate < TIMESTAMP '1997-01-01'
            AND l_returnflag = 'R' AND c_nationkey = n_nationkey
          GROUP BY c_custkey, c_name, c_acctbal, n_name
-         ORDER BY revenue DESC, c_custkey LIMIT 20"""
+         ORDER BY revenue DESC, c_custkey LIMIT 20"""))
   )
 }

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -20,9 +20,7 @@ import graft.Cuts.CutOps
   * integer aggregates + one final expression (§7.4 conventions).
   */
 object Round10b {
-  type Q = (SparkSession, String) => DataFrame
-
-  val defs: Map[String, Q] = Map(
+  val queries: Seq[Query] = Seq(
 
     // CUSUM drift statistic per event type over the daily count
     // series: S_t = max(0, S_{t-1} + (c_t − median_c)). The alarm
@@ -31,7 +29,7 @@ object Round10b {
     // fold (5 groups × ≤31 days — the q_x_holt mapGroups shape, state
     // = one running double); deviations are exact 0.5-multiples so
     // the fold is exact arithmetic on both engines.
-    "q_x_cusum" -> ((s, d) => {
+    Query("q_x_cusum", (s, d) => {
       import s.implicits._
       val dc = graft.operators.DayGrain.counts(s, d)
       val med = dc.groupBy(col("event_type"))
@@ -53,13 +51,38 @@ object Round10b {
           round(col("cusum_max"), 6).as("cusum_max"),
           round(col("cusum_final"), 6).as("cusum_final"))
         .orderBy(col("event_type"))
-    }),
+    }, Some(
+      """WITH RECURSIVE dc AS (
+           SELECT event_type, CAST(ts AS DATE) AS day,
+                  CAST(count(*) AS BIGINT) AS c
+           FROM events GROUP BY 1, 2),
+         med AS (SELECT event_type, median(c) AS med,
+                   CAST(count(*) AS BIGINT) AS n_days
+                 FROM dc GROUP BY 1),
+         o AS (SELECT dc.event_type, CAST(dc.c AS DOUBLE) AS c, med.med, med.n_days,
+                 CAST(row_number() OVER (PARTITION BY dc.event_type
+                   ORDER BY dc.day) AS BIGINT) AS rn
+               FROM dc JOIN med ON med.event_type = dc.event_type),
+         r AS (
+           SELECT event_type, rn, n_days,
+                  greatest(CAST(0 AS DOUBLE), c - med) AS s,
+                  greatest(CAST(0 AS DOUBLE), c - med) AS smax
+           FROM o WHERE rn = 1
+           UNION ALL
+           SELECT o.event_type, o.rn, o.n_days,
+                  greatest(CAST(0 AS DOUBLE), r.s + (o.c - o.med)),
+                  greatest(r.smax,
+                    greatest(CAST(0 AS DOUBLE), r.s + (o.c - o.med)))
+           FROM o JOIN r ON o.event_type = r.event_type AND o.rn = r.rn + 1)
+         SELECT event_type, n_days,
+                round(smax, 6) AS cusum_max, round(s, 6) AS cusum_final
+         FROM r WHERE rn = n_days ORDER BY event_type""")),
 
     // Wald–Wolfowitz runs test per type: is the daily count series
     // random around its median, or does it streak? Ties (== median)
     // are dropped (the standard convention); runs / n1 / n2 are exact
     // longs from one lag window at day grain, z is one expression.
-    "q_x_runs_test" -> ((s, d) => {
+    Query("q_x_runs_test", (s, d) => {
       val dc = graft.operators.DayGrain.counts(s, d)
       val med = dc.groupBy(col("event_type")).agg(median(col("c")).as("med"))
       val signed = dc.join(broadcast(med), "event_type")
@@ -89,169 +112,7 @@ object Round10b {
                 ((col("n1") + col("n2")).cast("double") * (col("n1") + col("n2")) *
                   (col("n1") + col("n2") - 1)))), 6).as("z"))
         .orderBy(col("event_type"))
-    }),
-
-    // Exact word-BIGRAM Jaccard between every source pair — the
-    // cross-source content-overlap matrix (the EXACT arm of the
-    // kmv_overlap sketch already on the board). Bigram space, not
-    // unigram: the fixture vocabulary is ~31 terms so every source
-    // covers it (all-1.0 matrix); bigrams are combinatorial and
-    // discriminate. Work is bounded by the (source, gram)-distinct
-    // table: the self-join buckets by gram, output is k²/2 = 190
-    // pairs.
-    "q_x_source_jaccard" -> ((s, d) => {
-      val st = table(s, d, "documents")
-        .select(col("source"),
-          explode(graft.functions.TextFunctions.wordNgramsExpr("text", 2)).as("t"))
-        .distinct()
-        .cut("Round10b.scala:110")
-      val sizes = st.groupBy(col("source")).agg(count(lit(1)).as("nv"))
-      val inter = st.select(col("source").as("sa"), col("t"))
-        .join(st.select(col("source").as("sb"), col("t")), "t")
-        .filter(col("sa") < col("sb"))
-        .groupBy(col("sa"), col("sb")).agg(count(lit(1)).as("inter"))
-      inter
-        .join(broadcast(sizes.select(col("source").as("sa"), col("nv").as("na"))), "sa")
-        .join(broadcast(sizes.select(col("source").as("sb"), col("nv").as("nb"))), "sb")
-        .select(col("sa"), col("sb"), col("inter"), col("na"), col("nb"),
-          round(col("inter").cast("double") /
-            (col("na") + col("nb") - col("inter")), 6).as("jaccard"))
-        .orderBy(col("sa"), col("sb"))
-    }),
-
-    // Corpus coverage curve at FREQUENCY grain: for each distinct
-    // term-count value (rarest-to-commonest domain, bounded by the
-    // count range — not the vocabulary), how many terms have it and
-    // what cumulative share of all tokens the terms at or above it
-    // cover. The "how many vocab entries until 95% of tokens" curve
-    // that sizes tokenizers — computed without a vocabulary-sized
-    // window (the value domain is its own histogram).
-    "q_x_coverage" -> ((s, d) => {
-      val wOrd = Window.orderBy(col("c").desc)
-      val freq = table(s, d, "documents")
-        .select(explode(split(col("text"), " ")).as("t"))
-        .groupBy(col("t")).agg(count(lit(1)).as("c"))
-      val byCount = freq.groupBy(col("c")).agg(count(lit(1)).as("n_terms"))
-        .withColumn("mass", col("c") * col("n_terms"))
-        // count-value domain ≤ a few hundred rows: bounded window
-        .coalesce(1)
-        .withColumn("cum_terms", sum(col("n_terms")).over(
-          wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .withColumn("cum_mass", sum(col("mass")).over(
-          wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .cut("Round10b.scala:145", kRowFold = true)
-      val tot = byCount.agg(sum(col("mass")).as("n_tokens"))
-      byCount.crossJoin(broadcast(tot))
-        .select(col("c"), col("n_terms"), col("cum_terms"),
-          round(col("cum_mass").cast("double") / col("n_tokens"), 6).as("cum_share"))
-        .orderBy(col("c").desc)
-    }),
-
-    // Q–Q shift: empirical n_chars quantiles of source src0 vs the
-    // rest of the corpus at every 5th percentile, read at integer
-    // ranks (value = min v with cum_count ≥ ceil(q·n/100)) — exact
-    // integers end to end, no interpolation to diverge on. The
-    // distribution-shape diff a mean test (cohens_d) can't see.
-    // Shape: value-grain cumulative counts (the q_x_mann_whitney
-    // pattern) × a 19-row broadcast percentile spine.
-    "q_x_qq_shift" -> ((s, d) => {
-      val docs = table(s, d, "documents")
-        .select(col("n_chars"), (col("source") === "src0").as("is_a"))
-      def qvals(side: DataFrame, flag: Boolean): DataFrame = {
-        val vg = side.filter(col("is_a") === flag)
-          .groupBy(col("n_chars")).agg(count(lit(1)).as("cnt"))
-        val wOrd = Window.orderBy(col("n_chars"))
-        val cum = vg.coalesce(1)
-          .withColumn("cum", sum(col("cnt")).over(
-            wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-          .cut("Round10b.scala:170", kRowFold = true)
-        val n = cum.agg(max(col("cum")).as("n"))
-        val spine = broadcast(
-          side.sparkSession.range(1, 20).select((col("id") * 5).as("q")))
-        spine.crossJoin(broadcast(n))
-          .join(cum, col("cum") * 100 >= col("q") * col("n"))
-          .groupBy(col("q")).agg(min(col("n_chars")).as(if (flag) "v_src" else "v_rest"))
-      }
-      qvals(docs, flag = true).join(qvals(docs, flag = false), "q")
-        .select(col("q").cast("int").as("pct"), col("v_src"), col("v_rest"),
-          (col("v_src") - col("v_rest")).as("shift"))
-        .orderBy(col("pct"))
-    }),
-
-    // Simpson diversity of each source's token distribution:
-    // D = Σ c(c−1) / (N(N−1)) (the probability two random tokens
-    // coincide) and its inverse (effective vocabulary size) — the
-    // repetition-diversity audit complementing Shannon entropy
-    // (q_x_entropy) and type-token ratio (q_x_diversity). Pure
-    // integer sums at (source, term) grain.
-    "q_x_simpson" -> ((s, d) => {
-      val tf = table(s, d, "documents")
-        .select(col("source"), explode(split(col("text"), " ")).as("t"))
-        .groupBy(col("source"), col("t")).agg(count(lit(1)).as("c"))
-      tf.groupBy(col("source"))
-        .agg(sum(col("c")).as("n_tokens"),
-          sum(col("c") * (col("c") - 1)).as("coin"))
-        .select(col("source"), col("n_tokens"),
-          round(when(col("n_tokens") > 1,
-            col("coin").cast("double") /
-              (col("n_tokens").cast("double") * (col("n_tokens") - 1))), 6)
-            .as("simpson"),
-          round(when(col("coin") > 0,
-            (col("n_tokens").cast("double") * (col("n_tokens") - 1)) /
-              col("coin")), 6).as("inv_simpson"))
-        .orderBy(col("source"))
-    }),
-
-    // Grubbs single-outlier statistic for n_chars: G = max(|min−μ|,
-    // |max−μ|)/σ. The extreme deviation is determined by the min and
-    // max order statistics alone, so the whole test is FOUR integer
-    // aggregates + one expression — O(1) output at any corpus size.
-    "q_x_grubbs" -> ((s, d) =>
-      table(s, d, "documents")
-        .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sx"),
-          sum(col("n_chars") * col("n_chars")).as("qx"),
-          min(col("n_chars")).as("mn"), max(col("n_chars")).as("mx"))
-        .select(col("n"), col("mn"), col("mx"),
-          // Variance guard in DOUBLE: qx*n and sx*sx as raw BIGINTs
-          // overflow Long at ~1e10 docs × n_chars~1e3 (Spark non-ANSI
-          // would wrap silently while DuckDB errors — r10 advice).
-          round(when(col("n") > 1 &&
-            col("qx").cast("double") * col("n") > col("sx").cast("double") * col("sx"),
-            greatest(col("mx") - col("sx").cast("double") / col("n"),
-              col("sx").cast("double") / col("n") - col("mn")) /
-              sqrt((col("qx") - col("sx").cast("double") * col("sx") / col("n")) /
-                (col("n") - 1))), 6).as("g")))
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q_x_cusum" ->
-      """WITH RECURSIVE dc AS (
-           SELECT event_type, CAST(ts AS DATE) AS day,
-                  CAST(count(*) AS BIGINT) AS c
-           FROM events GROUP BY 1, 2),
-         med AS (SELECT event_type, median(c) AS med,
-                   CAST(count(*) AS BIGINT) AS n_days
-                 FROM dc GROUP BY 1),
-         o AS (SELECT dc.event_type, CAST(dc.c AS DOUBLE) AS c, med.med, med.n_days,
-                 CAST(row_number() OVER (PARTITION BY dc.event_type
-                   ORDER BY dc.day) AS BIGINT) AS rn
-               FROM dc JOIN med ON med.event_type = dc.event_type),
-         r AS (
-           SELECT event_type, rn, n_days,
-                  greatest(CAST(0 AS DOUBLE), c - med) AS s,
-                  greatest(CAST(0 AS DOUBLE), c - med) AS smax
-           FROM o WHERE rn = 1
-           UNION ALL
-           SELECT o.event_type, o.rn, o.n_days,
-                  greatest(CAST(0 AS DOUBLE), r.s + (o.c - o.med)),
-                  greatest(r.smax,
-                    greatest(CAST(0 AS DOUBLE), r.s + (o.c - o.med)))
-           FROM o JOIN r ON o.event_type = r.event_type AND o.rn = r.rn + 1)
-         SELECT event_type, n_days,
-                round(smax, 6) AS cusum_max, round(s, 6) AS cusum_final
-         FROM r WHERE rn = n_days ORDER BY event_type""",
-
-    "q_x_runs_test" ->
+    }, Some(
       """WITH dc AS (SELECT event_type, CAST(ts AS DATE) AS day,
                   CAST(count(*) AS BIGINT) AS c
                 FROM events GROUP BY 1, 2),
@@ -274,9 +135,35 @@ object Round10b {
                   (r - (2.0 * n1 * n2 / (n1 + n2) + 1)) /
                   sqrt(2.0 * n1 * n2 * (2.0 * n1 * n2 - n1 - n2) /
                     (CAST(n1 + n2 AS DOUBLE) * (n1 + n2) * (n1 + n2 - 1))) END, 6) AS z
-         FROM g ORDER BY event_type""",
+         FROM g ORDER BY event_type""")),
 
-    "q_x_source_jaccard" ->
+    // Exact word-BIGRAM Jaccard between every source pair — the
+    // cross-source content-overlap matrix (the EXACT arm of the
+    // kmv_overlap sketch already on the board). Bigram space, not
+    // unigram: the fixture vocabulary is ~31 terms so every source
+    // covers it (all-1.0 matrix); bigrams are combinatorial and
+    // discriminate. Work is bounded by the (source, gram)-distinct
+    // table: the self-join buckets by gram, output is k²/2 = 190
+    // pairs.
+    Query("q_x_source_jaccard", (s, d) => {
+      val st = table(s, d, "documents")
+        .select(col("source"),
+          explode(graft.functions.TextFunctions.wordNgramsExpr("text", 2)).as("t"))
+        .distinct()
+        .cut("Round10b.scala:110")
+      val sizes = st.groupBy(col("source")).agg(count(lit(1)).as("nv"))
+      val inter = st.select(col("source").as("sa"), col("t"))
+        .join(st.select(col("source").as("sb"), col("t")), "t")
+        .filter(col("sa") < col("sb"))
+        .groupBy(col("sa"), col("sb")).agg(count(lit(1)).as("inter"))
+      inter
+        .join(broadcast(sizes.select(col("source").as("sa"), col("nv").as("na"))), "sa")
+        .join(broadcast(sizes.select(col("source").as("sb"), col("nv").as("nb"))), "sb")
+        .select(col("sa"), col("sb"), col("inter"), col("na"), col("nb"),
+          round(col("inter").cast("double") /
+            (col("na") + col("nb") - col("inter")), 6).as("jaccard"))
+        .orderBy(col("sa"), col("sb"))
+    }, Some(
       """WITH w AS (SELECT source, string_split(text, ' ') AS ws FROM documents),
          u AS (SELECT source, ws, unnest(range(1, len(ws))) AS i FROM w),
          st AS (SELECT DISTINCT source,
@@ -289,9 +176,35 @@ object Round10b {
          SELECT sa, sb, inter, za.nv AS na, zb.nv AS nb,
                 round(CAST(inter AS DOUBLE) / (za.nv + zb.nv - inter), 6) AS jaccard
          FROM i JOIN sz za ON za.source = sa JOIN sz zb ON zb.source = sb
-         ORDER BY sa, sb""",
+         ORDER BY sa, sb""")),
 
-    "q_x_coverage" ->
+    // Corpus coverage curve at FREQUENCY grain: for each distinct
+    // term-count value (rarest-to-commonest domain, bounded by the
+    // count range — not the vocabulary), how many terms have it and
+    // what cumulative share of all tokens the terms at or above it
+    // cover. The "how many vocab entries until 95% of tokens" curve
+    // that sizes tokenizers — computed without a vocabulary-sized
+    // window (the value domain is its own histogram).
+    Query("q_x_coverage", (s, d) => {
+      val wOrd = Window.orderBy(col("c").desc)
+      val freq = table(s, d, "documents")
+        .select(explode(split(col("text"), " ")).as("t"))
+        .groupBy(col("t")).agg(count(lit(1)).as("c"))
+      val byCount = freq.groupBy(col("c")).agg(count(lit(1)).as("n_terms"))
+        .withColumn("mass", col("c") * col("n_terms"))
+        // count-value domain ≤ a few hundred rows: bounded window
+        .coalesce(1)
+        .withColumn("cum_terms", sum(col("n_terms")).over(
+          wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        .withColumn("cum_mass", sum(col("mass")).over(
+          wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        .cut("Round10b.scala:145", kRowFold = true)
+      val tot = byCount.agg(sum(col("mass")).as("n_tokens"))
+      byCount.crossJoin(broadcast(tot))
+        .select(col("c"), col("n_terms"), col("cum_terms"),
+          round(col("cum_mass").cast("double") / col("n_tokens"), 6).as("cum_share"))
+        .orderBy(col("c").desc)
+    }, Some(
       """WITH freq AS (SELECT t, CAST(count(*) AS BIGINT) AS c
                 FROM (SELECT unnest(string_split(text, ' ')) AS t FROM documents)
                 GROUP BY t),
@@ -309,9 +222,38 @@ object Round10b {
          t AS (SELECT CAST(sum(mass) AS BIGINT) AS n_tokens FROM bc)
          SELECT c, n_terms, cum_terms,
                 round(CAST(cum_mass AS DOUBLE) / n_tokens, 6) AS cum_share
-         FROM cum CROSS JOIN t ORDER BY c DESC""",
+         FROM cum CROSS JOIN t ORDER BY c DESC""")),
 
-    "q_x_qq_shift" ->
+    // Q–Q shift: empirical n_chars quantiles of source src0 vs the
+    // rest of the corpus at every 5th percentile, read at integer
+    // ranks (value = min v with cum_count ≥ ceil(q·n/100)) — exact
+    // integers end to end, no interpolation to diverge on. The
+    // distribution-shape diff a mean test (cohens_d) can't see.
+    // Shape: value-grain cumulative counts (the q_x_mann_whitney
+    // pattern) × a 19-row broadcast percentile spine.
+    Query("q_x_qq_shift", (s, d) => {
+      val docs = table(s, d, "documents")
+        .select(col("n_chars"), (col("source") === "src0").as("is_a"))
+      def qvals(side: DataFrame, flag: Boolean): DataFrame = {
+        val vg = side.filter(col("is_a") === flag)
+          .groupBy(col("n_chars")).agg(count(lit(1)).as("cnt"))
+        val wOrd = Window.orderBy(col("n_chars"))
+        val cum = vg.coalesce(1)
+          .withColumn("cum", sum(col("cnt")).over(
+            wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+          .cut("Round10b.scala:170", kRowFold = true)
+        val n = cum.agg(max(col("cum")).as("n"))
+        val spine = broadcast(
+          side.sparkSession.range(1, 20).select((col("id") * 5).as("q")))
+        spine.crossJoin(broadcast(n))
+          .join(cum, col("cum") * 100 >= col("q") * col("n"))
+          .groupBy(col("q")).agg(min(col("n_chars")).as(if (flag) "v_src" else "v_rest"))
+      }
+      qvals(docs, flag = true).join(qvals(docs, flag = false), "q")
+        .select(col("q").cast("int").as("pct"), col("v_src"), col("v_rest"),
+          (col("v_src") - col("v_rest")).as("shift"))
+        .orderBy(col("pct"))
+    }, Some(
       """WITH a AS (SELECT n_chars, CAST(count(*) AS BIGINT) AS cnt
                 FROM documents WHERE source = 'src0' GROUP BY 1),
          ac AS (SELECT n_chars,
@@ -335,9 +277,31 @@ object Round10b {
                 GROUP BY q)
          SELECT CAST(q AS INTEGER) AS pct, v_src, v_rest,
                 v_src - v_rest AS shift
-         FROM qa JOIN qb USING (q) ORDER BY pct""",
+         FROM qa JOIN qb USING (q) ORDER BY pct""")),
 
-    "q_x_simpson" ->
+    // Simpson diversity of each source's token distribution:
+    // D = Σ c(c−1) / (N(N−1)) (the probability two random tokens
+    // coincide) and its inverse (effective vocabulary size) — the
+    // repetition-diversity audit complementing Shannon entropy
+    // (q_x_entropy) and type-token ratio (q_x_diversity). Pure
+    // integer sums at (source, term) grain.
+    Query("q_x_simpson", (s, d) => {
+      val tf = table(s, d, "documents")
+        .select(col("source"), explode(split(col("text"), " ")).as("t"))
+        .groupBy(col("source"), col("t")).agg(count(lit(1)).as("c"))
+      tf.groupBy(col("source"))
+        .agg(sum(col("c")).as("n_tokens"),
+          sum(col("c") * (col("c") - 1)).as("coin"))
+        .select(col("source"), col("n_tokens"),
+          round(when(col("n_tokens") > 1,
+            col("coin").cast("double") /
+              (col("n_tokens").cast("double") * (col("n_tokens") - 1))), 6)
+            .as("simpson"),
+          round(when(col("coin") > 0,
+            (col("n_tokens").cast("double") * (col("n_tokens") - 1)) /
+              col("coin")), 6).as("inv_simpson"))
+        .orderBy(col("source"))
+    }, Some(
       """WITH tf AS (SELECT source, t, CAST(count(*) AS BIGINT) AS c
                 FROM (SELECT source, unnest(string_split(text, ' ')) AS t
                       FROM documents)
@@ -351,9 +315,27 @@ object Round10b {
                 round(CASE WHEN coin > 0 THEN
                   (CAST(n_tokens AS DOUBLE) * (n_tokens - 1)) / coin END, 6)
                   AS inv_simpson
-         FROM g ORDER BY source""",
+         FROM g ORDER BY source""")),
 
-    "q_x_grubbs" ->
+    // Grubbs single-outlier statistic for n_chars: G = max(|min−μ|,
+    // |max−μ|)/σ. The extreme deviation is determined by the min and
+    // max order statistics alone, so the whole test is FOUR integer
+    // aggregates + one expression — O(1) output at any corpus size.
+    Query("q_x_grubbs", (s, d) =>
+      table(s, d, "documents")
+        .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sx"),
+          sum(col("n_chars") * col("n_chars")).as("qx"),
+          min(col("n_chars")).as("mn"), max(col("n_chars")).as("mx"))
+        .select(col("n"), col("mn"), col("mx"),
+          // Variance guard in DOUBLE: qx*n and sx*sx as raw BIGINTs
+          // overflow Long at ~1e10 docs × n_chars~1e3 (Spark non-ANSI
+          // would wrap silently while DuckDB errors — r10 advice).
+          round(when(col("n") > 1 &&
+            col("qx").cast("double") * col("n") > col("sx").cast("double") * col("sx"),
+            greatest(col("mx") - col("sx").cast("double") / col("n"),
+              col("sx").cast("double") / col("n") - col("mn")) /
+              sqrt((col("qx") - col("sx").cast("double") * col("sx") / col("n")) /
+                (col("n") - 1))), 6).as("g")), Some(
       """WITH m AS (SELECT CAST(count(*) AS BIGINT) AS n,
                   CAST(sum(n_chars) AS BIGINT) AS sx,
                   CAST(sum(n_chars * n_chars) AS BIGINT) AS qx,
@@ -365,6 +347,6 @@ object Round10b {
                   greatest(mx - CAST(sx AS DOUBLE) / n,
                            CAST(sx AS DOUBLE) / n - mn) /
                   sqrt((qx - CAST(sx AS DOUBLE) * sx / n) / (n - 1)) END, 6) AS g
-         FROM m"""
+         FROM m"""))
   )
 }

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -24,8 +24,6 @@ import graft.Cuts.CutOps
   * (the q_x_linreg pattern) and round at 6dp.
   */
 object Round11b {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Pearson r from exact moment columns — shared SQL text evaluated
     * by BOTH engines (identical fp op order), so the double result is
     * bit-identical cross-engine.
@@ -70,7 +68,7 @@ object Round11b {
   private val jbSkew = s"($jbM3 / ($jbM2 * sqrt($jbM2)))"
   private val jbKurt = s"($jbM4 / ($jbM2 * $jbM2))"
 
-  val defs: Map[String, Q] = Map(
+  val queries: Seq[Query] = Seq(
 
     // Kruskal–Wallis H across the source groups on n_chars — the
     // k-sample generalization of q_x_mann_whitney, with the exact
@@ -80,7 +78,7 @@ object Round11b {
     // unpartitioned window); the per-group rank sums are exact
     // BIGINTs, and the only double fold (Σ R²/n over k rows) runs
     // single-sorted-partition.
-    "q_x_kruskal" -> ((s, d) => {
+    Query("q_x_kruskal", (s, d) => {
       val sc = table(s, d, "documents").select(col("source"), col("n_chars"))
       val gs = sc.groupBy(col("n_chars")).agg(count(lit(1)).as("tot"))
       val gl = sc.groupBy(col("source"), col("n_chars")).agg(count(lit(1)).as("cnt"))
@@ -105,14 +103,42 @@ object Round11b {
                    (1.0 - CAST(tsum AS DOUBLE) /
                           (CAST(n AS DOUBLE) * n * n - n)), 6) AS h""",
           "CAST(k - 1 AS BIGINT) AS dof")
-    }),
+    }, Some(
+      """WITH gs AS (SELECT n_chars, CAST(count(*) AS BIGINT) AS tot
+                     FROM documents GROUP BY n_chars),
+         gl AS (SELECT source, n_chars, CAST(count(*) AS BIGINT) AS cnt
+                FROM documents GROUP BY source, n_chars),
+         uni AS (SELECT s.source, g.n_chars, g.tot, COALESCE(l.cnt, 0) AS cnt
+                 FROM (SELECT DISTINCT source FROM documents) s
+                 CROSS JOIN gs g
+                 LEFT JOIN gl l ON l.source = s.source AND l.n_chars = g.n_chars),
+         r AS (SELECT source, cnt,
+                 2 * COALESCE(sum(tot) OVER (PARTITION BY source ORDER BY n_chars
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+                   + tot + 1 AS r2
+               FROM uni),
+         ps AS (SELECT source, CAST(sum(cnt) AS BIGINT) AS nj,
+                  CAST(sum(cnt * r2) AS BIGINT) AS r2j
+                FROM r GROUP BY source),
+         t AS (SELECT CAST(sum(tot) AS BIGINT) AS n,
+                 CAST(sum(tot * tot * tot - tot) AS BIGINT) AS tsum FROM gs),
+         a AS (SELECT CAST(count(*) AS BIGINT) AS k, max(t.n) AS n,
+                 max(t.tsum) AS tsum,
+                 sum(CAST(r2j AS DOUBLE) * r2j / (4 * nj)) AS srb
+               FROM (SELECT * FROM ps ORDER BY source) ps, t)
+         SELECT k, n,
+                round((12.0 / (CAST(n AS DOUBLE) * (n + 1)) * srb - 3.0 * (n + 1)) /
+                      (1.0 - CAST(tsum AS DOUBLE) /
+                             (CAST(n AS DOUBLE) * n * n - n)), 6) AS h,
+                CAST(k - 1 AS BIGINT) AS dof
+         FROM a""")),
 
     // Bartlett's homogeneity-of-variance test across sources — the
     // parametric sibling of q_x_levene (sharper under normality,
     // fragile otherwise; a pipeline wants both). Group moments are
     // exact BIGINTs; per-group s² and its log are one deterministic
     // expression; the three k-row folds run single-sorted-partition.
-    "q_x_bartlett" -> ((s, d) => {
+    Query("q_x_bartlett", (s, d) => {
       val g = table(s, d, "documents")
         .groupBy(col("source"))
         .agg(count(lit(1)).as("ni"), sum(col("n_chars")).as("si"),
@@ -129,13 +155,29 @@ object Round11b {
           """round(((n - k) * ln(sv / (n - k)) - sl) /
                    (1.0 + (sinv - 1.0 / (n - k)) / (3.0 * (k - 1))), 6) AS t_stat""",
           "CAST(k - 1 AS BIGINT) AS dof")
-    }),
+    }, Some(
+      """WITH g AS (SELECT source, CAST(count(*) AS BIGINT) AS ni,
+                 CAST(sum(n_chars) AS BIGINT) AS si,
+                 CAST(sum(n_chars * n_chars) AS BIGINT) AS qi
+               FROM documents GROUP BY source),
+         g2 AS (SELECT *, (CAST(qi AS DOUBLE) - CAST(si AS DOUBLE) * si / ni) /
+                          (ni - 1) AS s2i FROM g),
+         a AS (SELECT CAST(count(*) AS BIGINT) AS k, CAST(sum(ni) AS BIGINT) AS n,
+                 sum(CAST(ni - 1 AS DOUBLE) * s2i) AS sv,
+                 sum(CAST(ni - 1 AS DOUBLE) * ln(s2i)) AS sl,
+                 sum(1.0 / (ni - 1)) AS sinv
+               FROM (SELECT * FROM g2 ORDER BY source))
+         SELECT k, n,
+                round(((n - k) * ln(sv / (n - k)) - sl) /
+                      (1.0 + (sinv - 1.0 / (n - k)) / (3.0 * (k - 1))), 6) AS t_stat,
+                CAST(k - 1 AS BIGINT) AS dof
+         FROM a""")),
 
     // Welch's one-way ANOVA across sources — q_x_anova without the
     // equal-variance assumption (the robust default when Bartlett/
     // Levene reject). Λ = Σ(1−wᵢ/W)²/(nᵢ−1) expands to three
     // single-pass sums so the k-row fold needs only ONE ordered pass.
-    "q_x_welch_anova" -> ((s, d) => {
+    Query("q_x_welch_anova", (s, d) => {
       val g = table(s, d, "documents")
         .groupBy(col("source"))
         .agg(count(lit(1)).as("ni"), sum(col("n_chars")).as("si"),
@@ -158,14 +200,35 @@ object Round11b {
           "CAST(k - 1 AS BIGINT) AS df1",
           """round((CAST(k AS DOUBLE) * k - 1) /
                    (3.0 * (a1 - 2.0 * a2 / sw + a3 / (sw * sw))), 6) AS df2""")
-    }),
+    }, Some(
+      """WITH g AS (SELECT source, CAST(count(*) AS BIGINT) AS ni,
+                 CAST(sum(n_chars) AS BIGINT) AS si,
+                 CAST(sum(n_chars * n_chars) AS BIGINT) AS qi
+               FROM documents GROUP BY source),
+         g2 AS (SELECT *, CAST(si AS DOUBLE) / ni AS mi,
+                 CAST(ni AS DOUBLE) /
+                   ((CAST(qi AS DOUBLE) - CAST(si AS DOUBLE) * si / ni) / (ni - 1)) AS wi
+               FROM g),
+         a AS (SELECT CAST(count(*) AS BIGINT) AS k,
+                 sum(wi) AS sw, sum(wi * mi) AS swm, sum(wi * mi * mi) AS swm2,
+                 sum(1.0 / (ni - 1)) AS a1, sum(wi / (ni - 1)) AS a2,
+                 sum(wi * wi / (ni - 1)) AS a3
+               FROM (SELECT * FROM g2 ORDER BY source))
+         SELECT k,
+                round(((swm2 - swm * swm / sw) / (k - 1)) /
+                      (1.0 + 2.0 * (k - 2) / (CAST(k AS DOUBLE) * k - 1) *
+                       (a1 - 2.0 * a2 / sw + a3 / (sw * sw))), 6) AS f,
+                CAST(k - 1 AS BIGINT) AS df1,
+                round((CAST(k AS DOUBLE) * k - 1) /
+                      (3.0 * (a1 - 2.0 * a2 / sw + a3 / (sw * sw))), 6) AS df2
+         FROM a""")),
 
     // Tukey HSD post-hoc — WHICH source pairs differ once q_x_anova
     // says "some do": the studentized-range statistic per pair over
     // the pooled MSE. Group moments exact; MSE's one double fold is
     // single-sorted-partition; the k² pair grid (≤ hundreds of rows)
     // is a broadcast self-join of the k-row group table.
-    "q_x_tukey_hsd" -> ((s, d) => {
+    Query("q_x_tukey_hsd", (s, d) => {
       val g = table(s, d, "documents")
         .groupBy(col("source"))
         .agg(count(lit(1)).as("ni"), sum(col("n_chars")).as("si"),
@@ -186,7 +249,24 @@ object Round11b {
           """round(abs(ma - mb) /
                    sqrt(mse / 2.0 * (1.0 / na + 1.0 / nb)), 6) AS q_stat""")
         .orderBy(col("source_a"), col("source_b"))
-    }),
+    }, Some(
+      """WITH g AS (SELECT source, CAST(count(*) AS BIGINT) AS ni,
+                 CAST(sum(n_chars) AS BIGINT) AS si,
+                 CAST(sum(n_chars * n_chars) AS BIGINT) AS qi
+               FROM documents GROUP BY source),
+         m AS (SELECT (CAST(sumq AS DOUBLE) - sb) / (n - k) AS mse FROM (
+                 SELECT CAST(sum(ni) AS BIGINT) AS n, CAST(count(*) AS BIGINT) AS k,
+                   CAST(sum(qi) AS BIGINT) AS sumq,
+                   sum(CAST(si AS DOUBLE) * si / ni) AS sb
+                 FROM (SELECT * FROM g ORDER BY source)))
+         SELECT a.source AS source_a, b.source AS source_b,
+                round(CAST(a.si AS DOUBLE) / a.ni - CAST(b.si AS DOUBLE) / b.ni, 6)
+                  AS mean_diff,
+                round(abs(CAST(a.si AS DOUBLE) / a.ni - CAST(b.si AS DOUBLE) / b.ni) /
+                      sqrt(mse / 2.0 * (1.0 / a.ni + 1.0 / b.ni)), 6) AS q_stat
+         FROM g a, g b, m
+         WHERE a.source < b.source
+         ORDER BY source_a, source_b""")),
 
     // Jarque–Bera normality test per source (skewness² + excess-
     // kurtosis² scaled) — the moments audit behind "can I use the
@@ -194,7 +274,7 @@ object Round11b {
     // x² in BIGINT, x³/x⁴ through DECIMAL(38,0) (x⁴ sums overflow
     // BIGINT past ~1e6 rows of 4-digit lengths); the central-moment
     // expansion is shared SQL text on identical exact inputs.
-    "q_x_jarque_bera" -> ((s, d) => {
+    Query("q_x_jarque_bera", (s, d) => {
       val x2 = col("n_chars") * col("n_chars")
       table(s, d, "documents")
         .select(col("source"), col("n_chars"),
@@ -210,13 +290,36 @@ object Round11b {
           s"""round(CAST(n AS DOUBLE) / 6.0 *
                ($jbSkew * $jbSkew + ($jbKurt - 3.0) * ($jbKurt - 3.0) / 4.0), 6) AS jb""")
         .orderBy(col("source"))
+    }, Some {
+      val m = "(CAST(s1 AS DOUBLE) / n)"
+      val m2 = s"(CAST(s2 AS DOUBLE) / n - $m * $m)"
+      val m3 = s"""(CAST(s3 AS DOUBLE) / n - 3.0 * $m * (CAST(s2 AS DOUBLE) / n)
+                   + 2.0 * $m * $m * $m)"""
+      val m4 = s"""(CAST(s4 AS DOUBLE) / n - 4.0 * $m * (CAST(s3 AS DOUBLE) / n)
+                   + 6.0 * $m * $m * (CAST(s2 AS DOUBLE) / n)
+                   - 3.0 * $m * $m * $m * $m)"""
+      val sk = s"($m3 / ($m2 * sqrt($m2)))"
+      val ku = s"($m4 / ($m2 * $m2))"
+      s"""WITH g AS (SELECT source, CAST(count(*) AS BIGINT) AS n,
+                 CAST(sum(n_chars) AS BIGINT) AS s1,
+                 CAST(sum(n_chars * n_chars) AS BIGINT) AS s2,
+                 sum(CAST(n_chars * n_chars AS DECIMAL(18,0)) * n_chars) AS s3,
+                 sum(CAST(n_chars * n_chars AS DECIMAL(18,0)) *
+                     CAST(n_chars * n_chars AS DECIMAL(18,0))) AS s4
+               FROM documents GROUP BY source)
+         SELECT source, n,
+                round($sk, 6) AS skew,
+                round($ku - 3.0, 6) AS ex_kurt,
+                round(CAST(n AS DOUBLE) / 6.0 *
+                      ($sk * $sk + ($ku - 3.0) * ($ku - 3.0) / 4.0), 6) AS jb
+         FROM g ORDER BY source"""
     }),
 
     // Partial correlation of doc length and token count CONTROLLING
     // for vowel mass — "is length~tokens just alphabet volume?" All
     // ten moments are exact BIGINTs in one pass; the three Pearson
     // r's and the partial evaluate as shared expression text.
-    "q_x_partial_corr" -> ((s, d) => {
+    Query("q_x_partial_corr", (s, d) => {
       val rxy = rTxt("sxy", "sx", "sy", "sxx", "syy")
       val rxz = rTxt("sxz", "sx", "sz", "sxx", "szz")
       val ryz = rTxt("syz", "sy", "sz", "syy", "szz")
@@ -234,6 +337,30 @@ object Round11b {
           s"round($ryz, 6) AS r_yz",
           s"""round(($rxy - $rxz * $ryz) /
                sqrt((1.0 - $rxz * $rxz) * (1.0 - $ryz * $ryz)), 6) AS r_xy_z""")
+    }, Some {
+      def r(sab: String, sa: String, sb: String, saa: String, sbb: String) =
+        s"""((CAST(n AS DOUBLE) * $sab - CAST($sa AS DOUBLE) * $sb) /
+            sqrt((CAST(n AS DOUBLE) * $saa - CAST($sa AS DOUBLE) * $sa) *
+                 (CAST(n AS DOUBLE) * $sbb - CAST($sb AS DOUBLE) * $sb)))"""
+      val rxy = r("sxy", "sx", "sy", "sxx", "syy")
+      val rxz = r("sxz", "sx", "sz", "sxx", "szz")
+      val ryz = r("syz", "sy", "sz", "syy", "szz")
+      s"""WITH b AS (SELECT n_chars AS x,
+                 CAST(len(string_split(text, ' ')) AS BIGINT) AS y,
+                 CAST(length(regexp_replace(text, '[^aeiou]', '', 'g')) AS BIGINT) AS z
+               FROM documents),
+         a AS (SELECT CAST(count(*) AS BIGINT) AS n,
+                 CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
+                 CAST(sum(z) AS BIGINT) AS sz,
+                 CAST(sum(x * x) AS BIGINT) AS sxx, CAST(sum(y * y) AS BIGINT) AS syy,
+                 CAST(sum(z * z) AS BIGINT) AS szz, CAST(sum(x * y) AS BIGINT) AS sxy,
+                 CAST(sum(x * z) AS BIGINT) AS sxz, CAST(sum(y * z) AS BIGINT) AS syz
+               FROM b)
+         SELECT n, round($rxy, 6) AS r_xy, round($rxz, 6) AS r_xz,
+                round($ryz, 6) AS r_yz,
+                round(($rxy - $rxz * $ryz) /
+                      sqrt((1.0 - $rxz * $rxz) * (1.0 - $ryz * $ryz)), 6) AS r_xy_z
+         FROM a"""
     }),
 
     // Ridge regression (closed form, λ = 1000 on the slope diagonal,
@@ -242,7 +369,7 @@ object Round11b {
     // (tokens and vowels are highly correlated; OLS coefficients are
     // unstable exactly where ridge shrinks them). Exact BIGINT
     // normal-matrix moments; Cramer solve as shared expression text.
-    "q_x_ridge" -> ((s, d) =>
+    Query("q_x_ridge", (s, d) =>
       table(s, d, "documents")
         .select(col("n_chars").as("yv"),
           size(split(col("text"), " ")).cast("long").as("x1"),
@@ -253,7 +380,23 @@ object Round11b {
           sum(col("x2") * col("x2")).as("s22"), sum(col("x1") * col("yv")).as("s1y"),
           sum(col("x2") * col("yv")).as("s2y"))
         .selectExpr("n", s"CAST($ridgeL AS DOUBLE) AS lambda", s"round($ridgeB0, 6) AS b0",
-          s"round($ridgeB1, 6) AS b1", s"round($ridgeB2, 6) AS b2")),
+          s"round($ridgeB1, 6) AS b1", s"round($ridgeB2, 6) AS b2"), Some(
+      s"""WITH b AS (SELECT n_chars AS yv,
+                 CAST(len(string_split(text, ' ')) AS BIGINT) AS x1,
+                 CAST(length(regexp_replace(text, '[^aeiou]', '', 'g')) AS BIGINT) AS x2
+               FROM documents),
+         a AS (SELECT CAST(count(*) AS BIGINT) AS n,
+                 CAST(sum(x1) AS BIGINT) AS s1, CAST(sum(x2) AS BIGINT) AS s2,
+                 CAST(sum(yv) AS BIGINT) AS sy,
+                 CAST(sum(x1 * x1) AS BIGINT) AS s11,
+                 CAST(sum(x1 * x2) AS BIGINT) AS s12,
+                 CAST(sum(x2 * x2) AS BIGINT) AS s22,
+                 CAST(sum(x1 * yv) AS BIGINT) AS s1y,
+                 CAST(sum(x2 * yv) AS BIGINT) AS s2y
+               FROM b)
+         SELECT n, CAST($ridgeL AS DOUBLE) AS lambda, round($ridgeB0, 6) AS b0,
+                round($ridgeB1, 6) AS b1, round($ridgeB2, 6) AS b2
+         FROM a""")),
 
     // SAX symbolization of the per-type daily value series: weekly
     // PAA means, z-scored against the type's own level, mapped to a
@@ -263,7 +406,7 @@ object Round11b {
     // z-score; z rounds before the CASE so symbol boundaries cannot
     // flip on an ulp; the per-type moment fold over the ≤dozens of
     // weekly rows runs single-sorted-partition.
-    "q_x_sax" -> ((s, d) => {
+    Query("q_x_sax", (s, d) => {
       val daily = graft.operators.DayGrain.values(s, d)
         .withColumnRenamed("v", "tot")
         .withColumn("week",
@@ -283,7 +426,29 @@ object Round11b {
             .when(col("z") < 0.6745, "c").otherwise("d"))
         .select(col("event_type"), col("week"), col("paa"), col("z"), col("symbol"))
         .orderBy(col("event_type"), col("week"))
-    }),
+    }, Some(
+      """WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS day,
+                 round(sum(value), 6) AS tot
+               FROM events GROUP BY 1, 2),
+         wk AS (SELECT event_type,
+                 CAST(floor(date_diff('day', DATE '1970-01-01', day) / 7.0) AS BIGINT)
+                   AS week, tot
+               FROM daily),
+         paa AS (SELECT event_type, week, round(avg(tot), 6) AS paa
+                 FROM wk GROUP BY event_type, week),
+         m AS (SELECT event_type, sp / nw AS mu,
+                 sqrt((sp2 - sp * sp / nw) / (nw - 1)) AS sd
+               FROM (SELECT event_type, CAST(count(*) AS BIGINT) AS nw,
+                       sum(paa) AS sp, sum(paa * paa) AS sp2
+                     FROM (SELECT * FROM paa ORDER BY event_type, week)
+                     GROUP BY event_type)),
+         z AS (SELECT p.event_type, p.week, p.paa,
+                 round((p.paa - m.mu) / m.sd, 6) AS z
+               FROM paa p JOIN m ON m.event_type = p.event_type)
+         SELECT event_type, week, paa, z,
+                CASE WHEN z < -0.6745 THEN 'a' WHEN z < 0 THEN 'b'
+                     WHEN z < 0.6745 THEN 'c' ELSE 'd' END AS symbol
+         FROM z ORDER BY event_type, week""")),
 
     // RFM (recency / frequency / monetary) scoring per user with
     // exact integer-rank quintile buckets — the segmentation cut
@@ -292,7 +457,7 @@ object Round11b {
     // a 4-row spine against each metric's histogram), so NO
     // corpus-sized ranking window exists at any scale; bucket
     // membership is then a broadcast threshold count.
-    "q_x_rfm" -> ((s, d) => {
+    Query("q_x_rfm", (s, d) => {
       val byUser = table(s, d, "events")
         .groupBy(col("user_id"))
         .agg(max(to_date(col("ts"))).as("last_day"),
@@ -346,225 +511,7 @@ object Round11b {
         .select(col("user_id"), col("recency"), col("frequency"), col("monetary"),
           col("recency_bucket"), col("frequency_bucket"), col("monetary_bucket"))
         .orderBy(col("user_id"))
-    }),
-
-    // Adamic–Adar link prediction over the semantic cosine graph
-    // (threshold 0.3, the q_x_triangles edge set): for non-adjacent
-    // two-hop pairs, score = Σ 1/ln(deg(w)) over common neighbors w —
-    // rare shared neighbors weigh more. Edge-list shapes only (sym →
-    // deg → two-hop equi-join → anti join against existing edges);
-    // the top-50 cut sorts on the ROUNDED score + pair id.
-    "q_x_adamic_adar" -> ((s, d) => {
-      val e = graft.operators.CosGraph.edges(s, d, threshold = 0.3)
-      val sym = e.select(col("a").as("u"), col("b").as("v"))
-        .unionByName(e.select(col("b").as("u"), col("a").as("v")))
-      val deg = sym.groupBy(col("u").as("w")).agg(count(lit(1)).as("deg"))
-      // attach deg(w) to the EDGE-grain side (2m rows) before the
-      // wedge self-join — joining deg onto the Σd²-row wedge table
-      // instead was the 10×-fixture scale killer; likewise the
-      // existing-edge anti join runs AFTER pair aggregation (pair
-      // grain ≤ wedge grain), not on raw wedges
-      val symd = sym.join(deg, sym("u") === deg("w"))
-        .select(col("v").as("id_a"), col("w"), col("deg"))
-      val hop2 = symd
-        .join(sym.select(col("u").as("w"), col("v").as("id_b")), "w")
-        .filter(col("id_a") < col("id_b"))
-      hop2.groupBy(col("id_a"), col("id_b"))
-        .agg(count(lit(1)).as("n_common"),
-          round(sum(lit(1.0) / log(col("deg").cast("double"))), 6).as("aa"))
-        .join(e.select(col("a").as("id_a"), col("b").as("id_b")),
-          Seq("id_a", "id_b"), "left_anti")
-        .orderBy(col("aa").desc, col("id_a"), col("id_b"))
-        .limit(50)
-    })
-  )
-
-  val oracle: Map[String, String] = Map(
-
-    "q_x_kruskal" ->
-      """WITH gs AS (SELECT n_chars, CAST(count(*) AS BIGINT) AS tot
-                     FROM documents GROUP BY n_chars),
-         gl AS (SELECT source, n_chars, CAST(count(*) AS BIGINT) AS cnt
-                FROM documents GROUP BY source, n_chars),
-         uni AS (SELECT s.source, g.n_chars, g.tot, COALESCE(l.cnt, 0) AS cnt
-                 FROM (SELECT DISTINCT source FROM documents) s
-                 CROSS JOIN gs g
-                 LEFT JOIN gl l ON l.source = s.source AND l.n_chars = g.n_chars),
-         r AS (SELECT source, cnt,
-                 2 * COALESCE(sum(tot) OVER (PARTITION BY source ORDER BY n_chars
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                   + tot + 1 AS r2
-               FROM uni),
-         ps AS (SELECT source, CAST(sum(cnt) AS BIGINT) AS nj,
-                  CAST(sum(cnt * r2) AS BIGINT) AS r2j
-                FROM r GROUP BY source),
-         t AS (SELECT CAST(sum(tot) AS BIGINT) AS n,
-                 CAST(sum(tot * tot * tot - tot) AS BIGINT) AS tsum FROM gs),
-         a AS (SELECT CAST(count(*) AS BIGINT) AS k, max(t.n) AS n,
-                 max(t.tsum) AS tsum,
-                 sum(CAST(r2j AS DOUBLE) * r2j / (4 * nj)) AS srb
-               FROM (SELECT * FROM ps ORDER BY source) ps, t)
-         SELECT k, n,
-                round((12.0 / (CAST(n AS DOUBLE) * (n + 1)) * srb - 3.0 * (n + 1)) /
-                      (1.0 - CAST(tsum AS DOUBLE) /
-                             (CAST(n AS DOUBLE) * n * n - n)), 6) AS h,
-                CAST(k - 1 AS BIGINT) AS dof
-         FROM a""",
-
-    "q_x_bartlett" ->
-      """WITH g AS (SELECT source, CAST(count(*) AS BIGINT) AS ni,
-                 CAST(sum(n_chars) AS BIGINT) AS si,
-                 CAST(sum(n_chars * n_chars) AS BIGINT) AS qi
-               FROM documents GROUP BY source),
-         g2 AS (SELECT *, (CAST(qi AS DOUBLE) - CAST(si AS DOUBLE) * si / ni) /
-                          (ni - 1) AS s2i FROM g),
-         a AS (SELECT CAST(count(*) AS BIGINT) AS k, CAST(sum(ni) AS BIGINT) AS n,
-                 sum(CAST(ni - 1 AS DOUBLE) * s2i) AS sv,
-                 sum(CAST(ni - 1 AS DOUBLE) * ln(s2i)) AS sl,
-                 sum(1.0 / (ni - 1)) AS sinv
-               FROM (SELECT * FROM g2 ORDER BY source))
-         SELECT k, n,
-                round(((n - k) * ln(sv / (n - k)) - sl) /
-                      (1.0 + (sinv - 1.0 / (n - k)) / (3.0 * (k - 1))), 6) AS t_stat,
-                CAST(k - 1 AS BIGINT) AS dof
-         FROM a""",
-
-    "q_x_welch_anova" ->
-      """WITH g AS (SELECT source, CAST(count(*) AS BIGINT) AS ni,
-                 CAST(sum(n_chars) AS BIGINT) AS si,
-                 CAST(sum(n_chars * n_chars) AS BIGINT) AS qi
-               FROM documents GROUP BY source),
-         g2 AS (SELECT *, CAST(si AS DOUBLE) / ni AS mi,
-                 CAST(ni AS DOUBLE) /
-                   ((CAST(qi AS DOUBLE) - CAST(si AS DOUBLE) * si / ni) / (ni - 1)) AS wi
-               FROM g),
-         a AS (SELECT CAST(count(*) AS BIGINT) AS k,
-                 sum(wi) AS sw, sum(wi * mi) AS swm, sum(wi * mi * mi) AS swm2,
-                 sum(1.0 / (ni - 1)) AS a1, sum(wi / (ni - 1)) AS a2,
-                 sum(wi * wi / (ni - 1)) AS a3
-               FROM (SELECT * FROM g2 ORDER BY source))
-         SELECT k,
-                round(((swm2 - swm * swm / sw) / (k - 1)) /
-                      (1.0 + 2.0 * (k - 2) / (CAST(k AS DOUBLE) * k - 1) *
-                       (a1 - 2.0 * a2 / sw + a3 / (sw * sw))), 6) AS f,
-                CAST(k - 1 AS BIGINT) AS df1,
-                round((CAST(k AS DOUBLE) * k - 1) /
-                      (3.0 * (a1 - 2.0 * a2 / sw + a3 / (sw * sw))), 6) AS df2
-         FROM a""",
-
-    "q_x_tukey_hsd" ->
-      """WITH g AS (SELECT source, CAST(count(*) AS BIGINT) AS ni,
-                 CAST(sum(n_chars) AS BIGINT) AS si,
-                 CAST(sum(n_chars * n_chars) AS BIGINT) AS qi
-               FROM documents GROUP BY source),
-         m AS (SELECT (CAST(sumq AS DOUBLE) - sb) / (n - k) AS mse FROM (
-                 SELECT CAST(sum(ni) AS BIGINT) AS n, CAST(count(*) AS BIGINT) AS k,
-                   CAST(sum(qi) AS BIGINT) AS sumq,
-                   sum(CAST(si AS DOUBLE) * si / ni) AS sb
-                 FROM (SELECT * FROM g ORDER BY source)))
-         SELECT a.source AS source_a, b.source AS source_b,
-                round(CAST(a.si AS DOUBLE) / a.ni - CAST(b.si AS DOUBLE) / b.ni, 6)
-                  AS mean_diff,
-                round(abs(CAST(a.si AS DOUBLE) / a.ni - CAST(b.si AS DOUBLE) / b.ni) /
-                      sqrt(mse / 2.0 * (1.0 / a.ni + 1.0 / b.ni)), 6) AS q_stat
-         FROM g a, g b, m
-         WHERE a.source < b.source
-         ORDER BY source_a, source_b""",
-
-    "q_x_jarque_bera" -> {
-      val m = "(CAST(s1 AS DOUBLE) / n)"
-      val m2 = s"(CAST(s2 AS DOUBLE) / n - $m * $m)"
-      val m3 = s"""(CAST(s3 AS DOUBLE) / n - 3.0 * $m * (CAST(s2 AS DOUBLE) / n)
-                   + 2.0 * $m * $m * $m)"""
-      val m4 = s"""(CAST(s4 AS DOUBLE) / n - 4.0 * $m * (CAST(s3 AS DOUBLE) / n)
-                   + 6.0 * $m * $m * (CAST(s2 AS DOUBLE) / n)
-                   - 3.0 * $m * $m * $m * $m)"""
-      val sk = s"($m3 / ($m2 * sqrt($m2)))"
-      val ku = s"($m4 / ($m2 * $m2))"
-      s"""WITH g AS (SELECT source, CAST(count(*) AS BIGINT) AS n,
-                 CAST(sum(n_chars) AS BIGINT) AS s1,
-                 CAST(sum(n_chars * n_chars) AS BIGINT) AS s2,
-                 sum(CAST(n_chars * n_chars AS DECIMAL(18,0)) * n_chars) AS s3,
-                 sum(CAST(n_chars * n_chars AS DECIMAL(18,0)) *
-                     CAST(n_chars * n_chars AS DECIMAL(18,0))) AS s4
-               FROM documents GROUP BY source)
-         SELECT source, n,
-                round($sk, 6) AS skew,
-                round($ku - 3.0, 6) AS ex_kurt,
-                round(CAST(n AS DOUBLE) / 6.0 *
-                      ($sk * $sk + ($ku - 3.0) * ($ku - 3.0) / 4.0), 6) AS jb
-         FROM g ORDER BY source"""
-    },
-
-    "q_x_partial_corr" -> {
-      def r(sab: String, sa: String, sb: String, saa: String, sbb: String) =
-        s"""((CAST(n AS DOUBLE) * $sab - CAST($sa AS DOUBLE) * $sb) /
-            sqrt((CAST(n AS DOUBLE) * $saa - CAST($sa AS DOUBLE) * $sa) *
-                 (CAST(n AS DOUBLE) * $sbb - CAST($sb AS DOUBLE) * $sb)))"""
-      val rxy = r("sxy", "sx", "sy", "sxx", "syy")
-      val rxz = r("sxz", "sx", "sz", "sxx", "szz")
-      val ryz = r("syz", "sy", "sz", "syy", "szz")
-      s"""WITH b AS (SELECT n_chars AS x,
-                 CAST(len(string_split(text, ' ')) AS BIGINT) AS y,
-                 CAST(length(regexp_replace(text, '[^aeiou]', '', 'g')) AS BIGINT) AS z
-               FROM documents),
-         a AS (SELECT CAST(count(*) AS BIGINT) AS n,
-                 CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-                 CAST(sum(z) AS BIGINT) AS sz,
-                 CAST(sum(x * x) AS BIGINT) AS sxx, CAST(sum(y * y) AS BIGINT) AS syy,
-                 CAST(sum(z * z) AS BIGINT) AS szz, CAST(sum(x * y) AS BIGINT) AS sxy,
-                 CAST(sum(x * z) AS BIGINT) AS sxz, CAST(sum(y * z) AS BIGINT) AS syz
-               FROM b)
-         SELECT n, round($rxy, 6) AS r_xy, round($rxz, 6) AS r_xz,
-                round($ryz, 6) AS r_yz,
-                round(($rxy - $rxz * $ryz) /
-                      sqrt((1.0 - $rxz * $rxz) * (1.0 - $ryz * $ryz)), 6) AS r_xy_z
-         FROM a"""
-    },
-
-    "q_x_ridge" ->
-      s"""WITH b AS (SELECT n_chars AS yv,
-                 CAST(len(string_split(text, ' ')) AS BIGINT) AS x1,
-                 CAST(length(regexp_replace(text, '[^aeiou]', '', 'g')) AS BIGINT) AS x2
-               FROM documents),
-         a AS (SELECT CAST(count(*) AS BIGINT) AS n,
-                 CAST(sum(x1) AS BIGINT) AS s1, CAST(sum(x2) AS BIGINT) AS s2,
-                 CAST(sum(yv) AS BIGINT) AS sy,
-                 CAST(sum(x1 * x1) AS BIGINT) AS s11,
-                 CAST(sum(x1 * x2) AS BIGINT) AS s12,
-                 CAST(sum(x2 * x2) AS BIGINT) AS s22,
-                 CAST(sum(x1 * yv) AS BIGINT) AS s1y,
-                 CAST(sum(x2 * yv) AS BIGINT) AS s2y
-               FROM b)
-         SELECT n, CAST($ridgeL AS DOUBLE) AS lambda, round($ridgeB0, 6) AS b0,
-                round($ridgeB1, 6) AS b1, round($ridgeB2, 6) AS b2
-         FROM a""",
-
-    "q_x_sax" ->
-      """WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS day,
-                 round(sum(value), 6) AS tot
-               FROM events GROUP BY 1, 2),
-         wk AS (SELECT event_type,
-                 CAST(floor(date_diff('day', DATE '1970-01-01', day) / 7.0) AS BIGINT)
-                   AS week, tot
-               FROM daily),
-         paa AS (SELECT event_type, week, round(avg(tot), 6) AS paa
-                 FROM wk GROUP BY event_type, week),
-         m AS (SELECT event_type, sp / nw AS mu,
-                 sqrt((sp2 - sp * sp / nw) / (nw - 1)) AS sd
-               FROM (SELECT event_type, CAST(count(*) AS BIGINT) AS nw,
-                       sum(paa) AS sp, sum(paa * paa) AS sp2
-                     FROM (SELECT * FROM paa ORDER BY event_type, week)
-                     GROUP BY event_type)),
-         z AS (SELECT p.event_type, p.week, p.paa,
-                 round((p.paa - m.mu) / m.sd, 6) AS z
-               FROM paa p JOIN m ON m.event_type = p.event_type)
-         SELECT event_type, week, paa, z,
-                CASE WHEN z < -0.6745 THEN 'a' WHEN z < 0 THEN 'b'
-                     WHEN z < 0.6745 THEN 'c' ELSE 'd' END AS symbol
-         FROM z ORDER BY event_type, week""",
-
-    "q_x_rfm" ->
+    }, Some(
       """WITH u AS (SELECT user_id,
                  CAST(date_diff('day', max(CAST(ts AS DATE)),
                    (SELECT max(CAST(ts AS DATE)) FROM events)) AS BIGINT) AS recency,
@@ -596,9 +543,37 @@ object Round11b {
                   AS frequency_bucket,
                 CAST(1 + (SELECT count(*) FROM mt WHERE u.monetary > mt.t) AS BIGINT)
                   AS monetary_bucket
-         FROM u ORDER BY user_id""",
+         FROM u ORDER BY user_id""")),
 
-    "q_x_adamic_adar" ->
+    // Adamic–Adar link prediction over the semantic cosine graph
+    // (threshold 0.3, the q_x_triangles edge set): for non-adjacent
+    // two-hop pairs, score = Σ 1/ln(deg(w)) over common neighbors w —
+    // rare shared neighbors weigh more. Edge-list shapes only (sym →
+    // deg → two-hop equi-join → anti join against existing edges);
+    // the top-50 cut sorts on the ROUNDED score + pair id.
+    Query("q_x_adamic_adar", (s, d) => {
+      val e = graft.operators.CosGraph.edges(s, d, threshold = 0.3)
+      val sym = e.select(col("a").as("u"), col("b").as("v"))
+        .unionByName(e.select(col("b").as("u"), col("a").as("v")))
+      val deg = sym.groupBy(col("u").as("w")).agg(count(lit(1)).as("deg"))
+      // attach deg(w) to the EDGE-grain side (2m rows) before the
+      // wedge self-join — joining deg onto the Σd²-row wedge table
+      // instead was the 10×-fixture scale killer; likewise the
+      // existing-edge anti join runs AFTER pair aggregation (pair
+      // grain ≤ wedge grain), not on raw wedges
+      val symd = sym.join(deg, sym("u") === deg("w"))
+        .select(col("v").as("id_a"), col("w"), col("deg"))
+      val hop2 = symd
+        .join(sym.select(col("u").as("w"), col("v").as("id_b")), "w")
+        .filter(col("id_a") < col("id_b"))
+      hop2.groupBy(col("id_a"), col("id_b"))
+        .agg(count(lit(1)).as("n_common"),
+          round(sum(lit(1.0) / log(col("deg").cast("double"))), 6).as("aa"))
+        .join(e.select(col("a").as("id_a"), col("b").as("id_b")),
+          Seq("id_a", "id_b"), "left_anti")
+        .orderBy(col("aa").desc, col("id_a"), col("id_b"))
+        .limit(50)
+    }, Some(
       s"""WITH nv AS (
            SELECT vec_id, embedding,
                   sqrt(list_sum(list_transform(range(1, 65),
@@ -621,6 +596,6 @@ object Round11b {
                 round(sum(1.0 / ln(CAST(deg AS DOUBLE))), 6) AS aa
          FROM hop2 JOIN deg USING (w)
          GROUP BY id_a, id_b
-         ORDER BY aa DESC, id_a, id_b LIMIT 50"""
+         ORDER BY aa DESC, id_a, id_b LIMIT 50"""))
   )
 }

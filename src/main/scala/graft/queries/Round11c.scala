@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -31,8 +30,6 @@ import graft.functions.TextFunctions
   * engines add in the same order.
   */
 object Round11c {
-  type Q = (SparkSession, String) => DataFrame
-
   // language-ID-gate prediction shared by fairness (and Round11l's
   // MCC): yhat = "the en-stopword score wins the argmax" — the exact
   // q_x_lang_id rule.
@@ -56,37 +53,49 @@ object Round11c {
                       ['le','la','de','et','un','est','que','pour'])) AS sc_fr
             FROM documents)"""
 
-  val defs: Map[String, Q] = Map(
+  val queries: Seq[Query] = Seq(
 
     // k-anonymity audit over the quasi-identifier (lang, source,
     // length-bucket): every class below k = 5 is a re-identification
     // risk. Pure hash aggregate — one shuffle on the QI key at any
     // corpus size.
-    "q_x_k_anon" -> ((s, d) =>
+    Query("q_x_k_anon", (s, d) =>
       table(s, d, "documents")
         .groupBy(col("lang"), col("source"),
           floor(col("n_chars") / 100).as("len_bucket"))
         .agg(count(lit(1)).as("class_size"))
         .withColumn("at_risk", col("class_size") < 5)
-        .orderBy(col("lang"), col("source"), col("len_bucket"))),
+        .orderBy(col("lang"), col("source"), col("len_bucket")), Some(
+      """SELECT lang, source, CAST(floor(n_chars / 100) AS BIGINT) AS len_bucket,
+                count(*) AS class_size, count(*) < 5 AS at_risk
+         FROM documents
+         GROUP BY lang, source, floor(n_chars / 100)
+         ORDER BY lang, source, len_bucket""")),
 
     // l-diversity on the (source, length-bucket) QI with `lang` as
     // the sensitive attribute: a class where every member shares one
     // language leaks it even at k-anonymous size.
-    "q_x_l_diversity" -> ((s, d) =>
+    Query("q_x_l_diversity", (s, d) =>
       table(s, d, "documents")
         .groupBy(col("source"), floor(col("n_chars") / 100).as("len_bucket"))
         .agg(count(lit(1)).as("class_size"),
           countDistinct(col("lang")).as("l_count"))
         .withColumn("at_risk", col("l_count") < 2)
-        .orderBy(col("source"), col("len_bucket"))),
+        .orderBy(col("source"), col("len_bucket")), Some(
+      """SELECT source, CAST(floor(n_chars / 100) AS BIGINT) AS len_bucket,
+                count(*) AS class_size,
+                count(DISTINCT lang) AS l_count,
+                count(DISTINCT lang) < 2 AS at_risk
+         FROM documents
+         GROUP BY source, floor(n_chars / 100)
+         ORDER BY source, len_bucket""")),
 
     // Fairness audit of the language-ID gate: per-source selection
     // rate, TPR, FPR (vs the labeled `lang`), with the global
     // max−min gaps (demographic parity / equalized odds) broadcast
     // onto every row. Exact integer confusion counts; three rounded
     // ratios; source-count-sized tables throughout.
-    "q_x_fairness" -> ((s, d) => {
+    Query("q_x_fairness", (s, d) => {
       val per = table(s, d, "documents")
         .select(col("source"), (col("lang") === "en").as("y"), predEn.as("yhat"))
         .groupBy(col("source"))
@@ -108,7 +117,23 @@ object Round11c {
         .select(col("source"), col("n"), col("sel_rate"), col("tpr"), col("fpr"),
           col("parity_gap"), col("tpr_gap"), col("fpr_gap"))
         .orderBy(col("source"))
-    }),
+    }, Some(
+      s"""WITH scored AS ($langIdCte),
+         per AS (SELECT source, CAST(count(*) AS BIGINT) AS n,
+                   round(CAST(sum(CASE WHEN yhat THEN 1 ELSE 0 END) AS DOUBLE) / count(*), 6) AS sel_rate,
+                   CASE WHEN sum(CASE WHEN y THEN 1 ELSE 0 END) > 0 THEN
+                     round(CAST(sum(CASE WHEN y AND yhat THEN 1 ELSE 0 END) AS DOUBLE)
+                           / sum(CASE WHEN y THEN 1 ELSE 0 END), 6) END AS tpr,
+                   CASE WHEN count(*) - sum(CASE WHEN y THEN 1 ELSE 0 END) > 0 THEN
+                     round(CAST(sum(CASE WHEN (NOT y) AND yhat THEN 1 ELSE 0 END) AS DOUBLE)
+                           / (count(*) - sum(CASE WHEN y THEN 1 ELSE 0 END)), 6) END AS fpr
+                 FROM scored GROUP BY source),
+         gaps AS (SELECT round(max(sel_rate) - min(sel_rate), 6) AS parity_gap,
+                         round(max(tpr) - min(tpr), 6) AS tpr_gap,
+                         round(max(fpr) - min(fpr), 6) AS fpr_gap
+                  FROM per)
+         SELECT source, n, sel_rate, tpr, fpr, parity_gap, tpr_gap, fpr_gap
+         FROM per, gaps ORDER BY source""")),
 
     // Wasserstein-1 distance between every source pair's length
     // distribution, EXACTLY: on the value grain, W1 = Σ_v |F_a−F_b|·Δv
@@ -116,7 +141,7 @@ object Round11c {
     // accumulated in DECIMAL(38,0) (order-free), one division at the
     // end. The spine is |distinct lengths| × (k choose 2) rows —
     // value-grain, never corpus-grain.
-    "q_x_wasserstein" -> ((s, d) => {
+    Query("q_x_wasserstein", (s, d) => {
       val h = table(s, d, "documents")
         .groupBy(col("source"), col("n_chars").as("v"))
         .agg(count(lit(1)).as("cnt"))
@@ -150,7 +175,31 @@ object Round11c {
           round(col("num").cast("double") / (col("na").cast("double") * col("nb")), 6)
             .as("w1"))
         .orderBy(col("sa"), col("sb"))
-    }),
+    }, Some(
+      """WITH h AS (SELECT source, n_chars AS v, CAST(count(*) AS BIGINT) AS cnt
+                    FROM documents GROUP BY source, n_chars),
+         tot AS (SELECT source, sum(cnt) AS n FROM h GROUP BY source),
+         prs AS (SELECT a.source AS sa, a.n AS na, b.source AS sb, b.n AS nb
+                 FROM tot a, tot b WHERE a.source < b.source),
+         spine AS (SELECT DISTINCT v FROM h),
+         grid AS (SELECT p.sa, p.sb, p.na, p.nb, s.v,
+                         coalesce(ha.cnt, 0) AS ca, coalesce(hb.cnt, 0) AS cb
+                  FROM prs p CROSS JOIN spine s
+                  LEFT JOIN h ha ON ha.source = p.sa AND ha.v = s.v
+                  LEFT JOIN h hb ON hb.source = p.sb AND hb.v = s.v),
+         cum AS (SELECT sa, sb, na, nb, v,
+                        sum(ca) OVER (PARTITION BY sa, sb ORDER BY v
+                          ROWS UNBOUNDED PRECEDING) AS cuma,
+                        sum(cb) OVER (PARTITION BY sa, sb ORDER BY v
+                          ROWS UNBOUNDED PRECEDING) AS cumb,
+                        lead(v) OVER (PARTITION BY sa, sb ORDER BY v) - v AS dv
+                 FROM grid)
+         SELECT sa, sb,
+                round(CAST(sum(abs(CAST(cuma AS DECIMAL(19,0)) * nb
+                                   - CAST(cumb AS DECIMAL(19,0)) * na) * dv)
+                           AS DOUBLE) / (CAST(na AS DOUBLE) * nb), 6) AS w1
+         FROM cum WHERE dv IS NOT NULL
+         GROUP BY sa, sb, na, nb ORDER BY sa, sb""")),
 
     // Clustering evaluation: pair-counting precision/recall/F1 and
     // adjusted Rand index of a cheap BLOCKING key (md5 of the 10-word
@@ -160,7 +209,7 @@ object Round11c {
     // BIGINTs from cluster-size tables; the ratios are one shared
     // expression; a degenerate all-singleton corpus reports ARI = 1
     // (the partitions agree on every pair).
-    "q_x_cluster_eval" -> ((s, d) => {
+    Query("q_x_cluster_eval", (s, d) => {
       val keyed = table(s, d, "documents")
         .select(graft.functions.TextFunctions.bagFingerprint(col("text")).as("ka"),
           md5(concat_ws(" ", slice(split(col("text"), " "), 1, 10))).as("kb"))
@@ -190,191 +239,7 @@ object Round11c {
                   ((CAST(pairs_true AS DOUBLE) + pairs_pred) / 2
                      - CAST(pairs_true AS DOUBLE) * pairs_pred
                        / (CAST(n AS DOUBLE) * (n - 1) / 2)) END, 6) AS ari""")
-    }),
-
-    // Local clustering coefficient on the semantic cosine graph
-    // (threshold 0.3, the q_x_triangles edge set): cc(v) =
-    // 2·t(v) / (deg(v)·(deg(v)−1)) for deg ≥ 2. The census reuses the
-    // oriented a<b<c triangle join (wedges bounded by Σd², the
-    // degree-ordered shape); the per-node rollup is linear.
-    "q_x_clustering_coef" -> ((s, d) => {
-      val e = graft.operators.CosGraph.edges(s, d, threshold = 0.3)
-      val deg = e.select(col("a").as("id")).unionAll(e.select(col("b").as("id")))
-        .groupBy(col("id")).agg(count(lit(1)).as("deg"))
-      val perNode = graft.operators.Triangles.perVertex(e)
-      deg.filter(col("deg") >= 2)
-        .join(perNode, Seq("id"), "left").na.fill(0L, Seq("n_tri"))
-        .select(col("id").as("vec_id"), col("deg"), col("n_tri"),
-          round(lit(2.0) * col("n_tri") / (col("deg") * (col("deg") - 1)), 6).as("cc"))
-        .orderBy(col("vec_id"))
-    }),
-
-    // G-test of independence (likelihood-ratio chi-square) on the
-    // lang × source contingency table: G = 2·Σ O·ln(O·N/(R·C)) over
-    // non-empty cells — no factorials, exact integer margins, and the
-    // ≤cells-row double fold runs single-sorted-partition.
-    "q_x_gtest" -> ((s, d) => {
-      val cells = table(s, d, "documents")
-        .groupBy(col("lang"), col("source")).agg(count(lit(1)).as("o"))
-      val rowm = cells.groupBy(col("lang")).agg(sum(col("o")).as("r"))
-      val colm = cells.groupBy(col("source")).agg(sum(col("o")).as("c"))
-      val n = cells.agg(sum(col("o")).as("n"),
-        countDistinct(col("lang")).as("nr"), countDistinct(col("source")).as("nc"))
-      cells.join(broadcast(rowm), "lang").join(broadcast(colm), "source")
-        .crossJoin(broadcast(n))
-        .coalesce(1).sortWithinPartitions(col("lang"), col("source"))
-        .groupBy(col("nr"), col("nc"), col("n"))
-        .agg(sum(col("o").cast("double") *
-          log(col("o").cast("double") * col("n") /
-            (col("r").cast("double") * col("c")))).as("gsum"))
-        .selectExpr("n", "round(2.0 * gsum, 6) AS g_stat",
-          "CAST((nr - 1) * (nc - 1) AS BIGINT) AS dof")
-    }),
-
-    // Cochran–Armitage trend test: does the en-rate TREND across
-    // length deciles (scores t = 0..9)? Z from five exact integer
-    // moments in one shared expression — the ordered-exposure
-    // counterpart of q_x_chisq.
-    "q_x_cochran_armitage" -> ((s, d) =>
-      table(s, d, "documents")
-        .select(least(floor(col("n_chars") / 200), lit(9)).cast("long").as("t"),
-          when(col("lang") === "en", 1L).otherwise(0L).as("y"))
-        .groupBy(col("t"))
-        .agg(count(lit(1)).as("nt"), sum(col("y")).as("rt"))
-        .agg(sum(col("nt")).as("n"), sum(col("rt")).as("r"),
-          sum(col("rt") * col("t")).as("srt"),
-          sum(col("nt") * col("t")).as("snt"),
-          sum(col("nt") * col("t") * col("t")).as("snt2"))
-        .selectExpr("n", "r",
-          """round((CAST(srt AS DOUBLE) - CAST(r AS DOUBLE) * snt / n) /
-               sqrt(CAST(r AS DOUBLE) / n * (1.0 - CAST(r AS DOUBLE) / n) *
-                    (CAST(snt2 AS DOUBLE) - CAST(snt AS DOUBLE) * snt / n)), 6)
-             AS z_trend""")),
-
-    // Neyman allocation for stratified sampling: share of a 1000-doc
-    // budget per source stratum ∝ N_h·S_h. Strata moments are exact
-    // BIGINTs; the Σ N_h·S_h fold over ≤k strata is
-    // single-sorted-partition; allocations floor at the end.
-    "q_x_neyman" -> ((s, d) => {
-      val g = table(s, d, "documents")
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("nh"), sum(col("n_chars")).as("sh"),
-          sum(col("n_chars") * col("n_chars")).as("qh"))
-        .withColumn("sd", sqrt(
-          (col("qh").cast("double") - col("sh").cast("double") * col("sh") / col("nh")) /
-            (col("nh") - 1)))
-      val t = g.coalesce(1).sortWithinPartitions(col("source"))
-        .agg(sum(col("nh").cast("double") * col("sd")).as("tot"))
-      g.crossJoin(broadcast(t))
-        .select(col("source"), col("nh"),
-          round(col("sh").cast("double") / col("nh"), 6).as("mean_len"),
-          round(col("sd"), 6).as("sd_len"),
-          floor(lit(1000.0) * col("nh") * col("sd") / col("tot")).cast("long")
-            .as("alloc"))
-        .orderBy(col("source"))
-    }),
-
-    // Nelson–Aalen cumulative hazard per acquisition cohort — the
-    // estimator-level companion to q_x_survival's Kaplan–Meier (same
-    // risk-set derivation, additive hazard instead of multiplicative
-    // survival). The cumsum rides the per-cohort window whose ORDER
-    // BY key (dur) is unique within cohort, so both engines fold the
-    // identical sequence.
-    "q_x_nelson_aalen" -> ((s, d) => {
-      val ev = table(s, d, "events")
-      val win = ev.agg(max(unix_micros(col("ts"))).as("t_end"))
-      val firstType = ev
-        .withColumn("rk", row_number().over(Window.partitionBy(col("user_id"))
-          .orderBy(col("ts"), col("event_id"))))
-        .filter(col("rk") === 1)
-        .select(col("user_id"), col("event_type").as("cohort"))
-      val users = ev.groupBy(col("user_id"))
-        .agg(min(unix_micros(col("ts"))).as("t0"), max(unix_micros(col("ts"))).as("t1"))
-        .join(firstType, "user_id")
-        .crossJoin(broadcast(win))
-        .select(col("user_id"), col("cohort"),
-          expr("(t1 - t0) div 86400000000").as("dur"),
-          (col("t1") >= col("t_end") - lit(7L * 86400000000L)).as("censored"))
-      val byDur = users.groupBy(col("cohort"), col("dur"))
-        .agg(count(lit(1)).as("n_ending"),
-          sum(when(col("censored"), 0L).otherwise(1L)).as("d"))
-      val tot = users.groupBy(col("cohort")).agg(count(lit(1)).as("nn"))
-      val w = Window.partitionBy(col("cohort")).orderBy(col("dur"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val wc = Window.partitionBy(col("cohort")).orderBy(col("dur"))
-      byDur.join(broadcast(tot), "cohort")
-        .withColumn("n_risk", col("nn") - coalesce(sum(col("n_ending")).over(w), lit(0L)))
-        .withColumn("h", col("d").cast("double") / col("n_risk"))
-        .select(col("cohort"), col("dur").as("dur_days"), col("n_risk").as("n_at_risk"),
-          col("d").as("n_churned"),
-          round(sum(col("h")).over(wc), 6).as("cum_hazard"))
-        .orderBy(col("cohort"), col("dur_days"))
-    })
-  )
-
-  val oracle: Map[String, String] = Map(
-
-    "q_x_k_anon" ->
-      """SELECT lang, source, CAST(floor(n_chars / 100) AS BIGINT) AS len_bucket,
-                count(*) AS class_size, count(*) < 5 AS at_risk
-         FROM documents
-         GROUP BY lang, source, floor(n_chars / 100)
-         ORDER BY lang, source, len_bucket""",
-
-    "q_x_l_diversity" ->
-      """SELECT source, CAST(floor(n_chars / 100) AS BIGINT) AS len_bucket,
-                count(*) AS class_size,
-                count(DISTINCT lang) AS l_count,
-                count(DISTINCT lang) < 2 AS at_risk
-         FROM documents
-         GROUP BY source, floor(n_chars / 100)
-         ORDER BY source, len_bucket""",
-
-    "q_x_fairness" ->
-      s"""WITH scored AS ($langIdCte),
-         per AS (SELECT source, CAST(count(*) AS BIGINT) AS n,
-                   round(CAST(sum(CASE WHEN yhat THEN 1 ELSE 0 END) AS DOUBLE) / count(*), 6) AS sel_rate,
-                   CASE WHEN sum(CASE WHEN y THEN 1 ELSE 0 END) > 0 THEN
-                     round(CAST(sum(CASE WHEN y AND yhat THEN 1 ELSE 0 END) AS DOUBLE)
-                           / sum(CASE WHEN y THEN 1 ELSE 0 END), 6) END AS tpr,
-                   CASE WHEN count(*) - sum(CASE WHEN y THEN 1 ELSE 0 END) > 0 THEN
-                     round(CAST(sum(CASE WHEN (NOT y) AND yhat THEN 1 ELSE 0 END) AS DOUBLE)
-                           / (count(*) - sum(CASE WHEN y THEN 1 ELSE 0 END)), 6) END AS fpr
-                 FROM scored GROUP BY source),
-         gaps AS (SELECT round(max(sel_rate) - min(sel_rate), 6) AS parity_gap,
-                         round(max(tpr) - min(tpr), 6) AS tpr_gap,
-                         round(max(fpr) - min(fpr), 6) AS fpr_gap
-                  FROM per)
-         SELECT source, n, sel_rate, tpr, fpr, parity_gap, tpr_gap, fpr_gap
-         FROM per, gaps ORDER BY source""",
-
-    "q_x_wasserstein" ->
-      """WITH h AS (SELECT source, n_chars AS v, CAST(count(*) AS BIGINT) AS cnt
-                    FROM documents GROUP BY source, n_chars),
-         tot AS (SELECT source, sum(cnt) AS n FROM h GROUP BY source),
-         prs AS (SELECT a.source AS sa, a.n AS na, b.source AS sb, b.n AS nb
-                 FROM tot a, tot b WHERE a.source < b.source),
-         spine AS (SELECT DISTINCT v FROM h),
-         grid AS (SELECT p.sa, p.sb, p.na, p.nb, s.v,
-                         coalesce(ha.cnt, 0) AS ca, coalesce(hb.cnt, 0) AS cb
-                  FROM prs p CROSS JOIN spine s
-                  LEFT JOIN h ha ON ha.source = p.sa AND ha.v = s.v
-                  LEFT JOIN h hb ON hb.source = p.sb AND hb.v = s.v),
-         cum AS (SELECT sa, sb, na, nb, v,
-                        sum(ca) OVER (PARTITION BY sa, sb ORDER BY v
-                          ROWS UNBOUNDED PRECEDING) AS cuma,
-                        sum(cb) OVER (PARTITION BY sa, sb ORDER BY v
-                          ROWS UNBOUNDED PRECEDING) AS cumb,
-                        lead(v) OVER (PARTITION BY sa, sb ORDER BY v) - v AS dv
-                 FROM grid)
-         SELECT sa, sb,
-                round(CAST(sum(abs(CAST(cuma AS DECIMAL(19,0)) * nb
-                                   - CAST(cumb AS DECIMAL(19,0)) * na) * dv)
-                           AS DOUBLE) / (CAST(na AS DOUBLE) * nb), 6) AS w1
-         FROM cum WHERE dv IS NOT NULL
-         GROUP BY sa, sb, na, nb ORDER BY sa, sb""",
-
-    "q_x_cluster_eval" ->
+    }, Some(
       """WITH keyed AS (SELECT
                   md5(array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' ')) AS ka,
                   md5(array_to_string(string_split(text, ' ')[1:10], ' ')) AS kb
@@ -403,9 +268,24 @@ object Round11c {
                       ((CAST(pairs_true AS DOUBLE) + pairs_pred) / 2
                          - CAST(pairs_true AS DOUBLE) * pairs_pred
                            / (CAST(n AS DOUBLE) * (n - 1) / 2)) END, 6) AS ari
-         FROM m, sa, sb, bo""",
+         FROM m, sa, sb, bo""")),
 
-    "q_x_clustering_coef" ->
+    // Local clustering coefficient on the semantic cosine graph
+    // (threshold 0.3, the q_x_triangles edge set): cc(v) =
+    // 2·t(v) / (deg(v)·(deg(v)−1)) for deg ≥ 2. The census reuses the
+    // oriented a<b<c triangle join (wedges bounded by Σd², the
+    // degree-ordered shape); the per-node rollup is linear.
+    Query("q_x_clustering_coef", (s, d) => {
+      val e = graft.operators.CosGraph.edges(s, d, threshold = 0.3)
+      val deg = e.select(col("a").as("id")).unionAll(e.select(col("b").as("id")))
+        .groupBy(col("id")).agg(count(lit(1)).as("deg"))
+      val perNode = graft.operators.Triangles.perVertex(e)
+      deg.filter(col("deg") >= 2)
+        .join(perNode, Seq("id"), "left").na.fill(0L, Seq("n_tri"))
+        .select(col("id").as("vec_id"), col("deg"), col("n_tri"),
+          round(lit(2.0) * col("n_tri") / (col("deg") * (col("deg") - 1)), 6).as("cc"))
+        .orderBy(col("vec_id"))
+    }, Some(
       s"""WITH nv AS (
            SELECT vec_id, embedding,
                   sqrt(list_sum(list_transform(range(1, 65),
@@ -431,9 +311,29 @@ object Round11c {
          SELECT deg.id AS vec_id, deg.deg, coalesce(pn.n_tri, 0) AS n_tri,
                 round(2.0 * coalesce(pn.n_tri, 0) / (deg.deg * (deg.deg - 1)), 6) AS cc
          FROM deg LEFT JOIN pn ON deg.id = pn.id
-         WHERE deg.deg >= 2 ORDER BY vec_id""",
+         WHERE deg.deg >= 2 ORDER BY vec_id""")),
 
-    "q_x_gtest" ->
+    // G-test of independence (likelihood-ratio chi-square) on the
+    // lang × source contingency table: G = 2·Σ O·ln(O·N/(R·C)) over
+    // non-empty cells — no factorials, exact integer margins, and the
+    // ≤cells-row double fold runs single-sorted-partition.
+    Query("q_x_gtest", (s, d) => {
+      val cells = table(s, d, "documents")
+        .groupBy(col("lang"), col("source")).agg(count(lit(1)).as("o"))
+      val rowm = cells.groupBy(col("lang")).agg(sum(col("o")).as("r"))
+      val colm = cells.groupBy(col("source")).agg(sum(col("o")).as("c"))
+      val n = cells.agg(sum(col("o")).as("n"),
+        countDistinct(col("lang")).as("nr"), countDistinct(col("source")).as("nc"))
+      cells.join(broadcast(rowm), "lang").join(broadcast(colm), "source")
+        .crossJoin(broadcast(n))
+        .coalesce(1).sortWithinPartitions(col("lang"), col("source"))
+        .groupBy(col("nr"), col("nc"), col("n"))
+        .agg(sum(col("o").cast("double") *
+          log(col("o").cast("double") * col("n") /
+            (col("r").cast("double") * col("c")))).as("gsum"))
+        .selectExpr("n", "round(2.0 * gsum, 6) AS g_stat",
+          "CAST((nr - 1) * (nc - 1) AS BIGINT) AS dof")
+    }, Some(
       """WITH cells AS (SELECT lang, source, CAST(count(*) AS BIGINT) AS o
                         FROM documents GROUP BY lang, source),
          rowm AS (SELECT lang, sum(o) AS r FROM cells GROUP BY lang),
@@ -451,9 +351,27 @@ object Round11c {
                GROUP BY m.n, m.nr, m.nc)
          SELECT CAST(n AS BIGINT) AS n, round(2.0 * gsum, 6) AS g_stat,
                 CAST((nr - 1) * (nc - 1) AS BIGINT) AS dof
-         FROM f""",
+         FROM f""")),
 
-    "q_x_cochran_armitage" ->
+    // Cochran–Armitage trend test: does the en-rate TREND across
+    // length deciles (scores t = 0..9)? Z from five exact integer
+    // moments in one shared expression — the ordered-exposure
+    // counterpart of q_x_chisq.
+    Query("q_x_cochran_armitage", (s, d) =>
+      table(s, d, "documents")
+        .select(least(floor(col("n_chars") / 200), lit(9)).cast("long").as("t"),
+          when(col("lang") === "en", 1L).otherwise(0L).as("y"))
+        .groupBy(col("t"))
+        .agg(count(lit(1)).as("nt"), sum(col("y")).as("rt"))
+        .agg(sum(col("nt")).as("n"), sum(col("rt")).as("r"),
+          sum(col("rt") * col("t")).as("srt"),
+          sum(col("nt") * col("t")).as("snt"),
+          sum(col("nt") * col("t") * col("t")).as("snt2"))
+        .selectExpr("n", "r",
+          """round((CAST(srt AS DOUBLE) - CAST(r AS DOUBLE) * snt / n) /
+               sqrt(CAST(r AS DOUBLE) / n * (1.0 - CAST(r AS DOUBLE) / n) *
+                    (CAST(snt2 AS DOUBLE) - CAST(snt AS DOUBLE) * snt / n)), 6)
+             AS z_trend"""), Some(
       """WITH b AS (SELECT least(CAST(floor(n_chars / 200) AS BIGINT), 9) AS t,
                            CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
                     FROM documents),
@@ -469,9 +387,30 @@ object Round11c {
                       sqrt(CAST(r AS DOUBLE) / n * (1.0 - CAST(r AS DOUBLE) / n) *
                            (CAST(snt2 AS DOUBLE) - CAST(snt AS DOUBLE) * snt / n)), 6)
                   AS z_trend
-         FROM m""",
+         FROM m""")),
 
-    "q_x_neyman" ->
+    // Neyman allocation for stratified sampling: share of a 1000-doc
+    // budget per source stratum ∝ N_h·S_h. Strata moments are exact
+    // BIGINTs; the Σ N_h·S_h fold over ≤k strata is
+    // single-sorted-partition; allocations floor at the end.
+    Query("q_x_neyman", (s, d) => {
+      val g = table(s, d, "documents")
+        .groupBy(col("source"))
+        .agg(count(lit(1)).as("nh"), sum(col("n_chars")).as("sh"),
+          sum(col("n_chars") * col("n_chars")).as("qh"))
+        .withColumn("sd", sqrt(
+          (col("qh").cast("double") - col("sh").cast("double") * col("sh") / col("nh")) /
+            (col("nh") - 1)))
+      val t = g.coalesce(1).sortWithinPartitions(col("source"))
+        .agg(sum(col("nh").cast("double") * col("sd")).as("tot"))
+      g.crossJoin(broadcast(t))
+        .select(col("source"), col("nh"),
+          round(col("sh").cast("double") / col("nh"), 6).as("mean_len"),
+          round(col("sd"), 6).as("sd_len"),
+          floor(lit(1000.0) * col("nh") * col("sd") / col("tot")).cast("long")
+            .as("alloc"))
+        .orderBy(col("source"))
+    }, Some(
       """WITH g AS (SELECT source, CAST(count(*) AS BIGINT) AS nh,
                            CAST(sum(n_chars) AS BIGINT) AS sh,
                            CAST(sum(n_chars * n_chars) AS BIGINT) AS qh
@@ -485,9 +424,44 @@ object Round11c {
          SELECT source, nh, round(CAST(sh AS DOUBLE) / nh, 6) AS mean_len,
                 round(sd, 6) AS sd_len,
                 CAST(floor(1000.0 * nh * sd / tot) AS BIGINT) AS alloc
-         FROM s, t ORDER BY source""",
+         FROM s, t ORDER BY source""")),
 
-    "q_x_nelson_aalen" ->
+    // Nelson–Aalen cumulative hazard per acquisition cohort — the
+    // estimator-level companion to q_x_survival's Kaplan–Meier (same
+    // risk-set derivation, additive hazard instead of multiplicative
+    // survival). The cumsum rides the per-cohort window whose ORDER
+    // BY key (dur) is unique within cohort, so both engines fold the
+    // identical sequence.
+    Query("q_x_nelson_aalen", (s, d) => {
+      val ev = table(s, d, "events")
+      val win = ev.agg(max(unix_micros(col("ts"))).as("t_end"))
+      val firstType = ev
+        .withColumn("rk", row_number().over(Window.partitionBy(col("user_id"))
+          .orderBy(col("ts"), col("event_id"))))
+        .filter(col("rk") === 1)
+        .select(col("user_id"), col("event_type").as("cohort"))
+      val users = ev.groupBy(col("user_id"))
+        .agg(min(unix_micros(col("ts"))).as("t0"), max(unix_micros(col("ts"))).as("t1"))
+        .join(firstType, "user_id")
+        .crossJoin(broadcast(win))
+        .select(col("user_id"), col("cohort"),
+          expr("(t1 - t0) div 86400000000").as("dur"),
+          (col("t1") >= col("t_end") - lit(7L * 86400000000L)).as("censored"))
+      val byDur = users.groupBy(col("cohort"), col("dur"))
+        .agg(count(lit(1)).as("n_ending"),
+          sum(when(col("censored"), 0L).otherwise(1L)).as("d"))
+      val tot = users.groupBy(col("cohort")).agg(count(lit(1)).as("nn"))
+      val w = Window.partitionBy(col("cohort")).orderBy(col("dur"))
+        .rowsBetween(Window.unboundedPreceding, -1)
+      val wc = Window.partitionBy(col("cohort")).orderBy(col("dur"))
+      byDur.join(broadcast(tot), "cohort")
+        .withColumn("n_risk", col("nn") - coalesce(sum(col("n_ending")).over(w), lit(0L)))
+        .withColumn("h", col("d").cast("double") / col("n_risk"))
+        .select(col("cohort"), col("dur").as("dur_days"), col("n_risk").as("n_at_risk"),
+          col("d").as("n_churned"),
+          round(sum(col("h")).over(wc), 6).as("cum_hazard"))
+        .orderBy(col("cohort"), col("dur_days"))
+    }, Some(
       """WITH win AS (SELECT max(epoch_us(ts)) AS t_end FROM events),
          ft AS (SELECT user_id, event_type AS cohort FROM (
                   SELECT user_id, event_type,
@@ -514,6 +488,6 @@ object Round11c {
          SELECT cohort, dur AS dur_days, n_risk AS n_at_risk, d AS n_churned,
                 round(sum(CAST(d AS DOUBLE) / n_risk) OVER (PARTITION BY cohort
                   ORDER BY dur ROWS UNBOUNDED PRECEDING), 6) AS cum_hazard
-         FROM rk ORDER BY cohort, dur_days"""
+         FROM rk ORDER BY cohort, dur_days"""))
   )
 }

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables.table
@@ -22,8 +21,6 @@ import graft.Tables.table
   * IDENTICAL expression text in both engines and round at 6dp.
   */
 object Round11e {
-  type Q = (SparkSession, String) => DataFrame
-
   // Pearson r from exact integer moments — shared text, identical fp
   // op order in both engines (the q_x_linreg pattern).
   private val rTxt =
@@ -41,14 +38,14 @@ object Round11e {
     """sqrt(1.0 / (CAST(a AS DOUBLE) + 0.5) + 1.0 / (CAST(b AS DOUBLE) + 0.5) +
             1.0 / (CAST(c AS DOUBLE) + 0.5) + 1.0 / (CAST(d AS DOUBLE) + 0.5))"""
 
-  val defs: Map[String, Q] = Map(
+  val queries: Seq[Query] = Seq(
 
     // Cross-correlation function between the click and view hourly
     // count series at lags 0..6 hours — the lead/lag diagnostic of a
     // metrics pipeline. Series moments are exact BIGINTs per lag over
     // co-observed hours; corpus work is ONE (type, hour) aggregate,
     // the lag join runs at hour grain (constant per day of data).
-    "q_x_ccf" -> ((s, d) => {
+    Query("q_x_ccf", (s, d) => {
       val hrs = table(s, d, "events")
         .filter(col("event_type").isin("click", "view"))
         .select(col("event_type"),
@@ -67,13 +64,30 @@ object Round11e {
           sum(col("y") * col("y")).as("syy"))
         .select(col("lag"), col("n"), expr(s"round($rTxt, 6)").as("ccf"))
         .orderBy(col("lag"))
-    }),
+    }, Some(
+      s"""WITH hrs AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
+                             CAST(count(*) AS BIGINT) AS c
+                       FROM events WHERE event_type IN ('click', 'view')
+                       GROUP BY event_type, hr),
+         x AS (SELECT hr, c AS x FROM hrs WHERE event_type = 'click'),
+         y AS (SELECT hr AS hry, c AS y FROM hrs WHERE event_type = 'view'),
+         p AS (SELECT l.range AS lag, x.x, y.y
+               FROM x CROSS JOIN range(0, 7) l
+               JOIN y ON y.hry = x.hr + l.range),
+         mom AS (SELECT lag, CAST(count(*) AS BIGINT) AS n,
+                        CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
+                        CAST(sum(x * y) AS BIGINT) AS sxy,
+                        CAST(sum(x * x) AS BIGINT) AS sxx,
+                        CAST(sum(y * y) AS BIGINT) AS syy
+                 FROM p GROUP BY lag)
+         SELECT lag, n, round($rTxt, 6) AS ccf
+         FROM mom ORDER BY lag""")),
 
     // Per-source odds ratio of being English vs the rest of the
     // corpus, with the 95% CI on the log scale — the per-slice
     // association report of a filter audit. Cells are exact BIGINTs
     // from one per-source aggregate + broadcast totals; no fold.
-    "q_x_odds_ratio" -> ((s, d) => {
+    Query("q_x_odds_ratio", (s, d) => {
       val docs = table(s, d, "documents")
       val per = docs.groupBy(col("source"))
         .agg(sum(when(col("lang") === "en", 1L).otherwise(0L)).as("a"),
@@ -88,14 +102,29 @@ object Round11e {
           s"round(exp(ln($orTxt) - 1.96 * $seTxt), 6) AS ci_lo",
           s"round(exp(ln($orTxt) + 1.96 * $seTxt), 6) AS ci_hi")
         .orderBy(col("source"))
-    }),
+    }, Some(
+      s"""WITH per AS (SELECT source,
+                        CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS a,
+                        CAST(count(*) AS BIGINT) AS n
+                  FROM documents GROUP BY source),
+         g AS (SELECT CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS ge,
+                      CAST(count(*) AS BIGINT) AS gn
+               FROM documents),
+         cells AS (SELECT source, a, n - a AS b, ge - a AS c,
+                          gn - n - (ge - a) AS d
+                   FROM per, g)
+         SELECT source, a, b, c, d,
+                round($orTxt, 6) AS odds_ratio,
+                round(exp(ln($orTxt) - 1.96 * $seTxt), 6) AS ci_lo,
+                round(exp(ln($orTxt) + 1.96 * $seTxt), 6) AS ci_hi
+         FROM cells ORDER BY source""")),
 
     // Cochran–Mantel–Haenszel test of (long doc) × (English) across
     // source strata — "does the length/language association survive
     // controlling for source?". Per-stratum margins are exact BIGINTs;
     // the ≤|sources|-row double fold (Σ a−E, Σ V) runs single sorted
     // partition; the statistic is one shared final expression.
-    "q_x_cmh" -> ((s, d) => {
+    Query("q_x_cmh", (s, d) => {
       val cells = table(s, d, "documents")
         .groupBy(col("source"))
         .agg(sum(when(col("n_chars") > 200 && col("lang") === "en", 1L)
@@ -113,7 +142,22 @@ object Round11e {
             (col("nk").cast("double") * col("nk") * (col("nk") - 1))).as("v"))
         .selectExpr("n_strata", "round(dev, 6) AS deviation",
           "round(dev * dev / v, 6) AS cmh_stat")
-    }),
+    }, Some(
+      """WITH cells AS (SELECT source,
+                 CAST(sum(CASE WHEN n_chars > 200 AND lang = 'en' THEN 1 ELSE 0 END)
+                   AS BIGINT) AS a,
+                 CAST(sum(CASE WHEN n_chars > 200 THEN 1 ELSE 0 END) AS BIGINT) AS r1,
+                 CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS c1,
+                 CAST(count(*) AS BIGINT) AS nk
+               FROM documents GROUP BY source HAVING count(*) > 1),
+         f AS (SELECT CAST(count(*) AS BIGINT) AS n_strata,
+                      sum(CAST(a AS DOUBLE) - CAST(r1 AS DOUBLE) * c1 / nk) AS dev,
+                      sum(CAST(r1 AS DOUBLE) * (nk - r1) * c1 * (nk - c1) /
+                          (CAST(nk AS DOUBLE) * nk * (nk - 1))) AS v
+               FROM (SELECT * FROM cells ORDER BY source))
+         SELECT n_strata, round(dev, 6) AS deviation,
+                round(dev * dev / v, 6) AS cmh_stat
+         FROM f""")),
 
     // Intraclass correlation ICC(1) of event value within
     // (event_type, day) cells — the batch-effect audit ("how much of
@@ -122,7 +166,7 @@ object Round11e {
     // BIGINTs; the ≤|cells|-row double fold runs single sorted
     // partition; the unbalanced-design n0 and the F decomposition are
     // one shared final expression.
-    "q_x_icc" -> ((s, d) => {
+    Query("q_x_icc", (s, d) => {
       val cellsRaw = table(s, d, "events")
         .select(col("event_type"), to_date(col("ts")).as("day"),
           round(col("value") * 100).cast("long").as("v"))
@@ -145,14 +189,34 @@ object Round11e {
           // differs cross-engine — the ratio cancels the magnitude
           """round(((btw - CAST(t AS DOUBLE) * t / n) / (k - 1)) /
                ((CAST(q AS DOUBLE) - btw) / (n - k)), 6) AS f_stat""")
-    }),
+    }, Some(
+      """WITH cells AS (SELECT event_type, CAST(ts AS DATE) AS day,
+                               CAST(count(*) AS BIGINT) AS ni,
+                               CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS ti,
+                               CAST(sum(CAST(round(value * 100) AS BIGINT)
+                                        * CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS qi
+                        FROM events GROUP BY event_type, CAST(ts AS DATE)),
+         f AS (SELECT CAST(count(*) AS BIGINT) AS k, CAST(sum(ni) AS BIGINT) AS n,
+                      CAST(sum(ti) AS BIGINT) AS t, CAST(sum(qi) AS BIGINT) AS q,
+                      sum(CAST(ti AS DOUBLE) * ti / ni) AS btw,
+                      sum(CAST(ni AS DOUBLE) * ni) AS sn2
+               FROM (SELECT * FROM cells ORDER BY event_type, day))
+         SELECT k, n,
+                round((((btw - CAST(t AS DOUBLE) * t / n) / (k - 1)) -
+                   ((CAST(q AS DOUBLE) - btw) / (n - k))) /
+                  (((btw - CAST(t AS DOUBLE) * t / n) / (k - 1)) +
+                   (((CAST(n AS DOUBLE) - sn2 / n) / (k - 1)) - 1) *
+                     ((CAST(q AS DOUBLE) - btw) / (n - k))), 6) AS icc,
+                round(((btw - CAST(t AS DOUBLE) * t / n) / (k - 1)) /
+                      ((CAST(q AS DOUBLE) - btw) / (n - k)), 6) AS f_stat
+         FROM f""")),
 
     // Newman modularity of the embedding LABEL partition on the
     // cosine graph (threshold 0.3, the q_x_triangles edge set):
     // Q = Σ_l [ e_l/m − (d_l/2m)² ]. Edge/degree masses per label are
     // exact BIGINTs from two joins against the broadcast label map;
     // the ≤|labels|-row double fold runs single sorted partition.
-    "q_x_modularity" -> ((s, d) => {
+    Query("q_x_modularity", (s, d) => {
       val e = graft.operators.CosGraph.edges(s, d, threshold = 0.3)
       val lab = broadcast(table(s, d, "embeddings")
         .select(col("vec_id"), col("label")))
@@ -173,87 +237,7 @@ object Round11e {
       per.select(col("label"), col("e_in"), col("d_l"), col("m"))
         .crossJoin(broadcast(q.selectExpr("round(q, 6) AS modularity")))
         .orderBy(col("label"))
-    })
-  )
-
-  val oracle: Map[String, String] = Map(
-
-    "q_x_ccf" ->
-      s"""WITH hrs AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
-                             CAST(count(*) AS BIGINT) AS c
-                       FROM events WHERE event_type IN ('click', 'view')
-                       GROUP BY event_type, hr),
-         x AS (SELECT hr, c AS x FROM hrs WHERE event_type = 'click'),
-         y AS (SELECT hr AS hry, c AS y FROM hrs WHERE event_type = 'view'),
-         p AS (SELECT l.range AS lag, x.x, y.y
-               FROM x CROSS JOIN range(0, 7) l
-               JOIN y ON y.hry = x.hr + l.range),
-         mom AS (SELECT lag, CAST(count(*) AS BIGINT) AS n,
-                        CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-                        CAST(sum(x * y) AS BIGINT) AS sxy,
-                        CAST(sum(x * x) AS BIGINT) AS sxx,
-                        CAST(sum(y * y) AS BIGINT) AS syy
-                 FROM p GROUP BY lag)
-         SELECT lag, n, round($rTxt, 6) AS ccf
-         FROM mom ORDER BY lag""",
-
-    "q_x_odds_ratio" ->
-      s"""WITH per AS (SELECT source,
-                        CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS a,
-                        CAST(count(*) AS BIGINT) AS n
-                  FROM documents GROUP BY source),
-         g AS (SELECT CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS ge,
-                      CAST(count(*) AS BIGINT) AS gn
-               FROM documents),
-         cells AS (SELECT source, a, n - a AS b, ge - a AS c,
-                          gn - n - (ge - a) AS d
-                   FROM per, g)
-         SELECT source, a, b, c, d,
-                round($orTxt, 6) AS odds_ratio,
-                round(exp(ln($orTxt) - 1.96 * $seTxt), 6) AS ci_lo,
-                round(exp(ln($orTxt) + 1.96 * $seTxt), 6) AS ci_hi
-         FROM cells ORDER BY source""",
-
-    "q_x_cmh" ->
-      """WITH cells AS (SELECT source,
-                 CAST(sum(CASE WHEN n_chars > 200 AND lang = 'en' THEN 1 ELSE 0 END)
-                   AS BIGINT) AS a,
-                 CAST(sum(CASE WHEN n_chars > 200 THEN 1 ELSE 0 END) AS BIGINT) AS r1,
-                 CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS c1,
-                 CAST(count(*) AS BIGINT) AS nk
-               FROM documents GROUP BY source HAVING count(*) > 1),
-         f AS (SELECT CAST(count(*) AS BIGINT) AS n_strata,
-                      sum(CAST(a AS DOUBLE) - CAST(r1 AS DOUBLE) * c1 / nk) AS dev,
-                      sum(CAST(r1 AS DOUBLE) * (nk - r1) * c1 * (nk - c1) /
-                          (CAST(nk AS DOUBLE) * nk * (nk - 1))) AS v
-               FROM (SELECT * FROM cells ORDER BY source))
-         SELECT n_strata, round(dev, 6) AS deviation,
-                round(dev * dev / v, 6) AS cmh_stat
-         FROM f""",
-
-    "q_x_icc" ->
-      """WITH cells AS (SELECT event_type, CAST(ts AS DATE) AS day,
-                               CAST(count(*) AS BIGINT) AS ni,
-                               CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS ti,
-                               CAST(sum(CAST(round(value * 100) AS BIGINT)
-                                        * CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS qi
-                        FROM events GROUP BY event_type, CAST(ts AS DATE)),
-         f AS (SELECT CAST(count(*) AS BIGINT) AS k, CAST(sum(ni) AS BIGINT) AS n,
-                      CAST(sum(ti) AS BIGINT) AS t, CAST(sum(qi) AS BIGINT) AS q,
-                      sum(CAST(ti AS DOUBLE) * ti / ni) AS btw,
-                      sum(CAST(ni AS DOUBLE) * ni) AS sn2
-               FROM (SELECT * FROM cells ORDER BY event_type, day))
-         SELECT k, n,
-                round((((btw - CAST(t AS DOUBLE) * t / n) / (k - 1)) -
-                   ((CAST(q AS DOUBLE) - btw) / (n - k))) /
-                  (((btw - CAST(t AS DOUBLE) * t / n) / (k - 1)) +
-                   (((CAST(n AS DOUBLE) - sn2 / n) / (k - 1)) - 1) *
-                     ((CAST(q AS DOUBLE) - btw) / (n - k))), 6) AS icc,
-                round(((btw - CAST(t AS DOUBLE) * t / n) / (k - 1)) /
-                      ((CAST(q AS DOUBLE) - btw) / (n - k)), 6) AS f_stat
-         FROM f""",
-
-    "q_x_modularity" ->
+    }, Some(
       s"""WITH nv AS (
            SELECT vec_id, label, embedding,
                   sqrt(list_sum(list_transform(range(1, 65),
@@ -278,6 +262,6 @@ object Round11e {
                  AS modularity
                FROM (SELECT * FROM per ORDER BY label))
          SELECT per.label, per.e_in, per.d_l, per.m, q.modularity
-         FROM per, q ORDER BY per.label"""
+         FROM per, q ORDER BY per.label"""))
   )
 }

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -25,8 +24,6 @@ import graft.Cuts.CutOps
   * corpus-sized window.
   */
 object Round11f {
-  type Q = (SparkSession, String) => DataFrame
-
   // Pearson r from exact integer moments — shared text (q_x_linreg
   // pattern).
   private val rTxt =
@@ -45,7 +42,7 @@ object Round11f {
     s"(1.0 - $erf)"
   }
 
-  val defs: Map[String, Q] = Map(
+  val queries: Seq[Query] = Seq(
 
     // Jaro–Winkler record linkage over blocked document prefixes —
     // the comparator arm of an ER pipeline (q_x_fuzzy's edit-distance
@@ -58,7 +55,7 @@ object Round11f {
     // degenerates to ONE quadratic block here: every TPC-H name
     // shares "Customer#0000…"); candidates then score on the 12-word
     // prefix.
-    "q_x_jaro" -> ((s, d) => {
+    Query("q_x_jaro", (s, d) => {
       val c = table(s, d, "documents")
         .select(col("doc_id"),
           concat_ws(" ", slice(split(col("text"), " "), 1, 2)).as("blk"),
@@ -72,14 +69,23 @@ object Round11f {
         .filter(col("jw") >= 0.8)
         .select(col("id_a"), col("id_b"), round(col("jw"), 6).as("jw"))
         .orderBy(col("id_a"), col("id_b"))
-    }),
+    }, Some(
+      """WITH c AS (SELECT doc_id,
+                           array_to_string(string_split(text, ' ')[1:2], ' ') AS blk,
+                           array_to_string(string_split(text, ' ')[1:12], ' ') AS pfx
+                    FROM documents)
+         SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+                round(jaro_winkler_similarity(a.pfx, b.pfx), 6) AS jw
+         FROM c a JOIN c b ON a.blk = b.blk AND a.doc_id < b.doc_id
+         WHERE jaro_winkler_similarity(a.pfx, b.pfx) >= 0.8
+         ORDER BY id_a, id_b""")),
 
     // Cohort LTV curves: cumulative value per acquisition cohort
     // (first event type) by week since each user's first event,
     // normalized per cohort user. Revenue cumsums are EXACT cent
     // BIGINTs on a (cohort, week)-unique window; the only division is
     // the final per-user normalization.
-    "q_x_cohort_ltv" -> ((s, d) => {
+    Query("q_x_cohort_ltv", (s, d) => {
       val ev = table(s, d, "events")
       val first = ev
         .withColumn("rk", row_number().over(Window.partitionBy(col("user_id"))
@@ -102,7 +108,27 @@ object Round11f {
           round(col("cum_cents").cast("double") / 100.0 / col("n_users"), 6)
             .as("ltv_per_user"))
         .orderBy(col("cohort"), col("week"))
-    }),
+    }, Some(
+      """WITH first AS (SELECT user_id, event_type AS cohort, t0 FROM (
+                 SELECT user_id, event_type, epoch_us(ts) AS t0,
+                        row_number() OVER (PARTITION BY user_id
+                          ORDER BY ts, event_id) AS rk
+                 FROM events) WHERE rk = 1),
+         weekly AS (SELECT f.cohort,
+                           (epoch_us(e.ts) - f.t0) // 604800000000 AS week,
+                           CAST(sum(CAST(round(e.value * 100) AS BIGINT)) AS BIGINT)
+                             AS rev,
+                           CAST(count(DISTINCT e.user_id) AS BIGINT) AS active
+                    FROM events e JOIN first f ON e.user_id = f.user_id
+                    GROUP BY f.cohort, week),
+         sizes AS (SELECT cohort, CAST(count(*) AS BIGINT) AS n_users
+                   FROM first GROUP BY cohort)
+         SELECT w.cohort, w.week, w.active, s.n_users,
+                round(CAST(sum(w.rev) OVER (PARTITION BY w.cohort ORDER BY w.week
+                        ROWS UNBOUNDED PRECEDING) AS DOUBLE) / 100.0 / s.n_users, 6)
+                  AS ltv_per_user
+         FROM weekly w JOIN sizes s ON w.cohort = s.cohort
+         ORDER BY w.cohort, w.week""")),
 
     // 7-day rolling correlation between daily click count and daily
     // purchase revenue — the drifting-relationship monitor. Daily
@@ -110,7 +136,7 @@ object Round11f {
     // table (the rfm coalesce(1)+lazy-checkpoint fold — ≤days rows);
     // Pearson evaluates the shared text; rows before a full 7-day
     // window are excluded exactly (count = 7).
-    "q_x_rolling_corr" -> ((s, d) => {
+    Query("q_x_rolling_corr", (s, d) => {
       val ev = table(s, d, "events")
       val daily = ev.groupBy(to_date(col("ts")).as("day"))
         .agg(sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("x"),
@@ -129,14 +155,32 @@ object Round11f {
         .select(col("day"), col("x").as("clicks"), col("y").as("purchase_cents"),
           expr(s"round($rTxt, 6)").as("r7"))
         .orderBy(col("day"))
-    }),
+    }, Some(
+      s"""WITH daily AS (SELECT CAST(ts AS DATE) AS day,
+                 CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT)
+                   AS x,
+                 CAST(sum(CASE WHEN event_type = 'purchase'
+                          THEN CAST(round(value * 100) AS BIGINT) ELSE 0 END) AS BIGINT)
+                   AS y
+               FROM events GROUP BY CAST(ts AS DATE)),
+         roll AS (SELECT day, x, y,
+                 CAST(count(*) OVER w AS BIGINT) AS n,
+                 CAST(sum(x) OVER w AS BIGINT) AS sx,
+                 CAST(sum(y) OVER w AS BIGINT) AS sy,
+                 CAST(sum(x * y) OVER w AS BIGINT) AS sxy,
+                 CAST(sum(x * x) OVER w AS BIGINT) AS sxx,
+                 CAST(sum(y * y) OVER w AS BIGINT) AS syy
+               FROM daily
+               WINDOW w AS (ORDER BY day ROWS BETWEEN 6 PRECEDING AND CURRENT ROW))
+         SELECT day, x AS clicks, y AS purchase_cents, round($rTxt, 6) AS r7
+         FROM roll WHERE n = 7 ORDER BY day""")),
 
     // Local-peak detection in the daily count series per event type:
     // a day is a peak when it strictly beats both neighbors AND
     // exceeds 1.5× the ±3-day neighborhood mean — the prominence rule
     // compares INTEGERS only (2·cnt·n_nbr > 3·sum_nbr), never a
     // rounded mean. Partitioned day-grain windows.
-    "q_x_peak_detect" -> ((s, d) => {
+    Query("q_x_peak_detect", (s, d) => {
       val daily = graft.operators.DayGrain.counts(s, d)
         .withColumnRenamed("c", "cnt")
       val wo = Window.partitionBy(col("event_type")).orderBy(col("day"))
@@ -153,14 +197,31 @@ object Round11f {
           round(col("cnt") * col("n_nbr") / col("sum_nbr").cast("double"), 6)
             .as("prominence"))
         .orderBy(col("event_type"), col("day"))
-    }),
+    }, Some(
+      """WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS day,
+                 CAST(count(*) AS BIGINT) AS cnt
+               FROM events GROUP BY event_type, CAST(ts AS DATE)),
+         ext AS (SELECT event_type, day, cnt,
+                 lag(cnt) OVER wo AS prev, lead(cnt) OVER wo AS nxt,
+                 CAST(count(*) OVER wn AS BIGINT) AS n_nbr,
+                 CAST(sum(cnt) OVER wn AS BIGINT) AS sum_nbr
+               FROM daily
+               WINDOW wo AS (PARTITION BY event_type ORDER BY day),
+                      wn AS (PARTITION BY event_type ORDER BY day
+                             ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING))
+         SELECT event_type, day, cnt,
+                round(cnt * n_nbr / CAST(sum_nbr AS DOUBLE), 6) AS prominence
+         FROM ext
+         WHERE prev IS NOT NULL AND nxt IS NOT NULL
+           AND cnt > prev AND cnt > nxt AND cnt * 2 * n_nbr > sum_nbr * 3
+         ORDER BY event_type, day""")),
 
     // Benjamini–Hochberg FDR over the per-source en-rate z-tests —
     // the multiple-testing correction the audit suite's 20 parallel
     // tests need. Cells exact; z and the A–S normal tail evaluate
     // shared text; ranks and the step-up rule run on the ≤|sources|
     // grain (histogram-fold cum + max), α = 0.05.
-    "q_x_bh_fdr" -> ((s, d) => {
+    Query("q_x_bh_fdr", (s, d) => {
       val docs = table(s, d, "documents")
       val per = docs.groupBy(col("source"))
         .agg(sum(when(col("lang") === "en", 1L).otherwise(0L)).as("a"),
@@ -186,84 +247,7 @@ object Round11f {
         .select(col("source"), col("z"), round(col("p"), 6).as("p"),
           col("rank"), (col("rank") <= col("k")).as("rejected"))
         .orderBy(col("rank"))
-    })
-  )
-
-  val oracle: Map[String, String] = Map(
-
-    "q_x_jaro" ->
-      """WITH c AS (SELECT doc_id,
-                           array_to_string(string_split(text, ' ')[1:2], ' ') AS blk,
-                           array_to_string(string_split(text, ' ')[1:12], ' ') AS pfx
-                    FROM documents)
-         SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                round(jaro_winkler_similarity(a.pfx, b.pfx), 6) AS jw
-         FROM c a JOIN c b ON a.blk = b.blk AND a.doc_id < b.doc_id
-         WHERE jaro_winkler_similarity(a.pfx, b.pfx) >= 0.8
-         ORDER BY id_a, id_b""",
-
-    "q_x_cohort_ltv" ->
-      """WITH first AS (SELECT user_id, event_type AS cohort, t0 FROM (
-                 SELECT user_id, event_type, epoch_us(ts) AS t0,
-                        row_number() OVER (PARTITION BY user_id
-                          ORDER BY ts, event_id) AS rk
-                 FROM events) WHERE rk = 1),
-         weekly AS (SELECT f.cohort,
-                           (epoch_us(e.ts) - f.t0) // 604800000000 AS week,
-                           CAST(sum(CAST(round(e.value * 100) AS BIGINT)) AS BIGINT)
-                             AS rev,
-                           CAST(count(DISTINCT e.user_id) AS BIGINT) AS active
-                    FROM events e JOIN first f ON e.user_id = f.user_id
-                    GROUP BY f.cohort, week),
-         sizes AS (SELECT cohort, CAST(count(*) AS BIGINT) AS n_users
-                   FROM first GROUP BY cohort)
-         SELECT w.cohort, w.week, w.active, s.n_users,
-                round(CAST(sum(w.rev) OVER (PARTITION BY w.cohort ORDER BY w.week
-                        ROWS UNBOUNDED PRECEDING) AS DOUBLE) / 100.0 / s.n_users, 6)
-                  AS ltv_per_user
-         FROM weekly w JOIN sizes s ON w.cohort = s.cohort
-         ORDER BY w.cohort, w.week""",
-
-    "q_x_rolling_corr" ->
-      s"""WITH daily AS (SELECT CAST(ts AS DATE) AS day,
-                 CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT)
-                   AS x,
-                 CAST(sum(CASE WHEN event_type = 'purchase'
-                          THEN CAST(round(value * 100) AS BIGINT) ELSE 0 END) AS BIGINT)
-                   AS y
-               FROM events GROUP BY CAST(ts AS DATE)),
-         roll AS (SELECT day, x, y,
-                 CAST(count(*) OVER w AS BIGINT) AS n,
-                 CAST(sum(x) OVER w AS BIGINT) AS sx,
-                 CAST(sum(y) OVER w AS BIGINT) AS sy,
-                 CAST(sum(x * y) OVER w AS BIGINT) AS sxy,
-                 CAST(sum(x * x) OVER w AS BIGINT) AS sxx,
-                 CAST(sum(y * y) OVER w AS BIGINT) AS syy
-               FROM daily
-               WINDOW w AS (ORDER BY day ROWS BETWEEN 6 PRECEDING AND CURRENT ROW))
-         SELECT day, x AS clicks, y AS purchase_cents, round($rTxt, 6) AS r7
-         FROM roll WHERE n = 7 ORDER BY day""",
-
-    "q_x_peak_detect" ->
-      """WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS day,
-                 CAST(count(*) AS BIGINT) AS cnt
-               FROM events GROUP BY event_type, CAST(ts AS DATE)),
-         ext AS (SELECT event_type, day, cnt,
-                 lag(cnt) OVER wo AS prev, lead(cnt) OVER wo AS nxt,
-                 CAST(count(*) OVER wn AS BIGINT) AS n_nbr,
-                 CAST(sum(cnt) OVER wn AS BIGINT) AS sum_nbr
-               FROM daily
-               WINDOW wo AS (PARTITION BY event_type ORDER BY day),
-                      wn AS (PARTITION BY event_type ORDER BY day
-                             ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING))
-         SELECT event_type, day, cnt,
-                round(cnt * n_nbr / CAST(sum_nbr AS DOUBLE), 6) AS prominence
-         FROM ext
-         WHERE prev IS NOT NULL AND nxt IS NOT NULL
-           AND cnt > prev AND cnt > nxt AND cnt * 2 * n_nbr > sum_nbr * 3
-         ORDER BY event_type, day""",
-
-    "q_x_bh_fdr" -> {
+    }, Some {
       val zTxt =
         """((CAST(a AS DOUBLE) / n - (CAST(ge AS DOUBLE) - a) / (gn - n)) /
             sqrt(CAST(ge AS DOUBLE) / gn * (1.0 - CAST(ge AS DOUBLE) / gn) *
@@ -289,6 +273,6 @@ object Round11f {
                   WHERE p * m <= rank * 0.05)
          SELECT source, z, round(p, 6) AS p, rank, rank <= kmax.k AS rejected
          FROM ranked, kmax ORDER BY rank"""
-    }
+    })
   )
 }

@@ -24,8 +24,6 @@ import graft.Tables.table
   * end and rounds 6dp.
   */
 object Round11g {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Per-pair CDF grid over the pooled value spine:
     * (sa, sb, na, nb, v, wa, wb, cuma, cumb), plus dv = next v − v
     * (null on the last grid row).
@@ -53,73 +51,6 @@ object Round11g {
       .withColumn("dv", lead(col("v"), 1).over(w) - col("v"))
   }
 
-  val defs: Map[String, Q] = Map(
-
-    // Energy distance D²(a,b) = 2E|X−Y| − E|X−X'| − E|Y−Y'| between
-    // every source pair — each expectation is an EXACT integer CDF
-    // sum (E|X−Y| = Σ [Fa(1−Fb) + Fb(1−Fa)]·Δv cross-multiplied in
-    // DECIMAL(38,0)); three divisions in one final shared expression.
-    "q_x_energy_dist" -> ((s, d) =>
-      pairGrid(s, d)
-        .filter(col("dv").isNotNull)
-        .groupBy(col("sa"), col("sb"), col("na"), col("nb"))
-        .agg(
-          sum((col("cuma").cast(DecimalType(19, 0)) * (col("nb") - col("cumb")) +
-            col("cumb").cast(DecimalType(19, 0)) * (col("na") - col("cuma"))) *
-            col("dv")).as("sab"),
-          sum(col("cuma").cast(DecimalType(19, 0)) * (col("na") - col("cuma")) *
-            col("dv")).as("saa"),
-          sum(col("cumb").cast(DecimalType(19, 0)) * (col("nb") - col("cumb")) *
-            col("dv")).as("sbb"))
-        .selectExpr("sa", "sb",
-          """round(2.0 * CAST(sab AS DOUBLE) / (CAST(na AS DOUBLE) * nb)
-               - 2.0 * CAST(saa AS DOUBLE) / (CAST(na AS DOUBLE) * na)
-               - 2.0 * CAST(sbb AS DOUBLE) / (CAST(nb AS DOUBLE) * nb), 6)
-             AS energy_d2""")
-        .orderBy(col("sa"), col("sb"))),
-
-    // Two-sample Cramér–von Mises: T = na·nb/(na+nb)² ·
-    // Σ_pooled (Fa − Fb)² — the CDF difference is exact
-    // (cuma·nb − cumb·na, DECIMAL) per grid point; the pooled-mass
-    // weighted square sum folds in ascending-v order on the pair
-    // window (identical fold sequence in both engines), divided once.
-    "q_x_cvm" -> ((s, d) => {
-      val w = Window.partitionBy(col("sa"), col("sb")).orderBy(col("v"))
-      val g = pairGrid(s, d)
-        .withColumn("d2",
-          (col("wa") + col("wb")).cast("double") *
-            pow((col("cuma").cast(DecimalType(19, 0)) * col("nb") -
-              col("cumb").cast(DecimalType(19, 0)) * col("na")).cast("double"), 2))
-        .withColumn("cumd2", sum(col("d2")).over(
-          w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .withColumn("rn", row_number().over(w.orderBy(col("v").desc)))
-        .filter(col("rn") === 1)
-      g.selectExpr("sa", "sb",
-        """round(CAST(na AS DOUBLE) * nb / ((na + nb) * (na + nb))
-             * cumd2 / (CAST(na AS DOUBLE) * na * nb * nb), 6)
-           AS cvm_t""")
-        .orderBy(col("sa"), col("sb"))
-    }),
-
-    // Kuiper's V = D⁺ + D⁻ (max CDF excess each direction) — the
-    // tail-sensitive, cyclic-robust KS variant. Both extremes are
-    // EXACT integer maxima of cuma·nb − cumb·na; one division at the
-    // end. Same grid, no fold-order exposure at all.
-    "q_x_kuiper" -> ((s, d) =>
-      pairGrid(s, d)
-        .groupBy(col("sa"), col("sb"), col("na"), col("nb"))
-        .agg(
-          max(col("cuma").cast(DecimalType(19, 0)) * col("nb") -
-            col("cumb").cast(DecimalType(19, 0)) * col("na")).as("dpos"),
-          max(col("cumb").cast(DecimalType(19, 0)) * col("na") -
-            col("cuma").cast(DecimalType(19, 0)) * col("nb")).as("dneg"))
-        .selectExpr("sa", "sb",
-          """round((CAST(greatest(dpos, 0) AS DOUBLE)
-               + CAST(greatest(dneg, 0) AS DOUBLE))
-               / (CAST(na AS DOUBLE) * nb), 6) AS kuiper_v""")
-        .orderBy(col("sa"), col("sb")))
-  )
-
   private[queries] val gridSql =
     """h AS (SELECT source, n_chars AS v, CAST(count(*) AS BIGINT) AS cnt
              FROM documents GROUP BY source, n_chars),
@@ -140,9 +71,30 @@ object Round11g {
                WINDOW pw AS (PARTITION BY sa, sb ORDER BY v
                              ROWS UNBOUNDED PRECEDING))"""
 
-  val oracle: Map[String, String] = Map(
+  val queries: Seq[Query] = Seq(
 
-    "q_x_energy_dist" ->
+    // Energy distance D²(a,b) = 2E|X−Y| − E|X−X'| − E|Y−Y'| between
+    // every source pair — each expectation is an EXACT integer CDF
+    // sum (E|X−Y| = Σ [Fa(1−Fb) + Fb(1−Fa)]·Δv cross-multiplied in
+    // DECIMAL(38,0)); three divisions in one final shared expression.
+    Query("q_x_energy_dist", (s, d) =>
+      pairGrid(s, d)
+        .filter(col("dv").isNotNull)
+        .groupBy(col("sa"), col("sb"), col("na"), col("nb"))
+        .agg(
+          sum((col("cuma").cast(DecimalType(19, 0)) * (col("nb") - col("cumb")) +
+            col("cumb").cast(DecimalType(19, 0)) * (col("na") - col("cuma"))) *
+            col("dv")).as("sab"),
+          sum(col("cuma").cast(DecimalType(19, 0)) * (col("na") - col("cuma")) *
+            col("dv")).as("saa"),
+          sum(col("cumb").cast(DecimalType(19, 0)) * (col("nb") - col("cumb")) *
+            col("dv")).as("sbb"))
+        .selectExpr("sa", "sb",
+          """round(2.0 * CAST(sab AS DOUBLE) / (CAST(na AS DOUBLE) * nb)
+               - 2.0 * CAST(saa AS DOUBLE) / (CAST(na AS DOUBLE) * na)
+               - 2.0 * CAST(sbb AS DOUBLE) / (CAST(nb AS DOUBLE) * nb), 6)
+             AS energy_d2""")
+        .orderBy(col("sa"), col("sb")), Some(
       s"""WITH $gridSql
          SELECT sa, sb,
                 round(2.0 * CAST(sum((CAST(cuma AS DECIMAL(19,0)) * (nb - cumb)
@@ -153,9 +105,30 @@ object Round11g {
                     - 2.0 * CAST(sum(CAST(cumb AS DECIMAL(19,0)) * (nb - cumb) * dv)
                           AS DOUBLE) / (CAST(nb AS DOUBLE) * nb), 6) AS energy_d2
          FROM cum WHERE dv IS NOT NULL
-         GROUP BY sa, sb, na, nb ORDER BY sa, sb""",
+         GROUP BY sa, sb, na, nb ORDER BY sa, sb""")),
 
-    "q_x_cvm" ->
+    // Two-sample Cramér–von Mises: T = na·nb/(na+nb)² ·
+    // Σ_pooled (Fa − Fb)² — the CDF difference is exact
+    // (cuma·nb − cumb·na, DECIMAL) per grid point; the pooled-mass
+    // weighted square sum folds in ascending-v order on the pair
+    // window (identical fold sequence in both engines), divided once.
+    Query("q_x_cvm", (s, d) => {
+      val w = Window.partitionBy(col("sa"), col("sb")).orderBy(col("v"))
+      val g = pairGrid(s, d)
+        .withColumn("d2",
+          (col("wa") + col("wb")).cast("double") *
+            pow((col("cuma").cast(DecimalType(19, 0)) * col("nb") -
+              col("cumb").cast(DecimalType(19, 0)) * col("na")).cast("double"), 2))
+        .withColumn("cumd2", sum(col("d2")).over(
+          w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        .withColumn("rn", row_number().over(w.orderBy(col("v").desc)))
+        .filter(col("rn") === 1)
+      g.selectExpr("sa", "sb",
+        """round(CAST(na AS DOUBLE) * nb / ((na + nb) * (na + nb))
+             * cumd2 / (CAST(na AS DOUBLE) * na * nb * nb), 6)
+           AS cvm_t""")
+        .orderBy(col("sa"), col("sb"))
+    }, Some(
       s"""WITH $gridSql,
          f AS (SELECT sa, sb, na, nb, v,
                       sum(CAST(wa + wb AS DOUBLE) *
@@ -169,9 +142,25 @@ object Round11g {
                 round(CAST(na AS DOUBLE) * nb / ((na + nb) * (na + nb))
                     * cumd2 / (CAST(na AS DOUBLE) * na * nb * nb), 6)
                   AS cvm_t
-         FROM f WHERE rn = 1 ORDER BY sa, sb""",
+         FROM f WHERE rn = 1 ORDER BY sa, sb""")),
 
-    "q_x_kuiper" ->
+    // Kuiper's V = D⁺ + D⁻ (max CDF excess each direction) — the
+    // tail-sensitive, cyclic-robust KS variant. Both extremes are
+    // EXACT integer maxima of cuma·nb − cumb·na; one division at the
+    // end. Same grid, no fold-order exposure at all.
+    Query("q_x_kuiper", (s, d) =>
+      pairGrid(s, d)
+        .groupBy(col("sa"), col("sb"), col("na"), col("nb"))
+        .agg(
+          max(col("cuma").cast(DecimalType(19, 0)) * col("nb") -
+            col("cumb").cast(DecimalType(19, 0)) * col("na")).as("dpos"),
+          max(col("cumb").cast(DecimalType(19, 0)) * col("na") -
+            col("cuma").cast(DecimalType(19, 0)) * col("nb")).as("dneg"))
+        .selectExpr("sa", "sb",
+          """round((CAST(greatest(dpos, 0) AS DOUBLE)
+               + CAST(greatest(dneg, 0) AS DOUBLE))
+               / (CAST(na AS DOUBLE) * nb), 6) AS kuiper_v""")
+        .orderBy(col("sa"), col("sb")), Some(
       s"""WITH $gridSql
          SELECT sa, sb,
                 round((CAST(greatest(max(CAST(cuma AS DECIMAL(19,0)) * nb
@@ -179,6 +168,6 @@ object Round11g {
                      + CAST(greatest(max(CAST(cumb AS DECIMAL(19,0)) * na
                           - CAST(cuma AS DECIMAL(19,0)) * nb), 0) AS DOUBLE))
                     / (CAST(na AS DOUBLE) * nb), 6) AS kuiper_v
-         FROM cum GROUP BY sa, sb, na, nb ORDER BY sa, sb"""
+         FROM cum GROUP BY sa, sb, na, nb ORDER BY sa, sb"""))
   )
 }

@@ -21,8 +21,6 @@ import graft.Tables.table
   * division.
   */
 object Round11h {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Per-source value-grain histogram with cumulative counts and the
     * source total: (source, v, cnt, cum, n).
     */
@@ -48,13 +46,28 @@ object Round11h {
       .groupBy(col("source"), col("p")).agg(min(col("v")).as("t"))
   }
 
-  val defs: Map[String, Q] = Map(
+  private val cumSql =
+    """h AS (SELECT source, n_chars AS v, CAST(count(*) AS BIGINT) AS cnt
+             FROM documents GROUP BY source, n_chars),
+       ch AS (SELECT source, v, cnt,
+                     CAST(sum(cnt) OVER (PARTITION BY source ORDER BY v
+                       ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum,
+                     CAST(sum(cnt) OVER (PARTITION BY source) AS BIGINT) AS n
+              FROM h)"""
+
+  private def thrSql(ps: String): String =
+    s"""thr AS (SELECT source, p, min(v) AS t
+              FROM ch CROSS JOIN (SELECT unnest($ps) AS p)
+              WHERE cum * 100 >= p * n
+              GROUP BY source, p)"""
+
+  val queries: Seq[Query] = Seq(
 
     // Exact quantile bands per source: p10/p25/p50/p75/p90 as integer
     // thresholds (min v with 100·cum ≥ p·n) — the profile row a data
     // contract asserts. One histogram, one partitioned window, a
     // 5-row threshold spine.
-    "q_x_quantiles" -> ((s, d) =>
+    Query("q_x_quantiles", (s, d) =>
       thresholds(s, d, Seq(10, 25, 50, 75, 90))
         .groupBy(col("source"))
         .agg(max(when(col("p") === 10, col("t"))).as("p10"),
@@ -62,13 +75,21 @@ object Round11h {
           max(when(col("p") === 50, col("t"))).as("p50"),
           max(when(col("p") === 75, col("t"))).as("p75"),
           max(when(col("p") === 90, col("t"))).as("p90"))
-        .orderBy(col("source"))),
+        .orderBy(col("source")), Some(
+      s"""WITH $cumSql, ${thrSql("[10, 25, 50, 75, 90]")}
+         SELECT source,
+                max(CASE WHEN p = 10 THEN t END) AS p10,
+                max(CASE WHEN p = 25 THEN t END) AS p25,
+                max(CASE WHEN p = 50 THEN t END) AS p50,
+                max(CASE WHEN p = 75 THEN t END) AS p75,
+                max(CASE WHEN p = 90 THEN t END) AS p90
+         FROM thr GROUP BY source ORDER BY source""")),
 
     // Tukey-fence outliers per source: v outside [q1 − 1.5·IQR,
     // q3 + 1.5·IQR], decided as 2·v vs 2·q ± 3·IQR so the fractional
     // fence never meets a float. Outlier mass comes from the same
     // histogram — no second corpus pass.
-    "q_x_iqr_outliers" -> ((s, d) => {
+    Query("q_x_iqr_outliers", (s, d) => {
       val q = thresholds(s, d, Seq(25, 75))
         .groupBy(col("source"))
         .agg(max(when(col("p") === 25, col("t"))).as("q1"),
@@ -85,57 +106,7 @@ object Round11h {
         .select(col("source"), col("q1"), col("q3"), col("iqr"),
           col("n_outliers"), col("outlier_pct"))
         .orderBy(col("source"))
-    }),
-
-    // 10% trimmed mean per source, EXACTLY: k = n div 10 rows clipped
-    // from each tail at the histogram grain — the boundary value
-    // contributes only its surviving mass (min(cnt, k − rows-below)
-    // clipped at 0). All masses are BIGINTs; one division at the end.
-    "q_x_trimmed_mean" -> ((s, d) =>
-      cumHist(s, d)
-        .withColumn("k", expr("n div 10"))
-        .withColumn("lowcut",
-          greatest(lit(0L), least(col("cnt"), col("k") - (col("cum") - col("cnt")))))
-        .withColumn("highcut",
-          greatest(lit(0L), least(col("cnt"), col("k") - (col("n") - col("cum")))))
-        .groupBy(col("source"))
-        .agg(max(col("n")).as("n"), max(col("k")).as("k_trim"),
-          sum(col("v") * (col("cnt") - col("lowcut") - col("highcut"))).as("kept_sum"),
-          sum(col("cnt") - col("lowcut") - col("highcut")).as("kept_n"))
-        .select(col("source"), col("n"), col("k_trim"),
-          round(col("kept_sum").cast("double") / col("kept_n"), 6)
-            .as("trimmed_mean"))
-        .orderBy(col("source")))
-  )
-
-  private val cumSql =
-    """h AS (SELECT source, n_chars AS v, CAST(count(*) AS BIGINT) AS cnt
-             FROM documents GROUP BY source, n_chars),
-       ch AS (SELECT source, v, cnt,
-                     CAST(sum(cnt) OVER (PARTITION BY source ORDER BY v
-                       ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum,
-                     CAST(sum(cnt) OVER (PARTITION BY source) AS BIGINT) AS n
-              FROM h)"""
-
-  private def thrSql(ps: String): String =
-    s"""thr AS (SELECT source, p, min(v) AS t
-              FROM ch CROSS JOIN (SELECT unnest($ps) AS p)
-              WHERE cum * 100 >= p * n
-              GROUP BY source, p)"""
-
-  val oracle: Map[String, String] = Map(
-
-    "q_x_quantiles" ->
-      s"""WITH $cumSql, ${thrSql("[10, 25, 50, 75, 90]")}
-         SELECT source,
-                max(CASE WHEN p = 10 THEN t END) AS p10,
-                max(CASE WHEN p = 25 THEN t END) AS p25,
-                max(CASE WHEN p = 50 THEN t END) AS p50,
-                max(CASE WHEN p = 75 THEN t END) AS p75,
-                max(CASE WHEN p = 90 THEN t END) AS p90
-         FROM thr GROUP BY source ORDER BY source""",
-
-    "q_x_iqr_outliers" ->
+    }, Some(
       s"""WITH $cumSql, ${thrSql("[25, 75]")},
          q AS (SELECT source,
                       max(CASE WHEN p = 25 THEN t END) AS q1,
@@ -152,9 +123,27 @@ object Round11h {
                           THEN ch.cnt ELSE 0 END) * 100.0 / sum(ch.cnt), 6)
                   AS outlier_pct
          FROM ch JOIN q ON ch.source = q.source
-         GROUP BY ch.source, q.q1, q.q3, q.iqr ORDER BY ch.source""",
+         GROUP BY ch.source, q.q1, q.q3, q.iqr ORDER BY ch.source""")),
 
-    "q_x_trimmed_mean" ->
+    // 10% trimmed mean per source, EXACTLY: k = n div 10 rows clipped
+    // from each tail at the histogram grain — the boundary value
+    // contributes only its surviving mass (min(cnt, k − rows-below)
+    // clipped at 0). All masses are BIGINTs; one division at the end.
+    Query("q_x_trimmed_mean", (s, d) =>
+      cumHist(s, d)
+        .withColumn("k", expr("n div 10"))
+        .withColumn("lowcut",
+          greatest(lit(0L), least(col("cnt"), col("k") - (col("cum") - col("cnt")))))
+        .withColumn("highcut",
+          greatest(lit(0L), least(col("cnt"), col("k") - (col("n") - col("cum")))))
+        .groupBy(col("source"))
+        .agg(max(col("n")).as("n"), max(col("k")).as("k_trim"),
+          sum(col("v") * (col("cnt") - col("lowcut") - col("highcut"))).as("kept_sum"),
+          sum(col("cnt") - col("lowcut") - col("highcut")).as("kept_n"))
+        .select(col("source"), col("n"), col("k_trim"),
+          round(col("kept_sum").cast("double") / col("kept_n"), 6)
+            .as("trimmed_mean"))
+        .orderBy(col("source")), Some(
       s"""WITH $cumSql,
          t AS (SELECT source, v, cnt, n, n // 10 AS k,
                       greatest(0, least(cnt, n // 10 - (cum - cnt))) AS lowcut,
@@ -163,6 +152,6 @@ object Round11h {
          SELECT source, max(n) AS n, max(k) AS k_trim,
                 round(CAST(sum(v * (cnt - lowcut - highcut)) AS DOUBLE)
                       / sum(cnt - lowcut - highcut), 6) AS trimmed_mean
-         FROM t GROUP BY source ORDER BY source"""
+         FROM t GROUP BY source ORDER BY source"""))
   )
 }

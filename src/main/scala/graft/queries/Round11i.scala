@@ -22,8 +22,6 @@ import graft.Cuts.CutOps
   * lazy-checkpoint fold.
   */
 object Round11i {
-  type Q = (SparkSession, String) => DataFrame
-
   /** (doc_id, g) distinct gram postings — the shared tokenization
     * grain ([[graft.operators.NgramGrain.postings]], bench-memoized).
     */
@@ -34,13 +32,21 @@ object Round11i {
   private def firstDoc(s: SparkSession, d: String): DataFrame =
     postings(s, d).groupBy(col("g")).agg(min(col("doc_id")).as("first_doc"))
 
-  val defs: Map[String, Q] = Map(
+  private val firstSql =
+    """w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
+       u AS (SELECT doc_id, ws, unnest(range(1, len(ws) - 1)) AS i FROM w),
+       gr AS (SELECT DISTINCT doc_id,
+                     ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS g
+              FROM u),
+       fd AS (SELECT g, min(doc_id) AS first_doc FROM gr GROUP BY g)"""
+
+  val queries: Seq[Query] = Seq(
 
     // Per-document novelty: share of the doc's distinct trigrams whose
     // FIRST corpus occurrence is this doc (ids order the crawl). Docs
     // full of already-seen grams are restatements — the incremental
     // dedup signal at sub-document grain.
-    "q_x_ngram_novelty" -> ((s, d) =>
+    Query("q_x_ngram_novelty", (s, d) =>
       postings(s, d)
         .join(firstDoc(s, d), "g")
         .groupBy(col("doc_id"))
@@ -49,13 +55,21 @@ object Round11i {
             .as("n_novel"))
         .withColumn("novelty",
           round(col("n_novel").cast("double") / col("n_grams"), 6))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")), Some(
+      s"""WITH $firstSql
+         SELECT gr.doc_id, CAST(count(*) AS BIGINT) AS n_grams,
+                CAST(sum(CASE WHEN fd.first_doc = gr.doc_id THEN 1 ELSE 0 END)
+                  AS BIGINT) AS n_novel,
+                round(CAST(sum(CASE WHEN fd.first_doc = gr.doc_id THEN 1 ELSE 0 END)
+                        AS DOUBLE) / count(*), 6) AS novelty
+         FROM gr JOIN fd ON gr.g = fd.g
+         GROUP BY gr.doc_id ORDER BY gr.doc_id""")),
 
     // Per-source provenance: how many of the source's distinct grams
     // does the source OWN (their global first occurrence is one of
     // its docs)? Low ownership = the source restates the rest of the
     // corpus.
-    "q_x_source_novelty" -> ((s, d) => {
+    Query("q_x_source_novelty", (s, d) => {
       val docSrc = table(s, d, "documents").select(col("doc_id"), col("source"))
       val perSrcGram = postings(s, d).join(docSrc, "doc_id")
         .select(col("source"), col("g")).distinct()
@@ -70,14 +84,27 @@ object Round11i {
         .withColumn("owned_ratio",
           round(col("n_owned").cast("double") / col("n_grams"), 6))
         .orderBy(col("source"))
-    }),
+    }, Some(
+      s"""WITH $firstSql,
+         ds AS (SELECT doc_id, source FROM documents),
+         sg AS (SELECT DISTINCT ds.source, gr.g
+                FROM gr JOIN ds ON gr.doc_id = ds.doc_id),
+         owner AS (SELECT fd.g, ds.source AS owner_src
+                   FROM fd JOIN ds ON fd.first_doc = ds.doc_id)
+         SELECT sg.source, CAST(count(*) AS BIGINT) AS n_grams,
+                CAST(sum(CASE WHEN owner.owner_src = sg.source THEN 1 ELSE 0 END)
+                  AS BIGINT) AS n_owned,
+                round(CAST(sum(CASE WHEN owner.owner_src = sg.source THEN 1 ELSE 0 END)
+                        AS DOUBLE) / count(*), 6) AS owned_ratio
+         FROM sg JOIN owner ON sg.g = owner.g
+         GROUP BY sg.source ORDER BY sg.source""")),
 
     // Vocabulary growth curve: NEW distinct grams contributed by each
     // doc-id decile of the crawl, with the cumulative total — the
     // measured Heaps-law bend. Decile grain (10 rows) after one
     // postings aggregate; the cumsum folds on the coalesced decile
     // table.
-    "q_x_vocab_growth" -> ((s, d) => {
+    Query("q_x_vocab_growth", (s, d) => {
       // id ceiling travels as a broadcast frame — NO driver action at
       // plan-construction time (the r10 lshKnn eager-count lesson)
       val nf = table(s, d, "documents").agg((max(col("doc_id")) + 1).as("nn"))
@@ -92,45 +119,7 @@ object Round11i {
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
         .cut("Round11i.scala:93", kRowFold = true)
         .orderBy(col("decile"))
-    })
-  )
-
-  private val firstSql =
-    """w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-       u AS (SELECT doc_id, ws, unnest(range(1, len(ws) - 1)) AS i FROM w),
-       gr AS (SELECT DISTINCT doc_id,
-                     ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS g
-              FROM u),
-       fd AS (SELECT g, min(doc_id) AS first_doc FROM gr GROUP BY g)"""
-
-  val oracle: Map[String, String] = Map(
-
-    "q_x_ngram_novelty" ->
-      s"""WITH $firstSql
-         SELECT gr.doc_id, CAST(count(*) AS BIGINT) AS n_grams,
-                CAST(sum(CASE WHEN fd.first_doc = gr.doc_id THEN 1 ELSE 0 END)
-                  AS BIGINT) AS n_novel,
-                round(CAST(sum(CASE WHEN fd.first_doc = gr.doc_id THEN 1 ELSE 0 END)
-                        AS DOUBLE) / count(*), 6) AS novelty
-         FROM gr JOIN fd ON gr.g = fd.g
-         GROUP BY gr.doc_id ORDER BY gr.doc_id""",
-
-    "q_x_source_novelty" ->
-      s"""WITH $firstSql,
-         ds AS (SELECT doc_id, source FROM documents),
-         sg AS (SELECT DISTINCT ds.source, gr.g
-                FROM gr JOIN ds ON gr.doc_id = ds.doc_id),
-         owner AS (SELECT fd.g, ds.source AS owner_src
-                   FROM fd JOIN ds ON fd.first_doc = ds.doc_id)
-         SELECT sg.source, CAST(count(*) AS BIGINT) AS n_grams,
-                CAST(sum(CASE WHEN owner.owner_src = sg.source THEN 1 ELSE 0 END)
-                  AS BIGINT) AS n_owned,
-                round(CAST(sum(CASE WHEN owner.owner_src = sg.source THEN 1 ELSE 0 END)
-                        AS DOUBLE) / count(*), 6) AS owned_ratio
-         FROM sg JOIN owner ON sg.g = owner.g
-         GROUP BY sg.source ORDER BY sg.source""",
-
-    "q_x_vocab_growth" ->
+    }, Some(
       s"""WITH $firstSql,
          n AS (SELECT max(doc_id) + 1 AS n FROM documents),
          pd AS (SELECT least(CAST(floor(first_doc * 10 / n.n) AS BIGINT), 9) AS decile,
@@ -139,6 +128,6 @@ object Round11i {
          SELECT decile, new_grams,
                 CAST(sum(new_grams) OVER (ORDER BY decile
                   ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_grams
-         FROM pd ORDER BY decile"""
+         FROM pd ORDER BY decile"""))
   )
 }

@@ -21,8 +21,6 @@ import graft.Tables.table
   * the final expression.
   */
 object Round11k {
-  type Q = (SparkSession, String) => DataFrame
-
   /** (source, b, w): bucket-grain histogram; b = n_chars div 20. */
   private def hist(s: SparkSession, d: String): DataFrame =
     table(s, d, "documents")
@@ -40,14 +38,19 @@ object Round11k {
       .filter(col("sa") < col("sb"))
   }
 
-  val defs: Map[String, Q] = Map(
+  private val histSql =
+    """h AS (SELECT source, n_chars // 20 AS b, CAST(count(*) AS BIGINT) AS w
+             FROM documents GROUP BY source, n_chars // 20),
+       tot AS (SELECT source, CAST(sum(w) AS BIGINT) AS n FROM h GROUP BY source)"""
+
+  val queries: Seq[Query] = Seq(
 
     // RBF-kernel MMD² (biased V-statistic) between every source
     // pair's length distribution, σ = 5 buckets: Σ-terms are bucket
     // products (≤ ~625 rows per source/pair), the three kernel sums
     // normalize by exact n², and MMD² = Saa + Sbb − 2·Sab in one
     // final expression.
-    "q_x_mmd" -> ((s, d) => {
+    Query("q_x_mmd", (s, d) => {
       val h = hist(s, d)
       val k = exp(-((col("bx") - col("by")) * (col("bx") - col("by"))).cast("double")
         / 50.0)
@@ -71,65 +74,7 @@ object Round11k {
         .select(col("sa"), col("sb"),
           round(col("kaa") + col("kbb") - lit(2.0) * col("kab"), 6).as("mmd2"))
         .orderBy(col("sa"), col("sb"))
-    }),
-
-    // Bhattacharyya coefficient + Hellinger distance per source pair:
-    // BC = Σ_b sqrt(pa·pb) needs only the bucket INTERSECTION (zero
-    // terms vanish), so the pair work is one equi-join on b;
-    // H = sqrt(1 − BC) with the tiny negative-noise clamp.
-    "q_x_hellinger" -> ((s, d) => {
-      val h = hist(s, d)
-      spine(h)
-        .join(h.select(col("source").as("sa"), col("b"), col("w").as("wa")), "sa")
-        .join(h.select(col("source").as("sb"), col("b"), col("w").as("wb")),
-          Seq("sb", "b"))
-        .groupBy(col("sa"), col("sb"), col("na"), col("nb"))
-        .agg(sum(sqrt((col("wa") * col("wb")).cast("double"))).as("sw"))
-        .selectExpr("sa", "sb",
-          "round(sw / sqrt(CAST(na AS DOUBLE) * nb), 6) AS bc",
-          """round(sqrt(greatest(0.0, 1.0 - sw / sqrt(CAST(na AS DOUBLE) * nb))), 6)
-             AS hellinger""")
-        .orderBy(col("sa"), col("sb"))
-    }),
-
-    // Laplace-smoothed Rényi-2 divergence D₂(a ‖ b) =
-    // ln Σ_b pa² / pb́ with pb́ = (wb + 1)/(nb + |B|) over the GLOBAL
-    // bucket spine — smoothing keeps the reference support full, so
-    // the statistic is finite for every ordered pair. Grid is
-    // |B| × pairs rows.
-    "q_x_renyi" -> ((s, d) => {
-      val h = hist(s, d)
-      val bSpine = h.select(col("b")).distinct()
-      val nb = bSpine.agg(count(lit(1)).as("nbuckets"))
-      val tot = totals(h)
-      val prs = broadcast(tot.select(col("source").as("sa"), col("n").as("na")))
-        .crossJoin(broadcast(tot.select(col("source").as("sb"), col("n").as("nb"))))
-        .filter(col("sa") =!= col("sb"))
-      prs.join(bSpine)
-        .join(h.select(col("source").as("sa"), col("b"), col("w").as("wa")),
-          Seq("sa", "b"), "left")
-        .join(h.select(col("source").as("sb"), col("b"), col("w").as("wb")),
-          Seq("sb", "b"), "left")
-        .na.fill(0L, Seq("wa", "wb"))
-        .crossJoin(broadcast(nb))
-        .groupBy(col("sa"), col("sb"), col("na"), col("nb"), col("nbuckets"))
-        .agg(sum(
-          (col("wa").cast("double") * col("wa") /
-            (col("na").cast("double") * col("na"))) /
-            ((col("wb") + 1).cast("double") / (col("nb") + col("nbuckets")))).as("srat"))
-        .selectExpr("sa", "sb", "round(ln(srat), 6) AS renyi2")
-        .orderBy(col("sa"), col("sb"))
-    })
-  )
-
-  private val histSql =
-    """h AS (SELECT source, n_chars // 20 AS b, CAST(count(*) AS BIGINT) AS w
-             FROM documents GROUP BY source, n_chars // 20),
-       tot AS (SELECT source, CAST(sum(w) AS BIGINT) AS n FROM h GROUP BY source)"""
-
-  val oracle: Map[String, String] = Map(
-
-    "q_x_mmd" ->
+    }, Some(
       s"""WITH $histSql,
          self AS (SELECT x.source,
                          sum(x.w * y.w * exp(-CAST((x.b - y.b) * (x.b - y.b) AS DOUBLE)
@@ -153,9 +98,26 @@ object Round11k {
          FROM cross_kw c
          JOIN selfn a ON a.source = c.sa
          JOIN selfn b ON b.source = c.sb
-         ORDER BY c.sa, c.sb""",
+         ORDER BY c.sa, c.sb""")),
 
-    "q_x_hellinger" ->
+    // Bhattacharyya coefficient + Hellinger distance per source pair:
+    // BC = Σ_b sqrt(pa·pb) needs only the bucket INTERSECTION (zero
+    // terms vanish), so the pair work is one equi-join on b;
+    // H = sqrt(1 − BC) with the tiny negative-noise clamp.
+    Query("q_x_hellinger", (s, d) => {
+      val h = hist(s, d)
+      spine(h)
+        .join(h.select(col("source").as("sa"), col("b"), col("w").as("wa")), "sa")
+        .join(h.select(col("source").as("sb"), col("b"), col("w").as("wb")),
+          Seq("sb", "b"))
+        .groupBy(col("sa"), col("sb"), col("na"), col("nb"))
+        .agg(sum(sqrt((col("wa") * col("wb")).cast("double"))).as("sw"))
+        .selectExpr("sa", "sb",
+          "round(sw / sqrt(CAST(na AS DOUBLE) * nb), 6) AS bc",
+          """round(sqrt(greatest(0.0, 1.0 - sw / sqrt(CAST(na AS DOUBLE) * nb))), 6)
+             AS hellinger""")
+        .orderBy(col("sa"), col("sb"))
+    }, Some(
       s"""WITH $histSql,
          prs AS (SELECT a.source AS sa, a.n AS na, b.source AS sb, b.n AS nb
                  FROM tot a, tot b WHERE a.source < b.source),
@@ -169,9 +131,36 @@ object Round11k {
                 round(sw / sqrt(CAST(na AS DOUBLE) * nb), 6) AS bc,
                 round(sqrt(greatest(0.0, 1.0 - sw / sqrt(CAST(na AS DOUBLE) * nb))), 6)
                   AS hellinger
-         FROM j ORDER BY sa, sb""",
+         FROM j ORDER BY sa, sb""")),
 
-    "q_x_renyi" ->
+    // Laplace-smoothed Rényi-2 divergence D₂(a ‖ b) =
+    // ln Σ_b pa² / pb́ with pb́ = (wb + 1)/(nb + |B|) over the GLOBAL
+    // bucket spine — smoothing keeps the reference support full, so
+    // the statistic is finite for every ordered pair. Grid is
+    // |B| × pairs rows.
+    Query("q_x_renyi", (s, d) => {
+      val h = hist(s, d)
+      val bSpine = h.select(col("b")).distinct()
+      val nb = bSpine.agg(count(lit(1)).as("nbuckets"))
+      val tot = totals(h)
+      val prs = broadcast(tot.select(col("source").as("sa"), col("n").as("na")))
+        .crossJoin(broadcast(tot.select(col("source").as("sb"), col("n").as("nb"))))
+        .filter(col("sa") =!= col("sb"))
+      prs.join(bSpine)
+        .join(h.select(col("source").as("sa"), col("b"), col("w").as("wa")),
+          Seq("sa", "b"), "left")
+        .join(h.select(col("source").as("sb"), col("b"), col("w").as("wb")),
+          Seq("sb", "b"), "left")
+        .na.fill(0L, Seq("wa", "wb"))
+        .crossJoin(broadcast(nb))
+        .groupBy(col("sa"), col("sb"), col("na"), col("nb"), col("nbuckets"))
+        .agg(sum(
+          (col("wa").cast("double") * col("wa") /
+            (col("na").cast("double") * col("na"))) /
+            ((col("wb") + 1).cast("double") / (col("nb") + col("nbuckets")))).as("srat"))
+        .selectExpr("sa", "sb", "round(ln(srat), 6) AS renyi2")
+        .orderBy(col("sa"), col("sb"))
+    }, Some(
       s"""WITH $histSql,
          bs AS (SELECT DISTINCT b FROM h),
          nbk AS (SELECT CAST(count(*) AS BIGINT) AS nbuckets FROM bs),
@@ -188,6 +177,6 @@ object Round11k {
                              / ((CAST(wb AS DOUBLE) + 1)
                                 / (nb + nbk.nbuckets)))), 6) AS renyi2
          FROM grid, nbk
-         GROUP BY sa, sb ORDER BY sa, sb"""
+         GROUP BY sa, sb ORDER BY sa, sb"""))
   )
 }

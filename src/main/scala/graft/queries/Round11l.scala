@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -22,8 +21,6 @@ import graft.Tables.table
   * doubles, so both engines decide identically.
   */
 object Round11l {
-  type Q = (SparkSession, String) => DataFrame
-
   // MCC from exact cells — shared text; NULL when a margin is empty.
   // The guard tests each margin separately (a BIGINT product of four
   // margins would wrap at ~1e12 rows — the grubbs overflow lesson).
@@ -38,12 +35,12 @@ object Round11l {
   private val sdTxt =
     s"""sqrt((CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * sx / n) / (n - 1))"""
 
-  val defs: Map[String, Q] = Map(
+  val queries: Seq[Query] = Seq(
 
     // Matthews correlation of the language-ID gate per source — the
     // balanced single-number summary of the same confusion matrix
     // q_x_fairness rates slice-wise. Cells are one exact aggregate.
-    "q_x_mcc" -> ((s, d) =>
+    Query("q_x_mcc", (s, d) =>
       table(s, d, "documents")
         .select(col("source"), (col("lang") === "en").as("y"),
           Round11c.predEn.as("yhat"))
@@ -54,14 +51,23 @@ object Round11l {
           sum(when(!col("y") && !col("yhat"), 1L).otherwise(0L)).as("tn"))
         .selectExpr("source", "tp", "fp", "fn", "tn",
           s"round($mccTxt, 6) AS mcc")
-        .orderBy(col("source"))),
+        .orderBy(col("source")), Some(
+      s"""WITH scored AS (${Round11c.langIdCte}),
+         cells AS (SELECT source,
+                 CAST(sum(CASE WHEN y AND yhat THEN 1 ELSE 0 END) AS BIGINT) AS tp,
+                 CAST(sum(CASE WHEN (NOT y) AND yhat THEN 1 ELSE 0 END) AS BIGINT) AS fp,
+                 CAST(sum(CASE WHEN y AND NOT yhat THEN 1 ELSE 0 END) AS BIGINT) AS fn,
+                 CAST(sum(CASE WHEN (NOT y) AND NOT yhat THEN 1 ELSE 0 END) AS BIGINT) AS tn
+               FROM scored GROUP BY source)
+         SELECT source, tp, fp, fn, tn, round($mccTxt, 6) AS mcc
+         FROM cells ORDER BY source""")),
 
     // Bollinger control bands over the daily count series per event
     // type: 7-day rolling mean ± 2σ from exact integer window
     // moments; a day breaches when its count leaves the band computed
     // over the PRECEDING 7 days (so the tested day never feeds its
     // own band). Partitioned day-grain windows only.
-    "q_x_bollinger" -> ((s, d) => {
+    Query("q_x_bollinger", (s, d) => {
       val daily = graft.operators.DayGrain.counts(s, d)
         .withColumnRenamed("c", "cnt")
       val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
@@ -78,41 +84,7 @@ object Round11l {
           s"""(CAST(cnt AS DOUBLE) < $meanTxt - 2.0 * $sdTxt
                OR CAST(cnt AS DOUBLE) > $meanTxt + 2.0 * $sdTxt) AS breach""")
         .orderBy(col("event_type"), col("day"))
-    }),
-
-    // Process-capability Cp / Cpk of the event value stream per type
-    // against literal spec limits [0, 500] — the SPC report line.
-    // Moments ride exact cent-grain BIGINTs; indices are one shared
-    // expression (cent limits 0 / 50000 inside, /100 display outside).
-    "q_x_cpk" -> ((s, d) =>
-      table(s, d, "events")
-        .select(col("event_type"), round(col("value") * 100).cast("long").as("v"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), sum(col("v")).as("sx"),
-          sum(col("v") * col("v")).as("sxx"))
-        .selectExpr("event_type", "n",
-          s"round($meanTxt / 100.0, 6) AS mean_value",
-          s"round($sdTxt / 100.0, 6) AS sd_value",
-          s"round(50000.0 / (6.0 * $sdTxt), 6) AS cp",
-          s"""round(least(50000.0 - $meanTxt, $meanTxt - 0.0)
-               / (3.0 * $sdTxt), 6) AS cpk""")
-        .orderBy(col("event_type")))
-  )
-
-  val oracle: Map[String, String] = Map(
-
-    "q_x_mcc" ->
-      s"""WITH scored AS (${Round11c.langIdCte}),
-         cells AS (SELECT source,
-                 CAST(sum(CASE WHEN y AND yhat THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-                 CAST(sum(CASE WHEN (NOT y) AND yhat THEN 1 ELSE 0 END) AS BIGINT) AS fp,
-                 CAST(sum(CASE WHEN y AND NOT yhat THEN 1 ELSE 0 END) AS BIGINT) AS fn,
-                 CAST(sum(CASE WHEN (NOT y) AND NOT yhat THEN 1 ELSE 0 END) AS BIGINT) AS tn
-               FROM scored GROUP BY source)
-         SELECT source, tp, fp, fn, tn, round($mccTxt, 6) AS mcc
-         FROM cells ORDER BY source""",
-
-    "q_x_bollinger" ->
+    }, Some(
       s"""WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS day,
                  CAST(count(*) AS BIGINT) AS cnt
                FROM events GROUP BY event_type, CAST(ts AS DATE)),
@@ -129,9 +101,25 @@ object Round11l {
                 round($meanTxt + 2.0 * $sdTxt, 6) AS band_hi,
                 (CAST(cnt AS DOUBLE) < $meanTxt - 2.0 * $sdTxt
                  OR CAST(cnt AS DOUBLE) > $meanTxt + 2.0 * $sdTxt) AS breach
-         FROM roll WHERE n = 7 ORDER BY event_type, day""",
+         FROM roll WHERE n = 7 ORDER BY event_type, day""")),
 
-    "q_x_cpk" ->
+    // Process-capability Cp / Cpk of the event value stream per type
+    // against literal spec limits [0, 500] — the SPC report line.
+    // Moments ride exact cent-grain BIGINTs; indices are one shared
+    // expression (cent limits 0 / 50000 inside, /100 display outside).
+    Query("q_x_cpk", (s, d) =>
+      table(s, d, "events")
+        .select(col("event_type"), round(col("value") * 100).cast("long").as("v"))
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n"), sum(col("v")).as("sx"),
+          sum(col("v") * col("v")).as("sxx"))
+        .selectExpr("event_type", "n",
+          s"round($meanTxt / 100.0, 6) AS mean_value",
+          s"round($sdTxt / 100.0, 6) AS sd_value",
+          s"round(50000.0 / (6.0 * $sdTxt), 6) AS cp",
+          s"""round(least(50000.0 - $meanTxt, $meanTxt - 0.0)
+               / (3.0 * $sdTxt), 6) AS cpk""")
+        .orderBy(col("event_type")), Some(
       s"""WITH m AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
                  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS sx,
                  CAST(sum(CAST(round(value * 100) AS BIGINT)
@@ -143,6 +131,6 @@ object Round11l {
                 round(50000.0 / (6.0 * $sdTxt), 6) AS cp,
                 round(least(50000.0 - $meanTxt, $meanTxt - 0.0)
                       / (3.0 * $sdTxt), 6) AS cpk
-         FROM m ORDER BY event_type"""
+         FROM m ORDER BY event_type"""))
   )
 }

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -22,11 +21,9 @@ import graft.Cuts.CutOps
   * tolerance.
   */
 object Round11m {
-  type Q = (SparkSession, String) => DataFrame
+  val queries: Seq[Query] = Seq(
 
-  val defs: Map[String, Q] = Map(
-
-    "q_x_youden" -> ((s, d) => {
+    Query("q_x_youden", (s, d) => {
       val denom = lit(4294967296.0) // 2^32
       val p = (conv(substring(md5(concat(lit("cal:"), col("doc_id").cast("string"))), 1, 8),
         16, 10).cast("long").cast("double") + 0.5) / denom
@@ -60,12 +57,7 @@ object Round11m {
           round(col("j"), 6).as("j"),
           (col("bin") === col("best_bin")).as("is_best"))
         .orderBy(col("threshold"))
-    })
-  )
-
-  val oracle: Map[String, String] = Map(
-
-    "q_x_youden" ->
+    }, Some(
       """WITH b AS (SELECT
              (CAST(('0x' || substr(md5('cal:' || doc_id), 1, 8)) AS BIGINT) + 0.5)
                / 4294967296.0 AS p,
@@ -91,6 +83,6 @@ object Round11m {
          SELECT round(bin / 100.0, 2) AS threshold, n,
                 round(tpr, 6) AS tpr, round(fpr, 6) AS fpr, round(j, 6) AS j,
                 bin = best.best_bin AS is_best
-         FROM roc, best ORDER BY threshold"""
+         FROM roc, best ORDER BY threshold"""))
   )
 }

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -46,9 +45,7 @@ import graft.Tables.table
   *    sums fold in ascending-v order like AD.
   */
 object Round12 {
-  type Q = (SparkSession, String) => DataFrame
-
-  val defs: Map[String, Q] = Map(
+  val queries: Seq[Query] = Seq(
 
     // Partial autocorrelation at lags 1..3 of the daily value series
     // per event_type, via the Durbin–Levinson closed forms on the
@@ -58,7 +55,7 @@ object Round12 {
     // new plan shape, only algebra). ρ_k is the same pairwise-corr
     // estimator q_x_acf reports, rounded 6dp so both engines compose
     // identical inputs.
-    "q_x_pacf" -> ((s, d) => {
+    Query("q_x_pacf", (s, d) => {
       val daily = graft.operators.DayGrain.values(s, d)
       val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
       val lagged = daily.select(col("event_type"), col("v"),
@@ -78,7 +75,32 @@ object Round12 {
         .selectExpr("event_type",
           "stack(3, 1, round(r1, 6), 2, round(p2, 6), 3, round(p3, 6)) AS (lag_k, pacf)")
         .orderBy(col("event_type"), col("lag_k"))
-    }),
+    }, Some(
+      """WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS day,
+                  round(sum(value), 6) AS v
+                FROM events GROUP BY 1, 2),
+         lg AS (SELECT event_type, v,
+                  lag(v, 1) OVER w AS l1, lag(v, 2) OVER w AS l2,
+                  lag(v, 3) OVER w AS l3
+                FROM daily WINDOW w AS (PARTITION BY event_type ORDER BY day)),
+         r AS (SELECT event_type,
+                 round(corr(v, l1), 6) AS r1,
+                 round(corr(v, l2), 6) AS r2,
+                 round(corr(v, l3), 6) AS r3
+               FROM lg GROUP BY event_type),
+         s2 AS (SELECT event_type, r1, r2, r3,
+                  (r2 - r1*r1) / (1 - r1*r1) AS p2
+                FROM r),
+         s3 AS (SELECT event_type, r1, r2, r3, p2,
+                  r1 * (1 - p2) AS f21
+                FROM s2),
+         s4 AS (SELECT event_type, r1,
+                  (r3 - f21*r2 - p2*r1) / (1 - f21*r1 - p2*r2) AS p3, p2
+                FROM s3)
+         SELECT event_type, 1 AS lag_k, round(r1, 6) AS pacf FROM s4
+         UNION ALL SELECT event_type, 2, round(p2, 6) FROM s4
+         UNION ALL SELECT event_type, 3, round(p3, 6) FROM s4
+         ORDER BY event_type, lag_k""")),
 
     // Anderson–Darling two-sample A²(midrank) per source pair over
     // the document-length distribution (Scholz–Stephens eq. 7 with
@@ -94,7 +116,7 @@ object Round12 {
     // sources) are excluded — the formula sums over POOLED distinct
     // values only, and outside the pair's support the denominator is
     // legitimately 0 (B ∈ {0, N}).
-    "q_x_ad" -> ((s, d) => {
+    Query("q_x_ad", (s, d) => {
       val w = Window.partitionBy(col("sa"), col("sb")).orderBy(col("v"))
       val g = Round11g.pairGrid(s, d)
         .selectExpr("sa", "sb", "na", "nb", "v",
@@ -119,14 +141,38 @@ object Round12 {
           """round((nn - 1.0) / (CAST(nn AS DOUBLE) * nn)
                * (suma / na + sumb / nb), 6) AS ad_a2""")
         .orderBy(col("sa"), col("sb"))
-    }),
+    }, Some(
+      s"""WITH ${Round11g.gridSql},
+         t AS (SELECT sa, sb, na, nb, v,
+                 wa + wb AS l, na + nb AS nn,
+                 2*cuma - wa AS ma2, 2*cumb - wb AS mb2,
+                 2*(cuma + cumb) - (wa + wb) AS b2
+               FROM cum),
+         u AS (SELECT sa, sb, na, nb, v, l, nn,
+                 CAST(nn*ma2 - na*b2 AS DECIMAL(19,0)) AS ia,
+                 CAST(nn*mb2 - nb*b2 AS DECIMAL(19,0)) AS ib,
+                 b2*(2*nn - b2) - nn*l AS dint
+               FROM t WHERE l > 0),
+         f AS (SELECT sa, sb, na, nb, nn,
+                 sum(CAST(l AS DOUBLE) * CAST(ia*ia AS DOUBLE) / dint)
+                   OVER pw AS suma,
+                 sum(CAST(l AS DOUBLE) * CAST(ib*ib AS DOUBLE) / dint)
+                   OVER pw AS sumb,
+                 row_number() OVER (PARTITION BY sa, sb ORDER BY v DESC) AS rn
+               FROM u
+               WINDOW pw AS (PARTITION BY sa, sb ORDER BY v
+                             ROWS UNBOUNDED PRECEDING))
+         SELECT sa, sb,
+                round((nn - 1.0) / (CAST(nn AS DOUBLE) * nn)
+                  * (suma / na + sumb / nb), 6) AS ad_a2
+         FROM f WHERE rn = 1 ORDER BY sa, sb""")),
 
     // Epps–Singleton ECF distance per source pair:
     // es = N · Σ_{t∈{t1,t2}} |φ̂_a(t) − φ̂_b(t)|², with
     // φ̂(t) = (1/n) Σ_v w_v·e^{itv}, t_k = {0.4, 0.8}/s, and s the
     // pooled semi-IQR under the declared type-1 discrete quantile
     // rule (integer cumulative thresholds — exact in both engines).
-    "q_x_epps" -> ((s, d) => {
+    Query("q_x_epps", (s, d) => {
       val w = Window.partitionBy(col("sa"), col("sb")).orderBy(col("v"))
       val grid = Round11g.pairGrid(s, d)
       val iqr = grid.groupBy(col("sa"), col("sb")).agg(
@@ -154,65 +200,7 @@ object Round12 {
                + pow(ca2r/na - cb2r/nb, 2) + pow(ca2i/na - cb2i/nb, 2)), 6)
              AS es_stat""")
         .orderBy(col("sa"), col("sb"))
-    })
-  )
-
-  val oracle: Map[String, String] = Map(
-
-    "q_x_pacf" ->
-      """WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS day,
-                  round(sum(value), 6) AS v
-                FROM events GROUP BY 1, 2),
-         lg AS (SELECT event_type, v,
-                  lag(v, 1) OVER w AS l1, lag(v, 2) OVER w AS l2,
-                  lag(v, 3) OVER w AS l3
-                FROM daily WINDOW w AS (PARTITION BY event_type ORDER BY day)),
-         r AS (SELECT event_type,
-                 round(corr(v, l1), 6) AS r1,
-                 round(corr(v, l2), 6) AS r2,
-                 round(corr(v, l3), 6) AS r3
-               FROM lg GROUP BY event_type),
-         s2 AS (SELECT event_type, r1, r2, r3,
-                  (r2 - r1*r1) / (1 - r1*r1) AS p2
-                FROM r),
-         s3 AS (SELECT event_type, r1, r2, r3, p2,
-                  r1 * (1 - p2) AS f21
-                FROM s2),
-         s4 AS (SELECT event_type, r1,
-                  (r3 - f21*r2 - p2*r1) / (1 - f21*r1 - p2*r2) AS p3, p2
-                FROM s3)
-         SELECT event_type, 1 AS lag_k, round(r1, 6) AS pacf FROM s4
-         UNION ALL SELECT event_type, 2, round(p2, 6) FROM s4
-         UNION ALL SELECT event_type, 3, round(p3, 6) FROM s4
-         ORDER BY event_type, lag_k""",
-
-    "q_x_ad" ->
-      s"""WITH ${Round11g.gridSql},
-         t AS (SELECT sa, sb, na, nb, v,
-                 wa + wb AS l, na + nb AS nn,
-                 2*cuma - wa AS ma2, 2*cumb - wb AS mb2,
-                 2*(cuma + cumb) - (wa + wb) AS b2
-               FROM cum),
-         u AS (SELECT sa, sb, na, nb, v, l, nn,
-                 CAST(nn*ma2 - na*b2 AS DECIMAL(19,0)) AS ia,
-                 CAST(nn*mb2 - nb*b2 AS DECIMAL(19,0)) AS ib,
-                 b2*(2*nn - b2) - nn*l AS dint
-               FROM t WHERE l > 0),
-         f AS (SELECT sa, sb, na, nb, nn,
-                 sum(CAST(l AS DOUBLE) * CAST(ia*ia AS DOUBLE) / dint)
-                   OVER pw AS suma,
-                 sum(CAST(l AS DOUBLE) * CAST(ib*ib AS DOUBLE) / dint)
-                   OVER pw AS sumb,
-                 row_number() OVER (PARTITION BY sa, sb ORDER BY v DESC) AS rn
-               FROM u
-               WINDOW pw AS (PARTITION BY sa, sb ORDER BY v
-                             ROWS UNBOUNDED PRECEDING))
-         SELECT sa, sb,
-                round((nn - 1.0) / (CAST(nn AS DOUBLE) * nn)
-                  * (suma / na + sumb / nb), 6) AS ad_a2
-         FROM f WHERE rn = 1 ORDER BY sa, sb""",
-
-    "q_x_epps" ->
+    }, Some(
       s"""WITH ${Round11g.gridSql},
          iqr AS (SELECT sa, sb,
                    min(CASE WHEN 4*(cuma + cumb) >= na + nb THEN v END) AS q25,
@@ -242,6 +230,6 @@ object Round12 {
                 round(nn * (pow(ca1r/na - cb1r/nb, 2) + pow(ca1i/na - cb1i/nb, 2)
                   + pow(ca2r/na - cb2r/nb, 2) + pow(ca2i/na - cb2i/nb, 2)), 6)
                   AS es_stat
-         FROM f WHERE rn = 1 ORDER BY sa, sb"""
+         FROM f WHERE rn = 1 ORDER BY sa, sb"""))
   )
 }

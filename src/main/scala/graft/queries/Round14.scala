@@ -1,9 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.Cuts.CutOps
+import graft.operators.DayGrain
 import graft.Tables.table
 
 /** Round-14 wave (SURVEY.md §2.8h): the production-form series/outlier
@@ -19,8 +20,6 @@ import graft.Tables.table
   * the first pass's width, never the per-type/per-pair algebra.
   */
 object Round14 {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Declared Sakoe–Chiba band half-width (|i−j| ≤ w). */
   private val BandW = 14
 
@@ -31,9 +30,6 @@ object Round14 {
     */
   private val Inf = 1L << 62
   private val InfHalf = Inf / 2
-
-  private def dayCounts(s: SparkSession, d: String): DataFrame =
-    graft.operators.DayGrain.counts(s, d)
 
   /** Acklam's rational inverse-normal-CDF approximation (claimed
     * relative error < 1.15e-9; measured absolute error < 5.5e-9
@@ -55,7 +51,28 @@ object Round14 {
     s"(CASE WHEN ($u) <= 0.97575 THEN $central ELSE $upper END)"
   }
 
-  val defs: Map[String, Q] = Map(
+  /** Oracle CTE for one ESD round: stats over `src`, pick the argmax
+    * deviation row, and `d{rnd}` = src minus the pick.
+    */
+  private def esdOracleRound(src: String, rnd: Int): String =
+    s"""
+ s$rnd AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
+              CAST(sum(c) AS BIGINT) AS sc, CAST(sum(c*c) AS BIGINT) AS sq
+            FROM $src GROUP BY 1),
+ p$rnd AS (SELECT d.event_type, d.day, d.c, s.n,
+              abs(d.c - CAST(s.sc AS DOUBLE) / s.n) AS dev,
+              sqrt((s.sq - CAST(s.sc AS DOUBLE) * s.sc / s.n) / (s.n - 1)) AS sd,
+              row_number() OVER (PARTITION BY d.event_type
+                ORDER BY abs(d.c - CAST(s.sc AS DOUBLE) / s.n) DESC, d.day) AS rk
+            FROM $src d JOIN s$rnd s ON s.event_type = d.event_type
+            WHERE s.n >= 3),
+ o$rnd AS (SELECT event_type, day, c, dev / sd AS r_stat
+            FROM p$rnd WHERE rk = 1 AND sd > 0),
+ d$rnd AS (SELECT d.* FROM $src d LEFT JOIN o$rnd o
+              ON o.event_type = d.event_type AND o.day = d.day
+            WHERE o.day IS NULL)"""
+
+  val queries: Seq[Query] = Seq(
 
     // Sakoe–Chiba banded DTW between every pair of event types' daily
     // count series: q_x_dtw's exact BIGINT min-plus DP restricted to
@@ -67,8 +84,8 @@ object Round14 {
     // the sentinel never contaminates a reachable cell. Pairs with
     // |n_a−n_b| > w (final cell out of band) surface with NULL
     // dtw_band/dtw_norm — declared, not dropped.
-    "q_x_dtw_band" -> ((s, d) => {
-      val dc = dayCounts(s, d)
+    Query("q_x_dtw_band", (s, d) => {
+      val dc = DayGrain.counts(s, d)
       val ser = dc.groupBy(col("event_type"))
         .agg(expr("transform(sort_array(collect_list(struct(day, c))), x -> x.c)").as("s"),
           count(lit(1)).as("n"))
@@ -110,7 +127,51 @@ object Round14 {
                 ELSE round(CAST(element_at(dlast, CAST(n_b AS INT)) AS DOUBLE) / (n_a + n_b), 6)
                 END AS dtw_norm""")
         .orderBy(col("type_a"), col("type_b"))
-    }),
+    }, Some(
+      // Same prefix-min unroll as the q_x_dtw oracle with the k-range
+      // clipped to the band and out-of-band cells pinned to the same
+      // 2⁶² sentinel; the horizontal-run prefix sums re-base at the
+      // band's entry column (exact BIGINTs — algebraically identical to
+      // Spark's global-prefix difference form).
+      s"""WITH RECURSIVE dc AS (
+           SELECT event_type, CAST(ts AS DATE) AS day,
+                  CAST(count(*) AS BIGINT) AS c
+           FROM events GROUP BY 1, 2),
+         ser AS (
+           SELECT event_type, list(c ORDER BY day) AS s,
+                  CAST(count(*) AS BIGINT) AS n
+           FROM dc GROUP BY 1),
+         pr AS (
+           SELECT a.event_type AS type_a, b.event_type AS type_b,
+                  a.s AS xa, b.s AS yb, a.n AS na, b.n AS nb
+           FROM ser a JOIN ser b ON a.event_type < b.event_type),
+         r AS (
+           SELECT type_a, type_b, na, nb, xa, yb, CAST(1 AS BIGINT) AS i,
+                  list_transform(range(1, CAST(nb AS INTEGER) + 1), j ->
+                    CASE WHEN j > 1 + $BandW THEN CAST($Inf AS BIGINT)
+                         ELSE CAST(list_sum(list_transform(yb[1:j], y -> abs(xa[1] - y))) AS BIGINT) END) AS d
+           FROM pr
+           UNION ALL
+           SELECT type_a, type_b, na, nb, xa, yb, i + 1,
+                  list_transform(range(1, CAST(nb AS INTEGER) + 1), j ->
+                    CASE WHEN abs(i + 1 - j) > $BandW THEN CAST($Inf AS BIGINT) ELSE
+                    CAST(list_sum(list_transform(yb[CAST(greatest(1, i + 1 - $BandW) AS INTEGER):j],
+                           y -> abs(xa[CAST(i AS INTEGER) + 1] - y))) AS BIGINT)
+                    + list_min(list_transform(range(CAST(greatest(1, i + 1 - $BandW) AS INTEGER), j + 1), k ->
+                        (CASE WHEN k = 1 THEN d[1]
+                              ELSE least(d[k], d[k - 1]) END)
+                        - (CASE WHEN k = CAST(greatest(1, i + 1 - $BandW) AS INTEGER) THEN CAST(0 AS BIGINT)
+                                ELSE CAST(list_sum(list_transform(yb[CAST(greatest(1, i + 1 - $BandW) AS INTEGER):CAST(k AS INTEGER) - 1],
+                                       y -> abs(xa[CAST(i AS INTEGER) + 1] - y))) AS BIGINT) END)))
+                    END)
+           FROM r WHERE i < na)
+         SELECT type_a, type_b, na AS n_a, nb AS n_b,
+                CASE WHEN abs(na - nb) > $BandW OR d[CAST(nb AS INTEGER)] >= CAST($InfHalf AS BIGINT)
+                     THEN NULL ELSE d[CAST(nb AS INTEGER)] END AS dtw_band,
+                CASE WHEN abs(na - nb) > $BandW OR d[CAST(nb AS INTEGER)] >= CAST($InfHalf AS BIGINT)
+                     THEN NULL
+                     ELSE round(CAST(d[CAST(nb AS INTEGER)] AS DOUBLE) / (na + nb), 6) END AS dtw_norm
+         FROM r WHERE i = na ORDER BY type_a, type_b""")),
 
     // Generalized ESD outlier test per event type over daily counts:
     // DECLARED k = 3 unrolled rounds of (mean, sample sd, argmax
@@ -123,8 +184,8 @@ object Round14 {
     // engines compute identical doubles. The day-grain frame is
     // lineage-cut once; three passes run over k·calendar rows, never
     // the corpus.
-    "q_x_esd" -> ((s, d) => {
-      val dc = dayCounts(s, d).cut("Round14.scala:esd", eager = true)
+    Query("q_x_esd", (s, d) => {
+      val dc = DayGrain.counts(s, d).cut("Round14.scala:esd", eager = true)
       def esdRound(src: DataFrame): (DataFrame, DataFrame) = {
         import org.apache.spark.sql.expressions.Window
         val st = src.groupBy(col("event_type"))
@@ -161,7 +222,19 @@ object Round14 {
           round(col("r_stat"), 6).as("r_stat"))
       tag(o1, 1).unionAll(tag(o2, 2)).unionAll(tag(o3, 3))
         .orderBy(col("event_type"), col("rnd"))
-    }),
+    }, Some(
+      // Three textually-unrolled rounds of the same declared rules
+      // (sample sd, earliest-day tie, n ≥ 3 ∧ sd > 0 emission guard).
+      s"""WITH dc AS (
+           SELECT event_type, CAST(ts AS DATE) AS day,
+                  CAST(count(*) AS BIGINT) AS c
+           FROM events GROUP BY 1, 2),${esdOracleRound("dc", 1)},${esdOracleRound("d1", 2)},${esdOracleRound("d2", 3)}
+         SELECT event_type, rnd, CAST(day AS VARCHAR) AS out_day, c AS c_out,
+                round(r_stat, 6) AS r_stat
+         FROM (SELECT event_type, CAST(1 AS BIGINT) AS rnd, day, c, r_stat FROM o1
+               UNION ALL SELECT event_type, CAST(2 AS BIGINT), day, c, r_stat FROM o2
+               UNION ALL SELECT event_type, CAST(3 AS BIGINT), day, c, r_stat FROM o3)
+         ORDER BY event_type, rnd""")),
 
     // Fligner–Killeen homogeneity-of-variance test across sources on
     // document lengths — the RANK-based member next to q_x_levene
@@ -177,7 +250,7 @@ object Round14 {
     // > 0 ⇒ monotone ⇒ max = last) or a sorted-single-partition k·
     // value-grain fold, so accumulation order matches DuckDB's
     // running windows exactly.
-    "q_x_fligner" -> ((s, d) => {
+    Query("q_x_fligner", (s, d) => {
       import org.apache.spark.sql.expressions.Window
       val docs = table(s, d, "documents").select(col("source"), col("n_chars"))
       val med = docs.groupBy(col("source")).agg(expr("median(n_chars)").as("m"))
@@ -220,138 +293,12 @@ object Round14 {
           round(col("num") / col("v2"), 6).as("chi2"),
           (col("k") - 1).as("df"))
         .orderBy(col("source"))
-    }),
-
-    // Ansari–Bradley scale test, each source vs the POOLED corpus
-    // (one-vs-rest): pooled midranks over ALL document lengths fold
-    // to the doubled AB score 2a = min(2r, 2(N+1)−2r) — an exact
-    // BIGINT per value — so the per-source statistic 2Aᵢ = Σ cnt·2a
-    // is exact integer arithmetic end to end; only the declared
-    // no-ties normal approximation (both N-parity branches, cast to
-    // DOUBLE before the products to stay overflow-safe at corpus N)
-    // touches doubles, in one textually-shared expression. One-vs-
-    // rest means ONE pooled ranking serves every source — one corpus
-    // pass + the kruskal value-grain cross-join, vs k² pooled
-    // re-rankings for all-pairs.
-    "q_x_ansari" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val docs = table(s, d, "documents").select(col("source"), col("n_chars"))
-      val gs = docs.groupBy(col("n_chars")).agg(count(lit(1)).as("tot"))
-      val nn = gs.agg(sum(col("tot")).as("n"))
-      val gl = docs.groupBy(col("source"), col("n_chars")).agg(count(lit(1)).as("cnt"))
-      val uni = broadcast(docs.select(col("source")).distinct())
-        .crossJoin(gs)
-        .join(gl, Seq("source", "n_chars"), "left").na.fill(0L, Seq("cnt"))
-      val w = Window.partitionBy(col("source")).orderBy(col("n_chars"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val ps = uni
-        .withColumn("r2",
-          lit(2L) * coalesce(sum(col("tot")).over(w), lit(0L)) + col("tot") + 1L)
-        .crossJoin(broadcast(nn))
-        .groupBy(col("source"), col("n"))
-        .agg(sum(col("cnt")).as("ni"),
-          sum(col("cnt") * least(col("r2"), lit(2L) * (col("n") + 1L) - col("r2")))
-            .as("a2"))
-      ps.selectExpr("source", "ni AS n", "a2",
-        """round((CAST(a2 AS DOUBLE) / 2 -
-                  CASE WHEN n % 2 = 0 THEN CAST(ni AS DOUBLE) * (n + 2) / 4
-                       ELSE CAST(ni AS DOUBLE) * (n + 1) * (n + 1) / (4 * n) END)
-                 / sqrt(CASE WHEN n % 2 = 0
-                      THEN CAST(ni AS DOUBLE) * (n - ni) * (n + 2) * (n - 2) / (48 * (n - 1))
-                      ELSE CAST(ni AS DOUBLE) * (n - ni) * (n + 1) * (3 + n * n) / (48 * CAST(n AS DOUBLE) * n) END), 6) AS z""")
-        .orderBy(col("source"))
-    })
-  )
-
-  /** Oracle CTE for one ESD round: stats over `src`, pick the argmax
-    * deviation row, and `d{rnd}` = src minus the pick.
-    */
-  private def esdOracleRound(src: String, rnd: Int): String =
-    s"""
- s$rnd AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-              CAST(sum(c) AS BIGINT) AS sc, CAST(sum(c*c) AS BIGINT) AS sq
-            FROM $src GROUP BY 1),
- p$rnd AS (SELECT d.event_type, d.day, d.c, s.n,
-              abs(d.c - CAST(s.sc AS DOUBLE) / s.n) AS dev,
-              sqrt((s.sq - CAST(s.sc AS DOUBLE) * s.sc / s.n) / (s.n - 1)) AS sd,
-              row_number() OVER (PARTITION BY d.event_type
-                ORDER BY abs(d.c - CAST(s.sc AS DOUBLE) / s.n) DESC, d.day) AS rk
-            FROM $src d JOIN s$rnd s ON s.event_type = d.event_type
-            WHERE s.n >= 3),
- o$rnd AS (SELECT event_type, day, c, dev / sd AS r_stat
-            FROM p$rnd WHERE rk = 1 AND sd > 0),
- d$rnd AS (SELECT d.* FROM $src d LEFT JOIN o$rnd o
-              ON o.event_type = d.event_type AND o.day = d.day
-            WHERE o.day IS NULL)"""
-
-  val oracle: Map[String, String] = Map(
-
-    // Same prefix-min unroll as the q_x_dtw oracle with the k-range
-    // clipped to the band and out-of-band cells pinned to the same
-    // 2⁶² sentinel; the horizontal-run prefix sums re-base at the
-    // band's entry column (exact BIGINTs — algebraically identical to
-    // Spark's global-prefix difference form).
-    "q_x_dtw_band" ->
-      s"""WITH RECURSIVE dc AS (
-           SELECT event_type, CAST(ts AS DATE) AS day,
-                  CAST(count(*) AS BIGINT) AS c
-           FROM events GROUP BY 1, 2),
-         ser AS (
-           SELECT event_type, list(c ORDER BY day) AS s,
-                  CAST(count(*) AS BIGINT) AS n
-           FROM dc GROUP BY 1),
-         pr AS (
-           SELECT a.event_type AS type_a, b.event_type AS type_b,
-                  a.s AS xa, b.s AS yb, a.n AS na, b.n AS nb
-           FROM ser a JOIN ser b ON a.event_type < b.event_type),
-         r AS (
-           SELECT type_a, type_b, na, nb, xa, yb, CAST(1 AS BIGINT) AS i,
-                  list_transform(range(1, CAST(nb AS INTEGER) + 1), j ->
-                    CASE WHEN j > 1 + $BandW THEN CAST($Inf AS BIGINT)
-                         ELSE CAST(list_sum(list_transform(yb[1:j], y -> abs(xa[1] - y))) AS BIGINT) END) AS d
-           FROM pr
-           UNION ALL
-           SELECT type_a, type_b, na, nb, xa, yb, i + 1,
-                  list_transform(range(1, CAST(nb AS INTEGER) + 1), j ->
-                    CASE WHEN abs(i + 1 - j) > $BandW THEN CAST($Inf AS BIGINT) ELSE
-                    CAST(list_sum(list_transform(yb[CAST(greatest(1, i + 1 - $BandW) AS INTEGER):j],
-                           y -> abs(xa[CAST(i AS INTEGER) + 1] - y))) AS BIGINT)
-                    + list_min(list_transform(range(CAST(greatest(1, i + 1 - $BandW) AS INTEGER), j + 1), k ->
-                        (CASE WHEN k = 1 THEN d[1]
-                              ELSE least(d[k], d[k - 1]) END)
-                        - (CASE WHEN k = CAST(greatest(1, i + 1 - $BandW) AS INTEGER) THEN CAST(0 AS BIGINT)
-                                ELSE CAST(list_sum(list_transform(yb[CAST(greatest(1, i + 1 - $BandW) AS INTEGER):CAST(k AS INTEGER) - 1],
-                                       y -> abs(xa[CAST(i AS INTEGER) + 1] - y))) AS BIGINT) END)))
-                    END)
-           FROM r WHERE i < na)
-         SELECT type_a, type_b, na AS n_a, nb AS n_b,
-                CASE WHEN abs(na - nb) > $BandW OR d[CAST(nb AS INTEGER)] >= CAST($InfHalf AS BIGINT)
-                     THEN NULL ELSE d[CAST(nb AS INTEGER)] END AS dtw_band,
-                CASE WHEN abs(na - nb) > $BandW OR d[CAST(nb AS INTEGER)] >= CAST($InfHalf AS BIGINT)
-                     THEN NULL
-                     ELSE round(CAST(d[CAST(nb AS INTEGER)] AS DOUBLE) / (na + nb), 6) END AS dtw_norm
-         FROM r WHERE i = na ORDER BY type_a, type_b""",
-
-    // Three textually-unrolled rounds of the same declared rules
-    // (sample sd, earliest-day tie, n ≥ 3 ∧ sd > 0 emission guard).
-    "q_x_esd" ->
-      s"""WITH dc AS (
-           SELECT event_type, CAST(ts AS DATE) AS day,
-                  CAST(count(*) AS BIGINT) AS c
-           FROM events GROUP BY 1, 2),${esdOracleRound("dc", 1)},${esdOracleRound("d1", 2)},${esdOracleRound("d2", 3)}
-         SELECT event_type, rnd, CAST(day AS VARCHAR) AS out_day, c AS c_out,
-                round(r_stat, 6) AS r_stat
-         FROM (SELECT event_type, CAST(1 AS BIGINT) AS rnd, day, c, r_stat FROM o1
-               UNION ALL SELECT event_type, CAST(2 AS BIGINT), day, c, r_stat FROM o2
-               UNION ALL SELECT event_type, CAST(3 AS BIGINT), day, c, r_stat FROM o3)
-         ORDER BY event_type, rnd""",
-
-    // Same value-grain midrank cross-join, the same Acklam Φ⁻¹ text
-    // (qnormExpr — shared builder), and every double fold as a
-    // RUNNING window whose order is guaranteed by definition — the
-    // left-to-right accumulation matches Spark's sorted-single-
-    // partition folds term for term.
-    "q_x_fligner" ->
+    }, Some(
+      // Same value-grain midrank cross-join, the same Acklam Φ⁻¹ text
+      // (qnormExpr — shared builder), and every double fold as a
+      // RUNNING window whose order is guaranteed by definition — the
+      // left-to-right accumulation matches Spark's sorted-single-
+      // partition folds term for term.
       s"""WITH med AS (SELECT source, median(n_chars) AS m FROM documents GROUP BY 1),
          cell AS (SELECT d.source, abs(d.n_chars - med.m) AS dv,
                     CAST(count(*) AS BIGINT) AS cnt
@@ -389,11 +336,49 @@ object Round14 {
                    FROM src s, ab))
          SELECT s.source, s.ni AS n, round(s.sa / s.ni, 6) AS a_mean,
                 round(x2.num / vv.v2, 6) AS chi2, x2.k - 1 AS df
-         FROM src s, x2, vv ORDER BY s.source""",
+         FROM src s, x2, vv ORDER BY s.source""")),
 
-    // Same pooled midranks (kruskal cross-join), exact BIGINT 2A,
-    // and the textually-shared two-branch normal approximation.
-    "q_x_ansari" ->
+    // Ansari–Bradley scale test, each source vs the POOLED corpus
+    // (one-vs-rest): pooled midranks over ALL document lengths fold
+    // to the doubled AB score 2a = min(2r, 2(N+1)−2r) — an exact
+    // BIGINT per value — so the per-source statistic 2Aᵢ = Σ cnt·2a
+    // is exact integer arithmetic end to end; only the declared
+    // no-ties normal approximation (both N-parity branches, cast to
+    // DOUBLE before the products to stay overflow-safe at corpus N)
+    // touches doubles, in one textually-shared expression. One-vs-
+    // rest means ONE pooled ranking serves every source — one corpus
+    // pass + the kruskal value-grain cross-join, vs k² pooled
+    // re-rankings for all-pairs.
+    Query("q_x_ansari", (s, d) => {
+      import org.apache.spark.sql.expressions.Window
+      val docs = table(s, d, "documents").select(col("source"), col("n_chars"))
+      val gs = docs.groupBy(col("n_chars")).agg(count(lit(1)).as("tot"))
+      val nn = gs.agg(sum(col("tot")).as("n"))
+      val gl = docs.groupBy(col("source"), col("n_chars")).agg(count(lit(1)).as("cnt"))
+      val uni = broadcast(docs.select(col("source")).distinct())
+        .crossJoin(gs)
+        .join(gl, Seq("source", "n_chars"), "left").na.fill(0L, Seq("cnt"))
+      val w = Window.partitionBy(col("source")).orderBy(col("n_chars"))
+        .rowsBetween(Window.unboundedPreceding, -1)
+      val ps = uni
+        .withColumn("r2",
+          lit(2L) * coalesce(sum(col("tot")).over(w), lit(0L)) + col("tot") + 1L)
+        .crossJoin(broadcast(nn))
+        .groupBy(col("source"), col("n"))
+        .agg(sum(col("cnt")).as("ni"),
+          sum(col("cnt") * least(col("r2"), lit(2L) * (col("n") + 1L) - col("r2")))
+            .as("a2"))
+      ps.selectExpr("source", "ni AS n", "a2",
+        """round((CAST(a2 AS DOUBLE) / 2 -
+                  CASE WHEN n % 2 = 0 THEN CAST(ni AS DOUBLE) * (n + 2) / 4
+                       ELSE CAST(ni AS DOUBLE) * (n + 1) * (n + 1) / (4 * n) END)
+                 / sqrt(CASE WHEN n % 2 = 0
+                      THEN CAST(ni AS DOUBLE) * (n - ni) * (n + 2) * (n - 2) / (48 * (n - 1))
+                      ELSE CAST(ni AS DOUBLE) * (n - ni) * (n + 1) * (3 + n * n) / (48 * CAST(n AS DOUBLE) * n) END), 6) AS z""")
+        .orderBy(col("source"))
+    }, Some(
+      // Same pooled midranks (kruskal cross-join), exact BIGINT 2A,
+      // and the textually-shared two-branch normal approximation.
       """WITH gs AS (SELECT n_chars, CAST(count(*) AS BIGINT) AS tot
                      FROM documents GROUP BY n_chars),
          gl AS (SELECT source, n_chars, CAST(count(*) AS BIGINT) AS cnt
@@ -418,6 +403,6 @@ object Round14 {
                       / sqrt(CASE WHEN n % 2 = 0
                            THEN CAST(ni AS DOUBLE) * (n - ni) * (n + 2) * (n - 2) / (48 * (n - 1))
                            ELSE CAST(ni AS DOUBLE) * (n - ni) * (n + 1) * (3 + n * n) / (48 * CAST(n AS DOUBLE) * n) END), 6) AS z
-         FROM ps ORDER BY source"""
+         FROM ps ORDER BY source"""))
   )
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Cuts.CutOps
+import graft.operators.DayGrain
 import graft.Tables.table
 
 /** Round-14 wave 2 (SURVEY.md §2.8h): residual/randomness diagnostics
@@ -28,13 +29,8 @@ import graft.Tables.table
   * and DuckDB compute bit-identical doubles.
   */
 object Round14b {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Declared Ljung–Box lag depth. */
   private val LbLags = 7
-
-  private def dayCounts(s: SparkSession, d: String): DataFrame =
-    graft.operators.DayGrain.counts(s, d)
 
   /** Shared double-expression text over the exact integer aggregates
     * (n, sc, sq, and per-lag pk/ak/bk). `mean` and `den` are the
@@ -292,1169 +288,6 @@ object Round14b {
                            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS np
                    FROM grid)"""
 
-  val defs: Map[String, Q] = Map(
-
-    // Ljung–Box portmanteau per event type over daily counts
-    // (DECLARED m = 7 lags, observation-index grain): Q =
-    // n(n+2)Σ r_k²/(n−k). The per-lag cross-moments Σ x_t·x_{t−k}
-    // and the two tail sums are exact BIGINTs from ONE window pass
-    // (7 lag columns over the same per-type day-ordered window);
-    // r_k expands the centered product algebraically so no double
-    // accumulates across rows. Types with n ≤ m or a constant
-    // series (Σ(x−x̄)² = 0) surface with NULL q_lb — declared, not
-    // dropped.
-    "q_x_ljung_box" -> ((s, d) => {
-      val dc = dayCounts(s, d).cut("Round14b.scala:ljung_box", eager = true)
-      val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
-      val lagged = (1 to LbLags).foldLeft(dc) { (df, k) =>
-        df.withColumn(s"l$k", lag(col("c"), k).over(w))
-      }
-      val aggs =
-        Seq(count(lit(1)).as("n"), sum(col("c")).as("sc"),
-          sum(col("c") * col("c")).as("sq")) ++
-          (1 to LbLags).flatMap { k =>
-            Seq(sum(col("c") * col(s"l$k")).as(s"p$k"),
-              sum(when(col(s"l$k").isNotNull, col("c"))).as(s"a$k"),
-              sum(col(s"l$k")).as(s"b$k"))
-          }
-      lagged.groupBy(col("event_type")).agg(aggs.head, aggs.tail: _*)
-        .selectExpr("event_type", "n AS n_days",
-          s"""CASE WHEN n > 1 AND $DenTxt > 0
-                THEN round(${rkTxt(1)}, 6) ELSE NULL END AS r1""",
-          s"""CASE WHEN n > $LbLags AND $DenTxt > 0
-                THEN round($QlbTxt, 6) ELSE NULL END AS q_lb""")
-        .orderBy(col("event_type"))
-    }),
-
-    // Von Neumann successive-difference ratio per event type:
-    // vn = Σ_{t=2..n}(x_t − x_{t−1})² / Σ(x − x̄)² — trend/positive
-    // autocorrelation pushes vn below 2, oscillation above. The
-    // numerator is an exact BIGINT from the same one-pass lag
-    // window; z uses the DECLARED asymptotic moments E = 2,
-    // Var = 4(n−2)/(n²−1). Types with n < 3 or a constant series
-    // surface with NULL vn/z.
-    "q_x_von_neumann" -> ((s, d) => {
-      val dc = dayCounts(s, d).cut("Round14b.scala:von_neumann", eager = true)
-      val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
-      dc.withColumn("l1", lag(col("c"), 1).over(w))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), sum(col("c")).as("sc"),
-          sum(col("c") * col("c")).as("sq"),
-          sum((col("c") - col("l1")) * (col("c") - col("l1"))).as("sd2"))
-        .selectExpr("event_type", "n AS n_days",
-          s"""CASE WHEN n >= 3 AND $DenTxt > 0
-                THEN round(CAST(sd2 AS DOUBLE) / $DenTxt, 6)
-                ELSE NULL END AS vn""",
-          s"""CASE WHEN n >= 3 AND $DenTxt > 0
-                THEN round((CAST(sd2 AS DOUBLE) / $DenTxt - 2)
-                  / sqrt(4.0 * (n - 2) / ((CAST(n AS DOUBLE) - 1) * (n + 1))), 6)
-                ELSE NULL END AS z""")
-        .orderBy(col("event_type"))
-    }),
-
-    // KPSS level-stationarity test per event type over daily counts
-    // (DECLARED: level form — no trend term; Bartlett bandwidth
-    // l = 7; observation-index grain): η = (Σ S_t²/n²) / lrv with
-    // S_t the partial sums of the demeaned series. S_t expands as
-    // C_t − t·x̄ (C_t = exact BIGINT prefix sum), so Σ S_t² needs
-    // only Σ C_t², Σ t·C_t (exact BIGINTs from ONE cumulative
-    // window) and the closed-form Σ t²; the Bartlett γ_j reuse the
-    // Ljung–Box lag machinery. Low vn/high η ⇒ a wandering level.
-    // Types with n ≤ l or zero long-run variance surface NULL kpss.
-    // (Scale note: Σ C_t² grows as (Σc)²·n — C_t is cast to
-    // DECIMAL(18,0) (the jarque_bera s3/s4 convention) and the
-    // products/sums widen to DECIMAL(38,0), exact far past the old
-    // ~sf100 BIGINT budget. Past THAT budget the behavior is
-    // mode-dependent: Spark 4 defaults spark.sql.ansi.enabled=true
-    // (verified on this build: the overflow cast throws
-    // ArithmeticException), so the effective behavior is error-not-
-    // wrap; only if ANSI were explicitly disabled would a C_t ≥ 1e18
-    // cast or >38-digit product/sum yield NULL silently while the
-    // DuckDB oracle's HUGEINT stays exact.)
-    "q_x_kpss" -> ((s, d) => {
-      import org.apache.spark.sql.types.DecimalType
-      val dc = dayCounts(s, d).cut("Round14b.scala:kpss", eager = true)
-      val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
-      val base = dc
-        .withColumn("rn", row_number().over(w).cast("long"))
-        .withColumn("cum", sum(col("c")).over(
-          w.rowsBetween(Window.unboundedPreceding, 0)))
-        .withColumn("hcum", col("cum").cast(DecimalType(18, 0)))
-      val lagged = (1 to KpssL).foldLeft(base) { (df, j) =>
-        df.withColumn(s"l$j", lag(col("c"), j).over(w))
-      }
-      val aggs =
-        Seq(count(lit(1)).as("n"), sum(col("c")).as("sc"),
-          sum(col("c") * col("c")).as("sq"),
-          sum(col("hcum") * col("cum")).as("scc"),
-          sum(col("rn") * col("hcum")).as("stc")) ++
-          (1 to KpssL).flatMap { j =>
-            Seq(sum(col("c") * col(s"l$j")).as(s"p$j"),
-              sum(when(col(s"l$j").isNotNull, col("c"))).as(s"a$j"),
-              sum(col(s"l$j")).as(s"b$j"))
-          }
-      lagged.groupBy(col("event_type")).agg(aggs.head, aggs.tail: _*)
-        .selectExpr("event_type", "n AS n_days",
-          s"""CASE WHEN n > $KpssL AND $LrvTxt > 0
-                THEN round($LrvTxt, 6) ELSE NULL END AS lrv""",
-          s"""CASE WHEN n > $KpssL AND $LrvTxt > 0
-                THEN round($SumS2Txt / (CAST(n AS DOUBLE) * n) / $LrvTxt, 6)
-                ELSE NULL END AS kpss""")
-        .orderBy(col("event_type"))
-    }),
-
-    // D'Agostino–Pearson K² omnibus normality test per source over
-    // document lengths — the finite-n-calibrated counterpart of
-    // q_x_jarque_bera (which uses the asymptotic χ² form): skewness
-    // through D'Agostino's (1970) Z1 transform, kurtosis through
-    // Anscombe–Glynn's (1983) Z2, K² = Z1² + Z2². Moments follow the
-    // jarque_bera convention exactly (BIGINT s1/s2, DECIMAL-routed
-    // s3/s4, one shared double expression); cube root is the declared
-    // sign-preserving form. DECLARED guard n ≥ 20 (the transforms'
-    // published validity floor) ∧ m2 > 0, NULL otherwise.
-    "q_x_dagostino" -> ((s, d) => {
-      import org.apache.spark.sql.types.DecimalType
-      val x2 = col("n_chars") * col("n_chars")
-      table(s, d, "documents")
-        .select(col("source"), col("n_chars"),
-          x2.as("x2"), x2.cast(DecimalType(18, 0)).as("hx"))
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("s1"),
-          sum(col("x2")).as("s2"),
-          sum(col("hx") * col("n_chars")).as("s3"),
-          sum(col("hx") * col("hx")).as("s4"))
-        .selectExpr("source", "n",
-          s"""CASE WHEN n >= 20 AND $DaM2 > 0
-                THEN round($DaZ1Txt, 6) ELSE NULL END AS z1""",
-          s"""CASE WHEN n >= 20 AND $DaM2 > 0
-                THEN round($DaZ2Txt, 6) ELSE NULL END AS z2""",
-          s"""CASE WHEN n >= 20 AND $DaM2 > 0
-                THEN round($DaZ1Txt * $DaZ1Txt + $DaZ2Txt * $DaZ2Txt, 6)
-                ELSE NULL END AS k2""")
-        .orderBy(col("source"))
-    }),
-
-    // Cucconi joint location-scale test, each source vs the pooled
-    // corpus (one-vs-rest, DECLARED midranks): U standardizes ΣR²,
-    // V standardizes the contrary ΣR'² (R' = N+1−R), C = (U² + V²
-    // − 2ρUV)/(2(1−ρ²)) with the exact correlation ρ = 2(N²−4)/
-    // ((2N+1)(8N+11)) − 1. Both rank-square sums ride the doubled
-    // midranks: 4ΣR² = Σcnt·r2² and 4ΣR'² = Σcnt·(2(N+1)−r2)² are
-    // exact BIGINTs from the ONE pooled ranking all sources share.
-    // The older two-statistic cousin of q_x_lepage — it senses
-    // location AND scale in one quadratic form. Guard n >= 3: at
-    // pooled N = 2, ρ = −1 zeroes the C denominator 2(1−ρ²), so the
-    // degenerate two-observation corpus surfaces NULL (not NaN/Inf).
-    "q_x_cucconi" -> ((s, d) => {
-      val r2c = lit(2L) * (col("n") + 1L) - col("r2")
-      val u = cucconiUTxt("q4")
-      val v = cucconiUTxt("q4c")
-      pooledRanks(s, d)
-        .groupBy(col("source"), col("n"))
-        .agg(sum(col("cnt")).as("n1"),
-          sum(col("cnt") * col("r2") * col("r2")).as("q4"),
-          sum(col("cnt") * r2c * r2c).as("q4c"))
-        .selectExpr("source", "n1 AS n",
-          s"""CASE WHEN n1 >= 1 AND n - n1 >= 1 AND n >= 3
-                THEN round($u, 6) ELSE NULL END AS u""",
-          s"""CASE WHEN n1 >= 1 AND n - n1 >= 1 AND n >= 3
-                THEN round($v, 6) ELSE NULL END AS v""",
-          s"""CASE WHEN n1 >= 1 AND n - n1 >= 1 AND n >= 3
-                THEN round(($u * $u + $v * $v - 2 * $CucconiRhoTxt * $u * $v)
-                  / (2 * (1 - $CucconiRhoTxt * $CucconiRhoTxt)), 6)
-                ELSE NULL END AS c""")
-        .orderBy(col("source"))
-    }),
-
-    // Lepage joint location-scale test, each source vs the pooled
-    // corpus: L = z_W² + z_A² — the standardized Wilcoxon rank sum
-    // (location) plus the standardized Ansari–Bradley score sum
-    // (scale), both riding exact BIGINT doubled sums (2W = Σcnt·r2,
-    // 2A = Σcnt·min(r2, 2(N+1)−r2)) from the same one pooled
-    // ranking; DECLARED no-ties moments for both components (the
-    // q_x_ansari parity-branch text, shared).
-    "q_x_lepage" -> ((s, d) => {
-      pooledRanks(s, d)
-        .groupBy(col("source"), col("n"))
-        .agg(sum(col("cnt")).as("n1"),
-          sum(col("cnt") * col("r2")).as("w2"),
-          sum(col("cnt") * least(col("r2"), lit(2L) * (col("n") + 1L) - col("r2")))
-            .as("a2"))
-        .selectExpr("source", "n1 AS n",
-          s"""CASE WHEN n1 >= 1 AND n - n1 >= 1
-                THEN round($WilcoxonZTxt, 6) ELSE NULL END AS z_w""",
-          s"""CASE WHEN n1 >= 1 AND n - n1 >= 1
-                THEN round($AnsariZTxt, 6) ELSE NULL END AS z_a""",
-          s"""CASE WHEN n1 >= 1 AND n - n1 >= 1
-                THEN round($WilcoxonZTxt * $WilcoxonZTxt + $AnsariZTxt * $AnsariZTxt, 6)
-                ELSE NULL END AS l""")
-        .orderBy(col("source"))
-    }),
-
-    // Dunn's post-hoc pairwise test across sources — the follow-up a
-    // pipeline runs after q_x_kruskal rejects: z_ij = (R̄_i − R̄_j) /
-    // sqrt((N(N+1)/12 − ΣT/(12(N−1)))·(1/n_i + 1/n_j)) with the
-    // standard tie correction ΣT = Σ(t³−t). Mean ranks ride exact
-    // BIGINT doubled rank sums from the ONE pooled ranking; the
-    // all-pairs grid is k² source rows (dims-bounded — the corpus
-    // never enters the pair join).
-    "q_x_dunn" -> ((s, d) => {
-      val ps = pooledRanks(s, d)
-        .groupBy(col("source"), col("n"))
-        .agg(sum(col("cnt")).as("n1"), sum(col("cnt") * col("r2")).as("w2"))
-        .cut("Round14b.scala:dunn", eager = true)
-      val ties = table(s, d, "documents")
-        .groupBy(col("n_chars")).agg(count(lit(1)).as("tot"))
-        .agg(sum(col("tot") * col("tot") * col("tot") - col("tot")).as("tsum"))
-      val a = ps.select(col("source").as("source_a"), col("n"),
-        col("n1").as("n1_a"), col("w2").as("w2_a"))
-      val b = ps.select(col("source").as("source_b"),
-        col("n1").as("n1_b"), col("w2").as("w2_b"))
-      a.join(broadcast(b), col("source_a") < col("source_b"))
-        .crossJoin(broadcast(ties))
-        .selectExpr("source_a", "source_b",
-          s"""CASE WHEN n1_a >= 1 AND n1_b >= 1 AND n >= 2
-                THEN round($DunnZTxt, 6) ELSE NULL END AS z""")
-        .orderBy(col("source_a"), col("source_b"))
-    }),
-
-    // Brunner–Munzel test, each source vs the pooled rest
-    // (DECLARED orientation: group 1 = the source, group 2 = the
-    // complement; p̂ = P(X₁ < X₂) + ½P(X₁ = X₂)). The variance terms
-    // need pooled AND internal midranks — both fall out of the same
-    // value-grain frame (internal doubled midranks are per-source
-    // windows over cnt and tot−cnt), and the per-observation squared
-    // deviations collapse to exact BIGINT moments via the D = 2R−2R_int
-    // expansion, so no double accumulates across rows. W follows
-    // Brunner–Munzel (2000): n1·n2·(m2−m1)/(N·sqrt(n1·v1 + n2·v2)).
-    "q_x_brunner_munzel" -> ((s, d) => {
-      val w = Window.partitionBy(col("source")).orderBy(col("n_chars"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val rk = pooledRanks(s, d)
-        .withColumn("rcnt", col("tot") - col("cnt"))
-        .withColumn("q2o",
-          lit(2L) * coalesce(sum(col("cnt")).over(w), lit(0L)) + col("cnt") + 1L)
-        .withColumn("q2r",
-          lit(2L) * coalesce(sum(col("rcnt")).over(w), lit(0L)) + col("rcnt") + 1L)
-      val ps = rk.groupBy(col("source"), col("n"))
-        .agg(sum(col("cnt")).as("n1"),
-          sum(col("cnt") * col("r2")).as("w2o"),
-          sum(col("cnt") * (col("r2") - col("q2o"))).as("d1"),
-          sum(col("cnt") * (col("r2") - col("q2o")) * (col("r2") - col("q2o")))
-            .as("d2"),
-          sum(col("rcnt") * col("r2")).as("w2r"),
-          sum(col("rcnt") * (col("r2") - col("q2r"))).as("e1"),
-          sum(col("rcnt") * (col("r2") - col("q2r")) * (col("r2") - col("q2r")))
-            .as("e2"))
-      val m1 = "(CAST(w2o AS DOUBLE) / 2 / n1)"
-      val m2 = "(CAST(w2r AS DOUBLE) / 2 / (n - n1))"
-      val v1 = bmVTxt("d1", "d2", "n1", m1)
-      val v2 = bmVTxt("e1", "e2", "(n - n1)", m2)
-      val guard = s"n1 >= 2 AND n - n1 >= 2 AND (n1 * $v1 + (n - n1) * $v2) > 0"
-      ps.selectExpr("source", "n1 AS n",
-        s"""CASE WHEN $guard
-              THEN round(($m2 - (CAST(n AS DOUBLE) - n1 + 1) / 2) / n1, 6)
-              ELSE NULL END AS p_hat""",
-        s"""CASE WHEN $guard
-              THEN round(CAST(n1 AS DOUBLE) * (n - n1) * ($m2 - $m1)
-                / n / sqrt(n1 * $v1 + (n - n1) * $v2), 6)
-              ELSE NULL END AS w_bm""")
-        .orderBy(col("source"))
-    }),
-
-    // Fleiss' kappa over the event stream: DECLARED framing — each
-    // day is a subject, each event that day is one "rating", the
-    // event type is the category; the varying-raters form P_i =
-    // (Σ_j n_ij² − n_i)/(n_i(n_i−1)) (days with n_i < 2 are excluded
-    // from EVERYTHING — declared). P_i is a ratio of exact integers;
-    // the only cross-row double folds (P̄ over days, P̄_e over
-    // categories) run as sorted-single-partition k-row folds over
-    // calendar-/dims-bounded frames, matching the oracle's running
-    // windows term for term. Measures "are days internally
-    // consistent in their type mix beyond chance".
-    "q_x_fleiss_kappa" -> ((s, d) => {
-      val cell = table(s, d, "events")
-        .groupBy(to_date(col("ts")).as("day"), col("event_type"))
-        .agg(count(lit(1)).as("c"))
-        .cut("Round14b.scala:fleiss", eager = true)
-      val di = cell.groupBy(col("day"))
-        .agg(sum(col("c")).as("ni"), sum(col("c") * col("c")).as("sq"))
-        .filter(col("ni") >= 2)
-      val qualDays = di.select(col("day"))
-      val pbar = di.coalesce(1).sortWithinPartitions(col("day"))
-        .agg(count(lit(1)).as("n_days"),
-          avg((col("sq") - col("ni")).cast("double")
-            / (col("ni") * (col("ni") - 1))).as("pbar"))
-      val tot = di.agg(sum(col("ni")).as("nn"))
-      val pj = cell.join(qualDays, "day")
-        .groupBy(col("event_type")).agg(sum(col("c")).as("cj"))
-        .crossJoin(broadcast(tot))
-        .coalesce(1).sortWithinPartitions(col("event_type"))
-        .agg(sum((col("cj").cast("double") / col("nn"))
-          * (col("cj").cast("double") / col("nn"))).as("pe"))
-      pbar.crossJoin(broadcast(pj))
-        .selectExpr("n_days", "round(pbar, 6) AS pbar", "round(pe, 6) AS pe",
-          """CASE WHEN pe < 1 THEN round((pbar - pe) / (1 - pe), 6)
-               ELSE NULL END AS kappa""")
-    }),
-
-    // Cronbach's alpha over the event stream: DECLARED framing —
-    // event types are the k items, days are subjects, the item score
-    // is the daily count with missing (type, day) cells = 0 on the
-    // calendar spine of ALL observed days (a type that skips a day
-    // genuinely scored 0). α = k/(k−1)·(1 − Σᵢσ²ᵢ/σ²_tot), sample
-    // variances; per-item Σc/Σc² are exact BIGINTs (zero cells add
-    // zero, so observed-row sums ARE spine sums — only D changes),
-    // daily totals fold at day grain, and the single cross-item
-    // double sum runs as a sorted k-row fold.
-    "q_x_cronbach" -> ((s, d) => {
-      val dc = dayCounts(s, d).cut("Round14b.scala:cronbach", eager = true)
-      val spine = dc.agg(countDistinct(col("day")).as("dd"),
-        countDistinct(col("event_type")).as("k"))
-      val items = dc.groupBy(col("event_type"))
-        .agg(sum(col("c")).as("sc"), sum(col("c") * col("c")).as("sq"))
-        .crossJoin(broadcast(spine))
-        .coalesce(1).sortWithinPartitions(col("event_type"))
-        .agg(max(col("dd")).as("dd"), max(col("k")).as("k"),
-          sum((col("sq") - col("sc").cast("double") * col("sc") / col("dd"))
-            / (col("dd") - 1)).as("svi"))
-      val totals = dc.groupBy(col("day")).agg(sum(col("c")).as("t"))
-        .agg(sum(col("t")).as("st"), sum(col("t") * col("t")).as("stq"))
-      items.crossJoin(broadcast(totals))
-        .selectExpr("k", "dd AS n_days",
-          """CASE WHEN dd >= 2
-              THEN round((CAST(stq AS DOUBLE) - CAST(st AS DOUBLE) * st / dd) / (dd - 1), 6)
-              ELSE NULL END AS var_total""",
-          """CASE WHEN k >= 2 AND dd >= 2
-                   AND (CAST(stq AS DOUBLE) - CAST(st AS DOUBLE) * st / dd) > 0
-              THEN round(CAST(k AS DOUBLE) / (k - 1)
-                * (1 - svi / ((CAST(stq AS DOUBLE) - CAST(st AS DOUBLE) * st / dd)
-                    / (dd - 1))), 6)
-              ELSE NULL END AS alpha""")
-    }),
-
-    // Goodman–Kruskal gamma per source between two DECLARED ordinal
-    // bucketings of documents — x = ⌊n_chars/500⌋ (length class),
-    // y = ⌊whitespace-token count/100⌋ (token class): γ = (C−D)/(C+D)
-    // ignoring all ties. One corpus pass builds the (source, x, y)
-    // contingency cells; the ordered pair grid (each unordered pair
-    // twice — 2C/2D stay exact BIGINTs) is cells², bounded by the
-    // bucket alphabet, never the corpus.
-    "q_x_gamma" -> ((s, d) => {
-      ordinalPairSums(s, d)
-        .selectExpr("source", "c2", "d2",
-          """CASE WHEN c2 + d2 > 0
-              THEN round(CAST(c2 - d2 AS DOUBLE) / (c2 + d2), 6)
-              ELSE NULL END AS gamma""")
-        .orderBy(col("source"))
-    }),
-
-    // Somers' D (y | x) per source over the same declared ordinal
-    // bucketings: D_yx = (C−D)/(C+D+T_y) — gamma's asymmetric cousin
-    // that charges pairs tied on the dependent y (but split on x)
-    // against the association. Same exact doubled pair sums.
-    "q_x_somers_d" -> ((s, d) => {
-      ordinalPairSums(s, d)
-        .selectExpr("source", "c2", "d2", "ty2",
-          """CASE WHEN c2 + d2 + ty2 > 0
-              THEN round(CAST(c2 - d2 AS DOUBLE) / (c2 + d2 + ty2), 6)
-              ELSE NULL END AS somers_d""")
-        .orderBy(col("source"))
-    }),
-
-    // Cox–Stuart trend sign test per event type over daily counts
-    // (observation-index grain, DECLARED conventions: offset
-    // c = ceil(n/2) — an odd series drops its middle observation —
-    // tied pairs discarded, and the plain no-continuity normal form
-    // z = (2S⁺ − n')/√n'). The nonparametric "is the second half
-    // bigger" complement of q_x_mann_kendall (which weighs ALL
-    // pairs): one pass to day grain, one rn-offset self-join at
-    // calendar-bounded size.
-    "q_x_cox_stuart" -> ((s, d) => {
-      val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
-      val dc = dayCounts(s, d).cut("Round14b.scala:cox_stuart", eager = true)
-        .withColumn("rn", row_number().over(w).cast("long"))
-        .withColumn("nd", count(lit(1)).over(
-          Window.partitionBy(col("event_type"))))
-      val a = dc.select(col("event_type"), col("rn"), col("nd"), col("c").as("ca"))
-      val b = dc.select(col("event_type"), col("rn").as("rn_b"), col("c").as("cb"))
-      val pairs = a.join(b, a("event_type") === b("event_type") &&
-          col("rn_b") === col("rn") + ceil(col("nd") / 2).cast("long"))
-        .drop(b("event_type"))
-        .groupBy(col("event_type"))
-        .agg(sum(when(col("cb") > col("ca"), 1L).otherwise(0L)).as("sp"),
-          sum(when(col("cb") < col("ca"), 1L).otherwise(0L)).as("sm"))
-      // left join: a one-observation type has no pairs — it surfaces
-      // with s_plus = s_minus = 0 and NULL z, never a dropped row.
-      dc.groupBy(col("event_type")).agg(max(col("nd")).as("n_days"))
-        .join(pairs, Seq("event_type"), "left")
-        .withColumn("sp", coalesce(col("sp"), lit(0L)))
-        .withColumn("sm", coalesce(col("sm"), lit(0L)))
-        .selectExpr("event_type", "n_days", "sp AS s_plus", "sm AS s_minus",
-          """CASE WHEN sp + sm > 0
-              THEN round(CAST(2 * sp - (sp + sm) AS DOUBLE) / sqrt(CAST(sp + sm AS DOUBLE)), 6)
-              ELSE NULL END AS z""")
-        .orderBy(col("event_type"))
-    }),
-
-    // Seasonal Mann–Kendall per event type (DECLARED season =
-    // epoch_day mod 7 — the calendar-keyed weekday, the holt_winters
-    // device): S = Σ_seasons S_s and Var = Σ_seasons [n_s(n_s−1)
-    // (2n_s+5) − Σt(t−1)(2t+5)]/18 with per-season tie corrections —
-    // pairs are only compared WITHIN a season, so a strong weekly
-    // cycle no longer drowns the monotone trend q_x_mann_kendall
-    // sees through it. Same sign-corrected z as mann_kendall; all
-    // sums exact BIGINT, one division at the end.
-    "q_x_mk_seasonal" -> ((s, d) => {
-      val dc = dayCounts(s, d)
-        .withColumn("slot",
-          datediff(col("day"), lit("1970-01-01").cast("date")).cast("long") % 7)
-        .cut("Round14b.scala:mk_seasonal", eager = true)
-      val a = dc.select(col("event_type"), col("slot"), col("day").as("da"),
-        col("c").as("ca"))
-      val b = dc.select(col("event_type"), col("slot"), col("day").as("db"),
-        col("c").as("cb"))
-      val sTab = a.join(b, Seq("event_type", "slot"))
-        .filter(col("da") < col("db"))
-        .groupBy(col("event_type"))
-        .agg(sum(when(col("cb") > col("ca"), 1L)
-          .when(col("cb") < col("ca"), -1L).otherwise(0L)).as("s"))
-      val nTab = dc.groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_days"))
-      val varTab = dc.groupBy(col("event_type"), col("slot"))
-        .agg(count(lit(1)).as("ns"))
-        .groupBy(col("event_type"))
-        .agg(sum(col("ns") * (col("ns") - 1) * (lit(2L) * col("ns") + 5)).as("vn"))
-      val tieTab = dc.groupBy(col("event_type"), col("slot"), col("c"))
-        .agg(count(lit(1)).as("t"))
-        .groupBy(col("event_type"))
-        .agg(sum(col("t") * (col("t") - 1) * (lit(2L) * col("t") + 5)).as("vt"))
-      // left join + coalesce: a type whose every season has ≤ 1 day
-      // has NO comparable pairs — it surfaces with s = 0 (and z from
-      // the variance guard), never a dropped row.
-      nTab.join(varTab, "event_type").join(tieTab, "event_type")
-        .join(sTab, Seq("event_type"), "left")
-        .withColumn("s", coalesce(col("s"), lit(0L)))
-        .selectExpr("event_type", "n_days", "s",
-          """CASE WHEN vn - vt > 0
-              THEN round(CAST(CASE WHEN s > 0 THEN s - 1
-                                   WHEN s < 0 THEN s + 1 ELSE 0 END AS DOUBLE)
-                / sqrt(CAST(vn - vt AS DOUBLE) / 18), 6)
-              ELSE NULL END AS z""")
-        .orderBy(col("event_type"))
-    }),
-
-    // Wilcoxon signed-rank test per event type on week-over-week
-    // paired differences (DECLARED: pairs are calendar days exactly 7
-    // apart, d = c_t − c_{t−7}, zero differences discarded — the
-    // standard convention — and midranks of |d|). The doubled-rank
-    // device keeps EVERYTHING exact BIGINT: 2W = Σ sign·2r, and under
-    // sign-flips Var(2W) = Σ(2r)² exactly EVEN WITH TIES, so
-    // z = 2W/√Σcnt·(2r)² needs no tie-correction approximation.
-    // Pairless types surface with 0/NULL via left join.
-    "q_x_wilcoxon_signed" -> ((s, d) => {
-      val dc = dayCounts(s, d).cut("Round14b.scala:wilcoxon", eager = true)
-      val a = dc.select(col("event_type"), col("day").as("da"), col("c").as("ca"))
-      val b = dc.select(col("event_type"), col("day").as("db"), col("c").as("cb"))
-      val diffs = a.join(b, Seq("event_type"))
-        .filter(col("db") === date_add(col("da"), 7))
-        .select(col("event_type"), (col("cb") - col("ca")).as("dv"))
-        .filter(col("dv") =!= 0L)
-      val cells = diffs
-        .groupBy(col("event_type"), abs(col("dv")).as("av"))
-        .agg(count(lit(1)).as("cnt"),
-          sum(signum(col("dv")).cast("long")).as("sgn"))
-      val w = Window.partitionBy(col("event_type")).orderBy(col("av"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val ranked = cells.withColumn("r2",
-        lit(2L) * coalesce(sum(col("cnt")).over(w), lit(0L)) + col("cnt") + 1L)
-      val ps = ranked.groupBy(col("event_type"))
-        .agg(sum(col("cnt")).as("np"),
-          sum(col("sgn") * col("r2")).as("w2"),
-          sum(col("cnt") * col("r2") * col("r2")).as("v4"))
-      dc.groupBy(col("event_type")).agg(count(lit(1)).as("n_days"))
-        .join(ps, Seq("event_type"), "left")
-        .withColumn("np", coalesce(col("np"), lit(0L)))
-        .withColumn("w2", coalesce(col("w2"), lit(0L)))
-        .selectExpr("event_type", "n_days", "np AS n_pairs", "w2",
-          """CASE WHEN np >= 1 AND v4 > 0
-              THEN round(CAST(w2 AS DOUBLE) / sqrt(CAST(v4 AS DOUBLE)), 6)
-              ELSE NULL END AS z""")
-        .orderBy(col("event_type"))
-    }),
-
-    // Theil's uncertainty coefficient between source and lang — the
-    // ASYMMETRIC, normalized cousin of q_x_mi (which is symmetric MI
-    // over length buckets) and q_x_chisq (χ²/Cramérs V on this same
-    // pair): U(Y|X) = (H(Y) − H(Y|X))/H(Y) answers "what fraction of
-    // lang-uncertainty does knowing source remove", in both
-    // directions. Everything reduces to three n·ln(n) sums over the
-    // bounded category/cell alphabets (zero cells add their 0 limit
-    // by omission), each folded sorted-single-partition; DECLARED
-    // natural log.
-    "q_x_theil_u" -> ((s, d) => {
-      val docs = table(s, d, "documents").select(col("source"), col("lang"))
-      val nn = docs.agg(count(lit(1)).as("n"))
-      def nlogn(df: DataFrame, keys: Seq[String], alias: String): DataFrame =
-        df.groupBy(keys.map(col): _*).agg(count(lit(1)).as("cnt"))
-          .coalesce(1).sortWithinPartitions(keys.map(col): _*)
-          .agg(sum(col("cnt") * log(col("cnt"))).as(alias))
-      val sx = nlogn(docs, Seq("source"), "sx")
-      val sy = nlogn(docs, Seq("lang"), "sy")
-      val sxy = nlogn(docs, Seq("source", "lang"), "sxy")
-      val hY = "(ln(CAST(n AS DOUBLE)) - sy / n)"
-      val hX = "(ln(CAST(n AS DOUBLE)) - sx / n)"
-      val miT = s"($hY - (sx / CAST(n AS DOUBLE) - sxy / n))"
-      sx.crossJoin(broadcast(sy)).crossJoin(broadcast(sxy))
-        .crossJoin(broadcast(nn))
-        .selectExpr("n",
-          s"round($hY, 6) AS h_lang", s"round($hX, 6) AS h_source",
-          s"round($miT, 6) AS mi",
-          s"""CASE WHEN $hY > 0 THEN round($miT / $hY, 6)
-               ELSE NULL END AS u_lang_given_source""",
-          s"""CASE WHEN $hX > 0 THEN round($miT / $hX, 6)
-               ELSE NULL END AS u_source_given_lang""")
-    }),
-
-    // Kendall's coefficient of concordance W across full calendar
-    // weeks (blocks) rating the 7 weekday positions (treatments) —
-    // "do weeks agree on the weekday ordering of activity", the
-    // normalized effect size next to q_x_page_trend's directional L:
-    // with doubled within-week midranks, S4 = Σ_j(2R_j − m·2(k+1)/2)²
-    // = Σ_j(R2_j − 8m)² is exact BIGINT, and the tie term Σ(t³−t)
-    // folds per week, so W = 3·S4/(m²k(k²−1) − m·ΣT)·(1/4)·... — one
-    // exact division at the end. DECLARED k = 7, full weeks only.
-    "q_x_kendall_w" -> ((s, d) => {
-      val dc = dayCounts(s, d)
-        .withColumn("wk",
-          floor(datediff(col("day"), lit("1970-01-01").cast("date")) / lit(7.0))
-            .cast("long"))
-        .withColumn("slot",
-          datediff(col("day"), lit("1970-01-01").cast("date")).cast("long") % 7)
-        .cut("Round14b.scala:kendall_w", eager = true)
-      val agg = dc.groupBy(col("event_type"), col("wk"), col("slot"))
-        .agg(sum(col("c")).as("v"))
-      val full = agg.groupBy(col("event_type"), col("wk"))
-        .agg(count(lit(1)).as("nslots"))
-        .filter(col("nslots") === 7).select(col("event_type"), col("wk"))
-      val cells = agg.join(full, Seq("event_type", "wk"))
-      // within-week doubled midranks of the 7 slot values
-      val wv = Window.partitionBy(col("event_type"), col("wk")).orderBy(col("v"))
-        .rangeBetween(Window.unboundedPreceding, -1)
-      val we = Window.partitionBy(col("event_type"), col("wk")).orderBy(col("v"))
-        .rangeBetween(0, 0)
-      val ranked = cells
-        .withColumn("below", coalesce(count(lit(1)).over(wv), lit(0L)))
-        .withColumn("tied", count(lit(1)).over(we))
-        .withColumn("r2", lit(2L) * col("below") + col("tied") + 1L)
-      val rj = ranked.groupBy(col("event_type"), col("slot"))
-        .agg(sum(col("r2")).as("r2j"), count(lit(1)).as("m"))
-      val ties = ranked.groupBy(col("event_type"), col("wk"), col("v"))
-        .agg(count(lit(1)).as("t"))
-        .groupBy(col("event_type"))
-        .agg(sum(col("t") * col("t") * col("t") - col("t")).as("tsum"))
-      val s4 = rj.groupBy(col("event_type"))
-        .agg(max(col("m")).as("m"),
-          sum((col("r2j") - lit(8L) * col("m")) * (col("r2j") - lit(8L) * col("m")))
-            .as("s4"))
-      s4.join(ties, "event_type")
-        .selectExpr("event_type", "m AS n_weeks",
-          """CASE WHEN m >= 1
-               AND (CAST(m AS DOUBLE) * m * 336 - CAST(m AS DOUBLE) * tsum) > 0
-              THEN round(3 * CAST(s4 AS DOUBLE)
-                / (CAST(m AS DOUBLE) * m * 336 - CAST(m AS DOUBLE) * tsum), 6)
-              ELSE NULL END AS w""")
-        .orderBy(col("event_type"))
-    }),
-
-    // Turning-point randomness test per event type (observation-index
-    // grain): T = #{t : x_t is a strict local max or min among
-    // (x_{t−1}, x_t, x_{t+1})} — DECLARED strict (any tie in the
-    // triple contributes nothing, the classic convention), with the
-    // textbook moments E[T] = 2(n−2)/3, Var[T] = (16n−29)/90. One
-    // two-lag window pass; counts exact; one shared z expression.
-    "q_x_turning_points" -> ((s, d) => {
-      val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
-      dayCounts(s, d).cut("Round14b.scala:turning", eager = true)
-        .withColumn("p", lag(col("c"), 1).over(w))
-        .withColumn("f", lead(col("c"), 1).over(w))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(when((col("c") > col("p") && col("c") > col("f")) ||
-            (col("c") < col("p") && col("c") < col("f")), 1L)
-            .otherwise(0L)).as("t"))
-        .selectExpr("event_type", "n AS n_days", "t AS turning",
-          """CASE WHEN n >= 4
-              THEN round((CAST(t AS DOUBLE) - 2 * (CAST(n AS DOUBLE) - 2) / 3)
-                / sqrt((16 * CAST(n AS DOUBLE) - 29) / 90), 6)
-              ELSE NULL END AS z""")
-        .orderBy(col("event_type"))
-    }),
-
-    // Bartels' rank von Neumann ratio per event type — q_x_von_neumann
-    // run on MIDRANKS of the daily counts, the distribution-robust
-    // form: rvn = Σ(r_t − r_{t+1})²/Σ(r − r̄)². Doubled midranks keep
-    // both sums exact BIGINT (r̄ doubles to exactly n+1); z uses the
-    // DECLARED asymptotic Var = 4/n. Constant series (denominator 0)
-    // surface NULL.
-    "q_x_bartels" -> ((s, d) => {
-      val dc = dayCounts(s, d).cut("Round14b.scala:bartels", eager = true)
-      val wv = Window.partitionBy(col("event_type")).orderBy(col("c"))
-        .rangeBetween(Window.unboundedPreceding, -1)
-      val we = Window.partitionBy(col("event_type")).orderBy(col("c"))
-        .rangeBetween(0, 0)
-      val wd = Window.partitionBy(col("event_type")).orderBy(col("day"))
-      dc.withColumn("r2", lit(2L) * count(lit(1)).over(wv)
-          + count(lit(1)).over(we) + 1L)
-        .withColumn("r2n", lead(col("r2"), 1).over(wd))
-        .withColumn("nn", count(lit(1)).over(
-          Window.partitionBy(col("event_type"))))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum((col("r2") - col("r2n")) * (col("r2") - col("r2n"))).as("nm4"),
-          sum((col("r2") - (col("nn") + 1L)) * (col("r2") - (col("nn") + 1L)))
-            .as("dn4"))
-        .selectExpr("event_type", "n AS n_days",
-          """CASE WHEN n >= 2 AND dn4 > 0
-              THEN round(CAST(nm4 AS DOUBLE) / dn4, 6) ELSE NULL END AS rvn""",
-          """CASE WHEN n >= 2 AND dn4 > 0
-              THEN round((CAST(nm4 AS DOUBLE) / dn4 - 2) / sqrt(4.0 / n), 6)
-              ELSE NULL END AS z""")
-        .orderBy(col("event_type"))
-    }),
-
-    // Quade test per event type — the block-weighted Friedman over
-    // full calendar weeks (blocks) × 7 weekday positions: blocks with
-    // a larger within-week RANGE carry proportionally more weight
-    // (Friedman treats a flat week and a wild week equally). With
-    // doubled midranks in BOTH directions (Q2 = doubled block-range
-    // midrank across weeks, r2 = doubled within-week midrank),
-    // S16_bj = Q2_b·(r2_bj − 8) is exact BIGINT, so A16 = ΣS16² and
-    // SN = Σ_j(Σ_b S16)² are exact and F = (m−1)·(SN/m)/(A16 − SN/m)
-    // is one shared expression. DECLARED k = 7, full weeks only;
-    // degenerate A = B surfaces NULL.
-    "q_x_quade" -> ((s, d) => {
-      val dc = dayCounts(s, d)
-        .withColumn("wk",
-          floor(datediff(col("day"), lit("1970-01-01").cast("date")) / lit(7.0))
-            .cast("long"))
-        .withColumn("slot",
-          datediff(col("day"), lit("1970-01-01").cast("date")).cast("long") % 7)
-        .cut("Round14b.scala:quade", eager = true)
-      val agg = dc.groupBy(col("event_type"), col("wk"), col("slot"))
-        .agg(sum(col("c")).as("v"))
-      val full = agg.groupBy(col("event_type"), col("wk"))
-        .agg(count(lit(1)).as("nslots"),
-          (max(col("v")) - min(col("v"))).as("rng"))
-        .filter(col("nslots") === 7)
-      // doubled midranks of the block ranges across weeks (per type)
-      val bv = Window.partitionBy(col("event_type")).orderBy(col("rng"))
-        .rangeBetween(Window.unboundedPreceding, -1)
-      val be = Window.partitionBy(col("event_type")).orderBy(col("rng"))
-        .rangeBetween(0, 0)
-      val blocks = full.withColumn("q2",
-        lit(2L) * count(lit(1)).over(bv) + count(lit(1)).over(be) + 1L)
-      val cells = agg.join(blocks.select(col("event_type"), col("wk"), col("q2")),
-        Seq("event_type", "wk"))
-      val wv = Window.partitionBy(col("event_type"), col("wk")).orderBy(col("v"))
-        .rangeBetween(Window.unboundedPreceding, -1)
-      val we = Window.partitionBy(col("event_type"), col("wk")).orderBy(col("v"))
-        .rangeBetween(0, 0)
-      val ranked = cells
-        .withColumn("r2", lit(2L) * count(lit(1)).over(wv)
-          + count(lit(1)).over(we) + 1L)
-        .withColumn("s16", col("q2") * (col("r2") - 8L))
-      val perSlot = ranked.groupBy(col("event_type"), col("slot"))
-        .agg(sum(col("s16")).as("n16"), count(lit(1)).as("m"))
-      val sn = perSlot.groupBy(col("event_type"))
-        .agg(max(col("m")).as("m"), sum(col("n16") * col("n16")).as("sn"))
-      val a16 = ranked.groupBy(col("event_type"))
-        .agg(sum(col("s16") * col("s16")).as("a16"))
-      sn.join(a16, "event_type")
-        .selectExpr("event_type", "m AS n_weeks",
-          """CASE WHEN m >= 2
-               AND (CAST(a16 AS DOUBLE) - CAST(sn AS DOUBLE) / m) > 0
-              THEN round((CAST(m AS DOUBLE) - 1) * (CAST(sn AS DOUBLE) / m)
-                / (CAST(a16 AS DOUBLE) - CAST(sn AS DOUBLE) / m), 6)
-              ELSE NULL END AS f""")
-        .orderBy(col("event_type"))
-    }),
-
-    // Bowker's test of symmetry on each user's modal event type,
-    // first corpus half vs second (DECLARED: halves split at the
-    // midpoint micros (min+max)/2 of the event window, modal-type
-    // ties break to the lexicographically smallest type, and only
-    // users active in BOTH halves enter — the k×k generalization of
-    // q_x_mcnemar): χ² = Σ_{i<j}(n_ij−n_ji)²/(n_ij+n_ji) over pairs
-    // with traffic, df = #such pairs. Corpus work is one per-
-    // (user, half, type) aggregate; the χ² folds over ≤ k(k−1)/2
-    // cells, sorted.
-    "q_x_bowker" -> ((s, d) => {
-      val ev = table(s, d, "events")
-        .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("tm"))
-      val mid = ev.agg(((min(col("tm")) + max(col("tm"))) / lit(2L)).as("mid"))
-      val halves = ev.crossJoin(broadcast(mid))
-        .withColumn("half", when(col("tm") <= col("mid"), lit("h1")).otherwise(lit("h2")))
-        .groupBy(col("user_id"), col("half"), col("event_type"))
-        .agg(count(lit(1)).as("cnt"))
-      val wm = Window.partitionBy(col("user_id"), col("half"))
-        .orderBy(col("cnt").desc, col("event_type"))
-      val modal = halves.withColumn("rn", row_number().over(wm))
-        .filter(col("rn") === 1)
-        .select(col("user_id"), col("half"), col("event_type"))
-      val both = modal.groupBy(col("user_id"))
-        .pivot("half", Seq("h1", "h2")).agg(first(col("event_type")))
-        .filter(col("h1").isNotNull && col("h2").isNotNull)
-        .select(col("user_id"), col("h1").as("ta"), col("h2").as("tb"))
-        .cut("Round14b.scala:bowker", eager = true)
-      val nu = both.agg(count(lit(1)).as("n_users"))
-      val cellCnt = both.groupBy(col("ta"), col("tb")).agg(count(lit(1)).as("n"))
-      val up = cellCnt.filter(col("ta") < col("tb"))
-        .select(col("ta").as("i"), col("tb").as("j"), col("n").as("nij"))
-      val dn = cellCnt.filter(col("ta") > col("tb"))
-        .select(col("tb").as("i"), col("ta").as("j"), col("n").as("nji"))
-      val pairs = up.join(dn, Seq("i", "j"), "full")
-        .na.fill(0L, Seq("nij", "nji"))
-      pairs.coalesce(1).sortWithinPartitions(col("i"), col("j"))
-        .agg(count(lit(1)).as("df"),
-          sum((col("nij") - col("nji")).cast("double")
-            * (col("nij") - col("nji"))
-            / (col("nij") + col("nji"))).as("chi2"))
-        .crossJoin(broadcast(nu))
-        .selectExpr("n_users", "df", "round(chi2, 6) AS chi2")
-    }),
-
-    // Cohen's h between every source pair — the effect size for the
-    // PROPORTION of long documents (DECLARED: p_i = share of docs
-    // with n_chars strictly above the pooled median, the engines'
-    // shared exact-median convention): h = 2·asin(√p_a) − 2·asin(√p_b),
-    // the arcsine-stabilized difference q_x_cohens_d is for means.
-    // Proportions are exact-count ratios; h is one shared expression
-    // over the k² dims-bounded pair grid.
-    "q_x_cohen_h" -> ((s, d) => {
-      val docs = table(s, d, "documents").select(col("source"), col("n_chars"))
-      val med = docs.agg(expr("median(n_chars)").as("med"))
-      val ps = docs.crossJoin(broadcast(med))
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("n_chars") > col("med"), 1L).otherwise(0L)).as("k"))
-      val a = ps.select(col("source").as("source_a"), col("n").as("n_a"),
-        col("k").as("k_a"))
-      val b = ps.select(col("source").as("source_b"), col("n").as("n_b"),
-        col("k").as("k_b"))
-      a.join(broadcast(b), col("source_a") < col("source_b"))
-        .selectExpr("source_a", "source_b",
-          "round(CAST(k_a AS DOUBLE) / n_a, 6) AS p_a",
-          "round(CAST(k_b AS DOUBLE) / n_b, 6) AS p_b",
-          """round(2 * asin(sqrt(CAST(k_a AS DOUBLE) / n_a))
-             - 2 * asin(sqrt(CAST(k_b AS DOUBLE) / n_b)), 6) AS h""")
-        .orderBy(col("source_a"), col("source_b"))
-    }),
-
-    // Log-rank test, each cohort vs the pooled rest — THE companion
-    // of q_x_survival's Kaplan–Meier curves (same cohort convention:
-    // the user's first event type), on time-to-first-'purchase'
-    // (DECLARED: duration = (first purchase ts − first event ts) div
-    // 86400000000 days; users who never purchase are right-censored
-    // at their LAST event — q_x_survival's churn framing is
-    // degenerate here because the fixture keeps every user active
-    // through the window's final week): O_g = Σ d_gt, E_g =
-    // Σ d_t·n_gt/n_t, V_g = Σ d_t(n_gt/n_t)(1−n_gt/n_t)(n_t−d_t)/
-    // (n_t−1) over pooled death times with n_t > 1; z = (O−E)/√V.
-    // All counts/at-risk numbers exact BIGINT on the cohort ×
-    // duration grid (duration-grain, corpus-independent); the E/V
-    // folds are monotone running windows per cohort (nonneg terms ⇒
-    // max = last), matching the oracle's running windows term for
-    // term.
-    "q_x_log_rank" -> ((s, d) => {
-      val terms = logRankAtRisk(s, d).filter(col("dp") > 0)
-      val w = Window.partitionBy(col("cohort")).orderBy(col("dur"))
-      val t2 = terms
-        .withColumn("e_run", sum(col("dp").cast("double") * col("ng") / col("np"))
-          .over(w.rowsBetween(Window.unboundedPreceding, 0)))
-        .withColumn("v_run", sum(when(col("np") > 1,
-          col("dp").cast("double") * (col("ng").cast("double") / col("np"))
-            * (lit(1.0) - col("ng").cast("double") / col("np"))
-            * (col("np") - col("dp")) / (col("np") - 1)).otherwise(lit(0.0)))
-          .over(w.rowsBetween(Window.unboundedPreceding, 0)))
-      t2.groupBy(col("cohort"))
-        .agg(max(col("nn")).as("n"), sum(col("dg")).as("o"),
-          max(col("e_run")).as("e"), max(col("v_run")).as("v"))
-        .selectExpr("cohort", "n", "o", "round(e, 6) AS e",
-          """CASE WHEN v > 0 THEN round((CAST(o AS DOUBLE) - e) / sqrt(v), 6)
-              ELSE NULL END AS z""",
-          """CASE WHEN v > 0
-              THEN round((CAST(o AS DOUBLE) - e) * (CAST(o AS DOUBLE) - e) / v, 6)
-              ELSE NULL END AS chi2""")
-        .orderBy(col("cohort"))
-    }),
-
-    // Hodges–Lehmann shift per event type between the series' two
-    // halves (DECLARED: first half = first ⌊n/2⌋ observations, second
-    // = last ⌊n/2⌋, odd middle dropped — the q_x_cox_stuart split):
-    // HL = median{c_j − c_i} over the cross-half pair grid — the
-    // robust "how much did the level move" estimator cox_stuart only
-    // signs. Differences are exact BIGINTs; the median is the
-    // engines' shared exact-median convention (integer or .5 — never
-    // an approximation). Pair grid ≤ ⌊n/2⌋² at calendar-bounded n.
-    "q_x_hl_shift" -> ((s, d) => {
-      val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
-      val dc = dayCounts(s, d).cut("Round14b.scala:hl_shift", eager = true)
-        .withColumn("rn", row_number().over(w).cast("long"))
-        .withColumn("nd", count(lit(1)).over(
-          Window.partitionBy(col("event_type"))))
-      val a = dc.filter(col("rn") <= expr("nd div 2"))
-        .select(col("event_type"), col("c").as("ca"))
-      val b = dc.filter(col("rn") > col("nd") - expr("nd div 2"))
-        .select(col("event_type"), col("c").as("cb"))
-      val hl = a.join(b, Seq("event_type"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_pairs"),
-          expr("median(cb - ca)").as("hl"))
-      dc.groupBy(col("event_type")).agg(max(col("nd")).as("n_days"))
-        .join(hl, Seq("event_type"), "left")
-        .withColumn("n_pairs", coalesce(col("n_pairs"), lit(0L)))
-        .selectExpr("event_type", "n_days", "n_pairs",
-          "round(hl, 6) AS hl")
-        .orderBy(col("event_type"))
-    }),
-
-    // Gehan–Breslow–Wilcoxon weighted log-rank (weight w_t = pooled
-    // at-risk n_t — early deaths count more, the standard complement
-    // when hazards cross late): same declared time-to-first-purchase
-    // frame as q_x_log_rank. The weighted O−E numerator
-    // Σ(n_t·d_gt − d_t·n_gt) is EXACT BIGINT (the weights cancel the
-    // division); only V_w = Σ n_t²·v_t folds doubles, as the same
-    // monotone per-cohort running window.
-    "q_x_gehan_wilcoxon" -> ((s, d) => {
-      val terms = logRankAtRisk(s, d).filter(col("dp") > 0)
-      val w = Window.partitionBy(col("cohort")).orderBy(col("dur"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-      val t2 = terms
-        .withColumn("v_run", sum(when(col("np") > 1,
-          col("np").cast("double") * col("np")
-            * (col("dp").cast("double") * (col("ng").cast("double") / col("np"))
-              * (lit(1.0) - col("ng").cast("double") / col("np"))
-              * (col("np") - col("dp")) / (col("np") - 1))).otherwise(lit(0.0)))
-          .over(w))
-      t2.groupBy(col("cohort"))
-        .agg(max(col("nn")).as("n"),
-          sum(col("np") * col("dg") - col("dp") * col("ng")).as("num"),
-          max(col("v_run")).as("v"))
-        .selectExpr("cohort", "n", "num AS w_num",
-          """CASE WHEN v > 0 THEN round(CAST(num AS DOUBLE) / sqrt(v), 6)
-              ELSE NULL END AS z""")
-        .orderBy(col("cohort"))
-    }),
-
-    // Restricted mean survival time per cohort at DECLARED τ = 30
-    // days — "average days to first purchase, capped at a month":
-    // the area under q_x_survival-style KM steps, RMST =
-    // Σ S(t_{k-1})·(min(t_k,τ)−min(t_{k-1},τ)) + S(last)·(τ −
-    // min(t_last,τ)), S via the survival device (exp∘cumsum∘ln with
-    // the d = n death-out guard). Duration-grain windows per cohort;
-    // the ln/area folds are running windows matching the oracle.
-    "q_x_rmst" -> ((s, d) => {
-      val tau = 30L
-      val deaths = logRankAtRisk(s, d).filter(col("dp") > 0 && col("dg") > 0)
-      val w = Window.partitionBy(col("cohort")).orderBy(col("dur"))
-      val wr = w.rowsBetween(Window.unboundedPreceding, 0)
-      val km = deaths
-        .withColumn("lnf", when(col("dg") < col("ng"),
-          log(lit(1.0) - col("dg").cast("double") / col("ng"))).otherwise(lit(0.0)))
-        .withColumn("dead_run",
-          sum(when(col("dg") >= col("ng"), 1L).otherwise(0L)).over(wr))
-        .withColumn("s_cur", when(col("dead_run") > 0, lit(0.0))
-          .otherwise(exp(sum(col("lnf")).over(wr))))
-        .withColumn("s_prev", coalesce(lag(col("s_cur"), 1).over(w), lit(1.0)))
-        .withColumn("t_prev", coalesce(lag(col("dur"), 1).over(w), lit(0L)))
-        .withColumn("contrib", col("s_prev") *
-          (least(col("dur"), lit(tau)) - least(col("t_prev"), lit(tau))))
-        // area as a monotone running fold (contrib ≥ 0 ⇒ max = last),
-        // never an unordered double group-sum
-        .withColumn("area_run", sum(col("contrib")).over(wr))
-      val agg = km.groupBy(col("cohort"))
-        .agg(max(col("area_run")).as("area"),
-          min(col("s_cur")).as("s_last"), max(col("dur")).as("t_last"))
-      // left join: a cohort with NO deaths keeps S = 1 throughout —
-      // RMST = τ exactly, never a dropped row.
-      logRankAtRisk(s, d).groupBy(col("cohort")).agg(max(col("nn")).as("n"))
-        .join(agg, Seq("cohort"), "left")
-        .na.fill(Map("area" -> 0.0, "s_last" -> 1.0, "t_last" -> 0L))
-        .selectExpr("cohort", "n",
-          s"""round(area + s_last * ($tau - least(t_last, $tau)), 6) AS rmst""")
-        .orderBy(col("cohort"))
-    }),
-
-    // Paired sign test per event type on the week-over-week pairs
-    // (DECLARED: days exactly 7 apart, zero differences discarded,
-    // no-continuity z = (2S⁺ − n')/√n' — the q_x_cox_stuart form):
-    // the assumption-free companion of q_x_wilcoxon_signed (which
-    // also weighs magnitudes). Counts only; pairless types surface
-    // 0/0/NULL.
-    "q_x_sign_test" -> ((s, d) => {
-      val dc = dayCounts(s, d).cut("Round14b.scala:sign_test", eager = true)
-      val a = dc.select(col("event_type"), col("day").as("da"), col("c").as("ca"))
-      val b = dc.select(col("event_type"), col("day").as("db"), col("c").as("cb"))
-      val ps = a.join(b, Seq("event_type"))
-        .filter(col("db") === date_add(col("da"), 7))
-        .groupBy(col("event_type"))
-        .agg(sum(when(col("cb") > col("ca"), 1L).otherwise(0L)).as("sp"),
-          sum(when(col("cb") < col("ca"), 1L).otherwise(0L)).as("sm"))
-      dc.groupBy(col("event_type")).agg(count(lit(1)).as("n_days"))
-        .join(ps, Seq("event_type"), "left")
-        .withColumn("sp", coalesce(col("sp"), lit(0L)))
-        .withColumn("sm", coalesce(col("sm"), lit(0L)))
-        .selectExpr("event_type", "n_days", "sp AS s_plus", "sm AS s_minus",
-          """CASE WHEN sp + sm > 0
-              THEN round(CAST(2 * sp - (sp + sm) AS DOUBLE) / sqrt(CAST(sp + sm AS DOUBLE)), 6)
-              ELSE NULL END AS z""")
-        .orderBy(col("event_type"))
-    }),
-
-    // Tarone–Ware weighted log-rank (w_t = √n_t — the declared middle
-    // ground of the trio: log_rank w = 1, gehan w = n_t): same shared
-    // time-to-first-purchase frame; numerator and variance fold as
-    // the same monotone per-cohort running windows, with √ the only
-    // non-rational step (one shared sqrt text per term).
-    "q_x_tarone_ware" -> ((s, d) => {
-      val terms = logRankAtRisk(s, d).filter(col("dp") > 0)
-      val w = Window.partitionBy(col("cohort")).orderBy(col("dur"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-      val t2 = terms
-        .withColumn("n_run", sum(sqrt(col("np").cast("double"))
-          * (col("dg") - col("dp").cast("double") * col("ng") / col("np")))
-          .over(w))
-        .withColumn("v_run", sum(when(col("np") > 1,
-          col("np").cast("double")
-            * (col("dp").cast("double") * (col("ng").cast("double") / col("np"))
-              * (lit(1.0) - col("ng").cast("double") / col("np"))
-              * (col("np") - col("dp")) / (col("np") - 1))).otherwise(lit(0.0)))
-          .over(w))
-      // max_by, not last(): the running numerator can go negative, so
-      // "final value" must be pinned to the max-dur row explicitly.
-      t2.groupBy(col("cohort"))
-        .agg(max(col("nn")).as("n"), expr("max_by(n_run, dur)").as("num"),
-          max(col("v_run")).as("v"))
-        .selectExpr("cohort", "n", "round(num, 6) AS w_num",
-          """CASE WHEN v > 0 THEN round(num / sqrt(v), 6)
-              ELSE NULL END AS z""")
-        .orderBy(col("cohort"))
-    }),
-
-    // Kaplan–Meier median survival per cohort on the shared frame
-    // (DECLARED: the earliest death duration where the post-step
-    // survival S(t) drops to ≤ 0.5; cohorts whose curve never
-    // crosses — e.g. heavy censoring — surface NULL, never dropped):
-    // the one-number summary next to q_x_rmst's area and
-    // q_x_survival's full curve.
-    "q_x_km_median" -> ((s, d) => {
-      val deaths = logRankAtRisk(s, d).filter(col("dp") > 0 && col("dg") > 0)
-      val w = Window.partitionBy(col("cohort")).orderBy(col("dur"))
-      val wr = w.rowsBetween(Window.unboundedPreceding, 0)
-      val km = deaths
-        .withColumn("lnf", when(col("dg") < col("ng"),
-          log(lit(1.0) - col("dg").cast("double") / col("ng"))).otherwise(lit(0.0)))
-        .withColumn("dead_run",
-          sum(when(col("dg") >= col("ng"), 1L).otherwise(0L)).over(wr))
-        .withColumn("s_cur", when(col("dead_run") > 0, lit(0.0))
-          .otherwise(exp(sum(col("lnf")).over(wr))))
-      val med = km.filter(col("s_cur") <= 0.5)
-        .groupBy(col("cohort")).agg(min(col("dur")).as("med_dur"))
-      logRankAtRisk(s, d).groupBy(col("cohort")).agg(max(col("nn")).as("n"))
-        .join(med, Seq("cohort"), "left")
-        .selectExpr("cohort", "n", "med_dur")
-        .orderBy(col("cohort"))
-    }),
-
-    // Mood's rank-based SCALE test, each source vs the pooled corpus
-    // (distinct from q_x_mood_median's location test): T =
-    // Σ(R_i − (N+1)/2)² — squared distance of the group's pooled
-    // ranks from the center; DECLARED no-ties moments E[T] =
-    // n1(N²−1)/12, Var[T] = n1·n2(N+1)(N²−4)/180. Doubled midranks
-    // make 4T = Σcnt·(r2 − (N+1))² exact BIGINT from the ONE pooled
-    // ranking all sources share (the ansari/cucconi machinery); the
-    // fourth member of the scale-test family (ansari ranks from the
-    // edges, fligner normal-scores, cucconi both directions).
-    "q_x_mood_scale" -> ((s, d) => {
-      val dev = col("r2") - (col("n") + 1L)
-      pooledRanks(s, d)
-        .groupBy(col("source"), col("n"))
-        .agg(sum(col("cnt")).as("n1"),
-          sum(col("cnt") * dev * dev).as("t4"))
-        .selectExpr("source", "n1 AS n",
-          "CAST(t4 AS DOUBLE) / 4 AS t",
-          s"""CASE WHEN n1 >= 1 AND n - n1 >= 1
-                THEN round((CAST(t4 AS DOUBLE) / 4
-                    - CAST(n1 AS DOUBLE) * (CAST(n AS DOUBLE) * n - 1) / 12)
-                  / sqrt(CAST(n1 AS DOUBLE) * (n - n1) * (n + 1)
-                      * (CAST(n AS DOUBLE) * n - 4) / 180), 6)
-                ELSE NULL END AS z""")
-        .orderBy(col("source"))
-    }),
-
-    // Chao1 vocabulary-richness estimate + Good–Turing coverage over
-    // the whitespace-token vocabulary — "how many word types does the
-    // corpus REALLY have, and what fraction of the token mass do the
-    // observed types cover": Chao1 = S_obs + f1²/(2f2) (bias-
-    // corrected f1(f1−1)/(2(f2+1)) when f2 = 0 — declared), coverage
-    // C = 1 − f1/N_tokens. ONE token-grain aggregate pass → the
-    // frequency-of-frequencies table is tiny; everything downstream
-    // is exact-count arithmetic in one shared expression.
-    "q_x_chao1" -> ((s, d) => {
-      val tok = table(s, d, "documents")
-        .select(explode(split(col("text"), " ")).as("w"))
-        .groupBy(col("w")).agg(count(lit(1)).as("c"))
-      tok.agg(count(lit(1)).as("s_obs"), sum(col("c")).as("n_tok"),
-          sum(when(col("c") === 1L, 1L).otherwise(0L)).as("f1"),
-          sum(when(col("c") === 2L, 1L).otherwise(0L)).as("f2"))
-        .selectExpr("s_obs", "n_tok", "f1", "f2",
-          """round(CASE WHEN f2 > 0
-                THEN s_obs + CAST(f1 AS DOUBLE) * f1 / (2 * f2)
-                ELSE s_obs + CAST(f1 AS DOUBLE) * (f1 - 1) / (2 * (f2 + 1)) END, 6)
-             AS chao1""",
-          """CASE WHEN n_tok > 0
-              THEN round(1 - CAST(f1 AS DOUBLE) / n_tok, 6)
-              ELSE NULL END AS coverage""")
-    }),
-
-    // Chapman capture–recapture estimate of the active-user
-    // population from the two corpus halves (DECLARED: the bowker
-    // midpoint-micros split; "capture" = any event in the half):
-    // N̂ = (n1+1)(n2+1)/(m+1) − 1 with m = users seen in BOTH halves
-    // — the coverage-estimation classic for "how many entities exist
-    // beyond what either sample saw". Exact counts, one shared
-    // expression; the corpus pass is one per-(user, half) aggregate.
-    "q_x_capture_recapture" -> ((s, d) => {
-      val ev = table(s, d, "events")
-        .select(col("user_id"), unix_micros(col("ts")).as("tm"))
-      val mid = ev.agg(((min(col("tm")) + max(col("tm"))) / lit(2L)).as("mid"))
-      ev.crossJoin(broadcast(mid))
-        .groupBy(col("user_id"))
-        .agg(max(when(col("tm") <= col("mid"), 1L).otherwise(0L)).as("h1"),
-          max(when(col("tm") > col("mid"), 1L).otherwise(0L)).as("h2"))
-        .agg(sum(col("h1")).as("n1"), sum(col("h2")).as("n2"),
-          sum(col("h1") * col("h2")).as("m"),
-          count(lit(1)).as("n_seen"))
-        .selectExpr("n1", "n2", "m", "n_seen",
-          """round(CAST(n1 + 1 AS DOUBLE) * (n2 + 1) / (m + 1) - 1, 6)
-             AS n_hat""")
-    }),
-
-    // Atkinson inequality index per source on document lengths
-    // (DECLARED ε = 1: A = 1 − geomean/mean, the inequality-aversion
-    // form where a transfer from rich to poor always lowers A;
-    // zero-length docs excluded — the q_x_theil convention): the
-    // remaining standard inequality measure next to q_x_gini /
-    // q_x_theil / q_x_lorenz. Σ ln(x) folds at VALUE grain (cnt·ln v
-    // over the per-source value histogram, ordered running window →
-    // max), so the only double accumulation is over the bounded
-    // value alphabet in a deterministic order.
-    "q_x_atkinson" -> ((s, d) => {
-      val docs = table(s, d, "documents")
-        .select(col("source"), col("n_chars")).filter(col("n_chars") > 0)
-      val cells = docs.groupBy(col("source"), col("n_chars"))
-        .agg(count(lit(1)).as("cnt"))
-      val w = Window.partitionBy(col("source")).orderBy(col("n_chars"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-      cells
-        .withColumn("ln_run", sum(col("cnt") * log(col("n_chars"))).over(w))
-        .groupBy(col("source"))
-        .agg(sum(col("cnt")).as("n"), sum(col("cnt") * col("n_chars")).as("sx"),
-          max(col("ln_run")).as("sln"))
-        .selectExpr("source", "n",
-          """round(CAST(sx AS DOUBLE) / n, 6) AS mean""",
-          """CASE WHEN n >= 1 AND sx > 0
-              THEN round(1 - exp(sln / n) / (CAST(sx AS DOUBLE) / n), 6)
-              ELSE NULL END AS atkinson""")
-        .orderBy(col("source"))
-    }),
-
-    // Palma ratio per source (DECLARED: share of total length held by
-    // the top ⌊n/10⌋ docs over the share held by the bottom ⌊4n/10⌋,
-    // rank-based with the deterministic doc_id tie-break): the
-    // tail-focused inequality summary q_x_gini's single number hides.
-    // Exact integer sums over rank windows; sources where the bottom
-    // share is 0 surface NULL.
-    "q_x_palma" -> ((s, d) => {
-      val docs = table(s, d, "documents")
-        .select(col("source"), col("doc_id"), col("n_chars"))
-      val wd = Window.partitionBy(col("source"))
-        .orderBy(col("n_chars").desc, col("doc_id"))
-      val wa = Window.partitionBy(col("source"))
-        .orderBy(col("n_chars"), col("doc_id"))
-      val nn = Window.partitionBy(col("source"))
-      docs
-        .withColumn("rd", row_number().over(wd).cast("long"))
-        .withColumn("ra", row_number().over(wa).cast("long"))
-        .withColumn("n", count(lit(1)).over(nn))
-        .groupBy(col("source"))
-        .agg(max(col("n")).as("n"), sum(col("n_chars")).as("sx"),
-          sum(when(col("rd") <= expr("n div 10"), col("n_chars"))
-            .otherwise(0L)).as("top10"),
-          sum(when(col("ra") <= expr("4 * n div 10"), col("n_chars"))
-            .otherwise(0L)).as("bot40"))
-        .selectExpr("source", "n",
-          "round(CAST(top10 AS DOUBLE) / sx, 6) AS top10_share",
-          "round(CAST(bot40 AS DOUBLE) / sx, 6) AS bot40_share",
-          """CASE WHEN bot40 > 0
-              THEN round(CAST(top10 AS DOUBLE) / bot40, 6)
-              ELSE NULL END AS palma""")
-        .orderBy(col("source"))
-    }),
-
-    // Poisson overdispersion (variance-to-mean) test per event type
-    // over daily counts — "is this event stream burstier than a
-    // Poisson process" as a TEST statistic (q_x_burstiness reports
-    // the (σ−μ)/(σ+μ) coefficient, no calibration): dispersion index
-    // D = (n−1)s²/x̄ ~ χ²_{n−1} under Poisson. Exact integer Σc/Σc²
-    // moments, one shared expression; constant-zero or single-day
-    // types surface NULL. Observation grain = observed days (zero
-    // days excluded — declared; the spine-aware zero view is
-    // q_x_zero_inflation's job).
-    "q_x_overdispersion" -> ((s, d) => {
-      dayCounts(s, d)
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), sum(col("c")).as("sc"),
-          sum(col("c") * col("c")).as("sq"))
-        .selectExpr("event_type", "n AS n_days",
-          """CASE WHEN n >= 2 AND sc > 0
-              THEN round(((CAST(sq AS DOUBLE) - CAST(sc AS DOUBLE) * sc / n) / (n - 1))
-                / (CAST(sc AS DOUBLE) / n), 6)
-              ELSE NULL END AS vmr""",
-          """CASE WHEN n >= 2 AND sc > 0
-              THEN round((n - 1) * ((CAST(sq AS DOUBLE) - CAST(sc AS DOUBLE) * sc / n) / (n - 1))
-                / (CAST(sc AS DOUBLE) / n), 6)
-              ELSE NULL END AS chi2""",
-          "n - 1 AS df")
-        .orderBy(col("event_type"))
-    }),
-
-    // Zero-inflation check per event type on the type's OWN calendar
-    // span (DECLARED: span = datediff(max day, min day) + 1; zero
-    // days = span − observed days; λ = Σc/span): are there more
-    // zero-activity days than the Poisson(λ) rate predicts —
-    // z = (z_obs − span·e^{−λ}) / √(span·e^{−λ}(1−e^{−λ})), the
-    // binomial normal approximation. Exact counts in, one shared
-    // expression; degenerate spans (e^{−λ} rounding to 0 or 1)
-    // surface NULL.
-    "q_x_zero_inflation" -> ((s, d) => {
-      val p0 = "exp(-(CAST(sc AS DOUBLE) / span))"
-      dayCounts(s, d)
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("nobs"), sum(col("c")).as("sc"),
-          (datediff(max(col("day")), min(col("day"))) + 1).cast("long").as("span"))
-        .selectExpr("event_type", "span", "span - nobs AS zero_days",
-          s"""CASE WHEN span >= 1 THEN round($p0 * span, 6) + 0.0
-               ELSE NULL END AS exp_zero""",
-          s"""CASE WHEN span >= 1 AND $p0 > 0 AND $p0 < 1
-                THEN round((CAST(span - nobs AS DOUBLE) - $p0 * span)
-                  / sqrt(span * $p0 * (1 - $p0)), 6) + 0.0
-                ELSE NULL END AS z""")
-        .orderBy(col("event_type"))
-    })
-  )
-
   /** Shared time-to-first-purchase at-risk frame for the survival
     * tests (q_x_log_rank / q_x_gehan_wilcoxon / q_x_rmst): cohort ×
     * pooled-duration grid with per-cohort (ng) and pooled (np)
@@ -1532,11 +365,41 @@ object Round14b {
              CAST(count(*) AS BIGINT) AS c
            FROM events GROUP BY 1, 2)"""
 
-  val oracle: Map[String, String] = Map(
+  val queries: Seq[Query] = Seq(
 
-    // Same lag window (observation-index grain: ORDER BY day closes
-    // calendar gaps), same exact BIGINT sums, same expression text.
-    "q_x_ljung_box" -> {
+    // Ljung–Box portmanteau per event type over daily counts
+    // (DECLARED m = 7 lags, observation-index grain): Q =
+    // n(n+2)Σ r_k²/(n−k). The per-lag cross-moments Σ x_t·x_{t−k}
+    // and the two tail sums are exact BIGINTs from ONE window pass
+    // (7 lag columns over the same per-type day-ordered window);
+    // r_k expands the centered product algebraically so no double
+    // accumulates across rows. Types with n ≤ m or a constant
+    // series (Σ(x−x̄)² = 0) surface with NULL q_lb — declared, not
+    // dropped.
+    Query("q_x_ljung_box", (s, d) => {
+      val dc = DayGrain.counts(s, d).cut("Round14b.scala:ljung_box", eager = true)
+      val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
+      val lagged = (1 to LbLags).foldLeft(dc) { (df, k) =>
+        df.withColumn(s"l$k", lag(col("c"), k).over(w))
+      }
+      val aggs =
+        Seq(count(lit(1)).as("n"), sum(col("c")).as("sc"),
+          sum(col("c") * col("c")).as("sq")) ++
+          (1 to LbLags).flatMap { k =>
+            Seq(sum(col("c") * col(s"l$k")).as(s"p$k"),
+              sum(when(col(s"l$k").isNotNull, col("c"))).as(s"a$k"),
+              sum(col(s"l$k")).as(s"b$k"))
+          }
+      lagged.groupBy(col("event_type")).agg(aggs.head, aggs.tail: _*)
+        .selectExpr("event_type", "n AS n_days",
+          s"""CASE WHEN n > 1 AND $DenTxt > 0
+                THEN round(${rkTxt(1)}, 6) ELSE NULL END AS r1""",
+          s"""CASE WHEN n > $LbLags AND $DenTxt > 0
+                THEN round($QlbTxt, 6) ELSE NULL END AS q_lb""")
+        .orderBy(col("event_type"))
+    }, Some {
+      // Same lag window (observation-index grain: ORDER BY day closes
+      // calendar gaps), same exact BIGINT sums, same expression text.
       val lagCols = (1 to LbLags)
         .map(k => s"lag(c, $k) OVER (PARTITION BY event_type ORDER BY day) AS l$k")
         .mkString(",\n                 ")
@@ -1560,10 +423,34 @@ object Round14b {
                 CASE WHEN n > $LbLags AND $DenTxt > 0
                      THEN round($QlbTxt, 6) ELSE NULL END AS q_lb
          FROM g ORDER BY event_type"""
-    },
+    }),
 
-    // Same one-lag window and declared asymptotic moments.
-    "q_x_von_neumann" ->
+    // Von Neumann successive-difference ratio per event type:
+    // vn = Σ_{t=2..n}(x_t − x_{t−1})² / Σ(x − x̄)² — trend/positive
+    // autocorrelation pushes vn below 2, oscillation above. The
+    // numerator is an exact BIGINT from the same one-pass lag
+    // window; z uses the DECLARED asymptotic moments E = 2,
+    // Var = 4(n−2)/(n²−1). Types with n < 3 or a constant series
+    // surface with NULL vn/z.
+    Query("q_x_von_neumann", (s, d) => {
+      val dc = DayGrain.counts(s, d).cut("Round14b.scala:von_neumann", eager = true)
+      val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
+      dc.withColumn("l1", lag(col("c"), 1).over(w))
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n"), sum(col("c")).as("sc"),
+          sum(col("c") * col("c")).as("sq"),
+          sum((col("c") - col("l1")) * (col("c") - col("l1"))).as("sd2"))
+        .selectExpr("event_type", "n AS n_days",
+          s"""CASE WHEN n >= 3 AND $DenTxt > 0
+                THEN round(CAST(sd2 AS DOUBLE) / $DenTxt, 6)
+                ELSE NULL END AS vn""",
+          s"""CASE WHEN n >= 3 AND $DenTxt > 0
+                THEN round((CAST(sd2 AS DOUBLE) / $DenTxt - 2)
+                  / sqrt(4.0 * (n - 2) / ((CAST(n AS DOUBLE) - 1) * (n + 1))), 6)
+                ELSE NULL END AS z""")
+        .orderBy(col("event_type"))
+    }, Some(
+      // Same one-lag window and declared asymptotic moments.
       s"""WITH $OracleDc,
          lg AS (SELECT event_type, c,
                  lag(c, 1) OVER (PARTITION BY event_type ORDER BY day) AS l1
@@ -1581,11 +468,60 @@ object Round14b {
                      THEN round((CAST(sd2 AS DOUBLE) / $DenTxt - 2)
                        / sqrt(4.0 * (n - 2) / ((CAST(n AS DOUBLE) - 1) * (n + 1))), 6)
                      ELSE NULL END AS z
-         FROM g ORDER BY event_type""",
+         FROM g ORDER BY event_type""")),
 
-    // Same cumulative + 7-lag window pass, same prefix-sum expansion
-    // of Σ S_t², same Bartlett weights in the same term order.
-    "q_x_kpss" -> {
+    // KPSS level-stationarity test per event type over daily counts
+    // (DECLARED: level form — no trend term; Bartlett bandwidth
+    // l = 7; observation-index grain): η = (Σ S_t²/n²) / lrv with
+    // S_t the partial sums of the demeaned series. S_t expands as
+    // C_t − t·x̄ (C_t = exact BIGINT prefix sum), so Σ S_t² needs
+    // only Σ C_t², Σ t·C_t (exact BIGINTs from ONE cumulative
+    // window) and the closed-form Σ t²; the Bartlett γ_j reuse the
+    // Ljung–Box lag machinery. Low vn/high η ⇒ a wandering level.
+    // Types with n ≤ l or zero long-run variance surface NULL kpss.
+    // (Scale note: Σ C_t² grows as (Σc)²·n — C_t is cast to
+    // DECIMAL(18,0) (the jarque_bera s3/s4 convention) and the
+    // products/sums widen to DECIMAL(38,0), exact far past the old
+    // ~sf100 BIGINT budget. Past THAT budget the behavior is
+    // mode-dependent: Spark 4 defaults spark.sql.ansi.enabled=true
+    // (verified on this build: the overflow cast throws
+    // ArithmeticException), so the effective behavior is error-not-
+    // wrap; only if ANSI were explicitly disabled would a C_t ≥ 1e18
+    // cast or >38-digit product/sum yield NULL silently while the
+    // DuckDB oracle's HUGEINT stays exact.)
+    Query("q_x_kpss", (s, d) => {
+      import org.apache.spark.sql.types.DecimalType
+      val dc = DayGrain.counts(s, d).cut("Round14b.scala:kpss", eager = true)
+      val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
+      val base = dc
+        .withColumn("rn", row_number().over(w).cast("long"))
+        .withColumn("cum", sum(col("c")).over(
+          w.rowsBetween(Window.unboundedPreceding, 0)))
+        .withColumn("hcum", col("cum").cast(DecimalType(18, 0)))
+      val lagged = (1 to KpssL).foldLeft(base) { (df, j) =>
+        df.withColumn(s"l$j", lag(col("c"), j).over(w))
+      }
+      val aggs =
+        Seq(count(lit(1)).as("n"), sum(col("c")).as("sc"),
+          sum(col("c") * col("c")).as("sq"),
+          sum(col("hcum") * col("cum")).as("scc"),
+          sum(col("rn") * col("hcum")).as("stc")) ++
+          (1 to KpssL).flatMap { j =>
+            Seq(sum(col("c") * col(s"l$j")).as(s"p$j"),
+              sum(when(col(s"l$j").isNotNull, col("c"))).as(s"a$j"),
+              sum(col(s"l$j")).as(s"b$j"))
+          }
+      lagged.groupBy(col("event_type")).agg(aggs.head, aggs.tail: _*)
+        .selectExpr("event_type", "n AS n_days",
+          s"""CASE WHEN n > $KpssL AND $LrvTxt > 0
+                THEN round($LrvTxt, 6) ELSE NULL END AS lrv""",
+          s"""CASE WHEN n > $KpssL AND $LrvTxt > 0
+                THEN round($SumS2Txt / (CAST(n AS DOUBLE) * n) / $LrvTxt, 6)
+                ELSE NULL END AS kpss""")
+        .orderBy(col("event_type"))
+    }, Some {
+      // Same cumulative + 7-lag window pass, same prefix-sum expansion
+      // of Σ S_t², same Bartlett weights in the same term order.
       val lagCols = (1 to KpssL)
         .map(j => s"lag(c, $j) OVER (PARTITION BY event_type ORDER BY day) AS l$j")
         .mkString(",\n                 ")
@@ -1615,11 +551,40 @@ object Round14b {
                      THEN round($SumS2Txt / (CAST(n AS DOUBLE) * n) / $LrvTxt, 6)
                      ELSE NULL END AS kpss
          FROM g ORDER BY event_type"""
-    },
+    }),
 
-    // Same moment routing as the q_x_jarque_bera oracle, same Z1/Z2
-    // expression text.
-    "q_x_dagostino" ->
+    // D'Agostino–Pearson K² omnibus normality test per source over
+    // document lengths — the finite-n-calibrated counterpart of
+    // q_x_jarque_bera (which uses the asymptotic χ² form): skewness
+    // through D'Agostino's (1970) Z1 transform, kurtosis through
+    // Anscombe–Glynn's (1983) Z2, K² = Z1² + Z2². Moments follow the
+    // jarque_bera convention exactly (BIGINT s1/s2, DECIMAL-routed
+    // s3/s4, one shared double expression); cube root is the declared
+    // sign-preserving form. DECLARED guard n ≥ 20 (the transforms'
+    // published validity floor) ∧ m2 > 0, NULL otherwise.
+    Query("q_x_dagostino", (s, d) => {
+      import org.apache.spark.sql.types.DecimalType
+      val x2 = col("n_chars") * col("n_chars")
+      table(s, d, "documents")
+        .select(col("source"), col("n_chars"),
+          x2.as("x2"), x2.cast(DecimalType(18, 0)).as("hx"))
+        .groupBy(col("source"))
+        .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("s1"),
+          sum(col("x2")).as("s2"),
+          sum(col("hx") * col("n_chars")).as("s3"),
+          sum(col("hx") * col("hx")).as("s4"))
+        .selectExpr("source", "n",
+          s"""CASE WHEN n >= 20 AND $DaM2 > 0
+                THEN round($DaZ1Txt, 6) ELSE NULL END AS z1""",
+          s"""CASE WHEN n >= 20 AND $DaM2 > 0
+                THEN round($DaZ2Txt, 6) ELSE NULL END AS z2""",
+          s"""CASE WHEN n >= 20 AND $DaM2 > 0
+                THEN round($DaZ1Txt * $DaZ1Txt + $DaZ2Txt * $DaZ2Txt, 6)
+                ELSE NULL END AS k2""")
+        .orderBy(col("source"))
+    }, Some(
+      // Same moment routing as the q_x_jarque_bera oracle, same Z1/Z2
+      // expression text.
       s"""WITH g AS (SELECT source, CAST(count(*) AS BIGINT) AS n,
                  CAST(sum(n_chars) AS BIGINT) AS s1,
                  CAST(sum(n_chars * n_chars) AS BIGINT) AS s2,
@@ -1635,11 +600,41 @@ object Round14b {
                 CASE WHEN n >= 20 AND $DaM2 > 0
                      THEN round($DaZ1Txt * $DaZ1Txt + $DaZ2Txt * $DaZ2Txt, 6)
                      ELSE NULL END AS k2
-         FROM g ORDER BY source""",
+         FROM g ORDER BY source""")),
 
-    // Same pooled-midrank CTE, same exact doubled-rank squares, same
-    // U/V/ρ expression text.
-    "q_x_cucconi" -> {
+    // Cucconi joint location-scale test, each source vs the pooled
+    // corpus (one-vs-rest, DECLARED midranks): U standardizes ΣR²,
+    // V standardizes the contrary ΣR'² (R' = N+1−R), C = (U² + V²
+    // − 2ρUV)/(2(1−ρ²)) with the exact correlation ρ = 2(N²−4)/
+    // ((2N+1)(8N+11)) − 1. Both rank-square sums ride the doubled
+    // midranks: 4ΣR² = Σcnt·r2² and 4ΣR'² = Σcnt·(2(N+1)−r2)² are
+    // exact BIGINTs from the ONE pooled ranking all sources share.
+    // The older two-statistic cousin of q_x_lepage — it senses
+    // location AND scale in one quadratic form. Guard n >= 3: at
+    // pooled N = 2, ρ = −1 zeroes the C denominator 2(1−ρ²), so the
+    // degenerate two-observation corpus surfaces NULL (not NaN/Inf).
+    Query("q_x_cucconi", (s, d) => {
+      val r2c = lit(2L) * (col("n") + 1L) - col("r2")
+      val u = cucconiUTxt("q4")
+      val v = cucconiUTxt("q4c")
+      pooledRanks(s, d)
+        .groupBy(col("source"), col("n"))
+        .agg(sum(col("cnt")).as("n1"),
+          sum(col("cnt") * col("r2") * col("r2")).as("q4"),
+          sum(col("cnt") * r2c * r2c).as("q4c"))
+        .selectExpr("source", "n1 AS n",
+          s"""CASE WHEN n1 >= 1 AND n - n1 >= 1 AND n >= 3
+                THEN round($u, 6) ELSE NULL END AS u""",
+          s"""CASE WHEN n1 >= 1 AND n - n1 >= 1 AND n >= 3
+                THEN round($v, 6) ELSE NULL END AS v""",
+          s"""CASE WHEN n1 >= 1 AND n - n1 >= 1 AND n >= 3
+                THEN round(($u * $u + $v * $v - 2 * $CucconiRhoTxt * $u * $v)
+                  / (2 * (1 - $CucconiRhoTxt * $CucconiRhoTxt)), 6)
+                ELSE NULL END AS c""")
+        .orderBy(col("source"))
+    }, Some {
+      // Same pooled-midrank CTE, same exact doubled-rank squares, same
+      // U/V/ρ expression text.
       val u = cucconiUTxt("q4")
       val v = cucconiUTxt("q4c")
       s"""WITH $PooledRanksSql,
@@ -1657,11 +652,34 @@ object Round14b {
                        / (2 * (1 - $CucconiRhoTxt * $CucconiRhoTxt)), 6)
                      ELSE NULL END AS c
          FROM ps ORDER BY source"""
-    },
+    }),
 
-    // Same pooled ranking, same exact 2W/2A sums, same component
-    // texts.
-    "q_x_lepage" ->
+    // Lepage joint location-scale test, each source vs the pooled
+    // corpus: L = z_W² + z_A² — the standardized Wilcoxon rank sum
+    // (location) plus the standardized Ansari–Bradley score sum
+    // (scale), both riding exact BIGINT doubled sums (2W = Σcnt·r2,
+    // 2A = Σcnt·min(r2, 2(N+1)−r2)) from the same one pooled
+    // ranking; DECLARED no-ties moments for both components (the
+    // q_x_ansari parity-branch text, shared).
+    Query("q_x_lepage", (s, d) => {
+      pooledRanks(s, d)
+        .groupBy(col("source"), col("n"))
+        .agg(sum(col("cnt")).as("n1"),
+          sum(col("cnt") * col("r2")).as("w2"),
+          sum(col("cnt") * least(col("r2"), lit(2L) * (col("n") + 1L) - col("r2")))
+            .as("a2"))
+        .selectExpr("source", "n1 AS n",
+          s"""CASE WHEN n1 >= 1 AND n - n1 >= 1
+                THEN round($WilcoxonZTxt, 6) ELSE NULL END AS z_w""",
+          s"""CASE WHEN n1 >= 1 AND n - n1 >= 1
+                THEN round($AnsariZTxt, 6) ELSE NULL END AS z_a""",
+          s"""CASE WHEN n1 >= 1 AND n - n1 >= 1
+                THEN round($WilcoxonZTxt * $WilcoxonZTxt + $AnsariZTxt * $AnsariZTxt, 6)
+                ELSE NULL END AS l""")
+        .orderBy(col("source"))
+    }, Some(
+      // Same pooled ranking, same exact 2W/2A sums, same component
+      // texts.
       s"""WITH $PooledRanksSql,
          ps AS (SELECT source, max(n) AS n, CAST(sum(cnt) AS BIGINT) AS n1,
                   CAST(sum(cnt * r2) AS BIGINT) AS w2,
@@ -1675,11 +693,36 @@ object Round14b {
                 CASE WHEN n1 >= 1 AND n - n1 >= 1
                      THEN round($WilcoxonZTxt * $WilcoxonZTxt + $AnsariZTxt * $AnsariZTxt, 6)
                      ELSE NULL END AS l
-         FROM ps ORDER BY source""",
+         FROM ps ORDER BY source""")),
 
-    // Same pooled ranking, same exact doubled rank sums, same
-    // tie-corrected z text over the k² pair grid.
-    "q_x_dunn" ->
+    // Dunn's post-hoc pairwise test across sources — the follow-up a
+    // pipeline runs after q_x_kruskal rejects: z_ij = (R̄_i − R̄_j) /
+    // sqrt((N(N+1)/12 − ΣT/(12(N−1)))·(1/n_i + 1/n_j)) with the
+    // standard tie correction ΣT = Σ(t³−t). Mean ranks ride exact
+    // BIGINT doubled rank sums from the ONE pooled ranking; the
+    // all-pairs grid is k² source rows (dims-bounded — the corpus
+    // never enters the pair join).
+    Query("q_x_dunn", (s, d) => {
+      val ps = pooledRanks(s, d)
+        .groupBy(col("source"), col("n"))
+        .agg(sum(col("cnt")).as("n1"), sum(col("cnt") * col("r2")).as("w2"))
+        .cut("Round14b.scala:dunn", eager = true)
+      val ties = table(s, d, "documents")
+        .groupBy(col("n_chars")).agg(count(lit(1)).as("tot"))
+        .agg(sum(col("tot") * col("tot") * col("tot") - col("tot")).as("tsum"))
+      val a = ps.select(col("source").as("source_a"), col("n"),
+        col("n1").as("n1_a"), col("w2").as("w2_a"))
+      val b = ps.select(col("source").as("source_b"),
+        col("n1").as("n1_b"), col("w2").as("w2_b"))
+      a.join(broadcast(b), col("source_a") < col("source_b"))
+        .crossJoin(broadcast(ties))
+        .selectExpr("source_a", "source_b",
+          s"""CASE WHEN n1_a >= 1 AND n1_b >= 1 AND n >= 2
+                THEN round($DunnZTxt, 6) ELSE NULL END AS z""")
+        .orderBy(col("source_a"), col("source_b"))
+    }, Some(
+      // Same pooled ranking, same exact doubled rank sums, same
+      // tie-corrected z text over the k² pair grid.
       s"""WITH $PooledRanksSql,
          ps AS (SELECT source, max(n) AS n, CAST(sum(cnt) AS BIGINT) AS n1,
                   CAST(sum(cnt * r2) AS BIGINT) AS w2
@@ -1692,11 +735,53 @@ object Round14b {
                 CASE WHEN n1_a >= 1 AND n1_b >= 1 AND n >= 2
                      THEN round($DunnZTxt, 6) ELSE NULL END AS z
          FROM pr, ties
-         ORDER BY source_a, source_b""",
+         ORDER BY source_a, source_b""")),
 
-    // Same value-grain pooled + internal midranks, same exact-moment
-    // variance expansion, same W/p̂ text.
-    "q_x_brunner_munzel" -> {
+    // Brunner–Munzel test, each source vs the pooled rest
+    // (DECLARED orientation: group 1 = the source, group 2 = the
+    // complement; p̂ = P(X₁ < X₂) + ½P(X₁ = X₂)). The variance terms
+    // need pooled AND internal midranks — both fall out of the same
+    // value-grain frame (internal doubled midranks are per-source
+    // windows over cnt and tot−cnt), and the per-observation squared
+    // deviations collapse to exact BIGINT moments via the D = 2R−2R_int
+    // expansion, so no double accumulates across rows. W follows
+    // Brunner–Munzel (2000): n1·n2·(m2−m1)/(N·sqrt(n1·v1 + n2·v2)).
+    Query("q_x_brunner_munzel", (s, d) => {
+      val w = Window.partitionBy(col("source")).orderBy(col("n_chars"))
+        .rowsBetween(Window.unboundedPreceding, -1)
+      val rk = pooledRanks(s, d)
+        .withColumn("rcnt", col("tot") - col("cnt"))
+        .withColumn("q2o",
+          lit(2L) * coalesce(sum(col("cnt")).over(w), lit(0L)) + col("cnt") + 1L)
+        .withColumn("q2r",
+          lit(2L) * coalesce(sum(col("rcnt")).over(w), lit(0L)) + col("rcnt") + 1L)
+      val ps = rk.groupBy(col("source"), col("n"))
+        .agg(sum(col("cnt")).as("n1"),
+          sum(col("cnt") * col("r2")).as("w2o"),
+          sum(col("cnt") * (col("r2") - col("q2o"))).as("d1"),
+          sum(col("cnt") * (col("r2") - col("q2o")) * (col("r2") - col("q2o")))
+            .as("d2"),
+          sum(col("rcnt") * col("r2")).as("w2r"),
+          sum(col("rcnt") * (col("r2") - col("q2r"))).as("e1"),
+          sum(col("rcnt") * (col("r2") - col("q2r")) * (col("r2") - col("q2r")))
+            .as("e2"))
+      val m1 = "(CAST(w2o AS DOUBLE) / 2 / n1)"
+      val m2 = "(CAST(w2r AS DOUBLE) / 2 / (n - n1))"
+      val v1 = bmVTxt("d1", "d2", "n1", m1)
+      val v2 = bmVTxt("e1", "e2", "(n - n1)", m2)
+      val guard = s"n1 >= 2 AND n - n1 >= 2 AND (n1 * $v1 + (n - n1) * $v2) > 0"
+      ps.selectExpr("source", "n1 AS n",
+        s"""CASE WHEN $guard
+              THEN round(($m2 - (CAST(n AS DOUBLE) - n1 + 1) / 2) / n1, 6)
+              ELSE NULL END AS p_hat""",
+        s"""CASE WHEN $guard
+              THEN round(CAST(n1 AS DOUBLE) * (n - n1) * ($m2 - $m1)
+                / n / sqrt(n1 * $v1 + (n - n1) * $v2), 6)
+              ELSE NULL END AS w_bm""")
+        .orderBy(col("source"))
+    }, Some {
+      // Same value-grain pooled + internal midranks, same exact-moment
+      // variance expansion, same W/p̂ text.
       val m1 = "(CAST(w2o AS DOUBLE) / 2 / n1)"
       val m2 = "(CAST(w2r AS DOUBLE) / 2 / (n - n1))"
       val v1 = bmVTxt("d1", "d2", "n1", m1)
@@ -1732,12 +817,46 @@ object Round14b {
                        / n / sqrt(n1 * $v1 + (n - n1) * $v2), 6)
                      ELSE NULL END AS w_bm
          FROM ps ORDER BY source"""
-    },
+    }),
 
-    // Same declared framing; the two double folds run as running
-    // windows over the same sorted day/category order as Spark's
-    // sorted-single-partition folds.
-    "q_x_fleiss_kappa" ->
+    // Fleiss' kappa over the event stream: DECLARED framing — each
+    // day is a subject, each event that day is one "rating", the
+    // event type is the category; the varying-raters form P_i =
+    // (Σ_j n_ij² − n_i)/(n_i(n_i−1)) (days with n_i < 2 are excluded
+    // from EVERYTHING — declared). P_i is a ratio of exact integers;
+    // the only cross-row double folds (P̄ over days, P̄_e over
+    // categories) run as sorted-single-partition k-row folds over
+    // calendar-/dims-bounded frames, matching the oracle's running
+    // windows term for term. Measures "are days internally
+    // consistent in their type mix beyond chance".
+    Query("q_x_fleiss_kappa", (s, d) => {
+      val cell = table(s, d, "events")
+        .groupBy(to_date(col("ts")).as("day"), col("event_type"))
+        .agg(count(lit(1)).as("c"))
+        .cut("Round14b.scala:fleiss", eager = true)
+      val di = cell.groupBy(col("day"))
+        .agg(sum(col("c")).as("ni"), sum(col("c") * col("c")).as("sq"))
+        .filter(col("ni") >= 2)
+      val qualDays = di.select(col("day"))
+      val pbar = di.coalesce(1).sortWithinPartitions(col("day"))
+        .agg(count(lit(1)).as("n_days"),
+          avg((col("sq") - col("ni")).cast("double")
+            / (col("ni") * (col("ni") - 1))).as("pbar"))
+      val tot = di.agg(sum(col("ni")).as("nn"))
+      val pj = cell.join(qualDays, "day")
+        .groupBy(col("event_type")).agg(sum(col("c")).as("cj"))
+        .crossJoin(broadcast(tot))
+        .coalesce(1).sortWithinPartitions(col("event_type"))
+        .agg(sum((col("cj").cast("double") / col("nn"))
+          * (col("cj").cast("double") / col("nn"))).as("pe"))
+      pbar.crossJoin(broadcast(pj))
+        .selectExpr("n_days", "round(pbar, 6) AS pbar", "round(pe, 6) AS pe",
+          """CASE WHEN pe < 1 THEN round((pbar - pe) / (1 - pe), 6)
+               ELSE NULL END AS kappa""")
+    }, Some(
+      // Same declared framing; the two double folds run as running
+      // windows over the same sorted day/category order as Spark's
+      // sorted-single-partition folds.
       """WITH cell AS (SELECT CAST(ts AS DATE) AS day, event_type,
                   CAST(count(*) AS BIGINT) AS c
                 FROM events GROUP BY 1, 2),
@@ -1762,11 +881,44 @@ object Round14b {
          SELECT n_days, round(pbar, 6) AS pbar, round(pe, 6) AS pe,
                 CASE WHEN pe < 1 THEN round((pbar - pe) / (1 - pe), 6)
                      ELSE NULL END AS kappa
-         FROM pbar, pj""",
+         FROM pbar, pj""")),
 
-    // Same declared spine framing; the cross-item variance sum runs
-    // as a running window in the same item order.
-    "q_x_cronbach" ->
+    // Cronbach's alpha over the event stream: DECLARED framing —
+    // event types are the k items, days are subjects, the item score
+    // is the daily count with missing (type, day) cells = 0 on the
+    // calendar spine of ALL observed days (a type that skips a day
+    // genuinely scored 0). α = k/(k−1)·(1 − Σᵢσ²ᵢ/σ²_tot), sample
+    // variances; per-item Σc/Σc² are exact BIGINTs (zero cells add
+    // zero, so observed-row sums ARE spine sums — only D changes),
+    // daily totals fold at day grain, and the single cross-item
+    // double sum runs as a sorted k-row fold.
+    Query("q_x_cronbach", (s, d) => {
+      val dc = DayGrain.counts(s, d).cut("Round14b.scala:cronbach", eager = true)
+      val spine = dc.agg(countDistinct(col("day")).as("dd"),
+        countDistinct(col("event_type")).as("k"))
+      val items = dc.groupBy(col("event_type"))
+        .agg(sum(col("c")).as("sc"), sum(col("c") * col("c")).as("sq"))
+        .crossJoin(broadcast(spine))
+        .coalesce(1).sortWithinPartitions(col("event_type"))
+        .agg(max(col("dd")).as("dd"), max(col("k")).as("k"),
+          sum((col("sq") - col("sc").cast("double") * col("sc") / col("dd"))
+            / (col("dd") - 1)).as("svi"))
+      val totals = dc.groupBy(col("day")).agg(sum(col("c")).as("t"))
+        .agg(sum(col("t")).as("st"), sum(col("t") * col("t")).as("stq"))
+      items.crossJoin(broadcast(totals))
+        .selectExpr("k", "dd AS n_days",
+          """CASE WHEN dd >= 2
+              THEN round((CAST(stq AS DOUBLE) - CAST(st AS DOUBLE) * st / dd) / (dd - 1), 6)
+              ELSE NULL END AS var_total""",
+          """CASE WHEN k >= 2 AND dd >= 2
+                   AND (CAST(stq AS DOUBLE) - CAST(st AS DOUBLE) * st / dd) > 0
+              THEN round(CAST(k AS DOUBLE) / (k - 1)
+                * (1 - svi / ((CAST(stq AS DOUBLE) - CAST(st AS DOUBLE) * st / dd)
+                    / (dd - 1))), 6)
+              ELSE NULL END AS alpha""")
+    }, Some(
+      // Same declared spine framing; the cross-item variance sum runs
+      // as a running window in the same item order.
       """WITH dc AS (SELECT event_type, CAST(ts AS DATE) AS day,
                   CAST(count(*) AS BIGINT) AS c
                 FROM events GROUP BY 1, 2),
@@ -1796,29 +948,87 @@ object Round14b {
                    * (1 - svi / ((CAST(stq AS DOUBLE) - CAST(st AS DOUBLE) * st / dd)
                        / (dd - 1))), 6)
                  ELSE NULL END AS alpha
-         FROM items, totals""",
+         FROM items, totals""")),
 
-    // Same declared bucketing, same doubled pair-grid sums.
-    "q_x_gamma" ->
+    // Goodman–Kruskal gamma per source between two DECLARED ordinal
+    // bucketings of documents — x = ⌊n_chars/500⌋ (length class),
+    // y = ⌊whitespace-token count/100⌋ (token class): γ = (C−D)/(C+D)
+    // ignoring all ties. One corpus pass builds the (source, x, y)
+    // contingency cells; the ordered pair grid (each unordered pair
+    // twice — 2C/2D stay exact BIGINTs) is cells², bounded by the
+    // bucket alphabet, never the corpus.
+    Query("q_x_gamma", (s, d) => {
+      ordinalPairSums(s, d)
+        .selectExpr("source", "c2", "d2",
+          """CASE WHEN c2 + d2 > 0
+              THEN round(CAST(c2 - d2 AS DOUBLE) / (c2 + d2), 6)
+              ELSE NULL END AS gamma""")
+        .orderBy(col("source"))
+    }, Some(
+      // Same declared bucketing, same doubled pair-grid sums.
       s"""WITH $OrdinalCellsSql
          SELECT source, c2, d2,
                 CASE WHEN c2 + d2 > 0
                      THEN round(CAST(c2 - d2 AS DOUBLE) / (c2 + d2), 6)
                      ELSE NULL END AS gamma
-         FROM ps ORDER BY source""",
+         FROM ps ORDER BY source""")),
 
-    // Same sums plus the tied-on-y charge.
-    "q_x_somers_d" ->
+    // Somers' D (y | x) per source over the same declared ordinal
+    // bucketings: D_yx = (C−D)/(C+D+T_y) — gamma's asymmetric cousin
+    // that charges pairs tied on the dependent y (but split on x)
+    // against the association. Same exact doubled pair sums.
+    Query("q_x_somers_d", (s, d) => {
+      ordinalPairSums(s, d)
+        .selectExpr("source", "c2", "d2", "ty2",
+          """CASE WHEN c2 + d2 + ty2 > 0
+              THEN round(CAST(c2 - d2 AS DOUBLE) / (c2 + d2 + ty2), 6)
+              ELSE NULL END AS somers_d""")
+        .orderBy(col("source"))
+    }, Some(
+      // Same sums plus the tied-on-y charge.
       s"""WITH $OrdinalCellsSql
          SELECT source, c2, d2, ty2,
                 CASE WHEN c2 + d2 + ty2 > 0
                      THEN round(CAST(c2 - d2 AS DOUBLE) / (c2 + d2 + ty2), 6)
                      ELSE NULL END AS somers_d
-         FROM ps ORDER BY source""",
+         FROM ps ORDER BY source""")),
 
-    // Same declared offset/tie/z conventions over the same rn-offset
-    // pair join.
-    "q_x_cox_stuart" ->
+    // Cox–Stuart trend sign test per event type over daily counts
+    // (observation-index grain, DECLARED conventions: offset
+    // c = ceil(n/2) — an odd series drops its middle observation —
+    // tied pairs discarded, and the plain no-continuity normal form
+    // z = (2S⁺ − n')/√n'). The nonparametric "is the second half
+    // bigger" complement of q_x_mann_kendall (which weighs ALL
+    // pairs): one pass to day grain, one rn-offset self-join at
+    // calendar-bounded size.
+    Query("q_x_cox_stuart", (s, d) => {
+      val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
+      val dc = DayGrain.counts(s, d).cut("Round14b.scala:cox_stuart", eager = true)
+        .withColumn("rn", row_number().over(w).cast("long"))
+        .withColumn("nd", count(lit(1)).over(
+          Window.partitionBy(col("event_type"))))
+      val a = dc.select(col("event_type"), col("rn"), col("nd"), col("c").as("ca"))
+      val b = dc.select(col("event_type"), col("rn").as("rn_b"), col("c").as("cb"))
+      val pairs = a.join(b, a("event_type") === b("event_type") &&
+          col("rn_b") === col("rn") + ceil(col("nd") / 2).cast("long"))
+        .drop(b("event_type"))
+        .groupBy(col("event_type"))
+        .agg(sum(when(col("cb") > col("ca"), 1L).otherwise(0L)).as("sp"),
+          sum(when(col("cb") < col("ca"), 1L).otherwise(0L)).as("sm"))
+      // left join: a one-observation type has no pairs — it surfaces
+      // with s_plus = s_minus = 0 and NULL z, never a dropped row.
+      dc.groupBy(col("event_type")).agg(max(col("nd")).as("n_days"))
+        .join(pairs, Seq("event_type"), "left")
+        .withColumn("sp", coalesce(col("sp"), lit(0L)))
+        .withColumn("sm", coalesce(col("sm"), lit(0L)))
+        .selectExpr("event_type", "n_days", "sp AS s_plus", "sm AS s_minus",
+          """CASE WHEN sp + sm > 0
+              THEN round(CAST(2 * sp - (sp + sm) AS DOUBLE) / sqrt(CAST(sp + sm AS DOUBLE)), 6)
+              ELSE NULL END AS z""")
+        .orderBy(col("event_type"))
+    }, Some(
+      // Same declared offset/tie/z conventions over the same rn-offset
+      // pair join.
       s"""WITH $OracleDc,
          o AS (SELECT event_type, c,
                  CAST(row_number() OVER (PARTITION BY event_type ORDER BY day) AS BIGINT) AS rn,
@@ -1840,11 +1050,56 @@ object Round14b {
                 CASE WHEN sp + sm > 0
                  THEN round(CAST(2 * sp - (sp + sm) AS DOUBLE) / sqrt(CAST(sp + sm AS DOUBLE)), 6)
                  ELSE NULL END AS z
-         FROM g ORDER BY event_type""",
+         FROM g ORDER BY event_type""")),
 
-    // Same within-season pair grid, per-season tie corrections, and
-    // sign-corrected z text.
-    "q_x_mk_seasonal" ->
+    // Seasonal Mann–Kendall per event type (DECLARED season =
+    // epoch_day mod 7 — the calendar-keyed weekday, the holt_winters
+    // device): S = Σ_seasons S_s and Var = Σ_seasons [n_s(n_s−1)
+    // (2n_s+5) − Σt(t−1)(2t+5)]/18 with per-season tie corrections —
+    // pairs are only compared WITHIN a season, so a strong weekly
+    // cycle no longer drowns the monotone trend q_x_mann_kendall
+    // sees through it. Same sign-corrected z as mann_kendall; all
+    // sums exact BIGINT, one division at the end.
+    Query("q_x_mk_seasonal", (s, d) => {
+      val dc = DayGrain.counts(s, d)
+        .withColumn("slot",
+          datediff(col("day"), lit("1970-01-01").cast("date")).cast("long") % 7)
+        .cut("Round14b.scala:mk_seasonal", eager = true)
+      val a = dc.select(col("event_type"), col("slot"), col("day").as("da"),
+        col("c").as("ca"))
+      val b = dc.select(col("event_type"), col("slot"), col("day").as("db"),
+        col("c").as("cb"))
+      val sTab = a.join(b, Seq("event_type", "slot"))
+        .filter(col("da") < col("db"))
+        .groupBy(col("event_type"))
+        .agg(sum(when(col("cb") > col("ca"), 1L)
+          .when(col("cb") < col("ca"), -1L).otherwise(0L)).as("s"))
+      val nTab = dc.groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n_days"))
+      val varTab = dc.groupBy(col("event_type"), col("slot"))
+        .agg(count(lit(1)).as("ns"))
+        .groupBy(col("event_type"))
+        .agg(sum(col("ns") * (col("ns") - 1) * (lit(2L) * col("ns") + 5)).as("vn"))
+      val tieTab = dc.groupBy(col("event_type"), col("slot"), col("c"))
+        .agg(count(lit(1)).as("t"))
+        .groupBy(col("event_type"))
+        .agg(sum(col("t") * (col("t") - 1) * (lit(2L) * col("t") + 5)).as("vt"))
+      // left join + coalesce: a type whose every season has ≤ 1 day
+      // has NO comparable pairs — it surfaces with s = 0 (and z from
+      // the variance guard), never a dropped row.
+      nTab.join(varTab, "event_type").join(tieTab, "event_type")
+        .join(sTab, Seq("event_type"), "left")
+        .withColumn("s", coalesce(col("s"), lit(0L)))
+        .selectExpr("event_type", "n_days", "s",
+          """CASE WHEN vn - vt > 0
+              THEN round(CAST(CASE WHEN s > 0 THEN s - 1
+                                   WHEN s < 0 THEN s + 1 ELSE 0 END AS DOUBLE)
+                / sqrt(CAST(vn - vt AS DOUBLE) / 18), 6)
+              ELSE NULL END AS z""")
+        .orderBy(col("event_type"))
+    }, Some(
+      // Same within-season pair grid, per-season tie corrections, and
+      // sign-corrected z text.
       s"""WITH $OracleDc,
          ds AS (SELECT event_type, day, c,
                   CAST(day - DATE '1970-01-01' AS BIGINT) % 7 AS slot
@@ -1878,11 +1133,48 @@ object Round14b {
          FROM n JOIN vn ON vn.event_type = n.event_type
            JOIN vt ON vt.event_type = n.event_type
            LEFT JOIN s ON s.event_type = n.event_type
-         ORDER BY n.event_type""",
+         ORDER BY n.event_type""")),
 
-    // Same declared pairing/zero-discard/midrank conventions; the
-    // doubled-rank device keeps both engines in exact integers.
-    "q_x_wilcoxon_signed" ->
+    // Wilcoxon signed-rank test per event type on week-over-week
+    // paired differences (DECLARED: pairs are calendar days exactly 7
+    // apart, d = c_t − c_{t−7}, zero differences discarded — the
+    // standard convention — and midranks of |d|). The doubled-rank
+    // device keeps EVERYTHING exact BIGINT: 2W = Σ sign·2r, and under
+    // sign-flips Var(2W) = Σ(2r)² exactly EVEN WITH TIES, so
+    // z = 2W/√Σcnt·(2r)² needs no tie-correction approximation.
+    // Pairless types surface with 0/NULL via left join.
+    Query("q_x_wilcoxon_signed", (s, d) => {
+      val dc = DayGrain.counts(s, d).cut("Round14b.scala:wilcoxon", eager = true)
+      val a = dc.select(col("event_type"), col("day").as("da"), col("c").as("ca"))
+      val b = dc.select(col("event_type"), col("day").as("db"), col("c").as("cb"))
+      val diffs = a.join(b, Seq("event_type"))
+        .filter(col("db") === date_add(col("da"), 7))
+        .select(col("event_type"), (col("cb") - col("ca")).as("dv"))
+        .filter(col("dv") =!= 0L)
+      val cells = diffs
+        .groupBy(col("event_type"), abs(col("dv")).as("av"))
+        .agg(count(lit(1)).as("cnt"),
+          sum(signum(col("dv")).cast("long")).as("sgn"))
+      val w = Window.partitionBy(col("event_type")).orderBy(col("av"))
+        .rowsBetween(Window.unboundedPreceding, -1)
+      val ranked = cells.withColumn("r2",
+        lit(2L) * coalesce(sum(col("cnt")).over(w), lit(0L)) + col("cnt") + 1L)
+      val ps = ranked.groupBy(col("event_type"))
+        .agg(sum(col("cnt")).as("np"),
+          sum(col("sgn") * col("r2")).as("w2"),
+          sum(col("cnt") * col("r2") * col("r2")).as("v4"))
+      dc.groupBy(col("event_type")).agg(count(lit(1)).as("n_days"))
+        .join(ps, Seq("event_type"), "left")
+        .withColumn("np", coalesce(col("np"), lit(0L)))
+        .withColumn("w2", coalesce(col("w2"), lit(0L)))
+        .selectExpr("event_type", "n_days", "np AS n_pairs", "w2",
+          """CASE WHEN np >= 1 AND v4 > 0
+              THEN round(CAST(w2 AS DOUBLE) / sqrt(CAST(v4 AS DOUBLE)), 6)
+              ELSE NULL END AS z""")
+        .orderBy(col("event_type"))
+    }, Some(
+      // Same declared pairing/zero-discard/midrank conventions; the
+      // doubled-rank device keeps both engines in exact integers.
       s"""WITH $OracleDc,
          df AS (SELECT a.event_type, b.c - a.c AS dv
                 FROM dc a JOIN dc b ON b.event_type = a.event_type
@@ -1909,11 +1201,42 @@ object Round14b {
                  THEN round(CAST(COALESCE(ps.w2, 0) AS DOUBLE) / sqrt(CAST(ps.v4 AS DOUBLE)), 6)
                  ELSE NULL END AS z
          FROM n LEFT JOIN ps ON ps.event_type = n.event_type
-         ORDER BY n.event_type""",
+         ORDER BY n.event_type""")),
 
-    // Same three n·ln(n) folds (running windows in the same category
-    // order) and shared entropy/U text.
-    "q_x_theil_u" -> {
+    // Theil's uncertainty coefficient between source and lang — the
+    // ASYMMETRIC, normalized cousin of q_x_mi (which is symmetric MI
+    // over length buckets) and q_x_chisq (χ²/Cramérs V on this same
+    // pair): U(Y|X) = (H(Y) − H(Y|X))/H(Y) answers "what fraction of
+    // lang-uncertainty does knowing source remove", in both
+    // directions. Everything reduces to three n·ln(n) sums over the
+    // bounded category/cell alphabets (zero cells add their 0 limit
+    // by omission), each folded sorted-single-partition; DECLARED
+    // natural log.
+    Query("q_x_theil_u", (s, d) => {
+      val docs = table(s, d, "documents").select(col("source"), col("lang"))
+      val nn = docs.agg(count(lit(1)).as("n"))
+      def nlogn(df: DataFrame, keys: Seq[String], alias: String): DataFrame =
+        df.groupBy(keys.map(col): _*).agg(count(lit(1)).as("cnt"))
+          .coalesce(1).sortWithinPartitions(keys.map(col): _*)
+          .agg(sum(col("cnt") * log(col("cnt"))).as(alias))
+      val sx = nlogn(docs, Seq("source"), "sx")
+      val sy = nlogn(docs, Seq("lang"), "sy")
+      val sxy = nlogn(docs, Seq("source", "lang"), "sxy")
+      val hY = "(ln(CAST(n AS DOUBLE)) - sy / n)"
+      val hX = "(ln(CAST(n AS DOUBLE)) - sx / n)"
+      val miT = s"($hY - (sx / CAST(n AS DOUBLE) - sxy / n))"
+      sx.crossJoin(broadcast(sy)).crossJoin(broadcast(sxy))
+        .crossJoin(broadcast(nn))
+        .selectExpr("n",
+          s"round($hY, 6) AS h_lang", s"round($hX, 6) AS h_source",
+          s"round($miT, 6) AS mi",
+          s"""CASE WHEN $hY > 0 THEN round($miT / $hY, 6)
+               ELSE NULL END AS u_lang_given_source""",
+          s"""CASE WHEN $hX > 0 THEN round($miT / $hX, 6)
+               ELSE NULL END AS u_source_given_lang""")
+    }, Some {
+      // Same three n·ln(n) folds (running windows in the same category
+      // order) and shared entropy/U text.
       val hY = "(ln(CAST(n AS DOUBLE)) - sy / n)"
       val hX = "(ln(CAST(n AS DOUBLE)) - sx / n)"
       val miT = s"($hY - (sx / CAST(n AS DOUBLE) - sxy / n))"
@@ -1941,11 +1264,60 @@ object Round14b {
                 CASE WHEN $hX > 0 THEN round($miT / $hX, 6)
                      ELSE NULL END AS u_source_given_lang
          FROM sx, sy, sxy, nn"""
-    },
+    }),
 
-    // Same full-week blocks, within-week doubled midranks, exact S4
-    // and tie folds, and the k = 7 closed form.
-    "q_x_kendall_w" ->
+    // Kendall's coefficient of concordance W across full calendar
+    // weeks (blocks) rating the 7 weekday positions (treatments) —
+    // "do weeks agree on the weekday ordering of activity", the
+    // normalized effect size next to q_x_page_trend's directional L:
+    // with doubled within-week midranks, S4 = Σ_j(2R_j − m·2(k+1)/2)²
+    // = Σ_j(R2_j − 8m)² is exact BIGINT, and the tie term Σ(t³−t)
+    // folds per week, so W = 3·S4/(m²k(k²−1) − m·ΣT)·(1/4)·... — one
+    // exact division at the end. DECLARED k = 7, full weeks only.
+    Query("q_x_kendall_w", (s, d) => {
+      val dc = DayGrain.counts(s, d)
+        .withColumn("wk",
+          floor(datediff(col("day"), lit("1970-01-01").cast("date")) / lit(7.0))
+            .cast("long"))
+        .withColumn("slot",
+          datediff(col("day"), lit("1970-01-01").cast("date")).cast("long") % 7)
+        .cut("Round14b.scala:kendall_w", eager = true)
+      val agg = dc.groupBy(col("event_type"), col("wk"), col("slot"))
+        .agg(sum(col("c")).as("v"))
+      val full = agg.groupBy(col("event_type"), col("wk"))
+        .agg(count(lit(1)).as("nslots"))
+        .filter(col("nslots") === 7).select(col("event_type"), col("wk"))
+      val cells = agg.join(full, Seq("event_type", "wk"))
+      // within-week doubled midranks of the 7 slot values
+      val wv = Window.partitionBy(col("event_type"), col("wk")).orderBy(col("v"))
+        .rangeBetween(Window.unboundedPreceding, -1)
+      val we = Window.partitionBy(col("event_type"), col("wk")).orderBy(col("v"))
+        .rangeBetween(0, 0)
+      val ranked = cells
+        .withColumn("below", coalesce(count(lit(1)).over(wv), lit(0L)))
+        .withColumn("tied", count(lit(1)).over(we))
+        .withColumn("r2", lit(2L) * col("below") + col("tied") + 1L)
+      val rj = ranked.groupBy(col("event_type"), col("slot"))
+        .agg(sum(col("r2")).as("r2j"), count(lit(1)).as("m"))
+      val ties = ranked.groupBy(col("event_type"), col("wk"), col("v"))
+        .agg(count(lit(1)).as("t"))
+        .groupBy(col("event_type"))
+        .agg(sum(col("t") * col("t") * col("t") - col("t")).as("tsum"))
+      val s4 = rj.groupBy(col("event_type"))
+        .agg(max(col("m")).as("m"),
+          sum((col("r2j") - lit(8L) * col("m")) * (col("r2j") - lit(8L) * col("m")))
+            .as("s4"))
+      s4.join(ties, "event_type")
+        .selectExpr("event_type", "m AS n_weeks",
+          """CASE WHEN m >= 1
+               AND (CAST(m AS DOUBLE) * m * 336 - CAST(m AS DOUBLE) * tsum) > 0
+              THEN round(3 * CAST(s4 AS DOUBLE)
+                / (CAST(m AS DOUBLE) * m * 336 - CAST(m AS DOUBLE) * tsum), 6)
+              ELSE NULL END AS w""")
+        .orderBy(col("event_type"))
+    }, Some(
+      // Same full-week blocks, within-week doubled midranks, exact S4
+      // and tie folds, and the k = 7 closed form.
       s"""WITH $OracleDc,
          ds AS (SELECT event_type,
                   CAST(floor(CAST(day - DATE '1970-01-01' AS DOUBLE) / 7) AS BIGINT) AS wk,
@@ -1981,10 +1353,32 @@ object Round14b {
                    / (CAST(s4.m AS DOUBLE) * s4.m * 336 - CAST(s4.m AS DOUBLE) * ties.tsum), 6)
                  ELSE NULL END AS w
          FROM s4 JOIN ties ON ties.event_type = s4.event_type
-         ORDER BY s4.event_type""",
+         ORDER BY s4.event_type""")),
 
-    // Same strict-triple convention and textbook moments.
-    "q_x_turning_points" ->
+    // Turning-point randomness test per event type (observation-index
+    // grain): T = #{t : x_t is a strict local max or min among
+    // (x_{t−1}, x_t, x_{t+1})} — DECLARED strict (any tie in the
+    // triple contributes nothing, the classic convention), with the
+    // textbook moments E[T] = 2(n−2)/3, Var[T] = (16n−29)/90. One
+    // two-lag window pass; counts exact; one shared z expression.
+    Query("q_x_turning_points", (s, d) => {
+      val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
+      DayGrain.counts(s, d).cut("Round14b.scala:turning", eager = true)
+        .withColumn("p", lag(col("c"), 1).over(w))
+        .withColumn("f", lead(col("c"), 1).over(w))
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n"),
+          sum(when((col("c") > col("p") && col("c") > col("f")) ||
+            (col("c") < col("p") && col("c") < col("f")), 1L)
+            .otherwise(0L)).as("t"))
+        .selectExpr("event_type", "n AS n_days", "t AS turning",
+          """CASE WHEN n >= 4
+              THEN round((CAST(t AS DOUBLE) - 2 * (CAST(n AS DOUBLE) - 2) / 3)
+                / sqrt((16 * CAST(n AS DOUBLE) - 29) / 90), 6)
+              ELSE NULL END AS z""")
+        .orderBy(col("event_type"))
+    }, Some(
+      // Same strict-triple convention and textbook moments.
       s"""WITH $OracleDc,
          lg AS (SELECT event_type, c,
                  lag(c, 1) OVER (PARTITION BY event_type ORDER BY day) AS p,
@@ -1999,11 +1393,41 @@ object Round14b {
                  THEN round((CAST(t AS DOUBLE) - 2 * (CAST(n AS DOUBLE) - 2) / 3)
                    / sqrt((16 * CAST(n AS DOUBLE) - 29) / 90), 6)
                  ELSE NULL END AS z
-         FROM g ORDER BY event_type""",
+         FROM g ORDER BY event_type""")),
 
-    // Same doubled-midrank sums (RANGE-frame rank windows) and
-    // declared asymptotic variance.
-    "q_x_bartels" ->
+    // Bartels' rank von Neumann ratio per event type — q_x_von_neumann
+    // run on MIDRANKS of the daily counts, the distribution-robust
+    // form: rvn = Σ(r_t − r_{t+1})²/Σ(r − r̄)². Doubled midranks keep
+    // both sums exact BIGINT (r̄ doubles to exactly n+1); z uses the
+    // DECLARED asymptotic Var = 4/n. Constant series (denominator 0)
+    // surface NULL.
+    Query("q_x_bartels", (s, d) => {
+      val dc = DayGrain.counts(s, d).cut("Round14b.scala:bartels", eager = true)
+      val wv = Window.partitionBy(col("event_type")).orderBy(col("c"))
+        .rangeBetween(Window.unboundedPreceding, -1)
+      val we = Window.partitionBy(col("event_type")).orderBy(col("c"))
+        .rangeBetween(0, 0)
+      val wd = Window.partitionBy(col("event_type")).orderBy(col("day"))
+      dc.withColumn("r2", lit(2L) * count(lit(1)).over(wv)
+          + count(lit(1)).over(we) + 1L)
+        .withColumn("r2n", lead(col("r2"), 1).over(wd))
+        .withColumn("nn", count(lit(1)).over(
+          Window.partitionBy(col("event_type"))))
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n"),
+          sum((col("r2") - col("r2n")) * (col("r2") - col("r2n"))).as("nm4"),
+          sum((col("r2") - (col("nn") + 1L)) * (col("r2") - (col("nn") + 1L)))
+            .as("dn4"))
+        .selectExpr("event_type", "n AS n_days",
+          """CASE WHEN n >= 2 AND dn4 > 0
+              THEN round(CAST(nm4 AS DOUBLE) / dn4, 6) ELSE NULL END AS rvn""",
+          """CASE WHEN n >= 2 AND dn4 > 0
+              THEN round((CAST(nm4 AS DOUBLE) / dn4 - 2) / sqrt(4.0 / n), 6)
+              ELSE NULL END AS z""")
+        .orderBy(col("event_type"))
+    }, Some(
+      // Same doubled-midrank sums (RANGE-frame rank windows) and
+      // declared asymptotic variance.
       s"""WITH $OracleDc,
          rk AS (SELECT event_type, day,
                   2 * CAST(count(*) OVER (PARTITION BY event_type ORDER BY c
@@ -2025,11 +1449,66 @@ object Round14b {
                 CASE WHEN n >= 2 AND dn4 > 0
                  THEN round((CAST(nm4 AS DOUBLE) / dn4 - 2) / sqrt(4.0 / n), 6)
                  ELSE NULL END AS z
-         FROM g ORDER BY event_type""",
+         FROM g ORDER BY event_type""")),
 
-    // Same full-week blocks, doubled midranks in both directions,
-    // exact A16/SN sums, same F text.
-    "q_x_quade" ->
+    // Quade test per event type — the block-weighted Friedman over
+    // full calendar weeks (blocks) × 7 weekday positions: blocks with
+    // a larger within-week RANGE carry proportionally more weight
+    // (Friedman treats a flat week and a wild week equally). With
+    // doubled midranks in BOTH directions (Q2 = doubled block-range
+    // midrank across weeks, r2 = doubled within-week midrank),
+    // S16_bj = Q2_b·(r2_bj − 8) is exact BIGINT, so A16 = ΣS16² and
+    // SN = Σ_j(Σ_b S16)² are exact and F = (m−1)·(SN/m)/(A16 − SN/m)
+    // is one shared expression. DECLARED k = 7, full weeks only;
+    // degenerate A = B surfaces NULL.
+    Query("q_x_quade", (s, d) => {
+      val dc = DayGrain.counts(s, d)
+        .withColumn("wk",
+          floor(datediff(col("day"), lit("1970-01-01").cast("date")) / lit(7.0))
+            .cast("long"))
+        .withColumn("slot",
+          datediff(col("day"), lit("1970-01-01").cast("date")).cast("long") % 7)
+        .cut("Round14b.scala:quade", eager = true)
+      val agg = dc.groupBy(col("event_type"), col("wk"), col("slot"))
+        .agg(sum(col("c")).as("v"))
+      val full = agg.groupBy(col("event_type"), col("wk"))
+        .agg(count(lit(1)).as("nslots"),
+          (max(col("v")) - min(col("v"))).as("rng"))
+        .filter(col("nslots") === 7)
+      // doubled midranks of the block ranges across weeks (per type)
+      val bv = Window.partitionBy(col("event_type")).orderBy(col("rng"))
+        .rangeBetween(Window.unboundedPreceding, -1)
+      val be = Window.partitionBy(col("event_type")).orderBy(col("rng"))
+        .rangeBetween(0, 0)
+      val blocks = full.withColumn("q2",
+        lit(2L) * count(lit(1)).over(bv) + count(lit(1)).over(be) + 1L)
+      val cells = agg.join(blocks.select(col("event_type"), col("wk"), col("q2")),
+        Seq("event_type", "wk"))
+      val wv = Window.partitionBy(col("event_type"), col("wk")).orderBy(col("v"))
+        .rangeBetween(Window.unboundedPreceding, -1)
+      val we = Window.partitionBy(col("event_type"), col("wk")).orderBy(col("v"))
+        .rangeBetween(0, 0)
+      val ranked = cells
+        .withColumn("r2", lit(2L) * count(lit(1)).over(wv)
+          + count(lit(1)).over(we) + 1L)
+        .withColumn("s16", col("q2") * (col("r2") - 8L))
+      val perSlot = ranked.groupBy(col("event_type"), col("slot"))
+        .agg(sum(col("s16")).as("n16"), count(lit(1)).as("m"))
+      val sn = perSlot.groupBy(col("event_type"))
+        .agg(max(col("m")).as("m"), sum(col("n16") * col("n16")).as("sn"))
+      val a16 = ranked.groupBy(col("event_type"))
+        .agg(sum(col("s16") * col("s16")).as("a16"))
+      sn.join(a16, "event_type")
+        .selectExpr("event_type", "m AS n_weeks",
+          """CASE WHEN m >= 2
+               AND (CAST(a16 AS DOUBLE) - CAST(sn AS DOUBLE) / m) > 0
+              THEN round((CAST(m AS DOUBLE) - 1) * (CAST(sn AS DOUBLE) / m)
+                / (CAST(a16 AS DOUBLE) - CAST(sn AS DOUBLE) / m), 6)
+              ELSE NULL END AS f""")
+        .orderBy(col("event_type"))
+    }, Some(
+      // Same full-week blocks, doubled midranks in both directions,
+      // exact A16/SN sums, same F text.
       s"""WITH $OracleDc,
          ds AS (SELECT event_type,
                   CAST(floor(CAST(day - DATE '1970-01-01' AS DOUBLE) / 7) AS BIGINT) AS wk,
@@ -2070,11 +1549,53 @@ object Round14b {
                    / (CAST(a16.a16 AS DOUBLE) - CAST(sn.sn AS DOUBLE) / sn.m), 6)
                  ELSE NULL END AS f
          FROM sn JOIN a16 ON a16.event_type = sn.event_type
-         ORDER BY sn.event_type""",
+         ORDER BY sn.event_type""")),
 
-    // Same declared midpoint/modal-tie/both-halves conventions; the
-    // χ² folds over the same sorted pair order.
-    "q_x_bowker" ->
+    // Bowker's test of symmetry on each user's modal event type,
+    // first corpus half vs second (DECLARED: halves split at the
+    // midpoint micros (min+max)/2 of the event window, modal-type
+    // ties break to the lexicographically smallest type, and only
+    // users active in BOTH halves enter — the k×k generalization of
+    // q_x_mcnemar): χ² = Σ_{i<j}(n_ij−n_ji)²/(n_ij+n_ji) over pairs
+    // with traffic, df = #such pairs. Corpus work is one per-
+    // (user, half, type) aggregate; the χ² folds over ≤ k(k−1)/2
+    // cells, sorted.
+    Query("q_x_bowker", (s, d) => {
+      val ev = table(s, d, "events")
+        .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("tm"))
+      val mid = ev.agg(((min(col("tm")) + max(col("tm"))) / lit(2L)).as("mid"))
+      val halves = ev.crossJoin(broadcast(mid))
+        .withColumn("half", when(col("tm") <= col("mid"), lit("h1")).otherwise(lit("h2")))
+        .groupBy(col("user_id"), col("half"), col("event_type"))
+        .agg(count(lit(1)).as("cnt"))
+      val wm = Window.partitionBy(col("user_id"), col("half"))
+        .orderBy(col("cnt").desc, col("event_type"))
+      val modal = halves.withColumn("rn", row_number().over(wm))
+        .filter(col("rn") === 1)
+        .select(col("user_id"), col("half"), col("event_type"))
+      val both = modal.groupBy(col("user_id"))
+        .pivot("half", Seq("h1", "h2")).agg(first(col("event_type")))
+        .filter(col("h1").isNotNull && col("h2").isNotNull)
+        .select(col("user_id"), col("h1").as("ta"), col("h2").as("tb"))
+        .cut("Round14b.scala:bowker", eager = true)
+      val nu = both.agg(count(lit(1)).as("n_users"))
+      val cellCnt = both.groupBy(col("ta"), col("tb")).agg(count(lit(1)).as("n"))
+      val up = cellCnt.filter(col("ta") < col("tb"))
+        .select(col("ta").as("i"), col("tb").as("j"), col("n").as("nij"))
+      val dn = cellCnt.filter(col("ta") > col("tb"))
+        .select(col("tb").as("i"), col("ta").as("j"), col("n").as("nji"))
+      val pairs = up.join(dn, Seq("i", "j"), "full")
+        .na.fill(0L, Seq("nij", "nji"))
+      pairs.coalesce(1).sortWithinPartitions(col("i"), col("j"))
+        .agg(count(lit(1)).as("df"),
+          sum((col("nij") - col("nji")).cast("double")
+            * (col("nij") - col("nji"))
+            / (col("nij") + col("nji"))).as("chi2"))
+        .crossJoin(broadcast(nu))
+        .selectExpr("n_users", "df", "round(chi2, 6) AS chi2")
+    }, Some(
+      // Same declared midpoint/modal-tie/both-halves conventions; the
+      // χ² folds over the same sorted pair order.
       """WITH ev AS (SELECT user_id, event_type, epoch_us(ts) AS tm FROM events),
          mid AS (SELECT (min(tm) + max(tm)) / 2 AS mid FROM ev),
          halves AS (SELECT user_id,
@@ -2108,11 +1629,36 @@ object Round14b {
                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run
                     FROM pairs))
          SELECT nu.n_users, agg.df, round(agg.chi2, 6) AS chi2
-         FROM agg, nu""",
+         FROM agg, nu""")),
 
-    // Same pooled-median proportion and shared arcsine text over the
-    // pair grid.
-    "q_x_cohen_h" ->
+    // Cohen's h between every source pair — the effect size for the
+    // PROPORTION of long documents (DECLARED: p_i = share of docs
+    // with n_chars strictly above the pooled median, the engines'
+    // shared exact-median convention): h = 2·asin(√p_a) − 2·asin(√p_b),
+    // the arcsine-stabilized difference q_x_cohens_d is for means.
+    // Proportions are exact-count ratios; h is one shared expression
+    // over the k² dims-bounded pair grid.
+    Query("q_x_cohen_h", (s, d) => {
+      val docs = table(s, d, "documents").select(col("source"), col("n_chars"))
+      val med = docs.agg(expr("median(n_chars)").as("med"))
+      val ps = docs.crossJoin(broadcast(med))
+        .groupBy(col("source"))
+        .agg(count(lit(1)).as("n"),
+          sum(when(col("n_chars") > col("med"), 1L).otherwise(0L)).as("k"))
+      val a = ps.select(col("source").as("source_a"), col("n").as("n_a"),
+        col("k").as("k_a"))
+      val b = ps.select(col("source").as("source_b"), col("n").as("n_b"),
+        col("k").as("k_b"))
+      a.join(broadcast(b), col("source_a") < col("source_b"))
+        .selectExpr("source_a", "source_b",
+          "round(CAST(k_a AS DOUBLE) / n_a, 6) AS p_a",
+          "round(CAST(k_b AS DOUBLE) / n_b, 6) AS p_b",
+          """round(2 * asin(sqrt(CAST(k_a AS DOUBLE) / n_a))
+             - 2 * asin(sqrt(CAST(k_b AS DOUBLE) / n_b)), 6) AS h""")
+        .orderBy(col("source_a"), col("source_b"))
+    }, Some(
+      // Same pooled-median proportion and shared arcsine text over the
+      // pair grid.
       """WITH med AS (SELECT median(n_chars) AS med FROM documents),
          ps AS (SELECT source, CAST(count(*) AS BIGINT) AS n,
                   CAST(sum(CASE WHEN n_chars > med THEN 1 ELSE 0 END) AS BIGINT) AS k
@@ -2123,11 +1669,47 @@ object Round14b {
                 round(2 * asin(sqrt(CAST(a.k AS DOUBLE) / a.n))
                   - 2 * asin(sqrt(CAST(b.k AS DOUBLE) / b.n)), 6) AS h
          FROM ps a JOIN ps b ON a.source < b.source
-         ORDER BY source_a, source_b""",
+         ORDER BY source_a, source_b""")),
 
-    // Same declared time-to-first-purchase framing, same cohort ×
-    // pooled-duration grid, same monotone running E/V folds.
-    "q_x_log_rank" ->
+    // Log-rank test, each cohort vs the pooled rest — THE companion
+    // of q_x_survival's Kaplan–Meier curves (same cohort convention:
+    // the user's first event type), on time-to-first-'purchase'
+    // (DECLARED: duration = (first purchase ts − first event ts) div
+    // 86400000000 days; users who never purchase are right-censored
+    // at their LAST event — q_x_survival's churn framing is
+    // degenerate here because the fixture keeps every user active
+    // through the window's final week): O_g = Σ d_gt, E_g =
+    // Σ d_t·n_gt/n_t, V_g = Σ d_t(n_gt/n_t)(1−n_gt/n_t)(n_t−d_t)/
+    // (n_t−1) over pooled death times with n_t > 1; z = (O−E)/√V.
+    // All counts/at-risk numbers exact BIGINT on the cohort ×
+    // duration grid (duration-grain, corpus-independent); the E/V
+    // folds are monotone running windows per cohort (nonneg terms ⇒
+    // max = last), matching the oracle's running windows term for
+    // term.
+    Query("q_x_log_rank", (s, d) => {
+      val terms = logRankAtRisk(s, d).filter(col("dp") > 0)
+      val w = Window.partitionBy(col("cohort")).orderBy(col("dur"))
+      val t2 = terms
+        .withColumn("e_run", sum(col("dp").cast("double") * col("ng") / col("np"))
+          .over(w.rowsBetween(Window.unboundedPreceding, 0)))
+        .withColumn("v_run", sum(when(col("np") > 1,
+          col("dp").cast("double") * (col("ng").cast("double") / col("np"))
+            * (lit(1.0) - col("ng").cast("double") / col("np"))
+            * (col("np") - col("dp")) / (col("np") - 1)).otherwise(lit(0.0)))
+          .over(w.rowsBetween(Window.unboundedPreceding, 0)))
+      t2.groupBy(col("cohort"))
+        .agg(max(col("nn")).as("n"), sum(col("dg")).as("o"),
+          max(col("e_run")).as("e"), max(col("v_run")).as("v"))
+        .selectExpr("cohort", "n", "o", "round(e, 6) AS e",
+          """CASE WHEN v > 0 THEN round((CAST(o AS DOUBLE) - e) / sqrt(v), 6)
+              ELSE NULL END AS z""",
+          """CASE WHEN v > 0
+              THEN round((CAST(o AS DOUBLE) - e) * (CAST(o AS DOUBLE) - e) / v, 6)
+              ELSE NULL END AS chi2""")
+        .orderBy(col("cohort"))
+    }, Some(
+      // Same declared time-to-first-purchase framing, same cohort ×
+      // pooled-duration grid, same monotone running E/V folds.
       s"""WITH $LogRankGridSql,
          terms AS (SELECT cohort, nn, dg,
                      sum(CAST(dp AS DOUBLE) * ng / np)
@@ -2149,11 +1731,84 @@ object Round14b {
                 CASE WHEN v > 0
                      THEN round((CAST(o AS DOUBLE) - e) * (CAST(o AS DOUBLE) - e) / v, 6)
                      ELSE NULL END AS chi2
-         FROM g ORDER BY cohort""",
+         FROM g ORDER BY cohort""")),
 
-    // Same grid; the weighted numerator is exact BIGINT, V_w the same
-    // monotone running fold with the n_t^2 weight.
-    "q_x_gehan_wilcoxon" ->
+    // Hodges–Lehmann shift per event type between the series' two
+    // halves (DECLARED: first half = first ⌊n/2⌋ observations, second
+    // = last ⌊n/2⌋, odd middle dropped — the q_x_cox_stuart split):
+    // HL = median{c_j − c_i} over the cross-half pair grid — the
+    // robust "how much did the level move" estimator cox_stuart only
+    // signs. Differences are exact BIGINTs; the median is the
+    // engines' shared exact-median convention (integer or .5 — never
+    // an approximation). Pair grid ≤ ⌊n/2⌋² at calendar-bounded n.
+    Query("q_x_hl_shift", (s, d) => {
+      val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
+      val dc = DayGrain.counts(s, d).cut("Round14b.scala:hl_shift", eager = true)
+        .withColumn("rn", row_number().over(w).cast("long"))
+        .withColumn("nd", count(lit(1)).over(
+          Window.partitionBy(col("event_type"))))
+      val a = dc.filter(col("rn") <= expr("nd div 2"))
+        .select(col("event_type"), col("c").as("ca"))
+      val b = dc.filter(col("rn") > col("nd") - expr("nd div 2"))
+        .select(col("event_type"), col("c").as("cb"))
+      val hl = a.join(b, Seq("event_type"))
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n_pairs"),
+          expr("median(cb - ca)").as("hl"))
+      dc.groupBy(col("event_type")).agg(max(col("nd")).as("n_days"))
+        .join(hl, Seq("event_type"), "left")
+        .withColumn("n_pairs", coalesce(col("n_pairs"), lit(0L)))
+        .selectExpr("event_type", "n_days", "n_pairs",
+          "round(hl, 6) AS hl")
+        .orderBy(col("event_type"))
+    }, Some(
+      // Same half split and the shared exact-median convention over the
+      // same cross-half pair grid.
+      s"""WITH $OracleDc,
+         o AS (SELECT event_type, c,
+                 CAST(row_number() OVER (PARTITION BY event_type ORDER BY day) AS BIGINT) AS rn,
+                 CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS nd
+               FROM dc),
+         hl AS (SELECT a.event_type, CAST(count(*) AS BIGINT) AS n_pairs,
+                  median(b.c - a.c) AS hl
+                FROM o a JOIN o b ON b.event_type = a.event_type
+                  AND a.rn <= a.nd // 2 AND b.rn > b.nd - b.nd // 2
+                GROUP BY a.event_type),
+         n AS (SELECT event_type, max(nd) AS n_days FROM o GROUP BY 1)
+         SELECT n.event_type, n.n_days, COALESCE(hl.n_pairs, 0) AS n_pairs,
+                round(hl.hl, 6) AS hl
+         FROM n LEFT JOIN hl ON hl.event_type = n.event_type
+         ORDER BY n.event_type""")),
+
+    // Gehan–Breslow–Wilcoxon weighted log-rank (weight w_t = pooled
+    // at-risk n_t — early deaths count more, the standard complement
+    // when hazards cross late): same declared time-to-first-purchase
+    // frame as q_x_log_rank. The weighted O−E numerator
+    // Σ(n_t·d_gt − d_t·n_gt) is EXACT BIGINT (the weights cancel the
+    // division); only V_w = Σ n_t²·v_t folds doubles, as the same
+    // monotone per-cohort running window.
+    Query("q_x_gehan_wilcoxon", (s, d) => {
+      val terms = logRankAtRisk(s, d).filter(col("dp") > 0)
+      val w = Window.partitionBy(col("cohort")).orderBy(col("dur"))
+        .rowsBetween(Window.unboundedPreceding, 0)
+      val t2 = terms
+        .withColumn("v_run", sum(when(col("np") > 1,
+          col("np").cast("double") * col("np")
+            * (col("dp").cast("double") * (col("ng").cast("double") / col("np"))
+              * (lit(1.0) - col("ng").cast("double") / col("np"))
+              * (col("np") - col("dp")) / (col("np") - 1))).otherwise(lit(0.0)))
+          .over(w))
+      t2.groupBy(col("cohort"))
+        .agg(max(col("nn")).as("n"),
+          sum(col("np") * col("dg") - col("dp") * col("ng")).as("num"),
+          max(col("v_run")).as("v"))
+        .selectExpr("cohort", "n", "num AS w_num",
+          """CASE WHEN v > 0 THEN round(CAST(num AS DOUBLE) / sqrt(v), 6)
+              ELSE NULL END AS z""")
+        .orderBy(col("cohort"))
+    }, Some(
+      // Same grid; the weighted numerator is exact BIGINT, V_w the same
+      // monotone running fold with the n_t^2 weight.
       s"""WITH $LogRankGridSql,
          terms AS (SELECT cohort, nn, np * dg - dp * ng AS num,
                      sum(CASE WHEN np > 1
@@ -2170,11 +1825,48 @@ object Round14b {
          SELECT cohort, n, num AS w_num,
                 CASE WHEN v > 0 THEN round(CAST(num AS DOUBLE) / sqrt(v), 6)
                      ELSE NULL END AS z
-         FROM g ORDER BY cohort""",
+         FROM g ORDER BY cohort""")),
 
-    // Same grid + the survival exp-cumsum-ln device; cohorts with no
-    // deaths keep S = 1 and RMST = tau via the left join.
-    "q_x_rmst" ->
+    // Restricted mean survival time per cohort at DECLARED τ = 30
+    // days — "average days to first purchase, capped at a month":
+    // the area under q_x_survival-style KM steps, RMST =
+    // Σ S(t_{k-1})·(min(t_k,τ)−min(t_{k-1},τ)) + S(last)·(τ −
+    // min(t_last,τ)), S via the survival device (exp∘cumsum∘ln with
+    // the d = n death-out guard). Duration-grain windows per cohort;
+    // the ln/area folds are running windows matching the oracle.
+    Query("q_x_rmst", (s, d) => {
+      val tau = 30L
+      val deaths = logRankAtRisk(s, d).filter(col("dp") > 0 && col("dg") > 0)
+      val w = Window.partitionBy(col("cohort")).orderBy(col("dur"))
+      val wr = w.rowsBetween(Window.unboundedPreceding, 0)
+      val km = deaths
+        .withColumn("lnf", when(col("dg") < col("ng"),
+          log(lit(1.0) - col("dg").cast("double") / col("ng"))).otherwise(lit(0.0)))
+        .withColumn("dead_run",
+          sum(when(col("dg") >= col("ng"), 1L).otherwise(0L)).over(wr))
+        .withColumn("s_cur", when(col("dead_run") > 0, lit(0.0))
+          .otherwise(exp(sum(col("lnf")).over(wr))))
+        .withColumn("s_prev", coalesce(lag(col("s_cur"), 1).over(w), lit(1.0)))
+        .withColumn("t_prev", coalesce(lag(col("dur"), 1).over(w), lit(0L)))
+        .withColumn("contrib", col("s_prev") *
+          (least(col("dur"), lit(tau)) - least(col("t_prev"), lit(tau))))
+        // area as a monotone running fold (contrib ≥ 0 ⇒ max = last),
+        // never an unordered double group-sum
+        .withColumn("area_run", sum(col("contrib")).over(wr))
+      val agg = km.groupBy(col("cohort"))
+        .agg(max(col("area_run")).as("area"),
+          min(col("s_cur")).as("s_last"), max(col("dur")).as("t_last"))
+      // left join: a cohort with NO deaths keeps S = 1 throughout —
+      // RMST = τ exactly, never a dropped row.
+      logRankAtRisk(s, d).groupBy(col("cohort")).agg(max(col("nn")).as("n"))
+        .join(agg, Seq("cohort"), "left")
+        .na.fill(Map("area" -> 0.0, "s_last" -> 1.0, "t_last" -> 0L))
+        .selectExpr("cohort", "n",
+          s"""round(area + s_last * ($tau - least(t_last, $tau)), 6) AS rmst""")
+        .orderBy(col("cohort"))
+    }, Some(
+      // Same grid + the survival exp-cumsum-ln device; cohorts with no
+      // deaths keep S = 1 and RMST = tau via the left join.
       s"""WITH $LogRankGridSql,
          deaths AS (SELECT cohort, nn, dur, dg, ng FROM at_risk
                     WHERE dp > 0 AND dg > 0),
@@ -2205,10 +1897,34 @@ object Round14b {
                 round(COALESCE(agg.area, 0.0)
                   + COALESCE(agg.s_last, 1.0) * (30 - least(COALESCE(agg.t_last, 0), 30)), 6) AS rmst
          FROM cs LEFT JOIN agg ON agg.cohort = cs.cohort
-         ORDER BY cs.cohort""",
+         ORDER BY cs.cohort""")),
 
-    // Same lag-7 pairing, zero-discard, and no-continuity z text.
-    "q_x_sign_test" ->
+    // Paired sign test per event type on the week-over-week pairs
+    // (DECLARED: days exactly 7 apart, zero differences discarded,
+    // no-continuity z = (2S⁺ − n')/√n' — the q_x_cox_stuart form):
+    // the assumption-free companion of q_x_wilcoxon_signed (which
+    // also weighs magnitudes). Counts only; pairless types surface
+    // 0/0/NULL.
+    Query("q_x_sign_test", (s, d) => {
+      val dc = DayGrain.counts(s, d).cut("Round14b.scala:sign_test", eager = true)
+      val a = dc.select(col("event_type"), col("day").as("da"), col("c").as("ca"))
+      val b = dc.select(col("event_type"), col("day").as("db"), col("c").as("cb"))
+      val ps = a.join(b, Seq("event_type"))
+        .filter(col("db") === date_add(col("da"), 7))
+        .groupBy(col("event_type"))
+        .agg(sum(when(col("cb") > col("ca"), 1L).otherwise(0L)).as("sp"),
+          sum(when(col("cb") < col("ca"), 1L).otherwise(0L)).as("sm"))
+      dc.groupBy(col("event_type")).agg(count(lit(1)).as("n_days"))
+        .join(ps, Seq("event_type"), "left")
+        .withColumn("sp", coalesce(col("sp"), lit(0L)))
+        .withColumn("sm", coalesce(col("sm"), lit(0L)))
+        .selectExpr("event_type", "n_days", "sp AS s_plus", "sm AS s_minus",
+          """CASE WHEN sp + sm > 0
+              THEN round(CAST(2 * sp - (sp + sm) AS DOUBLE) / sqrt(CAST(sp + sm AS DOUBLE)), 6)
+              ELSE NULL END AS z""")
+        .orderBy(col("event_type"))
+    }, Some(
+      // Same lag-7 pairing, zero-discard, and no-continuity z text.
       s"""WITH $OracleDc,
          pg AS (SELECT a.event_type,
                   CAST(sum(CASE WHEN b.c > a.c THEN 1 ELSE 0 END) AS BIGINT) AS sp,
@@ -2225,11 +1941,39 @@ object Round14b {
                 CASE WHEN sp + sm > 0
                  THEN round(CAST(2 * sp - (sp + sm) AS DOUBLE) / sqrt(CAST(sp + sm AS DOUBLE)), 6)
                  ELSE NULL END AS z
-         FROM g ORDER BY event_type""",
+         FROM g ORDER BY event_type""")),
 
-    // Same grid, same √n_t-weighted running folds, max_by-pinned
-    // final numerator.
-    "q_x_tarone_ware" ->
+    // Tarone–Ware weighted log-rank (w_t = √n_t — the declared middle
+    // ground of the trio: log_rank w = 1, gehan w = n_t): same shared
+    // time-to-first-purchase frame; numerator and variance fold as
+    // the same monotone per-cohort running windows, with √ the only
+    // non-rational step (one shared sqrt text per term).
+    Query("q_x_tarone_ware", (s, d) => {
+      val terms = logRankAtRisk(s, d).filter(col("dp") > 0)
+      val w = Window.partitionBy(col("cohort")).orderBy(col("dur"))
+        .rowsBetween(Window.unboundedPreceding, 0)
+      val t2 = terms
+        .withColumn("n_run", sum(sqrt(col("np").cast("double"))
+          * (col("dg") - col("dp").cast("double") * col("ng") / col("np")))
+          .over(w))
+        .withColumn("v_run", sum(when(col("np") > 1,
+          col("np").cast("double")
+            * (col("dp").cast("double") * (col("ng").cast("double") / col("np"))
+              * (lit(1.0) - col("ng").cast("double") / col("np"))
+              * (col("np") - col("dp")) / (col("np") - 1))).otherwise(lit(0.0)))
+          .over(w))
+      // max_by, not last(): the running numerator can go negative, so
+      // "final value" must be pinned to the max-dur row explicitly.
+      t2.groupBy(col("cohort"))
+        .agg(max(col("nn")).as("n"), expr("max_by(n_run, dur)").as("num"),
+          max(col("v_run")).as("v"))
+        .selectExpr("cohort", "n", "round(num, 6) AS w_num",
+          """CASE WHEN v > 0 THEN round(num / sqrt(v), 6)
+              ELSE NULL END AS z""")
+        .orderBy(col("cohort"))
+    }, Some(
+      // Same grid, same √n_t-weighted running folds, max_by-pinned
+      // final numerator.
       s"""WITH $LogRankGridSql,
          terms AS (SELECT cohort, nn, dur,
                      sum(sqrt(CAST(np AS DOUBLE))
@@ -2250,11 +1994,34 @@ object Round14b {
          SELECT cohort, n, round(num, 6) AS w_num,
                 CASE WHEN v > 0 THEN round(num / sqrt(v), 6)
                      ELSE NULL END AS z
-         FROM g ORDER BY cohort""",
+         FROM g ORDER BY cohort""")),
 
-    // Same KM device; earliest S ≤ 0.5 crossing, NULL when the curve
-    // never crosses.
-    "q_x_km_median" ->
+    // Kaplan–Meier median survival per cohort on the shared frame
+    // (DECLARED: the earliest death duration where the post-step
+    // survival S(t) drops to ≤ 0.5; cohorts whose curve never
+    // crosses — e.g. heavy censoring — surface NULL, never dropped):
+    // the one-number summary next to q_x_rmst's area and
+    // q_x_survival's full curve.
+    Query("q_x_km_median", (s, d) => {
+      val deaths = logRankAtRisk(s, d).filter(col("dp") > 0 && col("dg") > 0)
+      val w = Window.partitionBy(col("cohort")).orderBy(col("dur"))
+      val wr = w.rowsBetween(Window.unboundedPreceding, 0)
+      val km = deaths
+        .withColumn("lnf", when(col("dg") < col("ng"),
+          log(lit(1.0) - col("dg").cast("double") / col("ng"))).otherwise(lit(0.0)))
+        .withColumn("dead_run",
+          sum(when(col("dg") >= col("ng"), 1L).otherwise(0L)).over(wr))
+        .withColumn("s_cur", when(col("dead_run") > 0, lit(0.0))
+          .otherwise(exp(sum(col("lnf")).over(wr))))
+      val med = km.filter(col("s_cur") <= 0.5)
+        .groupBy(col("cohort")).agg(min(col("dur")).as("med_dur"))
+      logRankAtRisk(s, d).groupBy(col("cohort")).agg(max(col("nn")).as("n"))
+        .join(med, Seq("cohort"), "left")
+        .selectExpr("cohort", "n", "med_dur")
+        .orderBy(col("cohort"))
+    }, Some(
+      // Same KM device; earliest S ≤ 0.5 crossing, NULL when the curve
+      // never crosses.
       s"""WITH $LogRankGridSql,
          deaths AS (SELECT cohort, nn, dur, dg, ng FROM at_risk
                     WHERE dp > 0 AND dg > 0),
@@ -2273,11 +2040,35 @@ object Round14b {
          cs AS (SELECT cohort, max(nn) AS n FROM at_risk GROUP BY cohort)
          SELECT cs.cohort, cs.n, med.med_dur
          FROM cs LEFT JOIN med ON med.cohort = cs.cohort
-         ORDER BY cs.cohort""",
+         ORDER BY cs.cohort""")),
 
-    // Same pooled ranking, exact doubled-deviation squares, declared
-    // no-ties moments.
-    "q_x_mood_scale" ->
+    // Mood's rank-based SCALE test, each source vs the pooled corpus
+    // (distinct from q_x_mood_median's location test): T =
+    // Σ(R_i − (N+1)/2)² — squared distance of the group's pooled
+    // ranks from the center; DECLARED no-ties moments E[T] =
+    // n1(N²−1)/12, Var[T] = n1·n2(N+1)(N²−4)/180. Doubled midranks
+    // make 4T = Σcnt·(r2 − (N+1))² exact BIGINT from the ONE pooled
+    // ranking all sources share (the ansari/cucconi machinery); the
+    // fourth member of the scale-test family (ansari ranks from the
+    // edges, fligner normal-scores, cucconi both directions).
+    Query("q_x_mood_scale", (s, d) => {
+      val dev = col("r2") - (col("n") + 1L)
+      pooledRanks(s, d)
+        .groupBy(col("source"), col("n"))
+        .agg(sum(col("cnt")).as("n1"),
+          sum(col("cnt") * dev * dev).as("t4"))
+        .selectExpr("source", "n1 AS n",
+          "CAST(t4 AS DOUBLE) / 4 AS t",
+          s"""CASE WHEN n1 >= 1 AND n - n1 >= 1
+                THEN round((CAST(t4 AS DOUBLE) / 4
+                    - CAST(n1 AS DOUBLE) * (CAST(n AS DOUBLE) * n - 1) / 12)
+                  / sqrt(CAST(n1 AS DOUBLE) * (n - n1) * (n + 1)
+                      * (CAST(n AS DOUBLE) * n - 4) / 180), 6)
+                ELSE NULL END AS z""")
+        .orderBy(col("source"))
+    }, Some(
+      // Same pooled ranking, exact doubled-deviation squares, declared
+      // no-ties moments.
       s"""WITH $PooledRanksSql,
          ps AS (SELECT source, max(n) AS n, CAST(sum(cnt) AS BIGINT) AS n1,
                   CAST(sum(cnt * (r2 - (n + 1)) * (r2 - (n + 1))) AS BIGINT) AS t4
@@ -2290,11 +2081,34 @@ object Round14b {
                    / sqrt(CAST(n1 AS DOUBLE) * (n - n1) * (n + 1)
                        * (CAST(n AS DOUBLE) * n - 4) / 180), 6)
                  ELSE NULL END AS z
-         FROM ps ORDER BY source""",
+         FROM ps ORDER BY source""")),
 
-    // Same token grain (the house split↔string_split convention) and
-    // shared estimator text.
-    "q_x_chao1" ->
+    // Chao1 vocabulary-richness estimate + Good–Turing coverage over
+    // the whitespace-token vocabulary — "how many word types does the
+    // corpus REALLY have, and what fraction of the token mass do the
+    // observed types cover": Chao1 = S_obs + f1²/(2f2) (bias-
+    // corrected f1(f1−1)/(2(f2+1)) when f2 = 0 — declared), coverage
+    // C = 1 − f1/N_tokens. ONE token-grain aggregate pass → the
+    // frequency-of-frequencies table is tiny; everything downstream
+    // is exact-count arithmetic in one shared expression.
+    Query("q_x_chao1", (s, d) => {
+      val tok = table(s, d, "documents")
+        .select(explode(split(col("text"), " ")).as("w"))
+        .groupBy(col("w")).agg(count(lit(1)).as("c"))
+      tok.agg(count(lit(1)).as("s_obs"), sum(col("c")).as("n_tok"),
+          sum(when(col("c") === 1L, 1L).otherwise(0L)).as("f1"),
+          sum(when(col("c") === 2L, 1L).otherwise(0L)).as("f2"))
+        .selectExpr("s_obs", "n_tok", "f1", "f2",
+          """round(CASE WHEN f2 > 0
+                THEN s_obs + CAST(f1 AS DOUBLE) * f1 / (2 * f2)
+                ELSE s_obs + CAST(f1 AS DOUBLE) * (f1 - 1) / (2 * (f2 + 1)) END, 6)
+             AS chao1""",
+          """CASE WHEN n_tok > 0
+              THEN round(1 - CAST(f1 AS DOUBLE) / n_tok, 6)
+              ELSE NULL END AS coverage""")
+    }, Some(
+      // Same token grain (the house split↔string_split convention) and
+      // shared estimator text.
       """WITH tok AS (SELECT w, CAST(count(*) AS BIGINT) AS c FROM
                   (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
                 GROUP BY w),
@@ -2311,11 +2125,32 @@ object Round14b {
                 CASE WHEN n_tok > 0
                  THEN round(1 - CAST(f1 AS DOUBLE) / n_tok, 6)
                  ELSE NULL END AS coverage
-         FROM g""",
+         FROM g""")),
 
-    // Same midpoint split and Chapman text over exact half-capture
-    // counts.
-    "q_x_capture_recapture" ->
+    // Chapman capture–recapture estimate of the active-user
+    // population from the two corpus halves (DECLARED: the bowker
+    // midpoint-micros split; "capture" = any event in the half):
+    // N̂ = (n1+1)(n2+1)/(m+1) − 1 with m = users seen in BOTH halves
+    // — the coverage-estimation classic for "how many entities exist
+    // beyond what either sample saw". Exact counts, one shared
+    // expression; the corpus pass is one per-(user, half) aggregate.
+    Query("q_x_capture_recapture", (s, d) => {
+      val ev = table(s, d, "events")
+        .select(col("user_id"), unix_micros(col("ts")).as("tm"))
+      val mid = ev.agg(((min(col("tm")) + max(col("tm"))) / lit(2L)).as("mid"))
+      ev.crossJoin(broadcast(mid))
+        .groupBy(col("user_id"))
+        .agg(max(when(col("tm") <= col("mid"), 1L).otherwise(0L)).as("h1"),
+          max(when(col("tm") > col("mid"), 1L).otherwise(0L)).as("h2"))
+        .agg(sum(col("h1")).as("n1"), sum(col("h2")).as("n2"),
+          sum(col("h1") * col("h2")).as("m"),
+          count(lit(1)).as("n_seen"))
+        .selectExpr("n1", "n2", "m", "n_seen",
+          """round(CAST(n1 + 1 AS DOUBLE) * (n2 + 1) / (m + 1) - 1, 6)
+             AS n_hat""")
+    }, Some(
+      // Same midpoint split and Chapman text over exact half-capture
+      // counts.
       """WITH ev AS (SELECT user_id, epoch_us(ts) AS tm FROM events),
          mid AS (SELECT (min(tm) + max(tm)) / 2 AS mid FROM ev),
          u AS (SELECT user_id,
@@ -2329,11 +2164,38 @@ object Round14b {
                FROM u)
          SELECT n1, n2, m, n_seen,
                 round(CAST(n1 + 1 AS DOUBLE) * (n2 + 1) / (m + 1) - 1, 6) AS n_hat
-         FROM g""",
+         FROM g""")),
 
-    // Same value-grain ln fold (running window in the same order) and
-    // shared ε = 1 text.
-    "q_x_atkinson" ->
+    // Atkinson inequality index per source on document lengths
+    // (DECLARED ε = 1: A = 1 − geomean/mean, the inequality-aversion
+    // form where a transfer from rich to poor always lowers A;
+    // zero-length docs excluded — the q_x_theil convention): the
+    // remaining standard inequality measure next to q_x_gini /
+    // q_x_theil / q_x_lorenz. Σ ln(x) folds at VALUE grain (cnt·ln v
+    // over the per-source value histogram, ordered running window →
+    // max), so the only double accumulation is over the bounded
+    // value alphabet in a deterministic order.
+    Query("q_x_atkinson", (s, d) => {
+      val docs = table(s, d, "documents")
+        .select(col("source"), col("n_chars")).filter(col("n_chars") > 0)
+      val cells = docs.groupBy(col("source"), col("n_chars"))
+        .agg(count(lit(1)).as("cnt"))
+      val w = Window.partitionBy(col("source")).orderBy(col("n_chars"))
+        .rowsBetween(Window.unboundedPreceding, 0)
+      cells
+        .withColumn("ln_run", sum(col("cnt") * log(col("n_chars"))).over(w))
+        .groupBy(col("source"))
+        .agg(sum(col("cnt")).as("n"), sum(col("cnt") * col("n_chars")).as("sx"),
+          max(col("ln_run")).as("sln"))
+        .selectExpr("source", "n",
+          """round(CAST(sx AS DOUBLE) / n, 6) AS mean""",
+          """CASE WHEN n >= 1 AND sx > 0
+              THEN round(1 - exp(sln / n) / (CAST(sx AS DOUBLE) / n), 6)
+              ELSE NULL END AS atkinson""")
+        .orderBy(col("source"))
+    }, Some(
+      // Same value-grain ln fold (running window in the same order) and
+      // shared ε = 1 text.
       """WITH cells AS (SELECT source, n_chars, CAST(count(*) AS BIGINT) AS cnt
                   FROM documents WHERE n_chars > 0 GROUP BY 1, 2),
          r AS (SELECT source, n_chars, cnt,
@@ -2349,11 +2211,42 @@ object Round14b {
                 CASE WHEN n >= 1 AND sx > 0
                  THEN round(1 - exp(sln / n) / (CAST(sx AS DOUBLE) / n), 6)
                  ELSE NULL END AS atkinson
-         FROM g ORDER BY source""",
+         FROM g ORDER BY source""")),
 
-    // Same rank windows with the same doc_id tie-break and exact
-    // integer share sums.
-    "q_x_palma" ->
+    // Palma ratio per source (DECLARED: share of total length held by
+    // the top ⌊n/10⌋ docs over the share held by the bottom ⌊4n/10⌋,
+    // rank-based with the deterministic doc_id tie-break): the
+    // tail-focused inequality summary q_x_gini's single number hides.
+    // Exact integer sums over rank windows; sources where the bottom
+    // share is 0 surface NULL.
+    Query("q_x_palma", (s, d) => {
+      val docs = table(s, d, "documents")
+        .select(col("source"), col("doc_id"), col("n_chars"))
+      val wd = Window.partitionBy(col("source"))
+        .orderBy(col("n_chars").desc, col("doc_id"))
+      val wa = Window.partitionBy(col("source"))
+        .orderBy(col("n_chars"), col("doc_id"))
+      val nn = Window.partitionBy(col("source"))
+      docs
+        .withColumn("rd", row_number().over(wd).cast("long"))
+        .withColumn("ra", row_number().over(wa).cast("long"))
+        .withColumn("n", count(lit(1)).over(nn))
+        .groupBy(col("source"))
+        .agg(max(col("n")).as("n"), sum(col("n_chars")).as("sx"),
+          sum(when(col("rd") <= expr("n div 10"), col("n_chars"))
+            .otherwise(0L)).as("top10"),
+          sum(when(col("ra") <= expr("4 * n div 10"), col("n_chars"))
+            .otherwise(0L)).as("bot40"))
+        .selectExpr("source", "n",
+          "round(CAST(top10 AS DOUBLE) / sx, 6) AS top10_share",
+          "round(CAST(bot40 AS DOUBLE) / sx, 6) AS bot40_share",
+          """CASE WHEN bot40 > 0
+              THEN round(CAST(top10 AS DOUBLE) / bot40, 6)
+              ELSE NULL END AS palma""")
+        .orderBy(col("source"))
+    }, Some(
+      // Same rank windows with the same doc_id tie-break and exact
+      // integer share sums.
       """WITH r AS (SELECT source, n_chars,
                  CAST(row_number() OVER (PARTITION BY source
                    ORDER BY n_chars DESC, doc_id) AS BIGINT) AS rd,
@@ -2371,10 +2264,35 @@ object Round14b {
                 CASE WHEN bot40 > 0
                  THEN round(CAST(top10 AS DOUBLE) / bot40, 6)
                  ELSE NULL END AS palma
-         FROM g ORDER BY source""",
+         FROM g ORDER BY source""")),
 
-    // Same exact day-grain moments and shared dispersion text.
-    "q_x_overdispersion" ->
+    // Poisson overdispersion (variance-to-mean) test per event type
+    // over daily counts — "is this event stream burstier than a
+    // Poisson process" as a TEST statistic (q_x_burstiness reports
+    // the (σ−μ)/(σ+μ) coefficient, no calibration): dispersion index
+    // D = (n−1)s²/x̄ ~ χ²_{n−1} under Poisson. Exact integer Σc/Σc²
+    // moments, one shared expression; constant-zero or single-day
+    // types surface NULL. Observation grain = observed days (zero
+    // days excluded — declared; the spine-aware zero view is
+    // q_x_zero_inflation's job).
+    Query("q_x_overdispersion", (s, d) => {
+      DayGrain.counts(s, d)
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n"), sum(col("c")).as("sc"),
+          sum(col("c") * col("c")).as("sq"))
+        .selectExpr("event_type", "n AS n_days",
+          """CASE WHEN n >= 2 AND sc > 0
+              THEN round(((CAST(sq AS DOUBLE) - CAST(sc AS DOUBLE) * sc / n) / (n - 1))
+                / (CAST(sc AS DOUBLE) / n), 6)
+              ELSE NULL END AS vmr""",
+          """CASE WHEN n >= 2 AND sc > 0
+              THEN round((n - 1) * ((CAST(sq AS DOUBLE) - CAST(sc AS DOUBLE) * sc / n) / (n - 1))
+                / (CAST(sc AS DOUBLE) / n), 6)
+              ELSE NULL END AS chi2""",
+          "n - 1 AS df")
+        .orderBy(col("event_type"))
+    }, Some(
+      // Same exact day-grain moments and shared dispersion text.
       s"""WITH $OracleDc,
          g AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
                  CAST(sum(c) AS BIGINT) AS sc,
@@ -2390,11 +2308,33 @@ object Round14b {
                    / (CAST(sc AS DOUBLE) / n), 6)
                  ELSE NULL END AS chi2,
                 n - 1 AS df
-         FROM g ORDER BY event_type""",
+         FROM g ORDER BY event_type""")),
 
-    // Same declared span/λ conventions and shared binomial-approx
-    // text.
-    "q_x_zero_inflation" -> {
+    // Zero-inflation check per event type on the type's OWN calendar
+    // span (DECLARED: span = datediff(max day, min day) + 1; zero
+    // days = span − observed days; λ = Σc/span): are there more
+    // zero-activity days than the Poisson(λ) rate predicts —
+    // z = (z_obs − span·e^{−λ}) / √(span·e^{−λ}(1−e^{−λ})), the
+    // binomial normal approximation. Exact counts in, one shared
+    // expression; degenerate spans (e^{−λ} rounding to 0 or 1)
+    // surface NULL.
+    Query("q_x_zero_inflation", (s, d) => {
+      val p0 = "exp(-(CAST(sc AS DOUBLE) / span))"
+      DayGrain.counts(s, d)
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("nobs"), sum(col("c")).as("sc"),
+          (datediff(max(col("day")), min(col("day"))) + 1).cast("long").as("span"))
+        .selectExpr("event_type", "span", "span - nobs AS zero_days",
+          s"""CASE WHEN span >= 1 THEN round($p0 * span, 6) + 0.0
+               ELSE NULL END AS exp_zero""",
+          s"""CASE WHEN span >= 1 AND $p0 > 0 AND $p0 < 1
+                THEN round((CAST(span - nobs AS DOUBLE) - $p0 * span)
+                  / sqrt(span * $p0 * (1 - $p0)), 6) + 0.0
+                ELSE NULL END AS z""")
+        .orderBy(col("event_type"))
+    }, Some {
+      // Same declared span/λ conventions and shared binomial-approx
+      // text.
       val p0 = "exp(-(CAST(sc AS DOUBLE) / span))"
       s"""WITH $OracleDc,
          g AS (SELECT event_type, CAST(count(*) AS BIGINT) AS nobs,
@@ -2409,25 +2349,6 @@ object Round14b {
                    / sqrt(span * $p0 * (1 - $p0)), 6) + 0.0
                  ELSE NULL END AS z
          FROM g ORDER BY event_type"""
-    },
-
-    // Same half split and the shared exact-median convention over the
-    // same cross-half pair grid.
-    "q_x_hl_shift" ->
-      s"""WITH $OracleDc,
-         o AS (SELECT event_type, c,
-                 CAST(row_number() OVER (PARTITION BY event_type ORDER BY day) AS BIGINT) AS rn,
-                 CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS nd
-               FROM dc),
-         hl AS (SELECT a.event_type, CAST(count(*) AS BIGINT) AS n_pairs,
-                  median(b.c - a.c) AS hl
-                FROM o a JOIN o b ON b.event_type = a.event_type
-                  AND a.rn <= a.nd // 2 AND b.rn > b.nd - b.nd // 2
-                GROUP BY a.event_type),
-         n AS (SELECT event_type, max(nd) AS n_days FROM o GROUP BY 1)
-         SELECT n.event_type, n.n_days, COALESCE(hl.n_pairs, 0) AS n_pairs,
-                round(hl.hl, 6) AS hl
-         FROM n LEFT JOIN hl ON hl.event_type = n.event_type
-         ORDER BY n.event_type"""
+    })
   )
 }

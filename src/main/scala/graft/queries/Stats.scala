@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -31,9 +30,28 @@ import graft.Cuts.CutOps
   *  - interp is two partitioned windows (lag/lead), no grid blowup.
   */
 object Stats {
-  type Q = (SparkSession, String) => DataFrame
+  // Cramer's-rule solution of the 3×3 normal equations, written ONCE
+  // as SQL text and spliced verbatim into both the Spark selectExpr
+  // and the DuckDB oracle so every fp operation associates
+  // identically. Matrix M = [[n,s1,s2],[s1,s11,s12],[s2,s12,s22]],
+  // rhs v = [sy,s1y,s2y]; all symbols are exact-integer aggregate
+  // columns cast to double exactly once.
+  private def det3(a: String, b: String, c: String,
+                   d: String, e: String, f: String,
+                   g: String, h: String, i: String): String =
+    s"(CAST($a AS DOUBLE) * (CAST($e AS DOUBLE) * $i - CAST($f AS DOUBLE) * $h) " +
+      s"- CAST($b AS DOUBLE) * (CAST($d AS DOUBLE) * $i - CAST($f AS DOUBLE) * $g) " +
+      s"+ CAST($c AS DOUBLE) * (CAST($d AS DOUBLE) * $h - CAST($e AS DOUBLE) * $g))"
 
-  val defs: Map[String, Q] = Map(
+  private val detM = det3("n", "s1", "s2", "s1", "s11", "s12", "s2", "s12", "s22")
+  private val linregB0 =
+    s"(${det3("sy", "s1", "s2", "s1y", "s11", "s12", "s2y", "s12", "s22")} / $detM)"
+  private val linregB1 =
+    s"(${det3("n", "sy", "s2", "s1", "s1y", "s12", "s2", "s2y", "s22")} / $detM)"
+  private val linregB2 =
+    s"(${det3("n", "s1", "sy", "s1", "s11", "s1y", "s2", "s12", "s2y")} / $detM)"
+
+  val queries: Seq[Query] = Seq(
 
     // Mann–Whitney U (one source vs rest, on n_chars): the rank-sum
     // test behind "does source S write longer docs than the corpus?".
@@ -41,7 +59,7 @@ object Stats {
     // exact longs (the tie-aware AUC identity), and the tie-corrected
     // variance term T = Σ(t³−t) is one pass over the value-grain
     // table shared by all 20 splits. No corpus-wide rank window.
-    "q_x_mann_whitney" -> ((s, d) => {
+    Query("q_x_mann_whitney", (s, d) => {
       val sc = table(s, d, "documents").select(col("source"), col("n_chars"))
       val gs = sc.groupBy(col("n_chars")).agg(count(lit(1)).as("tot"))
       val gl = sc.groupBy(col("source"), col("n_chars")).agg(count(lit(1)).as("cnt"))
@@ -68,14 +86,40 @@ object Stats {
                   col("tsum") / ((col("n1") + col("n2")).cast("double") *
                     (col("n1") + col("n2") - 1))))), 6).as("z"))
         .orderBy(col("source"))
-    }),
+    }, Some(
+      """WITH gs AS (SELECT n_chars, CAST(count(*) AS BIGINT) AS tot
+                     FROM documents GROUP BY n_chars),
+         gl AS (SELECT source, n_chars, CAST(count(*) AS BIGINT) AS cnt
+                FROM documents GROUP BY source, n_chars),
+         uni AS (SELECT s.source, gs.n_chars, gs.tot, coalesce(gl.cnt, 0) AS cnt
+                 FROM (SELECT DISTINCT source FROM documents) s
+                 CROSS JOIN gs
+                 LEFT JOIN gl ON gl.source = s.source AND gl.n_chars = gs.n_chars),
+         cum AS (SELECT source, tot, cnt,
+                   coalesce(CAST(sum(tot - cnt) OVER (PARTITION BY source
+                     ORDER BY n_chars
+                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT), 0)
+                     AS cumoth
+                 FROM uni),
+         t AS (SELECT CAST(sum(tot * tot * tot - tot) AS BIGINT) AS tsum FROM gs),
+         agg AS (SELECT source,
+                   CAST(sum(2 * cnt * cumoth + cnt * (tot - cnt)) AS BIGINT) AS u2,
+                   CAST(sum(cnt) AS BIGINT) AS n1,
+                   CAST(sum(tot - cnt) AS BIGINT) AS n2
+                 FROM cum GROUP BY source)
+         SELECT source, n1, n2, round(u2 / 2.0, 6) AS u,
+                round((u2 - n1 * n2) /
+                  (2.0 * sqrt(CAST(n1 AS DOUBLE) * n2 / 12.0 *
+                    ((n1 + n2 + 1) - tsum / (CAST(n1 + n2 AS DOUBLE) * (n1 + n2 - 1)))))
+                  , 6) AS z
+         FROM agg CROSS JOIN t ORDER BY source""")),
 
     // One-way ANOVA of n_chars across sources: k-group mean
     // separation as one F statistic + effect size. n_i, Σx, Σx² stay
     // exact longs per group; only the O(1)-magnitude outputs (F, η²)
     // are emitted, so the ~20-term double sums the SS decomposition
     // needs never meet the 6dp round at 1e9 magnitude.
-    "q_x_anova" -> ((s, d) => {
+    Query("q_x_anova", (s, d) => {
       val g = table(s, d, "documents")
         .groupBy(col("source"))
         .agg(count(lit(1)).as("ni"), sum(col("n_chars")).as("si"),
@@ -93,7 +137,21 @@ object Stats {
             (col("sb") - col("ssum").cast("double") * col("ssum") / col("n")) /
               (col("qsum") - col("ssum").cast("double") * col("ssum") / col("n")),
             6).as("eta_sq"))
-    }),
+    }, Some(
+      """WITH g AS (SELECT source, CAST(count(*) AS BIGINT) AS ni,
+                  CAST(sum(n_chars) AS BIGINT) AS si,
+                  CAST(sum(n_chars * n_chars) AS BIGINT) AS qi
+                FROM documents GROUP BY source),
+         a AS (SELECT CAST(count(*) AS BIGINT) AS k, CAST(sum(ni) AS BIGINT) AS n,
+                 CAST(sum(si) AS BIGINT) AS ssum, CAST(sum(qi) AS BIGINT) AS qsum,
+                 sum(CAST(si AS DOUBLE) * si / ni) AS sb
+               FROM g)
+         SELECT k, n,
+                round(((sb - CAST(ssum AS DOUBLE) * ssum / n) / (k - 1)) /
+                      ((qsum - sb) / (n - k)), 6) AS f,
+                round((sb - CAST(ssum AS DOUBLE) * ssum / n) /
+                      (qsum - CAST(ssum AS DOUBLE) * ssum / n), 6) AS eta_sq
+         FROM a""")),
 
     // Spearman rank correlation between event value and hour-of-day,
     // per event_type — the monotone-association screen that survives
@@ -101,7 +159,7 @@ object Stats {
     // so they stay INTEGERS at value grain (2·rank = 2·cum_below +
     // ties + 1); all five moment sums are exact longs, and ρ is one
     // closed-form expression over their double casts.
-    "q_x_spearman" -> ((s, d) => {
+    Query("q_x_spearman", (s, d) => {
       val base = table(s, d, "events")
         .select(col("event_type"), col("value").as("x"), hour(col("ts")).as("y"))
       def ranked(c: String) = {
@@ -131,7 +189,39 @@ object Stats {
                 (col("n").cast("double") * col("syy") -
                   col("sy").cast("double") * col("sy"))), 6).as("rho"))
         .orderBy(col("event_type"))
-    }),
+    }, Some(
+      """WITH base AS (SELECT event_type, value AS x,
+                  CAST(extract(hour FROM ts) AS INTEGER) AS y
+                FROM events),
+         rx AS (SELECT event_type, x,
+                  2 * coalesce(CAST(sum(t) OVER (PARTITION BY event_type ORDER BY x
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT), 0)
+                    + t + 1 AS r2x
+                FROM (SELECT event_type, x, CAST(count(*) AS BIGINT) AS t
+                      FROM base GROUP BY event_type, x)),
+         ry AS (SELECT event_type, y,
+                  2 * coalesce(CAST(sum(t) OVER (PARTITION BY event_type ORDER BY y
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT), 0)
+                    + t + 1 AS r2y
+                FROM (SELECT event_type, y, CAST(count(*) AS BIGINT) AS t
+                      FROM base GROUP BY event_type, y)),
+         cells AS (SELECT b.event_type, CAST(count(*) AS BIGINT) AS cn, r2x, r2y
+                   FROM base b
+                   JOIN rx ON rx.event_type = b.event_type AND rx.x = b.x
+                   JOIN ry ON ry.event_type = b.event_type AND ry.y = b.y
+                   GROUP BY b.event_type, b.x, b.y, r2x, r2y),
+         m AS (SELECT event_type, CAST(sum(cn) AS BIGINT) AS n,
+                 CAST(sum(cn * r2x) AS BIGINT) AS sx,
+                 CAST(sum(cn * r2y) AS BIGINT) AS sy,
+                 CAST(sum(cn * r2x * r2x) AS BIGINT) AS sxx,
+                 CAST(sum(cn * r2y * r2y) AS BIGINT) AS syy,
+                 CAST(sum(cn * r2x * r2y) AS BIGINT) AS sxy
+               FROM cells GROUP BY event_type)
+         SELECT event_type, n,
+                round((CAST(n AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy) /
+                  sqrt((CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx) *
+                       (CAST(n AS DOUBLE) * syy - CAST(sy AS DOUBLE) * sy)), 6) AS rho
+         FROM m ORDER BY event_type""")),
 
     // Kendall τ-b between hour-of-day and floor(value/8), per
     // event_type. Concordant/discordant pair counts come from the
@@ -141,7 +231,7 @@ object Stats {
     // The y grain is value/8 (r10 verdict item 5): τ-b on the coarser
     // grid is the declared statistic — identical in both engines —
     // and cuts the cell-pair constant 64× (3.3 s → sub-second).
-    "q_x_kendall" -> ((s, d) => {
+    Query("q_x_kendall", (s, d) => {
       val cells = table(s, d, "events")
         .groupBy(col("event_type"), hour(col("ts")).as("x"),
           floor(col("value") / 8).as("y"))
@@ -174,7 +264,32 @@ object Stats {
               (col("n") * (col("n") - 1) / 2 - col("n2")).cast("double")), 6)
             .as("tau_b"))
         .orderBy(col("event_type"))
-    }),
+    }, Some(
+      """WITH cells AS (SELECT event_type,
+                  CAST(extract(hour FROM ts) AS INTEGER) AS x,
+                  CAST(floor(value / 8) AS BIGINT) AS y,
+                  CAST(count(*) AS BIGINT) AS cn
+                FROM events GROUP BY 1, 2, 3),
+         cd AS (SELECT a.event_type,
+                  CAST(sum(CASE WHEN a.y < b.y THEN a.cn * b.cn ELSE 0 END) AS BIGINT) AS c,
+                  CAST(sum(CASE WHEN a.y > b.y THEN a.cn * b.cn ELSE 0 END) AS BIGINT) AS d
+                FROM cells a JOIN cells b
+                  ON a.event_type = b.event_type AND a.x < b.x
+                GROUP BY a.event_type),
+         ties AS (SELECT event_type, CAST(sum(cn) AS BIGINT) AS n FROM cells GROUP BY 1),
+         tx AS (SELECT event_type, CAST(sum(t * (t - 1) // 2) AS BIGINT) AS n1
+                FROM (SELECT event_type, x, CAST(sum(cn) AS BIGINT) AS t
+                      FROM cells GROUP BY 1, 2) GROUP BY event_type),
+         ty AS (SELECT event_type, CAST(sum(t * (t - 1) // 2) AS BIGINT) AS n2
+                FROM (SELECT event_type, y, CAST(sum(cn) AS BIGINT) AS t
+                      FROM cells GROUP BY 1, 2) GROUP BY event_type)
+         SELECT event_type, n, c, d,
+                round((c - d) /
+                  sqrt(CAST(n * (n - 1) // 2 - n1 AS DOUBLE) *
+                       CAST(n * (n - 1) // 2 - n2 AS DOUBLE)), 6) AS tau_b
+         FROM cd JOIN ties USING (event_type) JOIN tx USING (event_type)
+           JOIN ty USING (event_type)
+         ORDER BY event_type""")),
 
     // Isotonic (PAV) calibration of P(label ≤ 4 | score) over the
     // 2dp score-bin table, via the minimax identity
@@ -182,7 +297,7 @@ object Stats {
     // (B ≤ ~10² — corpus-independent), two windowed passes, zero
     // iteration. Every block mean is ONE division of exact integer
     // prefix sums, so the min/max comparisons agree across engines.
-    "q_x_isotonic" -> ((s, d) => {
+    Query("q_x_isotonic", (s, d) => {
       val wOrd = Window.orderBy(col("sv"))
       val bins = table(s, d, "embeddings")
         // + 0.0 normalizes a −0.0 bin key to +0.0 (a score rounding to
@@ -216,14 +331,36 @@ object Stats {
           round(col("bp").cast("double") / col("bn"), 6).as("raw_rate"),
           round(col("fit"), 6).as("iso_fit"))
         .orderBy(col("sv"))
-    }),
+    }, Some(
+      """WITH bins AS (SELECT round(CAST(embedding[2] AS DOUBLE), 2) + 0.0 AS sv,
+                  CAST(count(*) AS BIGINT) AS bn,
+                  CAST(sum(CASE WHEN label <= 4 THEN 1 ELSE 0 END) AS BIGINT) AS bp
+                FROM embeddings GROUP BY 1),
+         idx AS (SELECT sv, bn, bp,
+                   CAST(row_number() OVER (ORDER BY sv) AS BIGINT) AS i,
+                   CAST(sum(bp) OVER (ORDER BY sv) AS BIGINT) AS cs,
+                   CAST(sum(bn) OVER (ORDER BY sv) AS BIGINT) AS cn
+                 FROM bins),
+         pairs AS (SELECT j.j, k.i AS k,
+                     CAST(k.cs - j.csj0 AS DOUBLE) / (k.cn - j.cnj0) AS mean_jk
+                   FROM (SELECT i AS j, cs - bp AS csj0, cn - bn AS cnj0 FROM idx) j
+                   JOIN idx k ON j.j <= k.i),
+         m1 AS (SELECT j, k,
+                  min(mean_jk) OVER (PARTITION BY j ORDER BY k DESC
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS m1
+                FROM pairs),
+         fit AS (SELECT k AS i, max(m1) AS fit FROM m1 GROUP BY k)
+         SELECT sv, bn AS n, bp AS n_pos,
+                round(CAST(bp AS DOUBLE) / bn, 6) AS raw_rate,
+                round(fit, 6) AS iso_fit
+         FROM idx JOIN fit USING (i) ORDER BY sv""")),
 
     // Two-feature OLS (n_chars ~ tokens + vowel-count) via the normal
     // equations: ONE aggregate pass collects the 9 moment sums as
     // exact longs, then a closed-form 3×3 Cramer solve — no gradient
     // iterations, no per-row residual pass; R² comes from the same
     // sums. The whole regression is a single-row frame at any scale.
-    "q_x_linreg" -> ((s, d) => {
+    Query("q_x_linreg", (s, d) => {
       val m = table(s, d, "documents")
         .select(col("n_chars").as("y"),
           size(split(col("text"), " ")).cast("long").as("x1"),
@@ -241,7 +378,25 @@ object Stats {
         s"round($linregB1, 6) AS b1", s"round($linregB2, 6) AS b2",
         s"round(1.0 - (CAST(syy AS DOUBLE) - (($linregB0) * sy + ($linregB1) * s1y + ($linregB2) * s2y)) " +
           "/ (CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * sy / n), 6) AS r2")
-    }),
+    }, Some(
+      s"""WITH m AS (SELECT CAST(count(*) AS BIGINT) AS n,
+                  CAST(sum(x1) AS BIGINT) AS s1, CAST(sum(x2) AS BIGINT) AS s2,
+                  CAST(sum(y) AS BIGINT) AS sy,
+                  CAST(sum(x1 * x1) AS BIGINT) AS s11,
+                  CAST(sum(x1 * x2) AS BIGINT) AS s12,
+                  CAST(sum(x2 * x2) AS BIGINT) AS s22,
+                  CAST(sum(x1 * y) AS BIGINT) AS s1y,
+                  CAST(sum(x2 * y) AS BIGINT) AS s2y,
+                  CAST(sum(y * y) AS BIGINT) AS syy
+                FROM (SELECT n_chars AS y,
+                        CAST(len(string_split(text, ' ')) AS BIGINT) AS x1,
+                        CAST(length(regexp_replace(text, '[^aeiou]', '', 'g')) AS BIGINT) AS x2
+                      FROM documents))
+         SELECT n, round($linregB0, 6) AS b0, round($linregB1, 6) AS b1,
+                round($linregB2, 6) AS b2,
+                round(1.0 - (CAST(syy AS DOUBLE) - (($linregB0) * sy + ($linregB1) * s1y + ($linregB2) * s2y))
+                  / (CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * sy / n), 6) AS r2
+         FROM m""")),
 
     // Holt linear (level+trend) exponential smoothing per
     // (user, event_type) series — the trend-aware twin of
@@ -249,7 +404,7 @@ object Stats {
     // state: one user's one-type history); the oracle unrolls the
     // identical recurrence with a recursive CTE, so the doubles match
     // bit-for-bit before the final cross-series averaging.
-    "q_x_holt" -> ((s, d) => {
+    Query("q_x_holt", (s, d) => {
       import s.implicits._
       val series = table(s, d, "events")
         .select(col("user_id"), col("event_type"),
@@ -278,207 +433,7 @@ object Stats {
           round(avg(col("lvl")), 6).as("avg_level"),
           round(avg(col("trend")), 6).as("avg_trend"))
         .orderBy(col("event_type"))
-    }),
-
-    // Leave-one-out linear interpolation error: re-estimate each
-    // event's value from its two temporal neighbors (same user) and
-    // report MAE/RMSE per event_type — the continuity audit for
-    // sensor-style feeds. Two per-user window functions (lag/lead of
-    // (ts, value)), weights are ratios of exact integer micros.
-    "q_x_interp" -> ((s, d) => {
-      // orders by the µs long (ts is projected away below) — full µs order
-      val w = Window.partitionBy(col("user_id")).orderBy(col("t"), col("event_id"))
-      table(s, d, "events")
-        .select(col("user_id"), col("event_type"), col("event_id"),
-          unix_micros(col("ts")).as("t"), col("value"))
-        .withColumn("pt", lag(col("t"), 1).over(w))
-        .withColumn("pv", lag(col("value"), 1).over(w))
-        .withColumn("nt", lead(col("t"), 1).over(w))
-        .withColumn("nv", lead(col("value"), 1).over(w))
-        .filter(col("pt").isNotNull && col("nt").isNotNull && col("nt") > col("pt"))
-        .withColumn("err",
-          col("value") - (col("pv") + (col("nv") - col("pv")) *
-            ((col("t") - col("pt")).cast("double") / (col("nt") - col("pt")))))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          round(avg(abs(col("err"))), 6).as("mae"),
-          round(sqrt(avg(col("err") * col("err"))), 6).as("rmse"))
-        .orderBy(col("event_type"))
-    })
-  )
-
-  // Cramer's-rule solution of the 3×3 normal equations, written ONCE
-  // as SQL text and spliced verbatim into both the Spark selectExpr
-  // and the DuckDB oracle so every fp operation associates
-  // identically. Matrix M = [[n,s1,s2],[s1,s11,s12],[s2,s12,s22]],
-  // rhs v = [sy,s1y,s2y]; all symbols are exact-integer aggregate
-  // columns cast to double exactly once.
-  private def det3(a: String, b: String, c: String,
-                   d: String, e: String, f: String,
-                   g: String, h: String, i: String): String =
-    s"(CAST($a AS DOUBLE) * (CAST($e AS DOUBLE) * $i - CAST($f AS DOUBLE) * $h) " +
-      s"- CAST($b AS DOUBLE) * (CAST($d AS DOUBLE) * $i - CAST($f AS DOUBLE) * $g) " +
-      s"+ CAST($c AS DOUBLE) * (CAST($d AS DOUBLE) * $h - CAST($e AS DOUBLE) * $g))"
-
-  private val detM = det3("n", "s1", "s2", "s1", "s11", "s12", "s2", "s12", "s22")
-  private val linregB0 =
-    s"(${det3("sy", "s1", "s2", "s1y", "s11", "s12", "s2y", "s12", "s22")} / $detM)"
-  private val linregB1 =
-    s"(${det3("n", "sy", "s2", "s1", "s1y", "s12", "s2", "s2y", "s22")} / $detM)"
-  private val linregB2 =
-    s"(${det3("n", "s1", "sy", "s1", "s11", "s1y", "s2", "s12", "s2y")} / $detM)"
-
-  val oracle: Map[String, String] = Map(
-    "q_x_mann_whitney" ->
-      """WITH gs AS (SELECT n_chars, CAST(count(*) AS BIGINT) AS tot
-                     FROM documents GROUP BY n_chars),
-         gl AS (SELECT source, n_chars, CAST(count(*) AS BIGINT) AS cnt
-                FROM documents GROUP BY source, n_chars),
-         uni AS (SELECT s.source, gs.n_chars, gs.tot, coalesce(gl.cnt, 0) AS cnt
-                 FROM (SELECT DISTINCT source FROM documents) s
-                 CROSS JOIN gs
-                 LEFT JOIN gl ON gl.source = s.source AND gl.n_chars = gs.n_chars),
-         cum AS (SELECT source, tot, cnt,
-                   coalesce(CAST(sum(tot - cnt) OVER (PARTITION BY source
-                     ORDER BY n_chars
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT), 0)
-                     AS cumoth
-                 FROM uni),
-         t AS (SELECT CAST(sum(tot * tot * tot - tot) AS BIGINT) AS tsum FROM gs),
-         agg AS (SELECT source,
-                   CAST(sum(2 * cnt * cumoth + cnt * (tot - cnt)) AS BIGINT) AS u2,
-                   CAST(sum(cnt) AS BIGINT) AS n1,
-                   CAST(sum(tot - cnt) AS BIGINT) AS n2
-                 FROM cum GROUP BY source)
-         SELECT source, n1, n2, round(u2 / 2.0, 6) AS u,
-                round((u2 - n1 * n2) /
-                  (2.0 * sqrt(CAST(n1 AS DOUBLE) * n2 / 12.0 *
-                    ((n1 + n2 + 1) - tsum / (CAST(n1 + n2 AS DOUBLE) * (n1 + n2 - 1)))))
-                  , 6) AS z
-         FROM agg CROSS JOIN t ORDER BY source""",
-
-    "q_x_anova" ->
-      """WITH g AS (SELECT source, CAST(count(*) AS BIGINT) AS ni,
-                  CAST(sum(n_chars) AS BIGINT) AS si,
-                  CAST(sum(n_chars * n_chars) AS BIGINT) AS qi
-                FROM documents GROUP BY source),
-         a AS (SELECT CAST(count(*) AS BIGINT) AS k, CAST(sum(ni) AS BIGINT) AS n,
-                 CAST(sum(si) AS BIGINT) AS ssum, CAST(sum(qi) AS BIGINT) AS qsum,
-                 sum(CAST(si AS DOUBLE) * si / ni) AS sb
-               FROM g)
-         SELECT k, n,
-                round(((sb - CAST(ssum AS DOUBLE) * ssum / n) / (k - 1)) /
-                      ((qsum - sb) / (n - k)), 6) AS f,
-                round((sb - CAST(ssum AS DOUBLE) * ssum / n) /
-                      (qsum - CAST(ssum AS DOUBLE) * ssum / n), 6) AS eta_sq
-         FROM a""",
-
-    "q_x_spearman" ->
-      """WITH base AS (SELECT event_type, value AS x,
-                  CAST(extract(hour FROM ts) AS INTEGER) AS y
-                FROM events),
-         rx AS (SELECT event_type, x,
-                  2 * coalesce(CAST(sum(t) OVER (PARTITION BY event_type ORDER BY x
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT), 0)
-                    + t + 1 AS r2x
-                FROM (SELECT event_type, x, CAST(count(*) AS BIGINT) AS t
-                      FROM base GROUP BY event_type, x)),
-         ry AS (SELECT event_type, y,
-                  2 * coalesce(CAST(sum(t) OVER (PARTITION BY event_type ORDER BY y
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT), 0)
-                    + t + 1 AS r2y
-                FROM (SELECT event_type, y, CAST(count(*) AS BIGINT) AS t
-                      FROM base GROUP BY event_type, y)),
-         cells AS (SELECT b.event_type, CAST(count(*) AS BIGINT) AS cn, r2x, r2y
-                   FROM base b
-                   JOIN rx ON rx.event_type = b.event_type AND rx.x = b.x
-                   JOIN ry ON ry.event_type = b.event_type AND ry.y = b.y
-                   GROUP BY b.event_type, b.x, b.y, r2x, r2y),
-         m AS (SELECT event_type, CAST(sum(cn) AS BIGINT) AS n,
-                 CAST(sum(cn * r2x) AS BIGINT) AS sx,
-                 CAST(sum(cn * r2y) AS BIGINT) AS sy,
-                 CAST(sum(cn * r2x * r2x) AS BIGINT) AS sxx,
-                 CAST(sum(cn * r2y * r2y) AS BIGINT) AS syy,
-                 CAST(sum(cn * r2x * r2y) AS BIGINT) AS sxy
-               FROM cells GROUP BY event_type)
-         SELECT event_type, n,
-                round((CAST(n AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy) /
-                  sqrt((CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx) *
-                       (CAST(n AS DOUBLE) * syy - CAST(sy AS DOUBLE) * sy)), 6) AS rho
-         FROM m ORDER BY event_type""",
-
-    "q_x_kendall" ->
-      """WITH cells AS (SELECT event_type,
-                  CAST(extract(hour FROM ts) AS INTEGER) AS x,
-                  CAST(floor(value / 8) AS BIGINT) AS y,
-                  CAST(count(*) AS BIGINT) AS cn
-                FROM events GROUP BY 1, 2, 3),
-         cd AS (SELECT a.event_type,
-                  CAST(sum(CASE WHEN a.y < b.y THEN a.cn * b.cn ELSE 0 END) AS BIGINT) AS c,
-                  CAST(sum(CASE WHEN a.y > b.y THEN a.cn * b.cn ELSE 0 END) AS BIGINT) AS d
-                FROM cells a JOIN cells b
-                  ON a.event_type = b.event_type AND a.x < b.x
-                GROUP BY a.event_type),
-         ties AS (SELECT event_type, CAST(sum(cn) AS BIGINT) AS n FROM cells GROUP BY 1),
-         tx AS (SELECT event_type, CAST(sum(t * (t - 1) // 2) AS BIGINT) AS n1
-                FROM (SELECT event_type, x, CAST(sum(cn) AS BIGINT) AS t
-                      FROM cells GROUP BY 1, 2) GROUP BY event_type),
-         ty AS (SELECT event_type, CAST(sum(t * (t - 1) // 2) AS BIGINT) AS n2
-                FROM (SELECT event_type, y, CAST(sum(cn) AS BIGINT) AS t
-                      FROM cells GROUP BY 1, 2) GROUP BY event_type)
-         SELECT event_type, n, c, d,
-                round((c - d) /
-                  sqrt(CAST(n * (n - 1) // 2 - n1 AS DOUBLE) *
-                       CAST(n * (n - 1) // 2 - n2 AS DOUBLE)), 6) AS tau_b
-         FROM cd JOIN ties USING (event_type) JOIN tx USING (event_type)
-           JOIN ty USING (event_type)
-         ORDER BY event_type""",
-
-    "q_x_isotonic" ->
-      """WITH bins AS (SELECT round(CAST(embedding[2] AS DOUBLE), 2) + 0.0 AS sv,
-                  CAST(count(*) AS BIGINT) AS bn,
-                  CAST(sum(CASE WHEN label <= 4 THEN 1 ELSE 0 END) AS BIGINT) AS bp
-                FROM embeddings GROUP BY 1),
-         idx AS (SELECT sv, bn, bp,
-                   CAST(row_number() OVER (ORDER BY sv) AS BIGINT) AS i,
-                   CAST(sum(bp) OVER (ORDER BY sv) AS BIGINT) AS cs,
-                   CAST(sum(bn) OVER (ORDER BY sv) AS BIGINT) AS cn
-                 FROM bins),
-         pairs AS (SELECT j.j, k.i AS k,
-                     CAST(k.cs - j.csj0 AS DOUBLE) / (k.cn - j.cnj0) AS mean_jk
-                   FROM (SELECT i AS j, cs - bp AS csj0, cn - bn AS cnj0 FROM idx) j
-                   JOIN idx k ON j.j <= k.i),
-         m1 AS (SELECT j, k,
-                  min(mean_jk) OVER (PARTITION BY j ORDER BY k DESC
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS m1
-                FROM pairs),
-         fit AS (SELECT k AS i, max(m1) AS fit FROM m1 GROUP BY k)
-         SELECT sv, bn AS n, bp AS n_pos,
-                round(CAST(bp AS DOUBLE) / bn, 6) AS raw_rate,
-                round(fit, 6) AS iso_fit
-         FROM idx JOIN fit USING (i) ORDER BY sv""",
-
-    "q_x_linreg" ->
-      s"""WITH m AS (SELECT CAST(count(*) AS BIGINT) AS n,
-                  CAST(sum(x1) AS BIGINT) AS s1, CAST(sum(x2) AS BIGINT) AS s2,
-                  CAST(sum(y) AS BIGINT) AS sy,
-                  CAST(sum(x1 * x1) AS BIGINT) AS s11,
-                  CAST(sum(x1 * x2) AS BIGINT) AS s12,
-                  CAST(sum(x2 * x2) AS BIGINT) AS s22,
-                  CAST(sum(x1 * y) AS BIGINT) AS s1y,
-                  CAST(sum(x2 * y) AS BIGINT) AS s2y,
-                  CAST(sum(y * y) AS BIGINT) AS syy
-                FROM (SELECT n_chars AS y,
-                        CAST(len(string_split(text, ' ')) AS BIGINT) AS x1,
-                        CAST(length(regexp_replace(text, '[^aeiou]', '', 'g')) AS BIGINT) AS x2
-                      FROM documents))
-         SELECT n, round($linregB0, 6) AS b0, round($linregB1, 6) AS b1,
-                round($linregB2, 6) AS b2,
-                round(1.0 - (CAST(syy AS DOUBLE) - (($linregB0) * sy + ($linregB1) * s1y + ($linregB2) * s2y))
-                  / (CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * sy / n), 6) AS r2
-         FROM m""",
-
-    "q_x_holt" ->
+    }, Some(
       """WITH RECURSIVE o AS (
            SELECT user_id, event_type, value,
                   row_number() OVER (PARTITION BY user_id, event_type
@@ -499,9 +454,33 @@ object Stats {
                 round(avg(l), 6) AS avg_level,
                 round(avg(b), 6) AS avg_trend
          FROM r WHERE rn = cnt
-         GROUP BY event_type ORDER BY event_type""",
+         GROUP BY event_type ORDER BY event_type""")),
 
-    "q_x_interp" ->
+    // Leave-one-out linear interpolation error: re-estimate each
+    // event's value from its two temporal neighbors (same user) and
+    // report MAE/RMSE per event_type — the continuity audit for
+    // sensor-style feeds. Two per-user window functions (lag/lead of
+    // (ts, value)), weights are ratios of exact integer micros.
+    Query("q_x_interp", (s, d) => {
+      // orders by the µs long (ts is projected away below) — full µs order
+      val w = Window.partitionBy(col("user_id")).orderBy(col("t"), col("event_id"))
+      table(s, d, "events")
+        .select(col("user_id"), col("event_type"), col("event_id"),
+          unix_micros(col("ts")).as("t"), col("value"))
+        .withColumn("pt", lag(col("t"), 1).over(w))
+        .withColumn("pv", lag(col("value"), 1).over(w))
+        .withColumn("nt", lead(col("t"), 1).over(w))
+        .withColumn("nv", lead(col("value"), 1).over(w))
+        .filter(col("pt").isNotNull && col("nt").isNotNull && col("nt") > col("pt"))
+        .withColumn("err",
+          col("value") - (col("pv") + (col("nv") - col("pv")) *
+            ((col("t") - col("pt")).cast("double") / (col("nt") - col("pt")))))
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n"),
+          round(avg(abs(col("err"))), 6).as("mae"),
+          round(sqrt(avg(col("err") * col("err"))), 6).as("rmse"))
+        .orderBy(col("event_type"))
+    }, Some(
       """WITH w AS (SELECT event_type, value, epoch_us(ts) AS t,
                   lag(epoch_us(ts)) OVER uw AS pt,
                   lag(value) OVER uw AS pv,
@@ -516,6 +495,6 @@ object Stats {
          SELECT event_type, count(*) AS n,
                 round(avg(abs(err)), 6) AS mae,
                 round(sqrt(avg(err * err)), 6) AS rmse
-         FROM e GROUP BY event_type ORDER BY event_type"""
+         FROM e GROUP BY event_type ORDER BY event_type"""))
   )
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.Row
 import graft.Cuts.CutOps
@@ -325,20 +325,5 @@ object StreamingJobs {
         col("click_ts") <= col("purchase_ts"))
       .select(col("event_id"), col("user_id"), col("purchase_ts"),
         col("click_ts"), col("click_value"))
-  }
-
-  /** One-shot drain for tests/backfills: process everything available
-    * then stop — the batch-equivalence harness.
-    */
-  def runAvailableNow(df: DataFrame, queryName: String,
-      outputMode: String = "complete"): Unit = {
-    val q = df.writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(outputMode) // complete for aggregates; append/update
-                              // for dedup / mapGroupsWithState streams
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
   }
 }

@@ -7,7 +7,7 @@ class ApproxSpec extends SparkSuite {
   import spark.implicits._
 
   test("approx_count_distinct within rsd of exact") {
-    val joined = queries.Aggregates.defs("q_agg_approx")(spark, sfDir)
+    val joined = SparkEntry.queries("q_agg_approx")(spark, sfDir)
       .join(
         Tables.table(spark, sfDir, "lineitem")
           .groupBy($"l_returnflag").agg(countDistinct($"l_partkey").as("exact")),
@@ -27,7 +27,7 @@ class ApproxSpec extends SparkSuite {
     val exact = ev
       .groupBy(date_trunc("DAY", $"ts").as("day"))
       .agg(countDistinct($"user_id").as("exact_users"))
-    val rows = queries.Aggregates.defs("q_agg_sketch")(spark, sfDir)
+    val rows = SparkEntry.queries("q_agg_sketch")(spark, sfDir)
       .join(direct, "day").join(exact, "day")
       .select($"approx_users", $"direct_users", $"exact_users")
       .as[(Long, Long, Long)].collect()
@@ -41,7 +41,7 @@ class ApproxSpec extends SparkSuite {
   }
 
   test("percentile_approx within 5% relative of exact percentile") {
-    val got = queries.Aggregates.defs("q_agg_approx_pct")(spark, sfDir)
+    val got = SparkEntry.queries("q_agg_approx_pct")(spark, sfDir)
       .join(
         Tables.table(spark, sfDir, "lineitem")
           .groupBy($"l_returnflag")

@@ -100,7 +100,7 @@ class AsOfPlanSpec extends SparkSuite {
     val planned = AsOf.join(spark, purchases, clicks,
         "user_id", "ts", "c_user", "click_ts")
       .select($"event_id", $"user_id", $"ts", $"click_ts", $"click_value")
-    val composite = queries.Joins.defs("q_join_asof")(spark, sfDir)
+    val composite = SparkEntry.queries("q_join_asof")(spark, sfDir)
     assert(planned.count() === composite.count())
     assert(planned.except(composite).isEmpty && composite.except(planned).isEmpty)
   }

@@ -93,9 +93,9 @@ class SimilaritySpec extends SparkSuite {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      queries.Extensions.defs("q_x_cos_pairs")(spark, sfDir)
-      queries.Extensions.defs("q_x_ann_ivf")(spark, sfDir)
-      queries.Extensions.defs("q_x_ann_lsh")(spark, sfDir)
+      SparkEntry.queries("q_x_cos_pairs")(spark, sfDir)
+      SparkEntry.queries("q_x_ann_ivf")(spark, sfDir)
+      SparkEntry.queries("q_x_ann_lsh")(spark, sfDir)
       Thread.sleep(500) // listener delivery is async; no wait API is public
       assert(jobs.isEmpty,
         s"query construction launched Spark jobs (driver-side materialization): $jobs")

@@ -28,7 +28,7 @@ class StreamingSpec extends SparkSuite {
       StreamingJobs.tumbling(StreamingJobs.readEvents(spark, sfDir)),
       "t_tumble", "complete")
       .select(col("ws"), col("event_type"), col("n"))
-    val batch = queries.StreamingBatch.defs("q_s_tumble")(spark, sfDir)
+    val batch = SparkEntry.queries("q_s_tumble")(spark, sfDir)
       .select(col("ws"), col("event_type"), col("n"))
     assert(streamed.count() === batch.count())
     assert(streamed.except(batch).isEmpty && batch.except(streamed).isEmpty)
@@ -39,7 +39,7 @@ class StreamingSpec extends SparkSuite {
       StreamingJobs.sliding(StreamingJobs.readEvents(spark, sfDir)),
       "t_slide", "complete")
       .select(col("ws"), col("event_type"), col("n"))
-    val batch = queries.StreamingBatch.defs("q_s_slide")(spark, sfDir)
+    val batch = SparkEntry.queries("q_s_slide")(spark, sfDir)
       .select(col("ws"), col("event_type"), col("n"))
     assert(streamed.except(batch).isEmpty && batch.except(streamed).isEmpty)
   }
@@ -49,7 +49,7 @@ class StreamingSpec extends SparkSuite {
       StreamingJobs.sessions(StreamingJobs.readEvents(spark, sfDir)),
       "t_sess", "complete")
       .select(col("user_id"), col("session_start"), col("session_end"), col("n"))
-    val batch = queries.StreamingBatch.defs("q_s_session")(spark, sfDir)
+    val batch = SparkEntry.queries("q_s_session")(spark, sfDir)
       .select(col("user_id"), col("session_start"), col("session_end"), col("n"))
     assert(streamed.except(batch).isEmpty && batch.except(streamed).isEmpty)
   }

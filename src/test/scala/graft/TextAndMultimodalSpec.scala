@@ -79,7 +79,7 @@ class MultimodalSpec extends SparkSuite {
   }
 
   test("decode matches the oracle'd q_x_multimodal formula on fixtures") {
-    val viaQuery = queries.Extensions.defs("q_x_multimodal")(spark, sfDir)
+    val viaQuery = SparkEntry.queries("q_x_multimodal")(spark, sfDir)
     val direct = Multimodal.decodeFeatures(spark,
       Multimodal.attachBinary(Tables.table(spark, sfDir, "documents"))).toDF()
     assert(viaQuery.count() === 500)

@@ -25,7 +25,7 @@ class VectorHelpersSpec extends SparkSuite {
       .select($"id_a", $"id_b", $"cos").as[(Long, Long, Double)].collect()
     assert(lsh.forall { case (a, b, c) => a < b && c >= 0.35 })
     // every reported pair must agree with the exact cosine
-    val exact = queries.Extensions.defs("q_x_cos_pairs")(spark, sfDir)
+    val exact = SparkEntry.queries("q_x_cos_pairs")(spark, sfDir)
       .select($"id_a", $"id_b", $"cos").as[(Long, Long, Double)].collect()
       .map { case (a, b, c) => (a, b) -> c }.toMap
     lsh.filter(_._3 >= 0.4).foreach { case (a, b, c) =>
