@@ -195,7 +195,7 @@ object Bench {
     // dev run (SPARK_GRAFT_ONLY) must NOT clobber the full-board map —
     // gate_check cross-references it against CORRECTNESS names.
     // SPARK_GRAFT_BENCH_OUT redirects the full map for builder A/B runs
-    // (e.g. dev/bench_full_r10_dev.json) so a later driver run — which
+    // (e.g. dev/bench_full_r{N}_dev.json) so a later driver run — which
     // always writes the default path — can never clobber a comparison
     // artifact (the r9 driver overwrote the builder's 218-query map).
     // A filtered run still writes its map when the caller EXPLICITLY

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Cuts.CutOps
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Distributed byte-pair-encoding tokenizer training — the
   * vocabulary-learning step of an LLM data pipeline (the Sennrich
@@ -10,25 +10,18 @@ import graft.Cuts.CutOps
   * stage — `weather-etl.py` delegates all text handling to SQL — so
   * this is part of the mandated training-data extension family).
   *
-  * Scale shape: ONE corpus-sized pass builds the (word, freq) table;
-  * every merge round after that touches only the distinct-word table,
-  * which grows with vocabulary (Heaps' law, sublinear in corpus
-  * bytes), not with the corpus — the property that makes BPE trainable
-  * over 100 TB: the heavy explode+count shuffle happens once, and the
-  * iterative part is bounded by vocabulary size regardless of how many
-  * petabytes produced it. Each round is (1) an adjacent-pair count
-  * built from `slice` + `zip_with` (codegen'd, no UDF), (2) a 1-row
-  * TakeOrdered argmax with a deterministic tie-break (count desc, then
-  * pair asc — bit-reproducible on any partitioning), and (3) the merge
-  * applied to the symbol arrays. Step (3) is a sequential
-  * left-to-right fold (adjacent-pair collapse is order-dependent, not
-  * expressible with element-wise higher-order functions) and runs as a
-  * Scala UDF — but only ever over the vocabulary-sized table, never
-  * the corpus. `localCheckpoint(eager = false)` truncates lineage each
-  * round so analysis cost stays O(1) in the round count (same pattern
-  * as [[Components.connectedComponents]]); the checkpoint blocks
-  * materialize under the next round's argmax action, one job per
-  * round.
+  * Scale shape: ONE corpus-sized pass builds the (word, freq) table —
+  * the explode + count shuffle over the corpus, distributed, one
+  * action. That table grows with the vocabulary (Heaps' law, sublinear
+  * in corpus bytes), not with the corpus, and it is collected to the
+  * driver once. The greedy merge loop then runs on the driver over
+  * that in-memory dictionary, as in Sennrich et al. and as MLlib's
+  * `Word2Vec` / `CountVectorizer` collect their vocabularies: each
+  * round recounts adjacent pairs, takes the argmax and applies the
+  * merge to every word, so training costs O(merges × Σ symbols) driver
+  * time on top of the one pass, and no Spark job per round. The limit
+  * is driver memory: a vocabulary whose serialized table exceeds
+  * `spark.driver.maxResultSize` fails loudly at the collect.
   */
 object Bpe {
 
@@ -43,8 +36,7 @@ object Bpe {
 
   /** Left-to-right, non-overlapping application of one merge to a
     * symbol sequence: "aaa" under (a,a) → [aa, a], never [a, aa].
-    * Pure; shared by the executor UDF and usable as a driver-side
-    * encoder primitive. */
+    * Pure; shared by the driver-side training loop and the encoder. */
   def applyMerge(syms: Seq[String], left: String, right: String): Seq[String] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
     var i = 0
@@ -98,45 +90,39 @@ object Bpe {
     * merged before the budget is spent. Deterministic on any
     * partitioning: the argmax orders by (count desc, left asc,
     * right asc), where string order is Spark's binary UTF-8 compare —
-    * i.e. code-POINT order, which a JVM UTF-16 String compare only
-    * matches when ties never pit a supplementary-plane symbol against
-    * a BMP char above U+E000 (the spec corpora keep clear of that
-    * edge). The returned list is merge-rank-ordered and tiny
-    * (≤ numMerges rows on the driver — this is tokenizer metadata,
-    * not data). */
+    * i.e. code-POINT order (U+FF21 sorts before U+1F600). The word
+    * table is collected once (see the object scaladoc for the
+    * `spark.driver.maxResultSize` limit); every merge round after that
+    * runs on the driver. The returned list is merge-rank-ordered and
+    * tiny (≤ numMerges rows — tokenizer metadata, not data). */
   def trainMerges(docs: DataFrame, textCol: String, numMerges: Int): Seq[Merge] = {
     require(numMerges >= 1, s"numMerges must be >= 1, got $numMerges")
-    var words = wordTable(docs, textCol).cut("Bpe.scala:108")
+    var words = wordTable(docs, textCol).collect()
+      .map(r => (r.getSeq[String](0), r.getLong(1)))
     val merges = scala.collection.mutable.ArrayBuffer.empty[Merge]
     var exhausted = false
     while (merges.length < numMerges && !exhausted) {
-      // adjacent symbol pairs: zip syms[0..n-2] with syms[1..n-1];
-      // both slices have n-1 elements so zip_with never null-pads.
-      // Fully-merged single-symbol words yield empty pair arrays and
-      // drop out under explode.
-      val adj = zip_with(
-        slice(col("syms"), lit(1), size(col("syms")) - 1),
-        slice(col("syms"), lit(2), size(col("syms")) - 1),
-        (a, b) => struct(a.as("l"), b.as("r")))
-      val top = words
-        .select(col("freq"), explode(adj).as("p"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum(col("freq")).as("cnt"))
-        .orderBy(col("cnt").desc, col("l"), col("r"))
-        .limit(1)
-        .collect()
-      if (top.isEmpty) exhausted = true
+      // corpus-weighted adjacent-pair counts; fully merged
+      // single-symbol words contribute no pair. Overflow raises, as
+      // Spark's ANSI `sum` over the same counts would.
+      val counts = scala.collection.mutable.HashMap.empty[(String, String), Long]
+      for ((syms, freq) <- words; pair <- syms.iterator.zip(syms.iterator.drop(1)))
+        counts(pair) = Math.addExact(counts.getOrElse(pair, 0L), freq)
+      if (counts.isEmpty) exhausted = true
       else {
-        val l = top(0).getString(0)
-        val r = top(0).getString(1)
-        merges += Merge(merges.length + 1, l, r, top(0).getLong(2))
-        val mergeOne = udf((s: Seq[String]) => applyMerge(s, l, r))
-        words = words
-          .select(mergeOne(col("syms")).as("syms"), col("freq"))
-          .cut("Bpe.scala:135")
+        val ((l, r), cnt) = counts.minBy { case ((a, b), c) => (-c, a, b) }(pairOrder)
+        merges += Merge(merges.length + 1, l, r, cnt)
+        words = words.map { case (syms, freq) => (applyMerge(syms, l, r), freq) }
       }
     }
     merges.toSeq
+  }
+
+  // (−count, left, right) with strings in Spark's binary UTF-8 order
+  private val pairOrder: Ordering[(Long, String, String)] = {
+    val utf8: Ordering[String] = (x, y) =>
+      UTF8String.fromString(x).binaryCompare(UTF8String.fromString(y))
+    Ordering.Tuple3(Ordering.Long, utf8, utf8)
   }
 
   /** [[trainMerges]] over `dir`'s documents table for consumers that

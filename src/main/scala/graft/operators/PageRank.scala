@@ -34,8 +34,8 @@ object PageRank {
     * @param edges columns `a`, `b`, same type as `id` — undirected;
     *              direction and duplicates normalized internally.
     *              Every endpoint must be a `nodes` id: an endpoint
-    *              outside `nodes` is not rejected — it surfaces as an
-    *              extra output row whose rank is NULL.
+    *              outside `nodes` fails the action with
+    *              "PageRank: edge endpoint not in nodes".
     * @return (id, rank) after exactly `iters` rounds.
     */
   def pageRank(spark: SparkSession, nodes: DataFrame, edges: DataFrame,
@@ -72,12 +72,17 @@ object PageRank {
         .select(col("dst"), (col("rank") / col("outdeg")).as("m"),
           lit(null).cast("long").as("n"))
         .unionAll(base.select(col("id").as("dst"), lit(0.0).as("m"), col("n")))
+      // `n` is NULL exactly for an id with no zero row, i.e. an edge
+      // endpoint outside `nodes`: raised in the same projection, so
+      // the contract check adds no job and no collect
       ranks = contribs
         .groupBy(col("dst").as("id"))
         .agg(sum(col("m")).as("in_mass"), max(col("n")).as("n"))
         .select(col("id"),
-          (lit(1.0 - damping) / col("n")
-            + lit(damping) * col("in_mass")).as("rank"))
+          when(col("n").isNull, raise_error(concat(
+            lit("PageRank: edge endpoint not in nodes: "), col("id").cast("string"))))
+            .otherwise(lit(1.0 - damping) / col("n")
+              + lit(damping) * col("in_mass")).as("rank"))
         .transform(Checkpoints.truncate(_, eager = false))
     }
     ranks

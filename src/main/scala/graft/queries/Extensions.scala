@@ -2757,15 +2757,15 @@ object Extensions {
     // Distributed BPE tokenizer training — the vocabulary-learning
     // step of an LLM pipeline (Sennrich-style merges). One corpus
     // pass builds the word-frequency table; the 24 merge rounds then
-    // run over the vocabulary-sized table only (operators.Bpe scaladoc
-    // has the 100 TB shape). Deterministic on any partitioning: pair
-    // argmax tie-breaks (count desc, pair asc). No-oracle by design —
-    // the iterative argmax is not SQL-expressible; BpeSpec asserts
-    // exact merge-list equality vs an independent single-node
-    // reference plus partitioning invariance. Training runs its jobs
-    // EAGERLY while the query is built (the q_x_dup_clusters precedent
-    // for iterative operators) — deliberate, so bench and correctness
-    // both measure the true training cost rather than a cached replay.
+    // run on the driver over that vocabulary-sized table (operators.Bpe
+    // scaladoc has the scale shape and its driver-memory limit).
+    // Deterministic on any partitioning: pair argmax tie-breaks
+    // (count desc, pair asc). No-oracle by design — the iterative
+    // argmax is not SQL-expressible; BpeSpec asserts exact merge-list
+    // equality vs an independent single-node reference plus
+    // partitioning invariance. Training runs its one job at build
+    // (the word-table collect), so bench and correctness both measure
+    // the true training cost rather than a cached replay.
     Query("q_x_bpe", (s, d) => {
       import s.implicits._
       val merges = graft.operators.Bpe.trainMerges(table(s, d, "documents"), "text", 24)

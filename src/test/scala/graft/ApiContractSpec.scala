@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Components, RangeJoin}
+import graft.operators.{Components, PageRank, RangeJoin}
 import graft.plans.AsOf
 
 /** Misuse must fail fast with a clear message — not return wrong
@@ -76,5 +76,16 @@ class ApiContractSpec extends SparkSuite {
       Components.connectedComponents(spark, nodes, edges, maxIters = 5)
     }
     assert(e.getMessage.contains("did not converge"), e.getMessage)
+  }
+
+  test("pagerank fails loudly on an edge endpoint missing from nodes") {
+    // 9 is not a node: its round aggregate has no zero row, so `n` is
+    // NULL there; that must raise, never emit a NULL rank for it
+    val nodes = (0L to 3L).toDF("id")
+    val edges = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 9L)).toDF("a", "b")
+    val e = intercept[Exception] {
+      PageRank.pageRank(spark, nodes, edges, iters = 3).collect()
+    }
+    assert(e.getMessage.contains("edge endpoint not in nodes: 9"), e.getMessage)
   }
 }

@@ -149,6 +149,61 @@ class BpeSpec extends SparkSuite {
     assert(Bpe.charSyms(s"${emoji}x") == Vector(emoji, "x"))
   }
 
+  test("argmax ties break in code-point order, not UTF-16 order") {
+    import spark.implicits._
+    // U+FF21 < U+1F600 by code point (and in UTF-8 bytes), but the
+    // emoji's UTF-16 lead surrogate 0xD83D sorts below 0xFF21. Every
+    // pair below has count 1, so order alone picks each merge.
+    val emoji = new String(Character.toChars(0x1F600))
+    val fullA = "\uFF21"
+    val w = Bpe.EndOfWord
+    // tie on the right symbol: (a, Ａ) before (a, 😀)
+    val right = Bpe.trainMerges(Seq(s"a$emoji a$fullA").toDF("text"), "text", 4)
+    assert(right.map(m => (m.left, m.right, m.freq)) == Seq(
+      ("a", fullA, 1L), ("a", emoji, 1L), ("a" + fullA, w, 1L), ("a" + emoji, w, 1L)))
+    // tie on the left symbol: (Ａ, </w>) before (😀, </w>)
+    val left = Bpe.trainMerges(Seq(s"$emoji $fullA").toDF("text"), "text", 4)
+    assert(left.map(m => (m.left, m.right)) == Seq((fullA, w), (emoji, w)))
+  }
+
+  test("training runs the same few Spark jobs for 2 and for 24 merges") {
+    // one corpus pass, then the merge loop on the driver: the job
+    // count must not grow with the merge budget
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import spark.implicits._
+    val docs = corpus.toDF("text")
+    def jobsFor(n: Int): Int = {
+      val group = s"BpeSpec-jobs-$n"
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val marker = new java.util.concurrent.CountDownLatch(1)
+      val listener = new SparkListener {
+        override def onJobStart(js: SparkListenerJobStart): Unit =
+          if (js.properties != null &&
+              js.properties.getProperty("spark.jobGroup.id") == group) {
+            if (js.properties.getProperty("spark.job.description") == "marker")
+              marker.countDown()
+            else jobs.incrementAndGet()
+          }
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        spark.sparkContext.setJobGroup(group, "train")
+        Bpe.trainMerges(docs, "text", n)
+        // the bus delivers in order: once the marker job is seen,
+        // every training job before it has been counted
+        spark.sparkContext.setJobDescription("marker")
+        spark.sparkContext.parallelize(Seq(1), 1).count()
+        assert(marker.await(30, java.util.concurrent.TimeUnit.SECONDS))
+        jobs.get
+      } finally {
+        spark.sparkContext.clearJobGroup()
+        spark.sparkContext.removeSparkListener(listener)
+      }
+    }
+    val (j2, j24) = (jobsFor(2), jobsFor(24))
+    assert(j2 == j24 && j24 >= 1 && j24 <= 2, s"jobs: n=2 -> $j2, n=24 -> $j24")
+  }
+
   test("randomized corpora: trainer matches the reference on 8 seeds") {
     import spark.implicits._
     for (seed <- 1 to 8) {
