@@ -66,10 +66,10 @@ object Bench {
     // locally-checkpointed RDDs are dropped — memoized frames
     // (graft.Memo) are plain dataset caches and are kept warm.
     // (Rdds.isLocallyCheckpointed is true from the moment
-    // localCheckpoint() is CALLED — unlike isCheckpointed, which flips
+    // localCheckpoint is called — unlike isCheckpointed, which flips
     // only on full materialization and so would leak the partially-
-    // computed blocks of a query that threw mid-action. This codebase
-    // only ever local-checkpoints, never reliable.)
+    // computed blocks of a query that threw mid-action. Bench never
+    // turns on reliable cuts, so every cut is a local checkpoint.)
     def dropQueryBlocks(): Unit =
       spark.sparkContext.getPersistentRDDs.values
         .filter(Rdds.isLocallyCheckpointed)

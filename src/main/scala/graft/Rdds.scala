@@ -10,7 +10,7 @@ object Rdds {
   // RDD.isLocallyCheckpointed is public bytecode but private[spark] in
   // the Scala signature; reflection reads it without infiltrating the
   // org.apache.spark package. It is true from the moment
-  // localCheckpoint() is CALLED (unlike isCheckpointed, which flips
+  // localCheckpoint is called (unlike isCheckpointed, which flips
   // only on full materialization and so misses the partially-computed
   // blocks of an execution that threw mid-action).
   private val isLocalCp = classOf[RDD[_]].getMethod("isLocallyCheckpointed")
@@ -18,7 +18,7 @@ object Rdds {
   def isLocallyCheckpointed(r: RDD[_]): Boolean =
     isLocalCp.invoke(r).asInstanceOf[Boolean]
 
-  /** Free the blocks of ONE `localCheckpoint(eager = false)` frame —
+  /** Free the blocks of ONE lazy `localCheckpoint` frame —
     * the LogicalRDD its plan wraps — without touching any other RDD on
     * the shared SparkContext (a context-wide sweep can unpersist a
     * concurrent job's checkpoint, which has no lineage to recompute

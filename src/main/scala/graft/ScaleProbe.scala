@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.Cuts.CutOps
 
 /** Dev-only scale probe for the cosine-graph family: prints the edge
   * count, degree extremes, and the oriented wedge count Σ d_out² (the
@@ -18,7 +19,7 @@ object ScaleProbe {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val n = Tables.table(spark, dir, "embeddings").count()
     val e = operators.CosGraph.edges(spark, dir, threshold)
-      .localCheckpoint(eager = true)
+      .cut(eager = true)
     val m = e.count()
     val deg = e.select(col("a").as("id")).unionAll(e.select(col("b").as("id")))
       .groupBy(col("id")).agg(count(lit(1)).as("deg"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Cuts.CutOps
 
 /** Distributed connected components — the cluster-assignment step of a
   * near-duplicate pipeline (pairs from [[Dedup]] → one representative
@@ -28,7 +29,7 @@ import org.apache.spark.sql.functions._
   * neighbor-min aggregate total, removing the per-round label
   * join-back; the jump input is lineage-cut so the self-join reads
   * persisted blocks instead of re-executing the neighbor-min subtree
-  * twice). Each round's plan is truncated via [[Checkpoints.truncate]]
+  * twice). Each round's plan is truncated via [[graft.Cuts]]
   * (reliable checkpoint when opted in for cluster runs, localCheckpoint
   * otherwise) so Catalyst analysis cost stays O(1) in the round count
   * rather than compounding.
@@ -58,7 +59,7 @@ object Components {
     // otherwise re-execute the upstream candidate-pair computation
     // (measured: 12.6 s → 2.5 s on the dup-clusters query).
     val e0 = edges.select(col("a").as("src"), col("b").as("dst"))
-      .transform(Checkpoints.truncate(_))
+      .cut(eager = true)
     // Symmetrized edges PLUS one self-loop per node (r18): the
     // self-loop row makes the per-round neighbor-min aggregate TOTAL
     // over the node set — min(dlbl) over {self} ∪ N(id) covers every
@@ -72,13 +73,13 @@ object Components {
       .filter(col("src") =!= col("dst"))
       .distinct()
       .union(nodes.select(col("id").as("src"), col("id").as("dst")))
-      .transform(Checkpoints.truncate(_))
+      .cut(eager = true)
 
     // lbl(x) = min(x, direct neighbors) — the self-loop contributes x
     var lbl = sym
       .groupBy(col("src").as("id"))
       .agg(min(col("dst")).as("lbl"))
-      .transform(Checkpoints.truncate(_))
+      .cut(eager = true)
 
     var converged = false
     var iter = 0
@@ -100,7 +101,7 @@ object Components {
         // same persisted blocks, materialized once by the round's
         // convergence count (same lazy-cut-in-one-action shape as the
         // round cut itself)
-        .transform(Checkpoints.truncate(_, eager = false))
+        .cut()
       // (2) pointer jump: lbl := lbl(lbl). One jump per round — r18
       // measured a second jump NOT reducing the 10-round count on the
       // fixture's cos-0.4 graph (label pointers there don't form deep
@@ -116,7 +117,7 @@ object Components {
       val next = afterEdges.join(jump, col("lbl") === col("jid"), "left")
         .select(col("id"), col("prev"),
           least(col("lbl"), coalesce(col("jlbl"), col("lbl"))).as("lbl"))
-        .transform(Checkpoints.truncate(_, eager = false))
+        .cut()
       // null-safe: an edge endpoint missing from `nodes` has no
       // self-loop row, so its `prev` is always NULL — it must keep the
       // loop running (and fail the convergence require), not drop out

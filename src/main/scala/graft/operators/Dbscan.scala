@@ -37,13 +37,13 @@ object Dbscan {
     *         points only — noise is the complement of the id set.
     */
   def cluster(spark: SparkSession, edges: DataFrame, minPts: Int): DataFrame = {
-    val e = edges.select(col("a"), col("b")).cut("Dbscan.scala:39")
+    val e = edges.select(col("a"), col("b")).cut()
     val sym = e.select(col("a").as("u"), col("b").as("v"))
       .unionAll(e.select(col("b").as("u"), col("a").as("v")))
     // |N_eps(p)| >= minPts with p itself counted => degree >= minPts-1
     val deg = sym.groupBy(col("u")).agg(count(lit(1)).as("d"))
     val core = deg.filter(col("d") >= minPts - 1).select(col("u").as("id"))
-      .cut("Dbscan.scala:45")
+      .cut()
     val coreEdges = e
       .join(core.select(col("id").as("a")), Seq("a"), "left_semi")
       .join(core.select(col("id").as("b")), Seq("b"), "left_semi")

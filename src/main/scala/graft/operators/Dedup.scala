@@ -128,7 +128,7 @@ object Dedup {
         b => xxhash64(b, slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand))))))
       .withColumnRenamed("pos", "band")
       .withColumnRenamed("col", "bucket")
-      .cut("Dedup.scala:130", eager = true)
+      .cut(eager = true)
 
     val a = banded.select(col("band"), col("bucket"),
       col("doc_id").as("doc_a"), col("words").as("words_a"))
@@ -185,7 +185,7 @@ object Dedup {
     // other Dedup builders): reused by the explode below AND both sides
     // of the verify join (would otherwise recompute the derivation 3×)
     val base = sets.select(col(idCol).as("doc_id"), col(setCol).as("s"))
-      .cut("Dedup.scala:187")
+      .cut()
     val la = base.select(col("doc_id").as("doc_a"), col("s"))
     val rb = base.select(col("doc_id").as("doc_b"), col("s"))
     val freq = base.select(explode(col("s")).as("t"))
@@ -230,7 +230,7 @@ object Dedup {
     val q = 1000000L
     val base = sets.select(col(idCol).as("doc_id"), col(setCol).as("s"))
       .filter(size(col("s")) > 0)
-      .cut("Dedup.scala:232")
+      .cut()
     val la = base.select(col("doc_id").as("doc_a"), col("s"))
     val rb = base.select(col("doc_id").as("doc_b"), col("s"))
     val freq = base.select(explode(col("s")).as("t"))
@@ -317,9 +317,9 @@ object Dedup {
       idCol: String, setCol: String, threshold: Double): DataFrame =
     exactJaccardJoinPrepared(
       left.select(col(idCol).as("doc_a"), col(setCol).as("s"))
-        .cut("Dedup.scala:320"),
+        .cut(),
       right.select(col(idCol).as("doc_b"), col(setCol).as("s"))
-        .cut("Dedup.scala:322"),
+        .cut(),
       threshold)
 
   /** [[exactJaccardJoin]] over caller-prepared sides: la = (doc_a, s),
@@ -467,7 +467,7 @@ object Dedup {
       posexplode(array(anchors: _*)))
       .withColumnRenamed("pos", "chunk")
       .withColumnRenamed("col", "chunk_val")
-      .cut("Dedup.scala:386", eager = true)
+      .cut(eager = true)
     val a = banded.select(col("chunk"), col("chunk_val"),
       col("doc_id").as("doc_a"), col("simhash").as("sh_a"))
     val b = banded.select(col("chunk"), col("chunk_val"),
@@ -516,7 +516,7 @@ object Dedup {
     // checkpoint and everything downstream carries 8-byte keys)
     val wins = (if (hashKeys) raw.select(col("doc_id"), xxhash64(col("win")).as("win"))
                 else raw)
-      .cut("Dedup.scala:435")
+      .cut()
     val perKey = wins.groupBy(col("win"))
       .agg(countDistinct(col("doc_id")).as("nd"))
     wins.join(perKey, "win")

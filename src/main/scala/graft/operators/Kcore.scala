@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Cuts.CutOps
 
 /** k-core extraction by iterative peeling (Seidman 1983; the
   * distributed formulation of Montresor et al. 2013): repeatedly drop
@@ -22,17 +23,21 @@ import org.apache.spark.sql.functions._
   * on the surviving edge list — key-partitioned shuffles only, edge
   * list monotonically shrinking. Round count is bounded by the
   * degeneracy ordering depth (tiny on similarity graphs); each
-  * round's frame is lineage-truncated via [[Checkpoints]] so plans
+  * round's frame is lineage-truncated via [[graft.Cuts]] so plans
   * don't grow with iterations (the Components discipline).
   */
 object Kcore {
+
+  // live-edge count at or below which a second peel level is folded
+  // into the iteration's action window
+  private val BatchEdgeThreshold = 200000L
 
   /** Vertices of the k-core with their within-core degree.
     *
     * Peel pacing is ADAPTIVE: every loop iteration runs ONE driver
     * action (a single agg returning both the below-k vertex count and
     * the live degree mass), peels one level, and — only when the live
-    * edge count is at or below `batchEdgeThreshold` — folds a second,
+    * edge count is at or below `BatchEdgeThreshold` — folds a second,
     * action-free peel level into the same iteration. Peeling past the
     * fixpoint is idempotent, so the overshoot is harmless; on small
     * graphs the per-action scheduler overhead dominates (batching
@@ -42,18 +47,17 @@ object Kcore {
     * replaces bought 4.45 → 3.00 s at sf0.001 but cost 0.75 → 1.29 s
     * at sf0.1 — the adaptive switch keeps both.)
     *
-    * `maxRounds` bounds LOOP ITERATIONS, i.e. up to 2·maxRounds peel
-    * levels when the batch path is active. On exhaustion the returned
-    * degrees are exactly `degOf` of the current surviving edge set
-    * (no one-level lag), filtered to ≥ k.
+    * `maxRounds` bounds LOOP ITERATIONS, i.e. convergence checks (up
+    * to 2·maxRounds peel levels when the batch path is active). If the
+    * last check still finds a vertex of degree < k, the surviving
+    * subgraph is not a k-core and the call fails with "kCore did not
+    * converge" — never a half-peeled answer.
     *
     * @param edges undirected (a, b), a < b, deduplicated.
-    * @param batchEdgeThreshold live-edge count at or below which a
-    *   second peel level is folded into the iteration's action window.
     * @return (id, core_deg) — empty if the k-core is empty.
     */
   def kCore(spark: SparkSession, edges: DataFrame, k: Int,
-      maxRounds: Int = 50, batchEdgeThreshold: Long = 200000L): DataFrame = {
+      maxRounds: Int = 50): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     def degOf(g: DataFrame): DataFrame =
       g.select(col("a").as("id"))
@@ -64,8 +68,8 @@ object Kcore {
       g.join(alive.select(col("id").as("a")), Seq("a"), "left_semi")
         .join(alive.select(col("id").as("b")), Seq("b"), "left_semi")
     }
-    var e = Checkpoints.truncate(edges.select(col("a"), col("b")), eager = false)
-    var deg = Checkpoints.truncate(degOf(e), eager = false)
+    var e = edges.select(col("a"), col("b")).cut()
+    var deg = degOf(e).cut()
     var round = 0
     var stable = false
     while (!stable && round < maxRounds) {
@@ -81,15 +85,16 @@ object Kcore {
         // references g twice (peel input + degOf), so chaining deeper
         // duplicates the subtree exponentially (measured: 3 free
         // levels = 7.0 s vs 4.1 s at sf0.001)
-        if (liveEdges <= batchEdgeThreshold)
+        if (liveEdges <= BatchEdgeThreshold)
           g = peel(g, degOf(g))
-        e = Checkpoints.truncate(g, eager = false)
-        deg = Checkpoints.truncate(degOf(e), eager = false)
+        e = g.cut()
+        deg = degOf(e).cut()
         round += 1
       }
     }
-    // after convergence every surviving vertex has core_deg >= k;
-    // if the loop emptied the graph, the filter returns nothing
+    require(stable, s"kCore did not converge in $maxRounds rounds")
+    // every surviving vertex has core_deg >= k; if the loop emptied
+    // the graph, the filter returns nothing
     deg.filter(col("core_deg") >= k)
   }
 }

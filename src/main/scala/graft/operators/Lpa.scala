@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Cuts.CutOps
 
 /** Synchronous label propagation (Raghavan, Albert & Kumara 2007) —
   * community detection on the near-dup/similarity graph. Where
@@ -21,7 +22,7 @@ import org.apache.spark.sql.functions._
   * Scale shape: each round is one join of the edge list against the
   * label table + one (vertex, label) count aggregate + one per-vertex
   * argmax window — all partitioned by vertex id, nothing global.
-  * Lineage is cut per round ([[Checkpoints.truncate]]), the same
+  * Lineage is cut per round ([[graft.Cuts]]), the same
   * iterative-loop discipline as Components/PageRank/Kcore.
   */
 object Lpa {
@@ -29,9 +30,10 @@ object Lpa {
   /** @param nodes one column `id` (any orderable type)
     * @param edges columns `a`, `b`, same type — undirected, normalized
     *              internally. Every endpoint must be a `nodes` id: an
-    *              endpoint outside `nodes` is not rejected — it joins
-    *              the label table after the first round, so it appears
-    *              in the output and can shift its neighbors' labels.
+    *              endpoint outside `nodes` next to a node fails the
+    *              action with "LPA: edge endpoint not in nodes"; an
+    *              edge with neither endpoint in `nodes` carries no
+    *              label and is ignored.
     * @return (id, community) — community = the converged label (a
     *         vertex id, NOT guaranteed to be the community minimum)
     */
@@ -39,15 +41,15 @@ object Lpa {
       spark: SparkSession, nodes: DataFrame, edges: DataFrame,
       rounds: Int = 8): DataFrame = {
     val e0 = edges.select(col("a").as("src"), col("b").as("dst"))
-      .transform(Checkpoints.truncate(_))
+      .cut(eager = true)
     val sym = e0
       .union(e0.select(col("dst").as("src"), col("src").as("dst")))
       .filter(col("src") =!= col("dst"))
       .distinct()
-      .transform(Checkpoints.truncate(_))
+      .cut(eager = true)
 
     var labels = nodes.select(col("id"), col("id").as("lbl"))
-      .transform(Checkpoints.truncate(_))
+      .cut(eager = true)
     var round = 0
     while (round < rounds) {
       // Neighbor messages at weight 1, PLUS one weight-0 self-message
@@ -65,7 +67,8 @@ object Lpa {
         .join(labels.select(col("id").as("src"), col("lbl")), "src")
         .select(col("dst").as("id"), col("lbl"), lit(1L).as("wt"))
         .unionAll(labels.select(col("id"), col("lbl"), lit(0L).as("wt")))
-      val counts = msgs.groupBy(col("id"), col("lbl")).agg(sum(col("wt")).as("c"))
+      val counts = msgs.groupBy(col("id"), col("lbl"))
+        .agg(sum(col("wt")).as("c"), min(col("wt")).as("minwt"))
       val w = Window.partitionBy(col("id")).orderBy(col("c").desc, col("lbl"))
       // lazy cut: the loop has no per-round action (fixed round
       // budget, no convergence check), so an EAGER cut here ran one
@@ -74,9 +77,17 @@ object Lpa {
       // rounds now materialize under the caller's single action)
       labels = counts
         .withColumn("rk", row_number().over(w))
+        // wt 0 flags the self row: an id without one is an edge
+        // endpoint outside `nodes`, raised in the same window — no
+        // job and no exchange added
+        .withColumn("self", min(col("minwt")).over(
+          w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
         .filter(col("rk") === 1)
-        .select(col("id"), col("lbl"))
-        .transform(Checkpoints.truncate(_, eager = false))
+        .select(col("id"),
+          when(col("self") =!= 0, raise_error(concat(
+            lit("LPA: edge endpoint not in nodes: "), col("id").cast("string"))))
+            .otherwise(col("lbl")).as("lbl"))
+        .cut()
       round += 1
     }
     labels.select(col("id"), col("lbl").as("community"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Cuts.CutOps
 
 /** Distributed PageRank over an explicit edge list — node centrality
   * in a similarity or link graph. In a training-data pipeline this is
@@ -20,7 +21,7 @@ import org.apache.spark.sql.functions._
   * Components lesson). Each round is one hash join of the rank frame
   * against the edge list plus one aggregate on dst — two shuffles of
   * rank-sized data, no cross join, no driver-side adjacency. The
-  * per-round lazy lineage cut ([[Checkpoints.truncate]] — reliable
+  * per-round lazy lineage cut ([[graft.Cuts]] — reliable
   * checkpoint in cluster mode, localCheckpoint locally) keeps Catalyst
   * analysis O(1) in the iteration count. The only broadcast is the
   * 1-row node count.
@@ -43,19 +44,19 @@ object PageRank {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
     val e0 = edges.select(col("a").as("src"), col("b").as("dst"))
-      .transform(Checkpoints.truncate(_))
+      .cut(eager = true)
     val sym = e0
       .union(e0.select(col("dst").as("src"), col("src").as("dst")))
       .filter(col("src") =!= col("dst"))
       .distinct()
     val deg = sym.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    val withDeg = sym.join(deg, "src").transform(Checkpoints.truncate(_))
+    val withDeg = sym.join(deg, "src").cut(eager = true)
     val n = broadcast(nodes.agg(count(lit(1)).as("n")))
     // cut once: `base` re-enters every round's plan, and without the
     // cut each round re-analyzes the node scan + crossJoin subtree —
     // pure driver planning cost at fixture scale (measured r12)
     val base = nodes.select(col("id")).crossJoin(n)
-      .transform(Checkpoints.truncate(_, eager = false))
+      .cut()
     var ranks = base.select(col("id"), (lit(1.0) / col("n")).as("rank"))
     for (_ <- 1 to iters) {
       // One zero-mass row per node unioned into the contribution
@@ -83,7 +84,7 @@ object PageRank {
             lit("PageRank: edge endpoint not in nodes: "), col("id").cast("string"))))
             .otherwise(lit(1.0 - damping) / col("n")
               + lit(damping) * col("in_mass")).as("rank"))
-        .transform(Checkpoints.truncate(_, eager = false))
+        .cut()
     }
     ranks
   }

@@ -1650,7 +1650,7 @@ object Extensions {
       val tf = table(s, d, "documents")
         .select(explode(TextFunctions.tokens(col("text"))).as("tok"))
         .groupBy(col("tok")).agg(count(lit(1)).as("c"))
-        .cut("Extensions.scala:1090")
+        .cut()
       val tot = tf.agg(sum(col("c")).as("total"))
       def cut(k: Int) = tf.orderBy(col("c").desc, col("tok")).limit(k)
         .agg(sum(col("c")).as("mass"), count(lit(1)).as("n_used"))
@@ -1693,7 +1693,7 @@ object Extensions {
         .filter(col("nv") > 0)
       val nx = dims.join(nrm, Seq("vec_id", "label"))
         .select(col("label"), col("pos"), (col("x") / col("nv")).as("xh"))
-        .cut("Extensions.scala:1118")
+        .cut()
       val s2 = nx.groupBy(col("label"), col("pos")).agg(sum(col("xh")).as("sx"))
         .groupBy(col("label")).agg(sum(col("sx") * col("sx")).as("s2"))
       val s1 = nx.groupBy(col("label")).agg(sum(col("xh") * col("xh")).as("s1"))
@@ -1986,7 +1986,7 @@ object Extensions {
                WHERE len(list_distinct(list_concat(a.s, b.s))) > 0
                  AND len(list_intersect(a.s, b.s)) * 1000000
                      >= len(list_distinct(list_concat(a.s, b.s))) * 600000),
-         sym AS (SELECT u AS src, v AS dst FROM e UNION SELECT v AS src, u AS dst FROM e),
+         sym AS MATERIALIZED (SELECT u AS src, v AS dst FROM e UNION SELECT v AS src, u AS dst FROM e),
          deg AS (SELECT src, count(*) AS outdeg FROM sym GROUP BY src),
          nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM documents),
          r0 AS (SELECT doc_id, CAST(1 AS DOUBLE) / nn.n AS rank FROM documents, nn),
@@ -2463,7 +2463,7 @@ object Extensions {
       // document scans)
       val toks = table(s, d, "documents")
         .select(col("source"), explode(TextFunctions.tokens(col("text"))).as("tok"))
-        .cut("Extensions.scala:1570")
+        .cut()
       val vocab = toks.groupBy(col("tok")).agg(count(lit(1)).as("cf"))
         .orderBy(col("cf").desc, col("tok")).limit(200)
       // smooth by the ACTUAL vocab size (can be < 200 on tiny
@@ -3093,7 +3093,7 @@ object Extensions {
       val grams = table(s, d, "documents")
         .select(col("doc_id"),
           explode(TextFunctions.charNgramsExpr("text", 3)).as("g"))
-        .cut("Extensions.scala:1980")
+        .cut()
       val counts = grams.groupBy(col("g")).agg(count(lit(1)).as("c"))
       val total = grams.agg(count(lit(1)).as("tot"))
       grams.join(counts, "g")
@@ -4139,7 +4139,7 @@ object Extensions {
     // survives 100 TB.
     Query("q_x_memorize", (s, d) => {
       val grams = graft.operators.NgramGrain.postings(s, d, 5)
-        .cut("Extensions.scala:2686")
+        .cut()
       val df = grams.groupBy(col("g")).agg(count(lit(1)).as("df"))
       grams.join(df, "g")
         .groupBy(col("doc_id"))
@@ -4551,7 +4551,7 @@ object Extensions {
       val media = Multimodal.attachBinary(table(s, d, "documents"))
       val frames = Multimodal.sampleFrames(s, media, stride = 1).toDF()
         .select(col("doc_id"), md5(col("frame_bytes")).as("h")).distinct()
-        .cut("Extensions.scala:2925")
+        .cut()
       frames.select(col("doc_id").as("doc_a"), col("h"))
         .join(frames.select(col("doc_id").as("doc_b"), col("h")), "h")
         .filter(col("doc_a") < col("doc_b"))

@@ -180,7 +180,7 @@ object Round10 {
       val ut = table(s, d, "events")
         .select(col("user_id"), to_date(col("ts")).as("day"), col("event_type"))
         .distinct()
-        .cut("Round10.scala:138")
+        .cut()
       val nu = ut.select(col("user_id"), col("day")).distinct()
         .agg(count(lit(1)).as("n_users"))
       val nt = ut.groupBy(col("event_type")).agg(count(lit(1)).as("n_t"))
@@ -228,7 +228,7 @@ object Round10 {
     // continuity-corrected z is one final expression.
     Query("q_x_mann_kendall", (s, d) => {
       val dc = graft.operators.DayGrain.counts(s, d)
-        .cut("Round10.scala:168")
+        .cut()
       val a = dc.select(col("event_type"), col("day").as("da"), col("c").as("ca"))
       val b = dc.select(col("event_type"), col("day").as("db"), col("c").as("cb"))
       val sTab = a.join(b, Seq("event_type")).filter(col("da") < col("db"))
@@ -333,7 +333,7 @@ object Round10 {
         .withColumn("cumb",
           coalesce(sum(col("bn")).over(
             wOrd.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .cut("Round10.scala:235", kRowFold = true)
+        .cut(kRowFold = true)
       bins.crossJoin(broadcast(tot))
         .withColumn("decile", floor(col("cumb") * 10 / col("nn")).cast("int"))
         .groupBy(col("decile"))
@@ -538,7 +538,7 @@ object Round10 {
     Query("q_x_mg_guaranteed", (s, d) => {
       val toks = table(s, d, "documents")
         .select(explode(TextFunctions.tokens(col("text"))).as("w"))
-        .cut("Round10.scala:355")
+        .cut()
       val sketchTerms = toks
         .agg(call_function("graft_freq_items", col("w"), lit(50)).as("sk"))
         .select(explode(col("sk.terms")).as("t"))

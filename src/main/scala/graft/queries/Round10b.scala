@@ -150,7 +150,7 @@ object Round10b {
         .select(col("source"),
           explode(graft.functions.TextFunctions.wordNgramsExpr("text", 2)).as("t"))
         .distinct()
-        .cut("Round10b.scala:110")
+        .cut()
       val sizes = st.groupBy(col("source")).agg(count(lit(1)).as("nv"))
       val inter = st.select(col("source").as("sa"), col("t"))
         .join(st.select(col("source").as("sb"), col("t")), "t")
@@ -198,7 +198,7 @@ object Round10b {
           wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
         .withColumn("cum_mass", sum(col("mass")).over(
           wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .cut("Round10b.scala:145", kRowFold = true)
+        .cut(kRowFold = true)
       val tot = byCount.agg(sum(col("mass")).as("n_tokens"))
       byCount.crossJoin(broadcast(tot))
         .select(col("c"), col("n_terms"), col("cum_terms"),
@@ -241,7 +241,7 @@ object Round10b {
         val cum = vg.coalesce(1)
           .withColumn("cum", sum(col("cnt")).over(
             wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-          .cut("Round10b.scala:170", kRowFold = true)
+          .cut(kRowFold = true)
         val n = cum.agg(max(col("cum")).as("n"))
         val spine = broadcast(
           side.sparkSession.range(1, 20).select((col("id") * 5).as("q")))

@@ -427,7 +427,7 @@ object Round11 {
       val cum = hist.coalesce(1)
         .withColumn("ccnt", sum(col("cnt")).over(w))
         .withColumn("cchars", sum(col("chars")).over(w))
-        .cut("Round11.scala:288", kRowFold = true)
+        .cut(kRowFold = true)
       val tot = cum.agg(max(col("ccnt")).as("n"), max(col("cchars")).as("tchars"))
       val grid = s.range(1, 11).toDF("g")
         .crossJoin(broadcast(tot))

@@ -472,7 +472,7 @@ object Round11b {
       val u = byUser.crossJoin(broadcast(ref))
         .withColumn("recency", datediff(col("ref_day"), col("last_day")).cast("long"))
         .select(col("user_id"), col("recency"), col("frequency"), col("monetary"))
-        .cut("Round11b.scala:rfm-u")
+        .cut()
       // quintile thresholds t_q = min v with cum·5 ≥ q·n, q = 1..4;
       // bucket(v) = 1 + #{q : v > t_q} — deterministic under ties.
       // r18: the three metrics run through ONE unpivoted
@@ -493,7 +493,7 @@ object Round11b {
         .withColumn("cum", sum(col("cnt")).over(
           Window.partitionBy(col("metric")).orderBy(col("v"))
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .cut("Round11b.scala:rfm-cum")
+        .cut()
       val n = cum.groupBy(col("metric")).agg(max(col("cum")).as("n"))
       val thr = broadcast(u.sparkSession.range(1, 5).select(col("id").as("q")))
         .crossJoin(broadcast(n))

@@ -136,7 +136,7 @@ object Round11d {
       val cum = vg.coalesce(1)
         .withColumn("cum", sum(col("cnt")).over(Window.orderBy(col("v"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .cut("Round11d.scala:103", kRowFold = true)
+        .cut(kRowFold = true)
       val n = cum.agg(max(col("cum")).as("n"))
       val thr = broadcast(s.range(1, 5).select(col("id").as("q")))
         .crossJoin(broadcast(n))
@@ -211,7 +211,7 @@ object Round11d {
       val cum = hist.coalesce(1)
         .withColumn("cum", sum(col("k")).over(Window.orderBy(col("sz"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .cut("Round11d.scala:151", kRowFold = true)
+        .cut(kRowFold = true)
       val dd = cum.agg(max(col("cum")).as("d"))
       val p99 = cum.crossJoin(broadcast(dd))
         .filter(col("cum") * 100 >= col("d") * 99)

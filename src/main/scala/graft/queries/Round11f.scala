@@ -150,7 +150,7 @@ object Round11f {
         .withColumn("sxy", sum(col("x") * col("y")).over(w))
         .withColumn("sxx", sum(col("x") * col("x")).over(w))
         .withColumn("syy", sum(col("y") * col("y")).over(w))
-        .cut("Round11f.scala:126", kRowFold = true)
+        .cut(kRowFold = true)
         .filter(col("n") === 7)
         .select(col("day"), col("x").as("clicks"), col("y").as("purchase_cents"),
           expr(s"round($rTxt, 6)").as("r7"))
@@ -240,7 +240,7 @@ object Round11f {
           row_number().over(Window.orderBy(col("p"), col("source"))).cast("long"))
         .withColumn("m", count(lit(1)).over(
           Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-        .cut("Round11f.scala:182", kRowFold = true)
+        .cut(kRowFold = true)
       val kmax = ranked.filter(col("p") * col("m") <= col("rank") * 0.05)
         .agg(coalesce(max(col("rank")), lit(0L)).as("k"))
       ranked.crossJoin(broadcast(kmax))

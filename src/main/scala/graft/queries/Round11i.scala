@@ -117,7 +117,7 @@ object Round11i {
         .withColumn("cum_grams", sum(col("new_grams")).over(
           Window.orderBy(col("decile"))
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .cut("Round11i.scala:93", kRowFold = true)
+        .cut(kRowFold = true)
         .orderBy(col("decile"))
     }, Some(
       s"""WITH $firstSql,

@@ -43,7 +43,7 @@ object Round11m {
           Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
         .withColumn("tn", sum(col("n") - col("npos")).over(
           Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-        .cut("Round11m.scala:48", kRowFold = true)
+        .cut(kRowFold = true)
         .selectExpr("bin", "n",
           "CAST(cpos AS DOUBLE) / tp AS tpr",
           "CAST(cneg AS DOUBLE) / tn AS fpr",

@@ -185,7 +185,7 @@ object Round14 {
     // lineage-cut once; three passes run over k·calendar rows, never
     // the corpus.
     Query("q_x_esd", (s, d) => {
-      val dc = DayGrain.counts(s, d).cut("Round14.scala:esd", eager = true)
+      val dc = DayGrain.counts(s, d).cut(eager = true)
       def esdRound(src: DataFrame): (DataFrame, DataFrame) = {
         import org.apache.spark.sql.expressions.Window
         val st = src.groupBy(col("event_type"))
@@ -207,10 +207,10 @@ object Round14 {
         val out = p.filter(col("rk") === 1 && col("sd") > 0)
           .select(col("event_type"), col("day"), col("c"),
             (col("dev") / col("sd")).as("r_stat"))
-          .cut("Round14.scala:esd-out")
+          .cut()
         val rest = src.join(out.select(col("event_type"), col("day")),
           Seq("event_type", "day"), "left_anti")
-          .cut("Round14.scala:esd-rest")
+          .cut()
         (out, rest)
       }
       val (o1, d1) = esdRound(dc)
@@ -257,7 +257,7 @@ object Round14 {
       val cell = docs.join(broadcast(med), "source")
         .select(col("source"), abs(col("n_chars") - col("m")).as("dv"))
         .groupBy(col("source"), col("dv")).agg(count(lit(1)).as("cnt"))
-        .cut("Round14.scala:fligner", eager = true)
+        .cut(eager = true)
       val gs = cell.groupBy(col("dv")).agg(sum(col("cnt")).as("tot"))
       val nn = gs.agg(sum(col("tot")).as("n"))
       val uni = broadcast(cell.select(col("source")).distinct())

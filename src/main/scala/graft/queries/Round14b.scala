@@ -310,7 +310,7 @@ object Round14b {
       .select(col("cohort"),
         expr("(coalesce(tp, t1) - t0) div 86400000000").as("dur"),
         col("tp").isNull.as("censored"))
-      .cut("Round14b.scala:logRankAtRisk", eager = true)
+      .cut(eager = true)
     val byDur = users.groupBy(col("cohort"), col("dur"))
       .agg(count(lit(1)).as("ending"),
         sum(when(col("censored"), 0L).otherwise(1L)).as("dg"))
@@ -342,7 +342,7 @@ object Round14b {
         floor(size(split(col("text"), " ")) / 100).cast("long").as("y"))
       .groupBy(col("source"), col("x"), col("y"))
       .agg(count(lit(1)).as("cnt"))
-      .cut("Round14b.scala:ordpairs", eager = true)
+      .cut(eager = true)
     val a = cells.toDF("source", "xa", "ya", "na")
     val b = cells.toDF("source", "xb", "yb", "nb")
     a.join(b, Seq("source"))
@@ -377,7 +377,7 @@ object Round14b {
     // series (Σ(x−x̄)² = 0) surface with NULL q_lb — declared, not
     // dropped.
     Query("q_x_ljung_box", (s, d) => {
-      val dc = DayGrain.counts(s, d).cut("Round14b.scala:ljung_box", eager = true)
+      val dc = DayGrain.counts(s, d).cut(eager = true)
       val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
       val lagged = (1 to LbLags).foldLeft(dc) { (df, k) =>
         df.withColumn(s"l$k", lag(col("c"), k).over(w))
@@ -433,7 +433,7 @@ object Round14b {
     // Var = 4(n−2)/(n²−1). Types with n < 3 or a constant series
     // surface with NULL vn/z.
     Query("q_x_von_neumann", (s, d) => {
-      val dc = DayGrain.counts(s, d).cut("Round14b.scala:von_neumann", eager = true)
+      val dc = DayGrain.counts(s, d).cut(eager = true)
       val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
       dc.withColumn("l1", lag(col("c"), 1).over(w))
         .groupBy(col("event_type"))
@@ -491,7 +491,7 @@ object Round14b {
     // DuckDB oracle's HUGEINT stays exact.)
     Query("q_x_kpss", (s, d) => {
       import org.apache.spark.sql.types.DecimalType
-      val dc = DayGrain.counts(s, d).cut("Round14b.scala:kpss", eager = true)
+      val dc = DayGrain.counts(s, d).cut(eager = true)
       val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
       val base = dc
         .withColumn("rn", row_number().over(w).cast("long"))
@@ -706,7 +706,7 @@ object Round14b {
       val ps = pooledRanks(s, d)
         .groupBy(col("source"), col("n"))
         .agg(sum(col("cnt")).as("n1"), sum(col("cnt") * col("r2")).as("w2"))
-        .cut("Round14b.scala:dunn", eager = true)
+        .cut(eager = true)
       val ties = table(s, d, "documents")
         .groupBy(col("n_chars")).agg(count(lit(1)).as("tot"))
         .agg(sum(col("tot") * col("tot") * col("tot") - col("tot")).as("tsum"))
@@ -833,7 +833,7 @@ object Round14b {
       val cell = table(s, d, "events")
         .groupBy(to_date(col("ts")).as("day"), col("event_type"))
         .agg(count(lit(1)).as("c"))
-        .cut("Round14b.scala:fleiss", eager = true)
+        .cut(eager = true)
       val di = cell.groupBy(col("day"))
         .agg(sum(col("c")).as("ni"), sum(col("c") * col("c")).as("sq"))
         .filter(col("ni") >= 2)
@@ -893,7 +893,7 @@ object Round14b {
     // daily totals fold at day grain, and the single cross-item
     // double sum runs as a sorted k-row fold.
     Query("q_x_cronbach", (s, d) => {
-      val dc = DayGrain.counts(s, d).cut("Round14b.scala:cronbach", eager = true)
+      val dc = DayGrain.counts(s, d).cut(eager = true)
       val spine = dc.agg(countDistinct(col("day")).as("dd"),
         countDistinct(col("event_type")).as("k"))
       val items = dc.groupBy(col("event_type"))
@@ -1003,7 +1003,7 @@ object Round14b {
     // calendar-bounded size.
     Query("q_x_cox_stuart", (s, d) => {
       val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
-      val dc = DayGrain.counts(s, d).cut("Round14b.scala:cox_stuart", eager = true)
+      val dc = DayGrain.counts(s, d).cut(eager = true)
         .withColumn("rn", row_number().over(w).cast("long"))
         .withColumn("nd", count(lit(1)).over(
           Window.partitionBy(col("event_type"))))
@@ -1064,7 +1064,7 @@ object Round14b {
       val dc = DayGrain.counts(s, d)
         .withColumn("slot",
           datediff(col("day"), lit("1970-01-01").cast("date")).cast("long") % 7)
-        .cut("Round14b.scala:mk_seasonal", eager = true)
+        .cut(eager = true)
       val a = dc.select(col("event_type"), col("slot"), col("day").as("da"),
         col("c").as("ca"))
       val b = dc.select(col("event_type"), col("slot"), col("day").as("db"),
@@ -1144,7 +1144,7 @@ object Round14b {
     // z = 2W/√Σcnt·(2r)² needs no tie-correction approximation.
     // Pairless types surface with 0/NULL via left join.
     Query("q_x_wilcoxon_signed", (s, d) => {
-      val dc = DayGrain.counts(s, d).cut("Round14b.scala:wilcoxon", eager = true)
+      val dc = DayGrain.counts(s, d).cut(eager = true)
       val a = dc.select(col("event_type"), col("day").as("da"), col("c").as("ca"))
       val b = dc.select(col("event_type"), col("day").as("db"), col("c").as("cb"))
       val diffs = a.join(b, Seq("event_type"))
@@ -1281,7 +1281,7 @@ object Round14b {
             .cast("long"))
         .withColumn("slot",
           datediff(col("day"), lit("1970-01-01").cast("date")).cast("long") % 7)
-        .cut("Round14b.scala:kendall_w", eager = true)
+        .cut(eager = true)
       val agg = dc.groupBy(col("event_type"), col("wk"), col("slot"))
         .agg(sum(col("c")).as("v"))
       val full = agg.groupBy(col("event_type"), col("wk"))
@@ -1363,7 +1363,7 @@ object Round14b {
     // two-lag window pass; counts exact; one shared z expression.
     Query("q_x_turning_points", (s, d) => {
       val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
-      DayGrain.counts(s, d).cut("Round14b.scala:turning", eager = true)
+      DayGrain.counts(s, d).cut(eager = true)
         .withColumn("p", lag(col("c"), 1).over(w))
         .withColumn("f", lead(col("c"), 1).over(w))
         .groupBy(col("event_type"))
@@ -1402,7 +1402,7 @@ object Round14b {
     // DECLARED asymptotic Var = 4/n. Constant series (denominator 0)
     // surface NULL.
     Query("q_x_bartels", (s, d) => {
-      val dc = DayGrain.counts(s, d).cut("Round14b.scala:bartels", eager = true)
+      val dc = DayGrain.counts(s, d).cut(eager = true)
       val wv = Window.partitionBy(col("event_type")).orderBy(col("c"))
         .rangeBetween(Window.unboundedPreceding, -1)
       val we = Window.partitionBy(col("event_type")).orderBy(col("c"))
@@ -1468,7 +1468,7 @@ object Round14b {
             .cast("long"))
         .withColumn("slot",
           datediff(col("day"), lit("1970-01-01").cast("date")).cast("long") % 7)
-        .cut("Round14b.scala:quade", eager = true)
+        .cut(eager = true)
       val agg = dc.groupBy(col("event_type"), col("wk"), col("slot"))
         .agg(sum(col("c")).as("v"))
       val full = agg.groupBy(col("event_type"), col("wk"))
@@ -1577,7 +1577,7 @@ object Round14b {
         .pivot("half", Seq("h1", "h2")).agg(first(col("event_type")))
         .filter(col("h1").isNotNull && col("h2").isNotNull)
         .select(col("user_id"), col("h1").as("ta"), col("h2").as("tb"))
-        .cut("Round14b.scala:bowker", eager = true)
+        .cut(eager = true)
       val nu = both.agg(count(lit(1)).as("n_users"))
       val cellCnt = both.groupBy(col("ta"), col("tb")).agg(count(lit(1)).as("n"))
       val up = cellCnt.filter(col("ta") < col("tb"))
@@ -1743,7 +1743,7 @@ object Round14b {
     // an approximation). Pair grid ≤ ⌊n/2⌋² at calendar-bounded n.
     Query("q_x_hl_shift", (s, d) => {
       val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
-      val dc = DayGrain.counts(s, d).cut("Round14b.scala:hl_shift", eager = true)
+      val dc = DayGrain.counts(s, d).cut(eager = true)
         .withColumn("rn", row_number().over(w).cast("long"))
         .withColumn("nd", count(lit(1)).over(
           Window.partitionBy(col("event_type"))))
@@ -1906,7 +1906,7 @@ object Round14b {
     // also weighs magnitudes). Counts only; pairless types surface
     // 0/0/NULL.
     Query("q_x_sign_test", (s, d) => {
-      val dc = DayGrain.counts(s, d).cut("Round14b.scala:sign_test", eager = true)
+      val dc = DayGrain.counts(s, d).cut(eager = true)
       val a = dc.select(col("event_type"), col("day").as("da"), col("c").as("ca"))
       val b = dc.select(col("event_type"), col("day").as("db"), col("c").as("cb"))
       val ps = a.join(b, Seq("event_type"))

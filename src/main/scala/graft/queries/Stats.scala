@@ -236,7 +236,7 @@ object Stats {
         .groupBy(col("event_type"), hour(col("ts")).as("x"),
           floor(col("value") / 8).as("y"))
         .agg(count(lit(1)).as("cn"))
-        .cut("Stats.scala:148")
+        .cut()
       val a = cells.select(col("event_type"), col("x").as("xa"),
         col("y").as("ya"), col("cn").as("ca"))
       val b = cells.select(col("event_type"), col("x").as("xb"),
@@ -314,7 +314,7 @@ object Stats {
         .withColumn("i", row_number().over(wOrd))
         .withColumn("cs", sum(col("bp")).over(wOrd))
         .withColumn("cn", sum(col("bn")).over(wOrd))
-        .cut("Stats.scala:196", kRowFold = true)
+        .cut(kRowFold = true)
       val j = bins.select(col("i").as("j"),
         (col("cs") - col("bp")).as("csj0"), (col("cn") - col("bn")).as("cnj0"))
       val k = bins.select(col("i").as("k"), col("cs").as("csk"), col("cn").as("cnk"))

@@ -153,11 +153,11 @@ object StreamingJobs {
         val sets = batch.select(col(idCol),
           array_distinct(graft.functions.TextFunctions.wordNgramsExpr(textCol, ngram)).as("g"))
         val la = sets.select(col(idCol).as("doc_a"), col("g").as("s"))
-          .cut("StreamingJobs.scala:155")
+          .cut()
         // corpus contract: two columns, (id, shingle-set) in order
         val rb = corpusSets.toDF(idCol, "g")
           .select(col(idCol).as("doc_b"), col("g").as("s"))
-          .cut("StreamingJobs.scala:159")
+          .cut()
         val dups = graft.operators.Dedup
           .exactJaccardJoinPrepared(la, rb, threshold).persist()
         try {

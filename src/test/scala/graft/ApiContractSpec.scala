@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Components, PageRank, RangeJoin}
+import graft.operators.{Components, Kcore, Lpa, PageRank, RangeJoin}
 import graft.plans.AsOf
 
 /** Misuse must fail fast with a clear message — not return wrong
@@ -85,6 +85,27 @@ class ApiContractSpec extends SparkSuite {
     val edges = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 9L)).toDF("a", "b")
     val e = intercept[Exception] {
       PageRank.pageRank(spark, nodes, edges, iters = 3).collect()
+    }
+    assert(e.getMessage.contains("edge endpoint not in nodes: 9"), e.getMessage)
+  }
+
+  test("k-core reports non-convergence instead of a half-peeled graph") {
+    // a 10-node path peels from both ends one vertex per level: one
+    // round (two levels) leaves 2..7, which is not a 2-core
+    val edges = (0L until 9L).map(i => (i, i + 1)).toDF("a", "b")
+    val e = intercept[IllegalArgumentException] {
+      Kcore.kCore(spark, edges, k = 2, maxRounds = 1)
+    }
+    assert(e.getMessage.contains("kCore did not converge in 1 rounds"), e.getMessage)
+  }
+
+  test("lpa fails loudly on an edge endpoint missing from nodes") {
+    // 9 is not a node: it receives 3's label but has no self row, so
+    // the round raises instead of labelling it
+    val nodes = (0L to 3L).toDF("id")
+    val edges = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 9L)).toDF("a", "b")
+    val e = intercept[Exception] {
+      Lpa.communities(spark, nodes, edges, rounds = 3).collect()
     }
     assert(e.getMessage.contains("edge endpoint not in nodes: 9"), e.getMessage)
   }

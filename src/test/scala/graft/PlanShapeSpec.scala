@@ -23,7 +23,7 @@ class PlanShapeSpec extends SparkSuite {
   // Plan every declared query once (construction may run jobs for the
   // iterative/localCheckpoint-based ones — cheap at the spec fixture).
   // Capture is enabled DURING construction so every lineage cut
-  // (Cuts.cut / Checkpoints.truncate) registers its pre-cut frame —
+  // (Cuts.cut) registers its pre-cut frame and call site —
   // the executed plan alone cannot see upstream of a localCheckpoint.
   private lazy val plansAndCuts: (Seq[(String, SparkPlan)], Seq[Cuts.Captured]) = {
     Cuts.startCapture()
@@ -87,9 +87,15 @@ class PlanShapeSpec extends SparkSuite {
 
   test("pre-checkpoint plans obey the same shape rules (lineage-cut sweep)") {
     // Every declared query was constructed with capture on; the
-    // registry must be non-empty (the repo has ~40 cut sites) or the
-    // Cuts wiring itself regressed.
+    // registry must be non-empty (the iterative operators and shared
+    // derivations cut while planning) or the Cuts wiring itself
+    // regressed.
     assert(capturedCuts.nonEmpty, "no lineage cuts captured — Cuts wiring broken")
+    // each site is the real `File.scala:line` of its .cut call, read
+    // off the stack — never a Cuts or Spark frame
+    val badSites = capturedCuts.map(_.site).distinct
+      .filterNot(_.matches("^[A-Za-z0-9]+\\.scala:\\d+$"))
+    assert(badSites.isEmpty, s"cut sites not of the form File.scala:line: $badSites")
     val off = cutOffenders(capturedCuts).distinct
     assert(off.isEmpty, s"shape violations hidden behind lineage cuts:\n${off.mkString("\n")}")
   }

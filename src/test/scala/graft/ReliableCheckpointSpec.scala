@@ -4,13 +4,15 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Checkpoints, Components, PageRank}
+import graft.Cuts.CutOps
+import graft.operators.{Components, PageRank}
 
-/** The 100 TB mode of the iterative operators: with
+/** The 100 TB mode of [[Cuts]]: with
   * `spark.graft.reliableCheckpoint=true` and a checkpoint dir set,
-  * every per-round lineage cut goes through reliable checkpointing
-  * (survives executor loss) instead of executor-local blocks — and
-  * the results are identical to the default mode.
+  * every lineage cut (the iterative operators' per-round cuts and any
+  * other `.cut`) goes through reliable checkpointing (survives
+  * executor loss) instead of executor-local blocks — and the results
+  * are identical to the default mode.
   */
 class ReliableCheckpointSpec extends SparkSuite {
   import spark.implicits._
@@ -33,7 +35,7 @@ class ReliableCheckpointSpec extends SparkSuite {
 
     val ckptDir = Files.createTempDirectory("graft-reliable-ckpt").toString
     spark.sparkContext.setCheckpointDir(ckptDir)
-    spark.conf.set(Checkpoints.ConfKey, "true")
+    spark.conf.set(Cuts.ConfKey, "true")
     try {
       val ccReliable = Components.connectedComponents(spark, nodes, edges)
         .orderBy("id").collect().toSeq
@@ -47,7 +49,24 @@ class ReliableCheckpointSpec extends SparkSuite {
         .filter(Files.isRegularFile(_)).count()
       assert(wrote > 0, "no reliable checkpoint files written — mode not taken")
     } finally {
-      spark.conf.set(Checkpoints.ConfKey, "false")
+      spark.conf.set(Cuts.ConfKey, "false")
+    }
+  }
+
+  test("a plain frame's cut is reliable too") {
+    val df = (1L to 20L).toDF("x").withColumn("y", col("x") * 2)
+    val expected = df.orderBy("x").collect().toSeq
+    val ckptDir = Files.createTempDirectory("graft-reliable-cut").toString
+    spark.sparkContext.setCheckpointDir(ckptDir)
+    spark.conf.set(Cuts.ConfKey, "true")
+    try {
+      val got = df.cut(eager = true).orderBy("x").collect().toSeq
+      assert(got === expected)
+      val wrote = Files.walk(java.nio.file.Paths.get(ckptDir))
+        .filter(Files.isRegularFile(_)).count()
+      assert(wrote > 0, "cut wrote no reliable checkpoint files")
+    } finally {
+      spark.conf.set(Cuts.ConfKey, "false")
     }
   }
 }
