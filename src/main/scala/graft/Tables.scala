@@ -24,7 +24,6 @@ object Tables {
   val names: Seq[String] = star ++ Seq("events", "documents", "embeddings")
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     def read =
       if (name == "events") events(spark, dir)
       else spark.read.parquet(s"$dir/$name.parquet")

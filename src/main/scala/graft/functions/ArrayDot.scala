@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -88,132 +87,4 @@ case class ArrayDotProduct(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-/** Registration for graft's custom Catalyst expressions. Idempotent;
-  * called from [[graft.Tables.table]] so every query path has them.
-  */
-object GraftFunctions {
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val dotId = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_dot")
-    if (!registry.functionExists(dotId)) {
-      registry.createOrReplaceTempFunction(
-        "graft_dot", exprs => ArrayDotProduct(exprs(0), exprs(1)), "built-in")
-    }
-    val mhId = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_minhash")
-    if (!registry.functionExists(mhId)) {
-      registry.createOrReplaceTempFunction(
-        "graft_minhash",
-        { exprs =>
-          require(exprs.length == 2, "graft_minhash(words, k) takes 2 arguments")
-          val kExpr = exprs(1)
-          require(kExpr.foldable, "graft_minhash: k must be a literal")
-          kExpr.eval() match {
-            case n: Number => MinHashSig(exprs(0), n.intValue())
-            case other => throw new IllegalArgumentException(
-              s"graft_minhash: k must be a numeric literal, got $other")
-          }
-        },
-        "built-in")
-    }
-    val shId = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_simhash")
-    if (!registry.functionExists(shId)) {
-      registry.createOrReplaceTempFunction(
-        "graft_simhash", exprs => SimHash64(exprs(0)), "built-in")
-    }
-    val muId = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_minhash_union")
-    if (!registry.functionExists(muId)) {
-      registry.createOrReplaceTempFunction(
-        "graft_minhash_union", exprs => MinHashUnion(exprs(0)), "built-in")
-    }
-    val zoId = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_zorder")
-    if (!registry.functionExists(zoId)) {
-      registry.createOrReplaceTempFunction(
-        "graft_zorder", exprs => ZOrderKey(exprs(0), exprs(1)), "built-in")
-    }
-    val icId = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_intersect_count")
-    if (!registry.functionExists(icId)) {
-      registry.createOrReplaceTempFunction(
-        "graft_intersect_count",
-        exprs => ArrayIntersectCount(exprs(0), exprs(1)), "built-in")
-    }
-    val wnId = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_word_ngrams")
-    if (!registry.functionExists(wnId)) {
-      registry.createOrReplaceTempFunction(
-        "graft_word_ngrams", exprs => WordNgrams.build(exprs), "built-in")
-    }
-    val cnId = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_char_ngrams")
-    if (!registry.functionExists(cnId)) {
-      registry.createOrReplaceTempFunction(
-        "graft_char_ngrams", exprs => CharNgrams.build(exprs), "built-in")
-    }
-    val fiId = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_freq_items")
-    if (!registry.functionExists(fiId)) {
-      registry.createOrReplaceTempFunction(
-        "graft_freq_items", exprs => FreqItems.build(exprs), "built-in")
-    }
-    val adcId = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_adc")
-    if (!registry.functionExists(adcId)) {
-      registry.createOrReplaceTempFunction(
-        "graft_adc", exprs => AdcLookup(exprs(0), exprs(1)), "built-in")
-    }
-    val kmvId = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_kmv")
-    if (!registry.functionExists(kmvId)) {
-      registry.createOrReplaceTempFunction(
-        "graft_kmv", exprs => KmvSketch.build(exprs), "built-in")
-    }
-    val cmsId = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_cms")
-    if (!registry.functionExists(cmsId)) {
-      registry.createOrReplaceTempFunction(
-        "graft_cms", exprs => CmsSketch.build(exprs), "built-in")
-    }
-    val cmsqId = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_cms_query")
-    if (!registry.functionExists(cmsqId)) {
-      registry.createOrReplaceTempFunction(
-        "graft_cms_query", exprs => CmsQuery.build(exprs), "built-in")
-    }
-    val engId = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_explode_ngrams")
-    if (!registry.functionExists(engId)) {
-      registry.createOrReplaceTempFunction(
-        "graft_explode_ngrams", exprs => WordNgramGenerator.build(exprs), "built-in")
-    }
-    // Spark's internal runtime-filter bloom expressions, surfaced by
-    // name: a LAZY aggregate build (no construction-time job, unlike
-    // df.stat.bloomFilter's treeAggregate) + the paired probe.
-    val bfaId = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_bloom_agg")
-    if (!registry.functionExists(bfaId)) {
-      registry.createOrReplaceTempFunction(
-        "graft_bloom_agg", GraftFunctions.bloomAggBuilder, "built-in")
-    }
-    val bfmId = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_might_contain")
-    if (!registry.functionExists(bfmId)) {
-      registry.createOrReplaceTempFunction(
-        "graft_might_contain", GraftFunctions.mightContainBuilder, "built-in")
-    }
-    graft.plans.IntersectCountRewrite.install(spark)
-  }
-
-  /** Arity-checked builders for the surfaced bloom expressions — a
-    * wrong argument count gets a usage message, not a raw
-    * IndexOutOfBoundsException (matches every other builder here).
-    * Shared by both registration paths (this registry and
-    * GraftSparkExtensions.injectFunction). */
-  def bloomAggBuilder(
-      exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : org.apache.spark.sql.catalyst.expressions.Expression = {
-    require(exprs.length == 3,
-      s"graft_bloom_agg(col, estItems, numBits) takes 3 arguments, got ${exprs.length}")
-    org.apache.spark.sql.catalyst.expressions.aggregate
-      .BloomFilterAggregate(exprs(0), exprs(1), exprs(2), 0, 0)
-  }
-
-  def mightContainBuilder(
-      exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : org.apache.spark.sql.catalyst.expressions.Expression = {
-    require(exprs.length == 2,
-      s"graft_might_contain(bloomBinary, col) takes 2 arguments, got ${exprs.length}")
-    org.apache.spark.sql.catalyst.expressions
-      .BloomFilterMightContain(exprs(0), exprs(1))
-  }
 }

@@ -21,14 +21,14 @@ object VectorFunctions {
   def toDouble(v: Column): Column = transform(v, _.cast("double"))
 
   /** Left-to-right dot product — codegen'd [[ArrayDotProduct]]
-    * expression (registered by [[GraftFunctions.register]]); ~20×
-    * faster than the higher-order formulation, bit-identical results.
+    * expression (`graft_dot`, injected by [[graft.GraftSparkExtensions]]);
+    * ~20× faster than the higher-order formulation, bit-identical
+    * results.
     */
   def dot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
 
-  /** Reference higher-order formulation of [[dot]] (interpreted).
-    * Kept for the equivalence spec and as the no-registration
-    * fallback.
+  /** Reference higher-order formulation of [[dot]] (interpreted),
+    * kept for the equivalence spec.
     */
   def dotHof(a: Column, b: Column): Column =
     aggregate(zip_with(toDouble(a), toDouble(b), (x, y) => x * y), lit(0.0), (acc, x) => acc + x)

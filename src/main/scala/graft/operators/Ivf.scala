@@ -49,7 +49,6 @@ object Ivf {
     * steps.
     */
   def train(spark: SparkSession, corpus: DataFrame, k: Int, iters: Int = 3): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val seeds = corpus
       .select(col("vec_id"), toDouble(col("embedding")).as("centroid"),
         xxhash64(col("vec_id")).as("hk"))
@@ -110,7 +109,6 @@ object Ivf {
     */
   def ivfKnn(spark: SparkSession, queries: DataFrame, corpus: DataFrame,
       k: Int, nCentroids: Int = 16, nProbe: Int = 4, iters: Int = 2): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val centroids = train(spark, corpus, nCentroids, iters)
     // inverted lists: corpus rows keyed by their centroid
     val lists = assign(corpus.select(col("vec_id"), col("embedding")), centroids)

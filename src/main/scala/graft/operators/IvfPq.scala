@@ -45,7 +45,6 @@ object IvfPq {
     require(nCoarse >= 1 && nProbe >= 1 && nProbe <= nCoarse,
       s"need 1 <= nProbe <= nCoarse, got nProbe=$nProbe nCoarse=$nCoarse")
     require(rerankFactor >= 1, s"rerankFactor must be >= 1, got $rerankFactor")
-    graft.functions.GraftFunctions.register(spark)
     // index memoization, same contract as Pq.pqKnn: with graft.Memo on,
     // the index artifacts (coarse centroids, PQ codebooks, codes table)
     // build once per (corpus, params) and timed reruns reuse them —

@@ -68,26 +68,35 @@ object Lpa {
         .select(col("dst").as("id"), col("lbl"), lit(1L).as("wt"))
         .unionAll(labels.select(col("id"), col("lbl"), lit(0L).as("wt")))
       val counts = msgs.groupBy(col("id"), col("lbl"))
-        .agg(sum(col("wt")).as("c"), min(col("wt")).as("minwt"))
       val w = Window.partitionBy(col("id")).orderBy(col("c").desc, col("lbl"))
       // lazy cut: the loop has no per-round action (fixed round
       // budget, no convergence check), so an EAGER cut here ran one
       // materialization job per round — pure scheduler latency at
       // fixture scale (the PageRank/Kcore lazy-cut discipline; all 8
       // rounds now materialize under the caller's single action)
-      labels = counts
-        .withColumn("rk", row_number().over(w))
-        // wt 0 flags the self row: an id without one is an edge
-        // endpoint outside `nodes`, raised in the same window — no
-        // job and no exchange added
-        .withColumn("self", min(col("minwt")).over(
-          w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-        .filter(col("rk") === 1)
-        .select(col("id"),
-          when(col("self") =!= 0, raise_error(concat(
-            lit("LPA: edge endpoint not in nodes: "), col("id").cast("string"))))
-            .otherwise(col("lbl")).as("lbl"))
-        .cut()
+      labels = (if (round > 0) {
+        counts.agg(sum(col("wt")).as("c"))
+          .withColumn("rk", row_number().over(w))
+          .filter(col("rk") === 1)
+          .select(col("id"), col("lbl"))
+      } else {
+        // round 1 only: wt 0 flags the self row, and an id without one
+        // is an edge endpoint outside `nodes` that a node sent a
+        // message to, raised in the same window — no job and no
+        // exchange added. If none raises, the ids after round 1 are
+        // exactly `nodes`, so later rounds keep a pure top-1 window,
+        // which Spark plans as WindowGroupLimit (partial before the id
+        // exchange, final after).
+        counts.agg(sum(col("wt")).as("c"), min(col("wt")).as("minwt"))
+          .withColumn("rk", row_number().over(w))
+          .withColumn("self", min(col("minwt")).over(
+            w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+          .filter(col("rk") === 1)
+          .select(col("id"),
+            when(col("self") =!= 0, raise_error(concat(
+              lit("LPA: edge endpoint not in nodes: "), col("id").cast("string"))))
+              .otherwise(col("lbl")).as("lbl"))
+      }).cut()
       round += 1
     }
     labels.select(col("id"), col("lbl").as("community"))

@@ -183,7 +183,6 @@ object Pq {
       m: Int = 8, kCodes: Int = 32, iters: Int = 1, rerankFactor: Int = 8,
       memoKey: Option[String] = None): DataFrame = {
     require(rerankFactor >= 1, s"rerankFactor must be >= 1, got $rerankFactor")
-    graft.functions.GraftFunctions.register(spark)
     // memoKey names the corpus (e.g. the fixture dir); with graft.Memo
     // on, train + encode run once per (corpus, params) and the timed
     // reruns score against the pinned index — the production shape

@@ -195,7 +195,8 @@ object AsOfStrategy extends Strategy {
   }
 }
 
-/** Public API: plan-level as-of join of two DataFrames. */
+/** Public API: plan-level as-of join of two DataFrames, planned by
+  * [[AsOfStrategy]], which [[graft.GraftSparkExtensions]] injects. */
 object AsOf {
   /** As-of join: rows of `left` matched with the latest `right` row
     * per key at-or-before the left timestamp (direction "backward",
@@ -216,10 +217,6 @@ object AsOf {
       leftOuter: Boolean = false): DataFrame = {
     require(direction == "backward" || direction == "forward",
       s"as-of direction must be backward|forward, got $direction")
-    if (!spark.experimental.extraStrategies.contains(AsOfStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfStrategy
-    }
     val lPlan = left.queryExecution.analyzed
     val rPlan = right.queryExecution.analyzed
     def attr(p: LogicalPlan, name: String): Attribute =

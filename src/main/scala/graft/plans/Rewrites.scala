@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{ArrayIntersect, Size}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -31,12 +30,5 @@ object IntersectCountRewrite extends Rule[LogicalPlan] {
       case Size(ArrayIntersect(a, b), false)
           if isStringArray(a.dataType) && isStringArray(b.dataType) =>
         ArrayIntersectCount(a, b)
-    }
-
-  /** Idempotent injection into the session optimizer. */
-  def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(IntersectCountRewrite)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ IntersectCountRewrite
     }
 }

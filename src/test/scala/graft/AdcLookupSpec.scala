@@ -14,7 +14,6 @@ class AdcLookupSpec extends SparkSuite {
       "CAST(0 AS DOUBLE), (acc, x) -> acc + x)"
 
   test("graft_adc == higher-order lookup-sum on generated cases") {
-    graft.functions.GraftFunctions.register(spark)
     // 500 rows of (codes[4] in 0..7, lut[4][8] of varied doubles)
     val df = spark.range(500).select(
       expr("transform(sequence(0, 3), m -> CAST((id * 7 + m * 13) % 8 AS INT))").as("codes"),
@@ -25,7 +24,6 @@ class AdcLookupSpec extends SparkSuite {
   }
 
   test("in-range lookup sums; out-of-range code yields null (total, no throw)") {
-    graft.functions.GraftFunctions.register(spark)
     // NOTE: the interpreted element_at THROWS on out-of-range under
     // Spark 4's default ANSI mode; graft_adc is deliberately total —
     // encode() can never emit an out-of-range code, and a corrupted
@@ -41,7 +39,6 @@ class AdcLookupSpec extends SparkSuite {
   }
 
   test("codes/LUT length mismatch yields null, never a partial sum") {
-    graft.functions.GraftFunctions.register(spark)
     val df = Seq(
       (Seq(0, 1, 0), Seq(Seq(1.0, 2.0), Seq(3.0, 4.0))), // 3 codes, 2 rows
       (Seq(0), Seq(Seq(1.0, 2.0), Seq(3.0, 4.0)))        // 1 code, 2 rows
@@ -52,7 +49,6 @@ class AdcLookupSpec extends SparkSuite {
   }
 
   test("null input arrays are null-safe") {
-    graft.functions.GraftFunctions.register(spark)
     val out = Seq((Option(Seq(0)), Option.empty[Seq[Seq[Double]]]))
       .toDF("codes", "lut")
       .select(call_function("graft_adc", $"codes", $"lut").as("d"))
@@ -61,7 +57,6 @@ class AdcLookupSpec extends SparkSuite {
   }
 
   test("type contract: non-conforming inputs rejected at analysis") {
-    graft.functions.GraftFunctions.register(spark)
     val ex = intercept[org.apache.spark.sql.AnalysisException] {
       Seq((Seq("x"), Seq(Seq(1.0)))).toDF("codes", "lut")
         .select(call_function("graft_adc", $"codes", $"lut"))

@@ -18,7 +18,6 @@ class CmsSpec extends SparkSuite {
 
   /** Raw counters (geometry header stripped and validated). */
   private def sketchOf(df: org.apache.spark.sql.DataFrame): Array[Long] = {
-    graft.functions.GraftFunctions.register(spark)
     val full = df.agg(call_function("graft_cms", col("t"), lit(depth), lit(width)).as("sk"))
       .as[Seq[Long]].head().toArray
     assert(full.length == 2 + depth * width)
@@ -63,7 +62,6 @@ class CmsSpec extends SparkSuite {
   }
 
   test("graft_cms_query matches the local estimator and degrades on geometry mismatch") {
-    graft.functions.GraftFunctions.register(spark)
     val sk = tokens.agg(call_function("graft_cms", col("t"), lit(depth), lit(width)).as("sk"))
     val probed = Seq("data", "nosuchtokenxyz").toDF("token")
       .crossJoin(broadcast(sk))

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.logical.{Window, WindowGroupLimit}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Components, Lpa}
@@ -30,6 +31,17 @@ class LpaSpec extends SparkSuite {
     val comB = m.filterKeys(_ >= 10).values.toSet
     assert(comA.size == 1 && comB.size == 1)
     assert(comA != comB, "one bridge edge must not merge two 4-cliques")
+  }
+
+  test("rounds after the first keep Spark's top-1 WindowGroupLimit") {
+    val clique = for (i <- 0L to 4L; j <- (i + 1) to 4L) yield (i, j)
+    Cuts.startCapture()
+    run(0L to 6L, clique, rounds = 4)
+    val rounds = Cuts.stopCapture().map(_.df.queryExecution.optimizedPlan)
+      .filter(_.exists(_.isInstanceOf[Window]))
+    assert(rounds.size === 4)
+    val limited = rounds.map(_.exists(_.isInstanceOf[WindowGroupLimit]))
+    assert(limited.tail.forall(identity), limited)
   }
 
   test("communities refine connected components on the fixture dup graph") {

@@ -16,7 +16,6 @@ class MinHashEstimateSpec extends SparkSuite {
   import spark.implicits._
 
   test("signature-match fraction estimates exact jaccard within theory bounds") {
-    graft.functions.GraftFunctions.register(spark)
     val k = 64
     val docs = Tables.table(spark, sfDir, "documents")
       .select(col("doc_id"), TextFunctions.shinglesExpr("text", 3).as("g"))

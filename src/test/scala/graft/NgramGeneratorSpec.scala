@@ -9,16 +9,12 @@ import org.apache.spark.sql.functions._
 class NgramGeneratorSpec extends SparkSuite {
   import spark.implicits._
 
-  private def viaGenerator(df: org.apache.spark.sql.DataFrame, n: Int) = {
-    graft.functions.GraftFunctions.register(spark)
+  private def viaGenerator(df: org.apache.spark.sql.DataFrame, n: Int) =
     df.selectExpr("doc_id", s"graft_explode_ngrams(text, $n)")
-  }
 
-  private def viaArray(df: org.apache.spark.sql.DataFrame, n: Int) = {
-    graft.functions.GraftFunctions.register(spark)
+  private def viaArray(df: org.apache.spark.sql.DataFrame, n: Int) =
     df.select(col("doc_id"),
       posexplode(expr(s"graft_word_ngrams(text, $n)")).as(Seq("pos", "gram")))
-  }
 
   test("generator == posexplode(array expression) on the fixture, n in {2,3,5}") {
     val docs = Tables.table(spark, sfDir, "documents").select(col("doc_id"), col("text"))

@@ -157,7 +157,6 @@ class PropertiesSpec extends SparkSuite {
   }
 
   test("property: CMS never undercounts and is linear under any split") {
-    graft.functions.GraftFunctions.register(spark)
     val depth = 3
     val width = 32 // deliberately tiny: force collisions
     def sketch(vs: Seq[String], parts: Int): Seq[Long] = {

@@ -6,15 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** One shared local session for the whole forked test JVM. */
 object SparkTest {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftSparkExtensions)
-      .getOrCreate()
+    val s = GraftSparkExtensions.localSession(4)
     s.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(s)
     s
   }
 }

@@ -19,7 +19,6 @@ class StreamingSketchDriftSpec extends SparkSuite {
   private val width = 256
 
   private def batchSketches: Map[String, (Long, Seq[Long])] = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.events(spark, sfDir)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
