@@ -31,7 +31,7 @@ object Recall {
         .intersect(exact).count() / total
 
     val lsh = recallOf(Similarity.lshKnn(spark, qs, emb, k = 10))
-    val ivf = recallOf(Ivf.ivfKnn(spark, qs, emb, k = 10, nProbe = 8, iters = 1))
+    val ivf = recallOf(Ivf.ivfKnn(qs, emb, k = 10, nProbe = 8, iters = 1))
     // the documented recall knobs, exercised with numbers. LSH: more
     // hash tables (union of buckets, recall 1-(1-p^planes)^tables;
     // candidate volume linear in tables). IVF: more centroids at fixed
@@ -39,7 +39,7 @@ object Recall {
     // the corpus vs 8 of 16 = 50% in the declared config.
     val lshHi = recallOf(Similarity.lshKnn(spark, qs, emb, k = 10, nTables = 8))
     val ivfFine = recallOf(
-      Ivf.ivfKnn(spark, qs, emb, k = 10, nCentroids = 64, nProbe = 8, iters = 1))
+      Ivf.ivfKnn(qs, emb, k = 10, nCentroids = 64, nProbe = 8, iters = 1))
     // the declared q_x_ann_pq path (m=8 × 32 codes, ADC top-160 →
     // exact rerank to 10; rerankFactor 16 since r8 — the documented
     // cheap dial, +0.15 recall for rerank-row cost only), plus the

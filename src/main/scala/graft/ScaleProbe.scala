@@ -21,8 +21,7 @@ object ScaleProbe {
     val e = operators.CosGraph.edges(spark, dir, threshold)
       .cut(eager = true)
     val m = e.count()
-    val deg = e.select(col("a").as("id")).unionAll(e.select(col("b").as("id")))
-      .groupBy(col("id")).agg(count(lit(1)).as("deg"))
+    val deg = operators.Graph.degrees(e)
     val ds = deg.agg(max(col("deg")).as("dmax"),
       sum(col("deg") * col("deg")).as("d2")).collect().head
     // oriented out-degrees: edge leaves its lower-(deg, id) endpoint

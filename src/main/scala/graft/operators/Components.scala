@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Cuts.CutOps
 
@@ -21,18 +21,15 @@ import graft.Cuts.CutOps
   * node permuted path: 17 rounds; 100-node: > 21), where the aligned
   * 300-path needs 8. The fixture graphs converge in ≤ 10 rounds; a
   * corpus whose similarity filaments have id-random order would need
-  * the O(log²) star-contraction algorithm instead — `maxIters` +
-  * `require(converged)` keep that failure loud, never silent.
+  * the O(log²) star-contraction algorithm instead. The rounds run in
+  * [[Graph.untilStable]], so that failure is loud, never silent.
   *
   * Scale notes: each round is ONE edge-frame shuffle join + one
   * label-sized self-join (r18 shape — self-loop rows make the
   * neighbor-min aggregate total, removing the per-round label
   * join-back; the jump input is lineage-cut so the self-join reads
   * persisted blocks instead of re-executing the neighbor-min subtree
-  * twice). Each round's plan is truncated via [[graft.Cuts]]
-  * (reliable checkpoint when opted in for cluster runs, localCheckpoint
-  * otherwise) so Catalyst analysis cost stays O(1) in the round count
-  * rather than compounding.
+  * twice). The edge prelude and the round loop are [[Graph]]'s.
   */
 object Components {
 
@@ -44,22 +41,14 @@ object Components {
     *              cast. Isolated nodes allowed (own cluster).
     * @param edges columns `a`, `b`, same type as `id` — undirected;
     *              direction and duplicates are normalized internally.
-    *              Every endpoint must be a `nodes` id (every caller
-    *              derives edges from the node table); an endpoint
-    *              outside `nodes` fails the run as non-convergence
-    *              instead of being labeled.
+    *              Every endpoint must be a `nodes` id: an endpoint
+    *              outside `nodes` fails the call with
+    *              "connectedComponents: edge endpoint not in nodes".
     * @return (id, cluster_id) — cluster_id = min id in the component
     *         under the type's natural ordering.
     */
-  def connectedComponents(
-      spark: SparkSession, nodes: DataFrame, edges: DataFrame,
-      maxIters: Int = 25): DataFrame = {
-    // Materialize the (possibly expensive) edge derivation ONCE — both
-    // the direction-normalizing union below and every loop round would
-    // otherwise re-execute the upstream candidate-pair computation
-    // (measured: 12.6 s → 2.5 s on the dup-clusters query).
-    val e0 = edges.select(col("a").as("src"), col("b").as("dst"))
-      .cut(eager = true)
+  def connectedComponents(nodes: DataFrame, edges: DataFrame,
+      maxRounds: Int = 25): DataFrame = {
     // Symmetrized edges PLUS one self-loop per node (r18): the
     // self-loop row makes the per-round neighbor-min aggregate TOTAL
     // over the node set — min(dlbl) over {self} ∪ N(id) covers every
@@ -68,22 +57,26 @@ object Components {
     // whole join + its exchange removed from every round), and the
     // previous label rides out of the same aggregate as the self-loop
     // row's value (the convergence test needs it).
-    val sym = e0
-      .union(e0.select(col("dst").as("src"), col("src").as("dst")))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
+    val sym = Graph.undirected(edges)
       .union(nodes.select(col("id").as("src"), col("id").as("dst")))
       .cut(eager = true)
 
-    // lbl(x) = min(x, direct neighbors) — the self-loop contributes x
-    var lbl = sym
+    // lbl(x) = min(x, direct neighbors) — the self-loop contributes x.
+    // An id without a self-loop row is an edge endpoint outside
+    // `nodes`: raised here, in the first (eager) aggregate, instead of
+    // spending every round before the convergence test gives up — no
+    // job and no exchange added.
+    val lbl0 = sym
       .groupBy(col("src").as("id"))
-      .agg(min(col("dst")).as("lbl"))
+      .agg(min(col("dst")).as("lbl"),
+        max(when(col("src") <=> col("dst"), lit(1))).as("self"))
+      .select(col("id"),
+        when(col("self").isNull, raise_error(concat(
+          lit("connectedComponents: edge endpoint not in nodes: "), col("id").cast("string"))))
+          .otherwise(col("lbl")).as("lbl"))
       .cut(eager = true)
 
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIters) {
+    val lbl = Graph.untilStable("connectedComponents", maxRounds, lbl0) { lbl =>
       // (1) neighbor-min: pull each neighbor's current label; the
       // self-loop row pulls the node's own label, so min() includes it
       // and max(when(dst = src)) recovers it as `prev` for the
@@ -118,15 +111,9 @@ object Components {
         .select(col("id"), col("prev"),
           least(col("lbl"), coalesce(col("jlbl"), col("lbl"))).as("lbl"))
         .cut()
-      // null-safe: an edge endpoint missing from `nodes` has no
-      // self-loop row, so its `prev` is always NULL — it must keep the
-      // loop running (and fail the convergence require), not drop out
-      // of the test as an unknown comparison
-      converged = next.filter(!(col("lbl") <=> col("prev"))).count() == 0
-      lbl = next.select(col("id"), col("lbl"))
-      iter += 1
+      val stable = next.filter(!(col("lbl") <=> col("prev"))).count() == 0
+      (next.select(col("id"), col("lbl")), stable)
     }
-    require(converged, s"connectedComponents did not converge in $maxIters rounds")
     lbl.select(col("id"), col("lbl").as("cluster_id"))
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Cuts.CutOps
 
@@ -21,13 +21,13 @@ import graft.Cuts.CutOps
   * the MINIMUM cluster id, making the result a pure function of the
   * edge set (reproducible on any partitioning, and oracle-able).
   *
-  * Scale shape: degrees are one aggregation over the edge list;
-  * cluster formation runs [[Components]] pointer-jumping (O(log d)
-  * rounds) over only the core subgraph; the border assignment is one
-  * equi-join. The ε-graph itself comes from whatever neighbor join
-  * the modality supports — blocked exact cosine here, ANN candidate
-  * pairs at 100 TB — and everything downstream touches only edges,
-  * never raw vectors.
+  * Scale shape: degrees are one aggregation over the edge list
+  * ([[Graph.degrees]]); cluster formation runs [[Components]] over
+  * only the core subgraph (its rounds: [[Graph]]); the border
+  * assignment is one equi-join. The ε-graph itself comes from
+  * whatever neighbor join the modality supports — blocked exact
+  * cosine here, ANN candidate pairs at 100 TB — and everything
+  * downstream touches only edges, never raw vectors.
   */
 object Dbscan {
 
@@ -36,18 +36,17 @@ object Dbscan {
     * @return (id, role ∈ {core, border}, cluster_id) for clustered
     *         points only — noise is the complement of the id set.
     */
-  def cluster(spark: SparkSession, edges: DataFrame, minPts: Int): DataFrame = {
+  def cluster(edges: DataFrame, minPts: Int): DataFrame = {
     val e = edges.select(col("a"), col("b")).cut()
     val sym = e.select(col("a").as("u"), col("b").as("v"))
       .unionAll(e.select(col("b").as("u"), col("a").as("v")))
     // |N_eps(p)| >= minPts with p itself counted => degree >= minPts-1
-    val deg = sym.groupBy(col("u")).agg(count(lit(1)).as("d"))
-    val core = deg.filter(col("d") >= minPts - 1).select(col("u").as("id"))
+    val core = Graph.degrees(e).filter(col("deg") >= minPts - 1).select(col("id"))
       .cut()
     val coreEdges = e
       .join(core.select(col("id").as("a")), Seq("a"), "left_semi")
       .join(core.select(col("id").as("b")), Seq("b"), "left_semi")
-    val coreLabels = Components.connectedComponents(spark, core, coreEdges)
+    val coreLabels = Components.connectedComponents(core, coreEdges)
     val coreOut = coreLabels
       .select(col("id"), lit("core").as("role"), col("cluster_id"))
     // border: non-core with >= 1 core neighbor; deterministic min rule

@@ -561,7 +561,7 @@ object Dedup {
     // type-preserving) — a string-id corpus must not be silently
     // nulled out by a long cast.
     val clusters = Components.connectedComponents(
-        spark, docs.select(col(idCol).as("id")), edges)
+        docs.select(col(idCol).as("id")), edges)
       .select(col("id").as("doc_id"), col("cluster_id"))
     keepLongestFromClusters(docs, textCol, idCol, clusters)
   }

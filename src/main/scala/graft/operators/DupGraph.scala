@@ -60,7 +60,6 @@ object DupGraph {
   def clusters(spark: SparkSession, dir: String, threshold: Double): DataFrame =
     graft.Memo(spark, "DupGraph.clusters", (dir, threshold))(
       Components.connectedComponents(
-        spark,
         graft.Tables.table(spark, dir, "documents").select(col("doc_id").as("id")),
         edges(spark, dir, threshold))
         .select(col("id").as("doc_id"), col("cluster_id")))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -48,7 +48,7 @@ object Ivf {
     * vec_ids (distinct + deterministic, not dense). `iters` Lloyd
     * steps.
     */
-  def train(spark: SparkSession, corpus: DataFrame, k: Int, iters: Int = 3): DataFrame = {
+  def train(corpus: DataFrame, k: Int, iters: Int = 3): DataFrame = {
     val seeds = corpus
       .select(col("vec_id"), toDouble(col("embedding")).as("centroid"),
         xxhash64(col("vec_id")).as("hk"))
@@ -98,18 +98,16 @@ object Ivf {
     * @return (vec_id, centroid_id); centroid ids are the seed rows'
     *         vec_ids (stable, not dense).
     */
-  def kmeansAssignments(spark: SparkSession, corpus: DataFrame,
-      k: Int, iters: Int = 3): DataFrame =
-    assign(corpus.select(col("vec_id"), col("embedding")),
-        train(spark, corpus, k, iters))
+  def kmeansAssignments(corpus: DataFrame, k: Int, iters: Int = 3): DataFrame =
+    assign(corpus.select(col("vec_id"), col("embedding")), train(corpus, k, iters))
       .select(col("vec_id"), col("centroid_id"))
 
   /** Approximate top-k: probe the `nProbe` nearest inverted lists per
     * query, exact cosine rerank within them.
     */
-  def ivfKnn(spark: SparkSession, queries: DataFrame, corpus: DataFrame,
+  def ivfKnn(queries: DataFrame, corpus: DataFrame,
       k: Int, nCentroids: Int = 16, nProbe: Int = 4, iters: Int = 2): DataFrame = {
-    val centroids = train(spark, corpus, nCentroids, iters)
+    val centroids = train(corpus, nCentroids, iters)
     // inverted lists: corpus rows keyed by their centroid
     val lists = assign(corpus.select(col("vec_id"), col("embedding")), centroids)
       .select(col("centroid_id"), col("vec_id").as("cand_id"), col("embedding").as("cv"))

@@ -52,7 +52,7 @@ object IvfPq {
     def memo(part: String)(build: => DataFrame): DataFrame =
       memoKey.fold(build)(mk =>
         graft.Memo(spark, s"IvfPq.$part", (mk, nCoarse, m, kCodes, iters))(build))
-    val coarse = memo("coarse")(Ivf.train(spark, corpus, nCoarse, iters))
+    val coarse = memo("coarse")(Ivf.train(corpus, nCoarse, iters))
 
     // one assignment pass shared by PQ training and encoding: each
     // vector's list id + residual vs its coarse centroid

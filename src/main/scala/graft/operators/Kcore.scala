@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Cuts.CutOps
 
@@ -22,23 +22,22 @@ import graft.Cuts.CutOps
   * Scale shape: each round is one degree aggregation + one semi-join
   * on the surviving edge list — key-partitioned shuffles only, edge
   * list monotonically shrinking. Round count is bounded by the
-  * degeneracy ordering depth (tiny on similarity graphs); each
-  * round's frame is lineage-truncated via [[graft.Cuts]] so plans
-  * don't grow with iterations (the Components discipline).
+  * degeneracy ordering depth (tiny on similarity graphs); the rounds
+  * run in [[Graph.untilStable]].
   */
 object Kcore {
 
   // live-edge count at or below which a second peel level is folded
-  // into the iteration's action window
+  // into the round's action window
   private val BatchEdgeThreshold = 200000L
 
   /** Vertices of the k-core with their within-core degree.
     *
-    * Peel pacing is ADAPTIVE: every loop iteration runs ONE driver
+    * Peel pacing is ADAPTIVE: every round runs ONE driver
     * action (a single agg returning both the below-k vertex count and
     * the live degree mass), peels one level, and — only when the live
     * edge count is at or below `BatchEdgeThreshold` — folds a second,
-    * action-free peel level into the same iteration. Peeling past the
+    * action-free peel level into the same round. Peeling past the
     * fixpoint is idempotent, so the overshoot is harmless; on small
     * graphs the per-action scheduler overhead dominates (batching
     * halves the action count), while on large graphs an unneeded extra
@@ -47,8 +46,8 @@ object Kcore {
     * replaces bought 4.45 → 3.00 s at sf0.001 but cost 0.75 → 1.29 s
     * at sf0.1 — the adaptive switch keeps both.)
     *
-    * `maxRounds` bounds LOOP ITERATIONS, i.e. convergence checks (up
-    * to 2·maxRounds peel levels when the batch path is active). If the
+    * `maxRounds` bounds rounds, i.e. convergence checks (up to
+    * 2·maxRounds peel levels when the batch path is active). If the
     * last check still finds a vertex of degree < k, the surviving
     * subgraph is not a k-core and the call fails with "kCore did not
     * converge" — never a half-peeled answer.
@@ -56,45 +55,34 @@ object Kcore {
     * @param edges undirected (a, b), a < b, deduplicated.
     * @return (id, core_deg) — empty if the k-core is empty.
     */
-  def kCore(spark: SparkSession, edges: DataFrame, k: Int,
-      maxRounds: Int = 50): DataFrame = {
+  def kCore(edges: DataFrame, k: Int, maxRounds: Int = 50): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    def degOf(g: DataFrame): DataFrame =
-      g.select(col("a").as("id"))
-        .unionAll(g.select(col("b").as("id")))
-        .groupBy(col("id")).agg(count(lit(1)).as("core_deg"))
     def peel(g: DataFrame, deg: DataFrame): DataFrame = {
-      val alive = deg.filter(col("core_deg") >= k).select(col("id"))
+      val alive = deg.filter(col("deg") >= k).select(col("id"))
       g.join(alive.select(col("id").as("a")), Seq("a"), "left_semi")
         .join(alive.select(col("id").as("b")), Seq("b"), "left_semi")
     }
-    var e = edges.select(col("a"), col("b")).cut()
-    var deg = degOf(e).cut()
-    var round = 0
-    var stable = false
-    while (!stable && round < maxRounds) {
-      // one action per iteration: convergence check + live edge mass
-      val row = deg.agg(
-        count(when(col("core_deg") < k, lit(1))).as("below"),
-        coalesce(sum(col("core_deg")), lit(0L)).as("deg_mass")).head()
-      if (row.getLong(0) == 0L) stable = true
-      else {
-        val liveEdges = row.getLong(1) / 2
-        var g = peel(e, deg)
-        // ONE action-free extra level at most: each un-truncated level
-        // references g twice (peel input + degOf), so chaining deeper
-        // duplicates the subtree exponentially (measured: 3 free
-        // levels = 7.0 s vs 4.1 s at sf0.001)
-        if (liveEdges <= BatchEdgeThreshold)
-          g = peel(g, degOf(g))
-        e = g.cut()
-        deg = degOf(e).cut()
-        round += 1
-      }
+    val e0 = edges.select(col("a"), col("b")).cut()
+    val (_, deg) = Graph.untilStable("kCore", maxRounds, (e0, Graph.degrees(e0).cut())) {
+      case (e, deg) =>
+        // one action per round: convergence check + live edge mass
+        val row = deg.agg(
+          count(when(col("deg") < k, lit(1))).as("below"),
+          coalesce(sum(col("deg")), lit(0L)).as("deg_mass")).head()
+        if (row.getLong(0) == 0L) ((e, deg), true)
+        else {
+          val liveEdges = row.getLong(1) / 2
+          val g = peel(e, deg)
+          // ONE action-free extra level at most: each un-truncated level
+          // references g twice (peel input + degrees), so chaining deeper
+          // duplicates the subtree exponentially (measured: 3 free
+          // levels = 7.0 s vs 4.1 s at sf0.001)
+          val next = (if (liveEdges <= BatchEdgeThreshold) peel(g, Graph.degrees(g)) else g).cut()
+          ((next, Graph.degrees(next).cut()), false)
+        }
     }
-    require(stable, s"kCore did not converge in $maxRounds rounds")
     // every surviving vertex has core_deg >= k; if the loop emptied
     // the graph, the filter returns nothing
-    deg.filter(col("core_deg") >= k)
+    deg.filter(col("deg") >= k).select(col("id"), col("deg").as("core_deg"))
   }
 }

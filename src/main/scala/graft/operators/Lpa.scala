@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Cuts.CutOps
@@ -22,8 +22,7 @@ import graft.Cuts.CutOps
   * Scale shape: each round is one join of the edge list against the
   * label table + one (vertex, label) count aggregate + one per-vertex
   * argmax window — all partitioned by vertex id, nothing global.
-  * Lineage is cut per round ([[graft.Cuts]]), the same
-  * iterative-loop discipline as Components/PageRank/Kcore.
+  * Fixed rounds, one lazy cut each: see [[Graph]].
   */
 object Lpa {
 
@@ -37,21 +36,10 @@ object Lpa {
     * @return (id, community) — community = the converged label (a
     *         vertex id, NOT guaranteed to be the community minimum)
     */
-  def communities(
-      spark: SparkSession, nodes: DataFrame, edges: DataFrame,
-      rounds: Int = 8): DataFrame = {
-    val e0 = edges.select(col("a").as("src"), col("b").as("dst"))
-      .cut(eager = true)
-    val sym = e0
-      .union(e0.select(col("dst").as("src"), col("src").as("dst")))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
-      .cut(eager = true)
-
-    var labels = nodes.select(col("id"), col("id").as("lbl"))
-      .cut(eager = true)
-    var round = 0
-    while (round < rounds) {
+  def communities(nodes: DataFrame, edges: DataFrame, rounds: Int = 8): DataFrame = {
+    val sym = Graph.undirected(edges).cut(eager = true)
+    val init = nodes.select(col("id"), col("id").as("lbl")).cut(eager = true)
+    val labels = (0 until rounds).foldLeft(init) { (labels, round) =>
       // Neighbor messages at weight 1, PLUS one weight-0 self-message
       // per vertex (r18): the self row guarantees every vertex
       // surfaces from the count aggregate — carrying its CURRENT label
@@ -69,12 +57,7 @@ object Lpa {
         .unionAll(labels.select(col("id"), col("lbl"), lit(0L).as("wt")))
       val counts = msgs.groupBy(col("id"), col("lbl"))
       val w = Window.partitionBy(col("id")).orderBy(col("c").desc, col("lbl"))
-      // lazy cut: the loop has no per-round action (fixed round
-      // budget, no convergence check), so an EAGER cut here ran one
-      // materialization job per round — pure scheduler latency at
-      // fixture scale (the PageRank/Kcore lazy-cut discipline; all 8
-      // rounds now materialize under the caller's single action)
-      labels = (if (round > 0) {
+      (if (round > 0) {
         counts.agg(sum(col("wt")).as("c"))
           .withColumn("rk", row_number().over(w))
           .filter(col("rk") === 1)
@@ -97,7 +80,6 @@ object Lpa {
               lit("LPA: edge endpoint not in nodes: "), col("id").cast("string"))))
               .otherwise(col("lbl")).as("lbl"))
       }).cut()
-      round += 1
     }
     labels.select(col("id"), col("lbl").as("community"))
   }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Cuts.CutOps
 
@@ -16,14 +16,11 @@ import graft.Cuts.CutOps
   * purely relational — the DuckDB oracle unrolls the identical
   * formula, so results hash-match at fixed iteration count.
   *
-  * Scale notes: edges materialize ONCE (localCheckpoint — every round
-  * would otherwise re-run the upstream candidate-pair join, the
-  * Components lesson). Each round is one hash join of the rank frame
+  * Scale notes: the edge prelude is [[Graph.undirected]], so edges
+  * materialize ONCE. Each round is one hash join of the rank frame
   * against the edge list plus one aggregate on dst — two shuffles of
-  * rank-sized data, no cross join, no driver-side adjacency. The
-  * per-round lazy lineage cut ([[graft.Cuts]] — reliable
-  * checkpoint in cluster mode, localCheckpoint locally) keeps Catalyst
-  * analysis O(1) in the iteration count. The only broadcast is the
+  * rank-sized data, no cross join, no driver-side adjacency. Fixed
+  * rounds, one lazy cut each: see [[Graph]]. The only broadcast is the
   * 1-row node count.
   */
 object PageRank {
@@ -37,18 +34,13 @@ object PageRank {
     *              Every endpoint must be a `nodes` id: an endpoint
     *              outside `nodes` fails the action with
     *              "PageRank: edge endpoint not in nodes".
-    * @return (id, rank) after exactly `iters` rounds.
+    * @return (id, rank) after exactly `rounds` rounds.
     */
-  def pageRank(spark: SparkSession, nodes: DataFrame, edges: DataFrame,
-      iters: Int = 10, damping: Double = 0.85): DataFrame = {
-    require(iters >= 1, s"iters must be >= 1, got $iters")
+  def pageRank(nodes: DataFrame, edges: DataFrame,
+      rounds: Int = 10, damping: Double = 0.85): DataFrame = {
+    require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
-    val e0 = edges.select(col("a").as("src"), col("b").as("dst"))
-      .cut(eager = true)
-    val sym = e0
-      .union(e0.select(col("dst").as("src"), col("src").as("dst")))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
+    val sym = Graph.undirected(edges)
     val deg = sym.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
     val withDeg = sym.join(deg, "src").cut(eager = true)
     val n = broadcast(nodes.agg(count(lit(1)).as("n")))
@@ -57,8 +49,8 @@ object PageRank {
     // pure driver planning cost at fixture scale (measured r12)
     val base = nodes.select(col("id")).crossJoin(n)
       .cut()
-    var ranks = base.select(col("id"), (lit(1.0) / col("n")).as("rank"))
-    for (_ <- 1 to iters) {
+    val init = base.select(col("id"), (lit(1.0) / col("n")).as("rank"))
+    (1 to rounds).foldLeft(init) { (ranks, _) =>
       // One zero-mass row per node unioned into the contribution
       // stream (r18): the aggregate then covers every node — dangling
       // nodes surface with in_mass = 0.0 — so the round needs no join
@@ -76,7 +68,7 @@ object PageRank {
       // `n` is NULL exactly for an id with no zero row, i.e. an edge
       // endpoint outside `nodes`: raised in the same projection, so
       // the contract check adds no job and no collect
-      ranks = contribs
+      contribs
         .groupBy(col("dst").as("id"))
         .agg(sum(col("m")).as("in_mass"), max(col("n")).as("n"))
         .select(col("id"),
@@ -86,6 +78,5 @@ object PageRank {
               + lit(damping) * col("in_mass")).as("rank"))
         .cut()
     }
-    ranks
   }
 }

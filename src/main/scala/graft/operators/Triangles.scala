@@ -48,10 +48,7 @@ object Triangles {
     */
   def triangles(edges: DataFrame): DataFrame = {
     val e = edges.select(col("a"), col("b"))
-    // degree of every endpoint (undirected)
-    val deg = e.select(col("a").as("id"))
-      .unionAll(e.select(col("b").as("id")))
-      .groupBy(col("id")).agg(count(lit(1)).as("deg"))
+    val deg = Graph.degrees(e)
     // orient low-(deg, id) → high-(deg, id)
     val withDeg = e
       .join(deg.withColumnRenamed("id", "a").withColumnRenamed("deg", "da"), Seq("a"))

@@ -513,7 +513,7 @@ object Extensions {
     Query("q_x_kmeans", (s, d) => {
       import org.apache.spark.sql.expressions.Window
       val emb = table(s, d, "embeddings")
-      val byLabel = graft.operators.Ivf.kmeansAssignments(s, emb, k = 10, iters = 3)
+      val byLabel = graft.operators.Ivf.kmeansAssignments(emb, k = 10, iters = 3)
         .join(emb.select(col("vec_id"), col("label")), "vec_id")
         .groupBy(col("centroid_id"), col("label")).agg(count(lit(1)).as("nl"))
       val w = Window.partitionBy(col("centroid_id"))
@@ -545,7 +545,7 @@ object Extensions {
     // extra corpus pass, so keep iters=1.
     Query("q_x_ann_ivf", (s, d) => {
       val emb = table(s, d, "embeddings")
-      graft.operators.Ivf.ivfKnn(s, emb.filter(col("vec_id") % 25 === 0), emb,
+      graft.operators.Ivf.ivfKnn(emb.filter(col("vec_id") % 25 === 0), emb,
           k = 10, nProbe = 8, iters = 1)
         .orderBy(col("query_id"), col("rank"))
     }, None),
@@ -595,7 +595,7 @@ object Extensions {
       val emb = table(s, d, "embeddings")
       val edges = graft.operators.CosGraph.edges(s, d, threshold = 0.4)
       graft.operators.Components
-        .connectedComponents(s, emb.select(col("vec_id").as("id")), edges)
+        .connectedComponents(emb.select(col("vec_id").as("id")), edges)
         .select(col("id").as("vec_id"), col("cluster_id"),
           (col("id") === col("cluster_id")).as("is_rep"))
         .orderBy(col("vec_id"))
@@ -1769,7 +1769,7 @@ object Extensions {
     // k-core is a unique maximal subgraph).
     Query("q_x_kcore", (s, d) =>
       graft.operators.Kcore
-        .kCore(s, graft.operators.CosGraph.edges(s, d, threshold = 0.3), k = 3)
+        .kCore(graft.operators.CosGraph.edges(s, d, threshold = 0.3), k = 3)
         .select(col("id").as("vec_id"), col("core_deg"))
         .orderBy(col("vec_id")), None),
 
@@ -1782,7 +1782,7 @@ object Extensions {
     // oracle (unlike sequential DBSCAN's order-dependent borders).
     Query("q_x_dbscan", (s, d) => {
       val edges = graft.operators.CosGraph.edges(s, d, threshold = 0.3)
-      graft.operators.Dbscan.cluster(s, edges, minPts = 4)
+      graft.operators.Dbscan.cluster(edges, minPts = 4)
         .select(col("id").as("vec_id"), col("role"), col("cluster_id"))
         .orderBy(col("vec_id"))
     }, Some(
@@ -1838,7 +1838,7 @@ object Extensions {
       val edges = exactE.unionByName(jacE).unionByName(contE)
         .dropDuplicates("a", "b")
       val cc = graft.operators.Components
-        .connectedComponents(s, docs.select(col("doc_id").as("id")), edges)
+        .connectedComponents(docs.select(col("doc_id").as("id")), edges)
       val byCluster = Window.partitionBy(col("cluster_id"))
       cc.join(docs.select(col("doc_id").as("id"), length(col("text")).as("len")), Seq("id"))
         .withColumn("n_members", count(lit(1)).over(byCluster))
@@ -1960,7 +1960,7 @@ object Extensions {
       val docs = table(s, d, "documents")
       val edges = graft.operators.DupGraph.edges(s, d, threshold = 0.6)
       graft.operators.PageRank
-        .pageRank(s, docs.select(col("doc_id").as("id")), edges)
+        .pageRank(docs.select(col("doc_id").as("id")), edges)
         .select(col("id").as("doc_id"),
           round(col("rank") * 1000000, 3).as("pr_ppm"))
         .orderBy(col("doc_id"))
@@ -3203,7 +3203,7 @@ object Extensions {
     Query("q_x_lpa", (s, d) => {
       val docs = table(s, d, "documents").select(col("doc_id").as("id"))
       val edges = graft.operators.DupGraph.edges(s, d, 0.8)
-      graft.operators.Lpa.communities(s, docs, edges)
+      graft.operators.Lpa.communities(docs, edges)
         .groupBy(col("community")).agg(count(lit(1)).as("size"))
         .groupBy(col("size")).agg(count(lit(1)).as("n_communities"))
         .orderBy(col("size"))

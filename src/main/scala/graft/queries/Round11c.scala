@@ -277,8 +277,7 @@ object Round11c {
     // degree-ordered shape); the per-node rollup is linear.
     Query("q_x_clustering_coef", (s, d) => {
       val e = graft.operators.CosGraph.edges(s, d, threshold = 0.3)
-      val deg = e.select(col("a").as("id")).unionAll(e.select(col("b").as("id")))
-        .groupBy(col("id")).agg(count(lit(1)).as("deg"))
+      val deg = graft.operators.Graph.degrees(e)
       val perNode = graft.operators.Triangles.perVertex(e)
       deg.filter(col("deg") >= 2)
         .join(perNode, Seq("id"), "left").na.fill(0L, Seq("n_tri"))

@@ -61,21 +61,21 @@ class ApiContractSpec extends SparkSuite {
     val nodes = (0L to 9L).toDF("id")
     val edges = (0L until 9L).map(i => (i, i + 1)).toDF("a", "b")
     val e = intercept[IllegalArgumentException] {
-      Components.connectedComponents(spark, nodes, edges, maxIters = 1)
+      Components.connectedComponents(nodes, edges, maxRounds = 1)
     }
     assert(e.getMessage.contains("did not converge"), e.getMessage)
   }
 
   test("connected components fails loudly on an edge endpoint missing from nodes") {
-    // 9 has no self-loop row, so its `prev` is always NULL: the
-    // convergence test must count it as unsettled (null-safe), never
-    // converge early and output a label for a node that is not a node
+    // 9 is not a node: it has no self-loop row, so the first label
+    // aggregate raises before any round runs, never labelling it
     val nodes = (0L to 3L).toDF("id")
     val edges = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 9L)).toDF("a", "b")
-    val e = intercept[IllegalArgumentException] {
-      Components.connectedComponents(spark, nodes, edges, maxIters = 5)
+    val e = intercept[Exception] {
+      Components.connectedComponents(nodes, edges, maxRounds = 5)
     }
-    assert(e.getMessage.contains("did not converge"), e.getMessage)
+    assert(e.getMessage.contains("connectedComponents: edge endpoint not in nodes: 9"),
+      e.getMessage)
   }
 
   test("pagerank fails loudly on an edge endpoint missing from nodes") {
@@ -84,7 +84,7 @@ class ApiContractSpec extends SparkSuite {
     val nodes = (0L to 3L).toDF("id")
     val edges = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 9L)).toDF("a", "b")
     val e = intercept[Exception] {
-      PageRank.pageRank(spark, nodes, edges, iters = 3).collect()
+      PageRank.pageRank(nodes, edges, rounds = 3).collect()
     }
     assert(e.getMessage.contains("edge endpoint not in nodes: 9"), e.getMessage)
   }
@@ -94,7 +94,7 @@ class ApiContractSpec extends SparkSuite {
     // round (two levels) leaves 2..7, which is not a 2-core
     val edges = (0L until 9L).map(i => (i, i + 1)).toDF("a", "b")
     val e = intercept[IllegalArgumentException] {
-      Kcore.kCore(spark, edges, k = 2, maxRounds = 1)
+      Kcore.kCore(edges, k = 2, maxRounds = 1)
     }
     assert(e.getMessage.contains("kCore did not converge in 1 rounds"), e.getMessage)
   }
@@ -105,7 +105,7 @@ class ApiContractSpec extends SparkSuite {
     val nodes = (0L to 3L).toDF("id")
     val edges = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 9L)).toDF("a", "b")
     val e = intercept[Exception] {
-      Lpa.communities(spark, nodes, edges, rounds = 3).collect()
+      Lpa.communities(nodes, edges, rounds = 3).collect()
     }
     assert(e.getMessage.contains("edge endpoint not in nodes: 9"), e.getMessage)
   }

@@ -9,7 +9,7 @@ class ComponentsSpec extends SparkSuite {
   import spark.implicits._
 
   private def cc(nodes: Seq[Long], edges: Seq[(Long, Long)]): Map[Long, Long] =
-    Components.connectedComponents(spark,
+    Components.connectedComponents(
         nodes.toDF("id"), edges.toDF("a", "b"))
       .as[(Long, Long)].collect().toMap
 
@@ -47,9 +47,9 @@ class ComponentsSpec extends SparkSuite {
     val n = 200L
     val nodes = 0L until n
     val edges = (0L until n - 1).map(i => (i, i + 1))
-    // maxIters 12 would be far exceeded by pure neighbor-min (needs ~n)
-    val out = Components.connectedComponents(spark,
-      nodes.toDF("id"), edges.toDF("a", "b"), maxIters = 12)
+    // maxRounds 12 would be far exceeded by pure neighbor-min (needs ~n)
+    val out = Components.connectedComponents(
+      nodes.toDF("id"), edges.toDF("a", "b"), maxRounds = 12)
     assert(out.filter(col("cluster_id") =!= 0L).isEmpty)
   }
 

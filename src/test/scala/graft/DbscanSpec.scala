@@ -11,7 +11,7 @@ class DbscanSpec extends SparkSuite {
   import spark.implicits._
 
   private def run(edges: Seq[(Long, Long)], minPts: Int): Map[Long, (String, Long)] =
-    Dbscan.cluster(spark, edges.toDF("a", "b"), minPts)
+    Dbscan.cluster(edges.toDF("a", "b"), minPts)
       .as[(Long, String, Long)].collect()
       .map(t => t._1 -> (t._2, t._3)).toMap
 

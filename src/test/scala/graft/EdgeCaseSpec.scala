@@ -56,15 +56,15 @@ class EdgeCaseSpec extends SparkSuite {
   test("graph operators on empty / degenerate edge lists return empty, not error") {
     val noEdges = Seq.empty[(Long, Long)].toDF("a", "b")
     assert(operators.Triangles.perVertex(noEdges).isEmpty)
-    assert(operators.Dbscan.cluster(spark, noEdges, minPts = 3).isEmpty)
-    assert(operators.Kcore.kCore(spark, noEdges, k = 2).isEmpty)
+    assert(operators.Dbscan.cluster(noEdges, minPts = 3).isEmpty)
+    assert(operators.Kcore.kCore(noEdges, k = 2).isEmpty)
     // a single edge: no triangles, no DBSCAN core at minPts 3, no 2-core
     val one = Seq((1L, 2L)).toDF("a", "b")
     assert(operators.Triangles.perVertex(one).isEmpty)
-    assert(operators.Dbscan.cluster(spark, one, minPts = 3).isEmpty)
-    assert(operators.Kcore.kCore(spark, one, k = 2).isEmpty)
+    assert(operators.Dbscan.cluster(one, minPts = 3).isEmpty)
+    assert(operators.Kcore.kCore(one, k = 2).isEmpty)
     // minPts = 2: every edge endpoint is core (neighborhood of 2)
-    val db = operators.Dbscan.cluster(spark, one, minPts = 2)
+    val db = operators.Dbscan.cluster(one, minPts = 2)
       .as[(Long, String, Long)].collect().toSet
     assert(db === Set((1L, "core", 1L), (2L, "core", 1L)))
   }

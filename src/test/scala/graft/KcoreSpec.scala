@@ -28,7 +28,7 @@ class KcoreSpec extends SparkSuite {
   }
 
   private def run(edges: Seq[(Long, Long)], k: Int): Map[Long, Long] =
-    Kcore.kCore(spark, edges.toDF("a", "b"), k)
+    Kcore.kCore(edges.toDF("a", "b"), k)
       .as[(Long, Long)].collect().toMap
 
   test("clique K5 with a pendant chain: the 4-core is exactly the clique") {

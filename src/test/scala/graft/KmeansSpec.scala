@@ -30,7 +30,7 @@ class KmeansSpec extends SparkSuite {
       .agg(sum(col("d2"))).head().getDouble(0)
 
   test("every vector assigned exactly once, to at most k clusters") {
-    val asg = Ivf.kmeansAssignments(spark, emb, k = 10, iters = 3)
+    val asg = Ivf.kmeansAssignments(emb, k = 10, iters = 3)
     assert(asg.count() == emb.count())
     assert(asg.select(col("vec_id")).distinct().count() == emb.count())
     val k = asg.select(col("centroid_id")).distinct().count()
@@ -38,15 +38,15 @@ class KmeansSpec extends SparkSuite {
   }
 
   test("Lloyd iterations monotonically improve within-cluster SSE") {
-    val sse1 = sse(Ivf.train(spark, emb, k = 10, iters = 1))
-    val sse3 = sse(Ivf.train(spark, emb, k = 10, iters = 3))
+    val sse1 = sse(Ivf.train(emb, k = 10, iters = 1))
+    val sse3 = sse(Ivf.train(emb, k = 10, iters = 3))
     assert(sse3 <= sse1 + 1e-6, s"SSE rose across Lloyd rounds: $sse1 -> $sse3")
   }
 
   test("assignments are deterministic across invocations") {
-    val a = Ivf.kmeansAssignments(spark, emb, k = 10, iters = 3)
+    val a = Ivf.kmeansAssignments(emb, k = 10, iters = 3)
       .orderBy("vec_id").collect().toSeq
-    val b = Ivf.kmeansAssignments(spark, emb, k = 10, iters = 3)
+    val b = Ivf.kmeansAssignments(emb, k = 10, iters = 3)
       .orderBy("vec_id").collect().toSeq
     assert(a === b)
   }

@@ -12,7 +12,7 @@ class LpaSpec extends SparkSuite {
   import spark.implicits._
 
   private def run(nodes: Seq[Long], edges: Seq[(Long, Long)], rounds: Int = 8) =
-    Lpa.communities(spark,
+    Lpa.communities(
       nodes.toDF("id"), edges.toDF("a", "b"), rounds)
       .as[(Long, Long)].collect().toMap
 
@@ -47,8 +47,8 @@ class LpaSpec extends SparkSuite {
   test("communities refine connected components on the fixture dup graph") {
     val docs = Tables.table(spark, sfDir, "documents").select(col("doc_id").as("id"))
     val edges = graft.operators.DupGraph.edges(spark, sfDir, 0.8)
-    val lpa = Lpa.communities(spark, docs, edges)
-    val cc = Components.connectedComponents(spark, docs, edges)
+    val lpa = Lpa.communities(docs, edges)
+    val cc = Components.connectedComponents(docs, edges)
     // two vertices sharing an LPA community must share a CC: labels
     // only travel along edges, so a community can never span components
     val viol = lpa.join(cc, "id")
@@ -61,9 +61,9 @@ class LpaSpec extends SparkSuite {
   test("deterministic across runs and partitionings") {
     val docs = Tables.table(spark, sfDir, "documents").select(col("doc_id").as("id"))
     val edges = graft.operators.DupGraph.edges(spark, sfDir, 0.8)
-    val a = Lpa.communities(spark, docs.repartition(3), edges, rounds = 8)
+    val a = Lpa.communities(docs.repartition(3), edges, rounds = 8)
       .as[(Long, Long)].collect().sorted.toSeq
-    val b = Lpa.communities(spark, docs.repartition(11), edges, rounds = 8)
+    val b = Lpa.communities(docs.repartition(11), edges, rounds = 8)
       .as[(Long, Long)].collect().sorted.toSeq
     assert(a == b)
   }

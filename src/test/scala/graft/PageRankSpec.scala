@@ -24,11 +24,11 @@ class PageRankSpec extends SparkSuite {
     r
   }
 
-  private def run(n: Int, edges: Seq[(Int, Int)], iters: Int = 10)
+  private def run(n: Int, edges: Seq[(Int, Int)], rounds: Int = 10)
       : Map[Int, Double] = {
     val nodesDf = (0 until n).toDF("id")
     val edgesDf = edges.toDF("a", "b")
-    PageRank.pageRank(spark, nodesDf, edgesDf, iters = iters)
+    PageRank.pageRank(nodesDf, edgesDf, rounds = rounds)
       .as[(Int, Double)].collect().toMap
   }
 
@@ -55,8 +55,8 @@ class PageRankSpec extends SparkSuite {
     val nodesDf = (0 until 6).toDF("id")
     val e1 = edges.toDF("a", "b").repartition(1)
     val e7 = edges.toDF("a", "b").repartition(7)
-    val r1 = PageRank.pageRank(spark, nodesDf, e1).as[(Int, Double)].collect().toMap
-    val r7 = PageRank.pageRank(spark, nodesDf.repartition(5), e7)
+    val r1 = PageRank.pageRank(nodesDf, e1).as[(Int, Double)].collect().toMap
+    val r7 = PageRank.pageRank(nodesDf.repartition(5), e7)
       .as[(Int, Double)].collect().toMap
     // identical up to FP merge order; ppm-at-3dp (the declared query's
     // grain) must be bit-equal

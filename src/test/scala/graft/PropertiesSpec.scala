@@ -190,7 +190,7 @@ class PropertiesSpec extends SparkSuite {
       val parent = scala.collection.mutable.Map((0L to 9L).map(i => i -> i): _*)
       def find(x: Long): Long = if (parent(x) == x) x else { val r = find(parent(x)); parent(x) = r; r }
       eset.foreach { case (a, b) => parent(find(a)) = find(b) }
-      val com = graft.operators.Lpa.communities(spark, nodes, edges, rounds = 4)
+      val com = graft.operators.Lpa.communities(nodes, edges, rounds = 4)
         .as[(Long, Long)].collect().toMap
       // every pair sharing an LPA community shares a component
       (0L to 9L).combinations(2).forall { case Seq(a, b) =>

@@ -27,9 +27,9 @@ class ReliableCheckpointSpec extends SparkSuite {
 
   test("components and pagerank identical under reliable checkpointing") {
     val (nodes, edges) = graph
-    val ccDefault = Components.connectedComponents(spark, nodes, edges)
+    val ccDefault = Components.connectedComponents(nodes, edges)
       .orderBy("id").collect().toSeq
-    val prDefault = PageRank.pageRank(spark, nodes, edges, iters = 5)
+    val prDefault = PageRank.pageRank(nodes, edges, rounds = 5)
       .select(col("id"), round(col("rank"), 9).as("r"))
       .orderBy("id").collect().toSeq
 
@@ -37,9 +37,9 @@ class ReliableCheckpointSpec extends SparkSuite {
     spark.sparkContext.setCheckpointDir(ckptDir)
     spark.conf.set(Cuts.ConfKey, "true")
     try {
-      val ccReliable = Components.connectedComponents(spark, nodes, edges)
+      val ccReliable = Components.connectedComponents(nodes, edges)
         .orderBy("id").collect().toSeq
-      val prReliable = PageRank.pageRank(spark, nodes, edges, iters = 5)
+      val prReliable = PageRank.pageRank(nodes, edges, rounds = 5)
         .select(col("id"), round(col("rank"), 9).as("r"))
         .orderBy("id").collect().toSeq
       assert(ccReliable === ccDefault)

@@ -18,7 +18,7 @@ class SplitSafeSpec extends SparkSuite {
       array_distinct(TextFunctions.wordNgramsExpr("text", 3)).as("g"))
     val edges = Dedup.exactJaccardPairs(sets, "doc_id", "g", threshold = 0.6)
       .select(col("doc_a").as("a"), col("doc_b").as("b"))
-    Components.connectedComponents(spark,
+    Components.connectedComponents(
         docs.select(col("doc_id").as("id")), edges)
       .cache()
   }
