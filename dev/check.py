@@ -171,7 +171,9 @@ def same(out_a, out_b):
     if oracles[0] != oracles[1]:
         a, b = oracles
         keys = sorted(k for k in set(a) | set(b) if a.get(k) != b.get(k))
-        print(f"DIFF oracle_sql.json: {len(keys)} keys differ, first {keys[:5]}")
+        print(f"DIFF oracle_sql.json: {len(keys)} keys differ")
+        for k in keys:
+            print(f"  key {k}")
         n_diff += 1
     names = set()
     for out in (out_a, out_b):

@@ -53,9 +53,9 @@ object SparkEntry {
     SetOps.queries, StreamingBatch.queries, Extensions.queries, Stats.queries,
     Round10.queries, Round10b.queries, Composites.queries, Round11.queries,
     Round11b.queries, Round11c.queries, Round11d.queries, Round11e.queries,
-    Round11f.queries, Round11g.queries, Round11h.queries, Round11i.queries,
-    Round11j.queries, Round11k.queries, Round11l.queries, Round11m.queries,
-    Round12.queries, Round13.queries, Round14.queries, Round14b.queries)
+    Round11f.queries, Round11h.queries, Round11i.queries, Round11j.queries,
+    Round11l.queries, Round11m.queries, Round12.queries, Round13.queries,
+    Round14.queries, Round14b.queries, SampleTests.queries)
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
@@ -541,22 +541,12 @@ object Dedup {
     *
     * @return (doc_id, cluster_id, n_words, keep)
     */
-  def keepLongestPerCluster(spark: SparkSession, docs: DataFrame,
+  def keepLongestPerCluster(docs: DataFrame,
       textCol: String, idCol: String, threshold: Double): DataFrame = {
     val sets = docs.select(col(idCol),
       array_distinct(TextFunctions.wordNgramsExpr(textCol, 3)).as("g"))
     val edges = exactJaccardPairs(sets, idCol, "g", threshold)
       .select(col("doc_a").as("a"), col("doc_b").as("b"))
-    keepLongestFromEdges(spark, docs, textCol, idCol, edges)
-  }
-
-  /** [[keepLongestPerCluster]] over a caller-supplied (a, b) edge
-    * list, so the similarity-graph derivation can be shared (and
-    * cached once) across the whole near-dup query family
-    * ([[DupGraph]]) instead of recomputed per query.
-    */
-  def keepLongestFromEdges(spark: SparkSession, docs: DataFrame,
-      textCol: String, idCol: String, edges: DataFrame): DataFrame = {
     // ids keep their native type end-to-end (connectedComponents is
     // type-preserving) — a string-id corpus must not be silently
     // nulled out by a long cast.
@@ -566,7 +556,7 @@ object Dedup {
     keepLongestFromClusters(docs, textCol, idCol, clusters)
   }
 
-  /** [[keepLongestFromEdges]] over a caller-supplied (doc_id,
+  /** [[keepLongestPerCluster]] over a caller-supplied (doc_id,
     * cluster_id) assignment, so the CC derivation itself can be shared
     * across the cluster-consumer family ([[DupGraph.clusters]]).
     */

@@ -3885,55 +3885,42 @@ object Extensions {
 
     // One-vs-rest ROC-AUC per label over a deterministic score
     // (embedding dim 1) — the eval primitive for "does this signal
-    // separate class ℓ from the rest". Computed from the SCORE-GRAIN
-    // table (group counts per rounded score), never a corpus-wide
-    // rank window: AUC = Σ_s [npos(s)·negBelow(s) + ½npos(s)nneg(s)]
-    // / (P·N), the tie-aware Mann–Whitney identity. The numerator is
-    // kept ×2 in exact integers until ONE final division, so both
-    // engines agree bit-for-bit pre-round. At 100 TB the score grain
-    // (rounded 6dp) is bounded by score range × 10⁶, not corpus size.
-    Query("q_x_auc", (s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val sc = table(s, d, "embeddings")
-        .select(col("label"),
-          round(element_at(col("embedding"), 1).cast("double"), 6).as("sv"))
-      val gs = sc.groupBy(col("sv")).agg(count(lit(1)).as("tot"))
-      val gl = sc.groupBy(col("label"), col("sv")).agg(count(lit(1)).as("cnt"))
-      val labels = sc.select(col("label")).distinct()
-      val uni = broadcast(labels).crossJoin(gs)
-        .join(gl, Seq("label", "sv"), "left").na.fill(0L, Seq("cnt"))
-      val w = Window.partitionBy(col("label")).orderBy(col("sv"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val cum = uni
-        .withColumn("npos", col("cnt"))
-        .withColumn("nneg", col("tot") - col("cnt"))
-        .withColumn("cumneg", coalesce(sum(col("tot") - col("cnt")).over(w), lit(0L)))
-      cum.groupBy(col("label"))
+    // separate class ℓ from the rest". Computed on the shared
+    // one-vs-pooled grid (SampleTests.pooledGrid) over per-(label,
+    // rounded score) counts, never a corpus-wide rank window: AUC =
+    // Σ_s [npos(s)·negBelow(s) + ½npos(s)nneg(s)] / (P·N), the
+    // tie-aware Mann–Whitney identity, with negBelow = below − cbelow.
+    // The numerator is kept ×2 in exact integers until ONE final
+    // division, so both engines agree bit-for-bit pre-round. At 100 TB
+    // the score grain (rounded 6dp) is bounded by score range × 10⁶,
+    // not corpus size.
+    Query("q_x_auc", (s, d) =>
+      SampleTests.pooledGrid(table(s, d, "embeddings")
+          .groupBy(col("label").as("g"),
+            round(element_at(col("embedding"), 1).cast("double"), 6).as("v"))
+          .agg(count(lit(1)).as("cnt")))
+        .groupBy(col("g").as("label"))
         .agg(
-          sum(lit(2L) * col("npos") * col("cumneg") + col("npos") * col("nneg")).as("num2"),
-          sum(col("npos")).as("p"), sum(col("nneg")).as("n"))
+          sum(lit(2L) * col("cnt") * (col("below") - col("cbelow")) +
+            col("cnt") * (col("tot") - col("cnt"))).as("num2"),
+          sum(col("cnt")).as("p"), sum(col("tot") - col("cnt")).as("n"))
         .select(col("label"),
           round(col("num2").cast("double") / (lit(2.0) * col("p") * col("n")), 6).as("auc"),
           col("p").cast("long").as("n_pos"), col("n").cast("long").as("n_neg"))
-        .orderBy(col("label"))
-    }, Some(
-      """WITH sc AS (SELECT label, round(CAST(embedding[1] AS DOUBLE), 6) AS sv FROM embeddings),
-         gs AS (SELECT sv, count(*) AS tot FROM sc GROUP BY sv),
-         gl AS (SELECT label, sv, count(*) AS cnt FROM sc GROUP BY label, sv),
-         uni AS (SELECT l.label, g.sv, g.tot, COALESCE(gl.cnt, 0) AS cnt
-                 FROM (SELECT DISTINCT label FROM sc) l CROSS JOIN gs g
-                 LEFT JOIN gl ON gl.label = l.label AND gl.sv = g.sv),
-         cum AS (SELECT label, sv, cnt AS npos, tot - cnt AS nneg,
-                   COALESCE(sum(tot - cnt) OVER (PARTITION BY label ORDER BY sv
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cumneg
-                 FROM uni),
-         ag AS (SELECT label,
-                  CAST(sum(2 * npos * cumneg + npos * nneg) AS BIGINT) AS num2,
-                  CAST(sum(npos) AS BIGINT) AS p, CAST(sum(nneg) AS BIGINT) AS n
-                FROM cum GROUP BY label)
+        .orderBy(col("label")), Some {
+      val counts =
+        """SELECT label AS g, round(CAST(embedding[1] AS DOUBLE), 6) AS v,
+                  count(*) AS cnt
+           FROM embeddings GROUP BY 1, 2"""
+      s"""WITH ${SampleTests.pooledGridSql(counts)},
+         ag AS (SELECT g AS label,
+                  CAST(sum(2 * cnt * (below - cbelow) + cnt * (tot - cnt)) AS BIGINT) AS num2,
+                  CAST(sum(cnt) AS BIGINT) AS p, CAST(sum(tot - cnt) AS BIGINT) AS n
+                FROM pg GROUP BY g)
          SELECT label, round(CAST(num2 AS DOUBLE) / (2.0 * p * n), 6) AS auc,
                 p AS n_pos, n AS n_neg
-         FROM ag ORDER BY label""")),
+         FROM ag ORDER BY label"""
+    }),
 
     // Autocorrelation function of the daily value series per
     // event_type at lags 1..7 — the seasonality/persistence audit
@@ -4045,57 +4032,6 @@ object Extensions {
                 round(pow(n - log10(1.0 + 1.0 / digit) * nn, 2)
                       / (log10(1.0 + 1.0 / digit) * nn), 6) AS chi2
          FROM dg CROSS JOIN t ORDER BY digit""")),
-
-    // Two-sample Kolmogorov–Smirnov statistic per source (doc-length
-    // distribution vs the REST of the corpus) — the drift detector
-    // that needs no binning choice, complementing q_x_psi's bucketed
-    // PSI. CDFs are compared on the exact union support at the
-    // (source × distinct-length) grain; the sup|F₁−F₂| numerator is
-    // exact integers (c₁·n₂ − c₂·n₁), max'd BEFORE the one division,
-    // so the statistic is engine-exact. Corpus-sized work: two tiny
-    // aggregates; windows run on the grain table only.
-    Query("q_x_ks", (s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val docs = table(s, d, "documents")
-      val sl = docs.groupBy(col("source"), col("n_chars")).agg(count(lit(1)).as("c"))
-      val lt = docs.groupBy(col("n_chars")).agg(count(lit(1)).as("t"))
-      val st = docs.groupBy(col("source")).agg(count(lit(1)).as("ns"))
-      val tot = docs.agg(count(lit(1)).as("nn"))
-      val grid = st.crossJoin(broadcast(tot)).crossJoin(broadcast(lt))
-        .join(sl, Seq("source", "n_chars"), "left").na.fill(0L, Seq("c"))
-      val w = Window.partitionBy(col("source")).orderBy(col("n_chars"))
-      grid
-        .withColumn("c1", sum(col("c")).over(w))
-        .withColumn("ct", sum(col("t")).over(w))
-        .withColumn("num", abs(col("c1") * (col("nn") - col("ns"))
-          - (col("ct") - col("c1")) * col("ns")))
-        .groupBy(col("source"), col("ns"), col("nn"))
-        .agg(max(col("num")).as("m"))
-        .select(col("source"),
-          round(col("m").cast("double") / (col("ns") * (col("nn") - col("ns"))), 6).as("ks"),
-          col("ns").cast("long").as("n_source"),
-          (col("nn") - col("ns")).cast("long").as("n_rest"))
-        .orderBy(col("source"))
-    }, Some(
-      """WITH sl AS (SELECT source, n_chars, count(*) AS c FROM documents GROUP BY 1, 2),
-         lt AS (SELECT n_chars, count(*) AS t FROM documents GROUP BY 1),
-         st AS (SELECT source, count(*) AS ns FROM documents GROUP BY 1),
-         tt AS (SELECT count(*) AS nn FROM documents),
-         grid AS (SELECT st.source, st.ns, tt.nn, lt.n_chars, lt.t,
-                    COALESCE(sl.c, 0) AS c
-                  FROM st CROSS JOIN tt CROSS JOIN lt
-                  LEFT JOIN sl ON sl.source = st.source AND sl.n_chars = lt.n_chars),
-         cum AS (SELECT source, ns, nn,
-                   sum(c) OVER w AS c1, sum(t) OVER w AS ct
-                 FROM grid WINDOW w AS (PARTITION BY source ORDER BY n_chars)),
-         nums AS (SELECT source, ns, nn,
-                    abs(c1 * (nn - ns) - (ct - c1) * ns) AS num
-                  FROM cum)
-         SELECT source,
-                round(CAST(max(num) AS DOUBLE) / (ns * (nn - ns)), 6) AS ks,
-                CAST(ns AS BIGINT) AS n_source,
-                CAST(nn - ns AS BIGINT) AS n_rest
-         FROM nums GROUP BY source, ns, nn ORDER BY source""")),
 
     // Day-of-week seasonal index per event_type: mean daily value by
     // DOW ÷ overall mean — the load-profile / weekly-cycle audit that

@@ -9,8 +9,8 @@ import graft.Tables.table
 import graft.Cuts.CutOps
 
 /** Round-11 wave 2 (SURVEY.md §2.8e): the k-sample statistical-test
-  * completions (Kruskal–Wallis, Bartlett, Welch ANOVA, Tukey HSD,
-  * Jarque–Bera), partial correlation and ridge regression, SAX
+  * completions (Bartlett, Welch ANOVA, Tukey HSD, Jarque–Bera),
+  * partial correlation and ridge regression, SAX
   * time-series symbolization, RFM user scoring, and Adamic–Adar link
   * prediction on the semantic graph — re-expressing the ad-hoc
   * statistical audits the reference's SQL surface supports
@@ -69,69 +69,6 @@ object Round11b {
   private val jbKurt = s"($jbM4 / ($jbM2 * $jbM2))"
 
   val queries: Seq[Query] = Seq(
-
-    // Kruskal–Wallis H across the source groups on n_chars — the
-    // k-sample generalization of q_x_mann_whitney, with the exact
-    // tie-correction. Mid-ranks at value grain stay INTEGER as
-    // 2·rank (global cum-below arrives through the per-source
-    // partitioned window over the sources × values table, so no
-    // unpartitioned window); the per-group rank sums are exact
-    // BIGINTs, and the only double fold (Σ R²/n over k rows) runs
-    // single-sorted-partition.
-    Query("q_x_kruskal", (s, d) => {
-      val sc = table(s, d, "documents").select(col("source"), col("n_chars"))
-      val gs = sc.groupBy(col("n_chars")).agg(count(lit(1)).as("tot"))
-      val gl = sc.groupBy(col("source"), col("n_chars")).agg(count(lit(1)).as("cnt"))
-      val uni = broadcast(sc.select(col("source")).distinct())
-        .crossJoin(gs)
-        .join(gl, Seq("source", "n_chars"), "left").na.fill(0L, Seq("cnt"))
-      val w = Window.partitionBy(col("source")).orderBy(col("n_chars"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val perSrc = uni
-        .withColumn("r2",
-          lit(2L) * coalesce(sum(col("tot")).over(w), lit(0L)) + col("tot") + 1L)
-        .groupBy(col("source"))
-        .agg(sum(col("cnt")).as("nj"), sum(col("cnt") * col("r2")).as("r2j"))
-      val t = gs.agg(sum(col("tot")).as("n"),
-        sum(col("tot") * col("tot") * col("tot") - col("tot")).as("tsum"))
-      perSrc.coalesce(1).sortWithinPartitions(col("source"))
-        .crossJoin(broadcast(t))
-        .agg(count(lit(1)).as("k"), max(col("n")).as("n"), max(col("tsum")).as("tsum"),
-          sum(col("r2j").cast("double") * col("r2j") / (lit(4L) * col("nj"))).as("srb"))
-        .selectExpr("k", "n",
-          """round((12.0 / (CAST(n AS DOUBLE) * (n + 1)) * srb - 3.0 * (n + 1)) /
-                   (1.0 - CAST(tsum AS DOUBLE) /
-                          (CAST(n AS DOUBLE) * n * n - n)), 6) AS h""",
-          "CAST(k - 1 AS BIGINT) AS dof")
-    }, Some(
-      """WITH gs AS (SELECT n_chars, CAST(count(*) AS BIGINT) AS tot
-                     FROM documents GROUP BY n_chars),
-         gl AS (SELECT source, n_chars, CAST(count(*) AS BIGINT) AS cnt
-                FROM documents GROUP BY source, n_chars),
-         uni AS (SELECT s.source, g.n_chars, g.tot, COALESCE(l.cnt, 0) AS cnt
-                 FROM (SELECT DISTINCT source FROM documents) s
-                 CROSS JOIN gs g
-                 LEFT JOIN gl l ON l.source = s.source AND l.n_chars = g.n_chars),
-         r AS (SELECT source, cnt,
-                 2 * COALESCE(sum(tot) OVER (PARTITION BY source ORDER BY n_chars
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                   + tot + 1 AS r2
-               FROM uni),
-         ps AS (SELECT source, CAST(sum(cnt) AS BIGINT) AS nj,
-                  CAST(sum(cnt * r2) AS BIGINT) AS r2j
-                FROM r GROUP BY source),
-         t AS (SELECT CAST(sum(tot) AS BIGINT) AS n,
-                 CAST(sum(tot * tot * tot - tot) AS BIGINT) AS tsum FROM gs),
-         a AS (SELECT CAST(count(*) AS BIGINT) AS k, max(t.n) AS n,
-                 max(t.tsum) AS tsum,
-                 sum(CAST(r2j AS DOUBLE) * r2j / (4 * nj)) AS srb
-               FROM (SELECT * FROM ps ORDER BY source) ps, t)
-         SELECT k, n,
-                round((12.0 / (CAST(n AS DOUBLE) * (n + 1)) * srb - 3.0 * (n + 1)) /
-                      (1.0 - CAST(tsum AS DOUBLE) /
-                             (CAST(n AS DOUBLE) * n * n - n)), 6) AS h,
-                CAST(k - 1 AS BIGINT) AS dof
-         FROM a""")),
 
     // Bartlett's homogeneity-of-variance test across sources — the
     // parametric sibling of q_x_levene (sharper under normality,

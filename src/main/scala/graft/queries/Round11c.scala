@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables.table
 import graft.functions.TextFunctions
@@ -10,9 +9,7 @@ import graft.functions.TextFunctions
 /** Round-11 wave 3 (SURVEY.md §2.8e): the governance/audit layer a
   * training-data pipeline runs before release — re-identification
   * risk (k-anonymity, l-diversity), filter-bias audits (fairness
-  * gaps of the language-ID gate across sources), distribution
-  * distance with exact arithmetic (Wasserstein-1 on the value
-  * grain), clustering evaluation (pair-counting P/R/F1 + adjusted
+  * gaps of the language-ID gate across sources), clustering evaluation (pair-counting P/R/F1 + adjusted
   * Rand between two dedup keyings), graph cohesion (local clustering
   * coefficient), the G-test of independence, the Cochran–Armitage
   * trend test, Neyman sampling allocation, and the Nelson–Aalen
@@ -21,9 +18,7 @@ import graft.functions.TextFunctions
   * (reference README.md:62-78).
   *
   * Determinism (§7.4): counts stay BIGINT to the last expression;
-  * Wasserstein's integral is an EXACT cross-multiplied integer sum
-  * (|ca·nb − cb·na|·Δv through DECIMAL(38,0)) with one final
-  * division; the ≤k-row double folds (G-test cells, Neyman strata)
+  * the ≤k-row double folds (G-test cells, Neyman strata)
   * run on ONE sorted partition in Spark and an ORDER BY subquery in
   * the oracle (the q_x_levene pattern); per-cohort hazard cumsums
   * ride a partitioned window with a unique ORDER BY key so both
@@ -134,72 +129,6 @@ object Round11c {
                   FROM per)
          SELECT source, n, sel_rate, tpr, fpr, parity_gap, tpr_gap, fpr_gap
          FROM per, gaps ORDER BY source""")),
-
-    // Wasserstein-1 distance between every source pair's length
-    // distribution, EXACTLY: on the value grain, W1 = Σ_v |F_a−F_b|·Δv
-    // = Σ |ca·nb − cb·na|·Δv / (na·nb) — the numerator is an integer
-    // accumulated in DECIMAL(38,0) (order-free), one division at the
-    // end. The spine is |distinct lengths| × (k choose 2) rows —
-    // value-grain, never corpus-grain.
-    Query("q_x_wasserstein", (s, d) => {
-      val h = table(s, d, "documents")
-        .groupBy(col("source"), col("n_chars").as("v"))
-        .agg(count(lit(1)).as("cnt"))
-      val tot = h.groupBy(col("source")).agg(sum(col("cnt")).as("n"))
-      val prs = broadcast(tot.select(col("source").as("sa"), col("n").as("na")))
-        .crossJoin(broadcast(tot.select(col("source").as("sb"), col("n").as("nb"))))
-        .filter(col("sa") < col("sb"))
-      val spine = h.select(col("v")).distinct()
-      val grid = prs.join(spine)
-        .join(h.select(col("source").as("sa"), col("v"), col("cnt").as("ca")),
-          Seq("sa", "v"), "left")
-        .join(h.select(col("source").as("sb"), col("v"), col("cnt").as("cb")),
-          Seq("sb", "v"), "left")
-        .na.fill(0L, Seq("ca", "cb"))
-      val w = Window.partitionBy(col("sa"), col("sb")).orderBy(col("v"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      grid
-        .withColumn("cuma", sum(col("ca")).over(w))
-        .withColumn("cumb", sum(col("cb")).over(w))
-        .withColumn("dv",
-          lead(col("v"), 1).over(Window.partitionBy(col("sa"), col("sb"))
-            .orderBy(col("v"))) - col("v"))
-        .filter(col("dv").isNotNull)
-        .groupBy(col("sa"), col("sb"), col("na"), col("nb"))
-        // cross-multiply in DECIMAL from the start — cuma·nb in LONG
-        // would wrap silently past ~3e9 rows per source (grubbs lesson)
-        .agg(sum(abs(col("cuma").cast(DecimalType(19, 0)) * col("nb") -
-            col("cumb").cast(DecimalType(19, 0)) * col("na")) * col("dv"))
-          .as("num"))
-        .select(col("sa"), col("sb"),
-          round(col("num").cast("double") / (col("na").cast("double") * col("nb")), 6)
-            .as("w1"))
-        .orderBy(col("sa"), col("sb"))
-    }, Some(
-      """WITH h AS (SELECT source, n_chars AS v, CAST(count(*) AS BIGINT) AS cnt
-                    FROM documents GROUP BY source, n_chars),
-         tot AS (SELECT source, sum(cnt) AS n FROM h GROUP BY source),
-         prs AS (SELECT a.source AS sa, a.n AS na, b.source AS sb, b.n AS nb
-                 FROM tot a, tot b WHERE a.source < b.source),
-         spine AS (SELECT DISTINCT v FROM h),
-         grid AS (SELECT p.sa, p.sb, p.na, p.nb, s.v,
-                         coalesce(ha.cnt, 0) AS ca, coalesce(hb.cnt, 0) AS cb
-                  FROM prs p CROSS JOIN spine s
-                  LEFT JOIN h ha ON ha.source = p.sa AND ha.v = s.v
-                  LEFT JOIN h hb ON hb.source = p.sb AND hb.v = s.v),
-         cum AS (SELECT sa, sb, na, nb, v,
-                        sum(ca) OVER (PARTITION BY sa, sb ORDER BY v
-                          ROWS UNBOUNDED PRECEDING) AS cuma,
-                        sum(cb) OVER (PARTITION BY sa, sb ORDER BY v
-                          ROWS UNBOUNDED PRECEDING) AS cumb,
-                        lead(v) OVER (PARTITION BY sa, sb ORDER BY v) - v AS dv
-                 FROM grid)
-         SELECT sa, sb,
-                round(CAST(sum(abs(CAST(cuma AS DECIMAL(19,0)) * nb
-                                   - CAST(cumb AS DECIMAL(19,0)) * na) * dv)
-                           AS DOUBLE) / (CAST(na AS DOUBLE) * nb), 6) AS w1
-         FROM cum WHERE dv IS NOT NULL
-         GROUP BY sa, sb, na, nb ORDER BY sa, sb""")),
 
     // Clustering evaluation: pair-counting precision/recall/F1 and
     // adjusted Rand index of a cheap BLOCKING key (md5 of the 10-word

@@ -134,95 +134,6 @@ object Round14b {
     s"(((1 - 2.0 / (9 * $aa)) - $cbrt) / sqrt(2.0 / (9 * $aa)))"
   }
 
-  /** One-vs-rest pooled midranks at VALUE grain (the ansari/kruskal
-    * cross-join): every (source, distinct n_chars) cell carries the
-    * pooled tot, the source's cnt, the doubled midrank 2r = r2 (exact
-    * BIGINT), and the pooled N — ONE pooled ranking serves every
-    * source.
-    */
-  private def pooledRanks(s: SparkSession, d: String): DataFrame = {
-    val docs = table(s, d, "documents").select(col("source"), col("n_chars"))
-    val gs = docs.groupBy(col("n_chars")).agg(count(lit(1)).as("tot"))
-    val nn = gs.agg(sum(col("tot")).as("n"))
-    val gl = docs.groupBy(col("source"), col("n_chars")).agg(count(lit(1)).as("cnt"))
-    val uni = broadcast(docs.select(col("source")).distinct())
-      .crossJoin(gs)
-      .join(gl, Seq("source", "n_chars"), "left").na.fill(0L, Seq("cnt"))
-    val w = Window.partitionBy(col("source")).orderBy(col("n_chars"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    uni.withColumn("r2",
-        lit(2L) * coalesce(sum(col("tot")).over(w), lit(0L)) + col("tot") + 1L)
-      .crossJoin(broadcast(nn))
-  }
-
-  /** The same value-grain midrank CTE prefix for the oracle. */
-  private val PooledRanksSql: String =
-    """gs AS (SELECT n_chars, CAST(count(*) AS BIGINT) AS tot
-             FROM documents GROUP BY n_chars),
-       gl AS (SELECT source, n_chars, CAST(count(*) AS BIGINT) AS cnt
-              FROM documents GROUP BY source, n_chars),
-       nn AS (SELECT CAST(sum(tot) AS BIGINT) AS n FROM gs),
-       uni AS (SELECT s.source, g.n_chars, g.tot, COALESCE(l.cnt, 0) AS cnt
-               FROM (SELECT DISTINCT source FROM documents) s
-               CROSS JOIN gs g
-               LEFT JOIN gl l ON l.source = s.source AND l.n_chars = g.n_chars),
-       r AS (SELECT u.source, u.n_chars, u.cnt, nn.n,
-               2 * COALESCE(sum(u.tot) OVER (PARTITION BY u.source ORDER BY u.n_chars
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                 + u.tot + 1 AS r2
-             FROM uni u, nn)"""
-
-  /** Cucconi standardized rank-square sum: U over q = 4ΣR² (so
-    * 6ΣR² = 1.5q, exact BIGINT in), shared for the straight (q4) and
-    * contrary (q4c) directions.
-    */
-  private def cucconiUTxt(q: String): String =
-    s"""((1.5 * CAST($q AS DOUBLE) - CAST(n1 AS DOUBLE) * (n + 1) * (2 * n + 1))
-        / sqrt(CAST(n1 AS DOUBLE) * (n - n1) * (n + 1) * (2 * n + 1)
-            * (8 * CAST(n AS DOUBLE) + 11) / 5))"""
-
-  private val CucconiRhoTxt: String =
-    """((2 * (CAST(n AS DOUBLE) * n - 4)
-        / ((2 * n + 1) * (8 * CAST(n AS DOUBLE) + 11))) - 1)"""
-
-  /** Ansari–Bradley no-ties normal approximation (both N-parity
-    * branches) over the doubled score sum 2A and group size n1 —
-    * the q_x_ansari text, shared here by q_x_lepage.
-    */
-  private val AnsariZTxt: String =
-    """((CAST(a2 AS DOUBLE) / 2 -
-        CASE WHEN n % 2 = 0 THEN CAST(n1 AS DOUBLE) * (n + 2) / 4
-             ELSE CAST(n1 AS DOUBLE) * (n + 1) * (n + 1) / (4 * n) END)
-       / sqrt(CASE WHEN n % 2 = 0
-            THEN CAST(n1 AS DOUBLE) * (n - n1) * (n + 2) * (n - 2) / (48 * (n - 1))
-            ELSE CAST(n1 AS DOUBLE) * (n - n1) * (n + 1) * (3 + n * n) / (48 * CAST(n AS DOUBLE) * n) END))"""
-
-  /** Wilcoxon rank-sum z over the doubled rank sum 2W (no-ties
-    * declared): E[W] = n1(N+1)/2, Var[W] = n1·n2(N+1)/12.
-    */
-  private val WilcoxonZTxt: String =
-    """((CAST(w2 AS DOUBLE) / 2 - CAST(n1 AS DOUBLE) * (n + 1) / 2)
-       / sqrt(CAST(n1 AS DOUBLE) * (n - n1) * (n + 1) / 12))"""
-
-  /** Dunn pairwise z (tie-corrected): mean-rank difference over the
-    * pooled standard error. Mean ranks ride exact doubled rank sums
-    * (w2 = 2·ΣR); tsum = Σ(t³−t) over pooled tie groups.
-    */
-  private val DunnZTxt: String =
-    s"""((CAST(w2_a AS DOUBLE) / 2 / n1_a - CAST(w2_b AS DOUBLE) / 2 / n1_b)
-        / sqrt((CAST(n AS DOUBLE) * (n + 1) / 12
-            - CAST(tsum AS DOUBLE) / (12 * (n - 1)))
-          * (CAST(1 AS DOUBLE) / n1_a + CAST(1 AS DOUBLE) / n1_b)))"""
-
-  /** Brunner–Munzel variance of one group from exact moments: with
-    * D = 2R − 2R_int per value (exact BIGINT) and K = (n_g+1)/2 − m_g,
-    * Σcnt(D/2 + K)² = D²-sum/4 + K·D-sum + K²·n_g.
-    */
-  private def bmVTxt(d1: String, d2: String, ng: String, m: String): String = {
-    val k = s"((CAST($ng AS DOUBLE) + 1) / 2 - $m)"
-    s"""((0.25 * CAST($d2 AS DOUBLE) + $k * $d1 + $k * $k * $ng) / ($ng - 1))"""
-  }
-
   /** The declared-ordinal-bucketing contingency + doubled pair sums
     * (2C/2D/2T_y/2T_x) CTE shared by the gamma/somers_d oracles.
     */
@@ -601,223 +512,6 @@ object Round14b {
                      THEN round($DaZ1Txt * $DaZ1Txt + $DaZ2Txt * $DaZ2Txt, 6)
                      ELSE NULL END AS k2
          FROM g ORDER BY source""")),
-
-    // Cucconi joint location-scale test, each source vs the pooled
-    // corpus (one-vs-rest, DECLARED midranks): U standardizes ΣR²,
-    // V standardizes the contrary ΣR'² (R' = N+1−R), C = (U² + V²
-    // − 2ρUV)/(2(1−ρ²)) with the exact correlation ρ = 2(N²−4)/
-    // ((2N+1)(8N+11)) − 1. Both rank-square sums ride the doubled
-    // midranks: 4ΣR² = Σcnt·r2² and 4ΣR'² = Σcnt·(2(N+1)−r2)² are
-    // exact BIGINTs from the ONE pooled ranking all sources share.
-    // The older two-statistic cousin of q_x_lepage — it senses
-    // location AND scale in one quadratic form. Guard n >= 3: at
-    // pooled N = 2, ρ = −1 zeroes the C denominator 2(1−ρ²), so the
-    // degenerate two-observation corpus surfaces NULL (not NaN/Inf).
-    Query("q_x_cucconi", (s, d) => {
-      val r2c = lit(2L) * (col("n") + 1L) - col("r2")
-      val u = cucconiUTxt("q4")
-      val v = cucconiUTxt("q4c")
-      pooledRanks(s, d)
-        .groupBy(col("source"), col("n"))
-        .agg(sum(col("cnt")).as("n1"),
-          sum(col("cnt") * col("r2") * col("r2")).as("q4"),
-          sum(col("cnt") * r2c * r2c).as("q4c"))
-        .selectExpr("source", "n1 AS n",
-          s"""CASE WHEN n1 >= 1 AND n - n1 >= 1 AND n >= 3
-                THEN round($u, 6) ELSE NULL END AS u""",
-          s"""CASE WHEN n1 >= 1 AND n - n1 >= 1 AND n >= 3
-                THEN round($v, 6) ELSE NULL END AS v""",
-          s"""CASE WHEN n1 >= 1 AND n - n1 >= 1 AND n >= 3
-                THEN round(($u * $u + $v * $v - 2 * $CucconiRhoTxt * $u * $v)
-                  / (2 * (1 - $CucconiRhoTxt * $CucconiRhoTxt)), 6)
-                ELSE NULL END AS c""")
-        .orderBy(col("source"))
-    }, Some {
-      // Same pooled-midrank CTE, same exact doubled-rank squares, same
-      // U/V/ρ expression text.
-      val u = cucconiUTxt("q4")
-      val v = cucconiUTxt("q4c")
-      s"""WITH $PooledRanksSql,
-         ps AS (SELECT source, max(n) AS n, CAST(sum(cnt) AS BIGINT) AS n1,
-                  CAST(sum(cnt * r2 * r2) AS BIGINT) AS q4,
-                  CAST(sum(cnt * (2 * (n + 1) - r2) * (2 * (n + 1) - r2)) AS BIGINT) AS q4c
-                FROM r GROUP BY source)
-         SELECT source, n1 AS n,
-                CASE WHEN n1 >= 1 AND n - n1 >= 1 AND n >= 3
-                     THEN round($u, 6) ELSE NULL END AS u,
-                CASE WHEN n1 >= 1 AND n - n1 >= 1 AND n >= 3
-                     THEN round($v, 6) ELSE NULL END AS v,
-                CASE WHEN n1 >= 1 AND n - n1 >= 1 AND n >= 3
-                     THEN round(($u * $u + $v * $v - 2 * $CucconiRhoTxt * $u * $v)
-                       / (2 * (1 - $CucconiRhoTxt * $CucconiRhoTxt)), 6)
-                     ELSE NULL END AS c
-         FROM ps ORDER BY source"""
-    }),
-
-    // Lepage joint location-scale test, each source vs the pooled
-    // corpus: L = z_W² + z_A² — the standardized Wilcoxon rank sum
-    // (location) plus the standardized Ansari–Bradley score sum
-    // (scale), both riding exact BIGINT doubled sums (2W = Σcnt·r2,
-    // 2A = Σcnt·min(r2, 2(N+1)−r2)) from the same one pooled
-    // ranking; DECLARED no-ties moments for both components (the
-    // q_x_ansari parity-branch text, shared).
-    Query("q_x_lepage", (s, d) => {
-      pooledRanks(s, d)
-        .groupBy(col("source"), col("n"))
-        .agg(sum(col("cnt")).as("n1"),
-          sum(col("cnt") * col("r2")).as("w2"),
-          sum(col("cnt") * least(col("r2"), lit(2L) * (col("n") + 1L) - col("r2")))
-            .as("a2"))
-        .selectExpr("source", "n1 AS n",
-          s"""CASE WHEN n1 >= 1 AND n - n1 >= 1
-                THEN round($WilcoxonZTxt, 6) ELSE NULL END AS z_w""",
-          s"""CASE WHEN n1 >= 1 AND n - n1 >= 1
-                THEN round($AnsariZTxt, 6) ELSE NULL END AS z_a""",
-          s"""CASE WHEN n1 >= 1 AND n - n1 >= 1
-                THEN round($WilcoxonZTxt * $WilcoxonZTxt + $AnsariZTxt * $AnsariZTxt, 6)
-                ELSE NULL END AS l""")
-        .orderBy(col("source"))
-    }, Some(
-      // Same pooled ranking, same exact 2W/2A sums, same component
-      // texts.
-      s"""WITH $PooledRanksSql,
-         ps AS (SELECT source, max(n) AS n, CAST(sum(cnt) AS BIGINT) AS n1,
-                  CAST(sum(cnt * r2) AS BIGINT) AS w2,
-                  CAST(sum(cnt * least(r2, 2 * (n + 1) - r2)) AS BIGINT) AS a2
-                FROM r GROUP BY source)
-         SELECT source, n1 AS n,
-                CASE WHEN n1 >= 1 AND n - n1 >= 1
-                     THEN round($WilcoxonZTxt, 6) ELSE NULL END AS z_w,
-                CASE WHEN n1 >= 1 AND n - n1 >= 1
-                     THEN round($AnsariZTxt, 6) ELSE NULL END AS z_a,
-                CASE WHEN n1 >= 1 AND n - n1 >= 1
-                     THEN round($WilcoxonZTxt * $WilcoxonZTxt + $AnsariZTxt * $AnsariZTxt, 6)
-                     ELSE NULL END AS l
-         FROM ps ORDER BY source""")),
-
-    // Dunn's post-hoc pairwise test across sources — the follow-up a
-    // pipeline runs after q_x_kruskal rejects: z_ij = (R̄_i − R̄_j) /
-    // sqrt((N(N+1)/12 − ΣT/(12(N−1)))·(1/n_i + 1/n_j)) with the
-    // standard tie correction ΣT = Σ(t³−t). Mean ranks ride exact
-    // BIGINT doubled rank sums from the ONE pooled ranking; the
-    // all-pairs grid is k² source rows (dims-bounded — the corpus
-    // never enters the pair join).
-    Query("q_x_dunn", (s, d) => {
-      val ps = pooledRanks(s, d)
-        .groupBy(col("source"), col("n"))
-        .agg(sum(col("cnt")).as("n1"), sum(col("cnt") * col("r2")).as("w2"))
-        .cut(eager = true)
-      val ties = table(s, d, "documents")
-        .groupBy(col("n_chars")).agg(count(lit(1)).as("tot"))
-        .agg(sum(col("tot") * col("tot") * col("tot") - col("tot")).as("tsum"))
-      val a = ps.select(col("source").as("source_a"), col("n"),
-        col("n1").as("n1_a"), col("w2").as("w2_a"))
-      val b = ps.select(col("source").as("source_b"),
-        col("n1").as("n1_b"), col("w2").as("w2_b"))
-      a.join(broadcast(b), col("source_a") < col("source_b"))
-        .crossJoin(broadcast(ties))
-        .selectExpr("source_a", "source_b",
-          s"""CASE WHEN n1_a >= 1 AND n1_b >= 1 AND n >= 2
-                THEN round($DunnZTxt, 6) ELSE NULL END AS z""")
-        .orderBy(col("source_a"), col("source_b"))
-    }, Some(
-      // Same pooled ranking, same exact doubled rank sums, same
-      // tie-corrected z text over the k² pair grid.
-      s"""WITH $PooledRanksSql,
-         ps AS (SELECT source, max(n) AS n, CAST(sum(cnt) AS BIGINT) AS n1,
-                  CAST(sum(cnt * r2) AS BIGINT) AS w2
-                FROM r GROUP BY source),
-         ties AS (SELECT CAST(sum(tot * tot * tot - tot) AS BIGINT) AS tsum FROM gs),
-         pr AS (SELECT a.source AS source_a, b.source AS source_b, a.n AS n,
-                  a.n1 AS n1_a, a.w2 AS w2_a, b.n1 AS n1_b, b.w2 AS w2_b
-                FROM ps a JOIN ps b ON a.source < b.source)
-         SELECT source_a, source_b,
-                CASE WHEN n1_a >= 1 AND n1_b >= 1 AND n >= 2
-                     THEN round($DunnZTxt, 6) ELSE NULL END AS z
-         FROM pr, ties
-         ORDER BY source_a, source_b""")),
-
-    // Brunner–Munzel test, each source vs the pooled rest
-    // (DECLARED orientation: group 1 = the source, group 2 = the
-    // complement; p̂ = P(X₁ < X₂) + ½P(X₁ = X₂)). The variance terms
-    // need pooled AND internal midranks — both fall out of the same
-    // value-grain frame (internal doubled midranks are per-source
-    // windows over cnt and tot−cnt), and the per-observation squared
-    // deviations collapse to exact BIGINT moments via the D = 2R−2R_int
-    // expansion, so no double accumulates across rows. W follows
-    // Brunner–Munzel (2000): n1·n2·(m2−m1)/(N·sqrt(n1·v1 + n2·v2)).
-    Query("q_x_brunner_munzel", (s, d) => {
-      val w = Window.partitionBy(col("source")).orderBy(col("n_chars"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val rk = pooledRanks(s, d)
-        .withColumn("rcnt", col("tot") - col("cnt"))
-        .withColumn("q2o",
-          lit(2L) * coalesce(sum(col("cnt")).over(w), lit(0L)) + col("cnt") + 1L)
-        .withColumn("q2r",
-          lit(2L) * coalesce(sum(col("rcnt")).over(w), lit(0L)) + col("rcnt") + 1L)
-      val ps = rk.groupBy(col("source"), col("n"))
-        .agg(sum(col("cnt")).as("n1"),
-          sum(col("cnt") * col("r2")).as("w2o"),
-          sum(col("cnt") * (col("r2") - col("q2o"))).as("d1"),
-          sum(col("cnt") * (col("r2") - col("q2o")) * (col("r2") - col("q2o")))
-            .as("d2"),
-          sum(col("rcnt") * col("r2")).as("w2r"),
-          sum(col("rcnt") * (col("r2") - col("q2r"))).as("e1"),
-          sum(col("rcnt") * (col("r2") - col("q2r")) * (col("r2") - col("q2r")))
-            .as("e2"))
-      val m1 = "(CAST(w2o AS DOUBLE) / 2 / n1)"
-      val m2 = "(CAST(w2r AS DOUBLE) / 2 / (n - n1))"
-      val v1 = bmVTxt("d1", "d2", "n1", m1)
-      val v2 = bmVTxt("e1", "e2", "(n - n1)", m2)
-      val guard = s"n1 >= 2 AND n - n1 >= 2 AND (n1 * $v1 + (n - n1) * $v2) > 0"
-      ps.selectExpr("source", "n1 AS n",
-        s"""CASE WHEN $guard
-              THEN round(($m2 - (CAST(n AS DOUBLE) - n1 + 1) / 2) / n1, 6)
-              ELSE NULL END AS p_hat""",
-        s"""CASE WHEN $guard
-              THEN round(CAST(n1 AS DOUBLE) * (n - n1) * ($m2 - $m1)
-                / n / sqrt(n1 * $v1 + (n - n1) * $v2), 6)
-              ELSE NULL END AS w_bm""")
-        .orderBy(col("source"))
-    }, Some {
-      // Same value-grain pooled + internal midranks, same exact-moment
-      // variance expansion, same W/p̂ text.
-      val m1 = "(CAST(w2o AS DOUBLE) / 2 / n1)"
-      val m2 = "(CAST(w2r AS DOUBLE) / 2 / (n - n1))"
-      val v1 = bmVTxt("d1", "d2", "n1", m1)
-      val v2 = bmVTxt("e1", "e2", "(n - n1)", m2)
-      val guard = s"n1 >= 2 AND n - n1 >= 2 AND (n1 * $v1 + (n - n1) * $v2) > 0"
-      s"""WITH $PooledRanksSql,
-         rk AS (SELECT source, n, cnt, r2, tot - cnt AS rcnt,
-                  2 * COALESCE(sum(cnt) OVER (PARTITION BY source ORDER BY n_chars
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                    + cnt + 1 AS q2o,
-                  2 * COALESCE(sum(tot - cnt) OVER (PARTITION BY source ORDER BY n_chars
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                    + (tot - cnt) + 1 AS q2r
-                FROM (SELECT u.source, u.n_chars, u.tot, u.cnt, nn.n,
-                        2 * COALESCE(sum(u.tot) OVER (PARTITION BY u.source ORDER BY u.n_chars
-                              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                          + u.tot + 1 AS r2
-                      FROM uni u, nn)),
-         ps AS (SELECT source, max(n) AS n, CAST(sum(cnt) AS BIGINT) AS n1,
-                  CAST(sum(cnt * r2) AS BIGINT) AS w2o,
-                  CAST(sum(cnt * (r2 - q2o)) AS BIGINT) AS d1,
-                  CAST(sum(cnt * (r2 - q2o) * (r2 - q2o)) AS BIGINT) AS d2,
-                  CAST(sum(rcnt * r2) AS BIGINT) AS w2r,
-                  CAST(sum(rcnt * (r2 - q2r)) AS BIGINT) AS e1,
-                  CAST(sum(rcnt * (r2 - q2r) * (r2 - q2r)) AS BIGINT) AS e2
-                FROM rk GROUP BY source)
-         SELECT source, n1 AS n,
-                CASE WHEN $guard
-                     THEN round(($m2 - (CAST(n AS DOUBLE) - n1 + 1) / 2) / n1, 6)
-                     ELSE NULL END AS p_hat,
-                CASE WHEN $guard
-                     THEN round(CAST(n1 AS DOUBLE) * (n - n1) * ($m2 - $m1)
-                       / n / sqrt(n1 * $v1 + (n - n1) * $v2), 6)
-                     ELSE NULL END AS w_bm
-         FROM ps ORDER BY source"""
-    }),
 
     // Fleiss' kappa over the event stream: DECLARED framing — each
     // day is a subject, each event that day is one "rating", the
@@ -2041,47 +1735,6 @@ object Round14b {
          SELECT cs.cohort, cs.n, med.med_dur
          FROM cs LEFT JOIN med ON med.cohort = cs.cohort
          ORDER BY cs.cohort""")),
-
-    // Mood's rank-based SCALE test, each source vs the pooled corpus
-    // (distinct from q_x_mood_median's location test): T =
-    // Σ(R_i − (N+1)/2)² — squared distance of the group's pooled
-    // ranks from the center; DECLARED no-ties moments E[T] =
-    // n1(N²−1)/12, Var[T] = n1·n2(N+1)(N²−4)/180. Doubled midranks
-    // make 4T = Σcnt·(r2 − (N+1))² exact BIGINT from the ONE pooled
-    // ranking all sources share (the ansari/cucconi machinery); the
-    // fourth member of the scale-test family (ansari ranks from the
-    // edges, fligner normal-scores, cucconi both directions).
-    Query("q_x_mood_scale", (s, d) => {
-      val dev = col("r2") - (col("n") + 1L)
-      pooledRanks(s, d)
-        .groupBy(col("source"), col("n"))
-        .agg(sum(col("cnt")).as("n1"),
-          sum(col("cnt") * dev * dev).as("t4"))
-        .selectExpr("source", "n1 AS n",
-          "CAST(t4 AS DOUBLE) / 4 AS t",
-          s"""CASE WHEN n1 >= 1 AND n - n1 >= 1
-                THEN round((CAST(t4 AS DOUBLE) / 4
-                    - CAST(n1 AS DOUBLE) * (CAST(n AS DOUBLE) * n - 1) / 12)
-                  / sqrt(CAST(n1 AS DOUBLE) * (n - n1) * (n + 1)
-                      * (CAST(n AS DOUBLE) * n - 4) / 180), 6)
-                ELSE NULL END AS z""")
-        .orderBy(col("source"))
-    }, Some(
-      // Same pooled ranking, exact doubled-deviation squares, declared
-      // no-ties moments.
-      s"""WITH $PooledRanksSql,
-         ps AS (SELECT source, max(n) AS n, CAST(sum(cnt) AS BIGINT) AS n1,
-                  CAST(sum(cnt * (r2 - (n + 1)) * (r2 - (n + 1))) AS BIGINT) AS t4
-                FROM r GROUP BY source)
-         SELECT source, n1 AS n,
-                CAST(t4 AS DOUBLE) / 4 AS t,
-                CASE WHEN n1 >= 1 AND n - n1 >= 1
-                 THEN round((CAST(t4 AS DOUBLE) / 4
-                     - CAST(n1 AS DOUBLE) * (CAST(n AS DOUBLE) * n - 1) / 12)
-                   / sqrt(CAST(n1 AS DOUBLE) * (n - n1) * (n + 1)
-                       * (CAST(n AS DOUBLE) * n - 4) / 180), 6)
-                 ELSE NULL END AS z
-         FROM ps ORDER BY source""")),
 
     // Chao1 vocabulary-richness estimate + Good–Turing coverage over
     // the whitespace-token vocabulary — "how many word types does the

@@ -8,16 +8,15 @@ import graft.Cuts.CutOps
 
 /** Statistical-audit operators (SURVEY.md §2.8c): the hypothesis-test /
   * calibration / regression primitives a corpus-quality pipeline runs
-  * over per-source slices. All eight are DuckDB-oracle-able: every
+  * over per-source slices. Every one is DuckDB-oracle-able: every
   * statistic is assembled from exact integer aggregates (counts, sums
   * of integer columns, rank numerators kept ×2 to stay integral) with
   * the float division(s) deferred to one final, syntactically identical
   * expression on both engines, so pre-round doubles agree bit-for-bit.
   *
   * Scale shapes (the 100 TB contract):
-  *  - mann_whitney / anova operate at VALUE or SOURCE grain — the
-  *    shuffled tables are bounded by the value range × source count,
-  *    not the corpus.
+  *  - anova operates at SOURCE grain — the shuffled table is bounded
+  *    by the source count, not the corpus.
   *  - spearman reduces to (event_type, value)-grain rank tables;
   *    kendall to an (hour × int-value) cell table whose self-join is
   *    grain² (≤ ~12k cells), constant in corpus size.
@@ -52,67 +51,6 @@ object Stats {
     s"(${det3("n", "s1", "sy", "s1", "s11", "s1y", "s2", "s12", "s2y")} / $detM)"
 
   val queries: Seq[Query] = Seq(
-
-    // Mann–Whitney U (one source vs rest, on n_chars): the rank-sum
-    // test behind "does source S write longer docs than the corpus?".
-    // Computed entirely at VALUE grain — U's numerator is kept ×2 in
-    // exact longs (the tie-aware AUC identity), and the tie-corrected
-    // variance term T = Σ(t³−t) is one pass over the value-grain
-    // table shared by all 20 splits. No corpus-wide rank window.
-    Query("q_x_mann_whitney", (s, d) => {
-      val sc = table(s, d, "documents").select(col("source"), col("n_chars"))
-      val gs = sc.groupBy(col("n_chars")).agg(count(lit(1)).as("tot"))
-      val gl = sc.groupBy(col("source"), col("n_chars")).agg(count(lit(1)).as("cnt"))
-      val uni = broadcast(sc.select(col("source")).distinct())
-        .crossJoin(gs)
-        .join(gl, Seq("source", "n_chars"), "left").na.fill(0L, Seq("cnt"))
-      val w = Window.partitionBy(col("source")).orderBy(col("n_chars"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val cum = uni.withColumn("cumoth",
-        coalesce(sum(col("tot") - col("cnt")).over(w), lit(0L)))
-      val t = gs.agg(sum(col("tot") * col("tot") * col("tot") - col("tot")).as("tsum"))
-      cum.groupBy(col("source"))
-        .agg(
-          sum(lit(2L) * col("cnt") * col("cumoth") +
-            col("cnt") * (col("tot") - col("cnt"))).as("u2"),
-          sum(col("cnt")).as("n1"), sum(col("tot") - col("cnt")).as("n2"))
-        .crossJoin(broadcast(t))
-        .select(col("source"), col("n1"), col("n2"),
-          round(col("u2") / lit(2.0), 6).as("u"),
-          round((col("u2") - col("n1") * col("n2")) /
-            (lit(2.0) * sqrt(
-              col("n1").cast("double") * col("n2") / 12.0 *
-                ((col("n1") + col("n2") + 1) -
-                  col("tsum") / ((col("n1") + col("n2")).cast("double") *
-                    (col("n1") + col("n2") - 1))))), 6).as("z"))
-        .orderBy(col("source"))
-    }, Some(
-      """WITH gs AS (SELECT n_chars, CAST(count(*) AS BIGINT) AS tot
-                     FROM documents GROUP BY n_chars),
-         gl AS (SELECT source, n_chars, CAST(count(*) AS BIGINT) AS cnt
-                FROM documents GROUP BY source, n_chars),
-         uni AS (SELECT s.source, gs.n_chars, gs.tot, coalesce(gl.cnt, 0) AS cnt
-                 FROM (SELECT DISTINCT source FROM documents) s
-                 CROSS JOIN gs
-                 LEFT JOIN gl ON gl.source = s.source AND gl.n_chars = gs.n_chars),
-         cum AS (SELECT source, tot, cnt,
-                   coalesce(CAST(sum(tot - cnt) OVER (PARTITION BY source
-                     ORDER BY n_chars
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT), 0)
-                     AS cumoth
-                 FROM uni),
-         t AS (SELECT CAST(sum(tot * tot * tot - tot) AS BIGINT) AS tsum FROM gs),
-         agg AS (SELECT source,
-                   CAST(sum(2 * cnt * cumoth + cnt * (tot - cnt)) AS BIGINT) AS u2,
-                   CAST(sum(cnt) AS BIGINT) AS n1,
-                   CAST(sum(tot - cnt) AS BIGINT) AS n2
-                 FROM cum GROUP BY source)
-         SELECT source, n1, n2, round(u2 / 2.0, 6) AS u,
-                round((u2 - n1 * n2) /
-                  (2.0 * sqrt(CAST(n1 AS DOUBLE) * n2 / 12.0 *
-                    ((n1 + n2 + 1) - tsum / (CAST(n1 + n2 AS DOUBLE) * (n1 + n2 - 1)))))
-                  , 6) AS z
-         FROM agg CROSS JOIN t ORDER BY source""")),
 
     // One-way ANOVA of n_chars across sources: k-group mean
     // separation as one F statistic + effect size. n_i, Σx, Σx² stay

@@ -344,7 +344,7 @@ class DedupSpec extends SparkSuite {
       (3L, "z1 z2 z3 z4 z5 z6 z7 z8 z9 z10"), // singleton
       (7L, "q1 q2 q3 q4 q5 q6 q7 q8 q9 q10")  // singleton
     ).toDF("doc_id", "text")
-    val out = Dedup.keepLongestPerCluster(spark, docs, "text", "doc_id", 0.6)
+    val out = Dedup.keepLongestPerCluster(docs, "text", "doc_id", 0.6)
       .select($"doc_id", $"cluster_id", $"keep")
       .as[(Long, Long, Boolean)].collect()
     val keepById = out.map(r => r._1 -> r._3).toMap
@@ -368,7 +368,7 @@ class DedupSpec extends SparkSuite {
       ("doc-c", "z1 z2 z3 z4 z5 z6 z7 z8 z9 z10"),
       ("doc-g", "q1 q2 q3 q4 q5 q6 q7 q8 q9 q10")
     ).toDF("doc_id", "text")
-    val out = Dedup.keepLongestPerCluster(spark, docs, "text", "doc_id", 0.6)
+    val out = Dedup.keepLongestPerCluster(docs, "text", "doc_id", 0.6)
       .select($"doc_id", $"cluster_id", $"keep")
       .as[(String, String, Boolean)].collect()
     val keepById = out.map(r => r._1 -> r._3).toMap
