@@ -72,6 +72,7 @@ object GraftSparkExtensions {
     Fn("graft_minhash_union", 1, classOf[MinHashUnion], e => MinHashUnion(e(0))),
     Fn("graft_freq_items", 2, classOf[FreqItems], FreqItems.build),
     Fn("graft_adc", 2, classOf[AdcLookup], e => AdcLookup(e(0), e(1))),
+    Fn("graft_lsh_codes", 4, classOf[LshCodes], LshCodes.build),
     Fn("graft_jaro_winkler", 2, classOf[JaroWinklerSim], e => JaroWinklerSim(e(0), e(1))),
     Fn("graft_kmv", 2, classOf[KmvSketch], KmvSketch.build),
     Fn("graft_cms", 3, classOf[CmsSketch], CmsSketch.build),

@@ -240,28 +240,27 @@ object Dedup {
       .filter(col("doc_a") =!= col("doc_b"))
       .select(col("doc_a"), col("doc_b"))
       .dropDuplicates("doc_a", "doc_b")
-    cand
+    atVerifyWidth(cand)
       .join(la.select(col("doc_a"), col("s").as("sa")), Seq("doc_a"))
       .join(rb.select(col("doc_b"), col("s").as("sb")), Seq("doc_b"))
-      // explicit width: the per-pair set intersection is CPU-heavy but
-      // byte-light, so AQE's size-based coalescing serializes it (one
-      // 150 s task in the r10 sf1 evidence run); a user-specified
-      // partition count is exempt from coalescing
-      .repartition(verifyWidth(cand))
       .withColumn("inter", call_function("graft_intersect_count", col("sa"), col("sb")))
       .filter(col("inter") * q >= size(col("sa")).cast("long") * p)
       .select(col("doc_a"), col("doc_b"),
         round(col("inter").cast("double") / size(col("sa")), 6).as("containment"))
   }
 
-  /** Partition width for CPU-bound-but-byte-light verify stages: AQE
-    * coalesces exchanges by DATA SIZE, so a stage whose per-row cost is
-    * a set intersection over ~100-element arrays can get packed into
-    * one task even when 32 cores are idle. Pinning a user-specified
-    * count opts the exchange out of coalescing (AQE never overrides an
-    * explicit `repartition(n)`).
+  /** Candidate id pairs spread to the verify width, before the joins
+    * that fetch their sets. The per-pair set intersection is CPU-heavy
+    * but byte-light, so AQE's size-based coalescing would pack it into
+    * one task even with 32 cores idle (one 150 s task in the r10 sf1
+    * evidence run); a user-specified `repartition(n)` is exempt from
+    * coalescing. The repartition sits below the set joins because
+    * Catalyst pushes the threshold filter into the last join's
+    * condition: placed above them, it would leave the intersection in
+    * the coalesced join stage. DedupSpec pins this shape.
     */
-  private def verifyWidth(df: DataFrame): Int = VerifyWidth.of(df)
+  private def atVerifyWidth(cand: DataFrame): DataFrame =
+    cand.repartition(VerifyWidth.of(cand))
 
   private def prefixOf(base: DataFrame, id: String, freq: DataFrame,
       p: Long, q: Long): DataFrame = {
@@ -280,12 +279,9 @@ object Dedup {
     */
   private def verifyJaccard(cand: DataFrame, la: DataFrame, rb: DataFrame,
       p: Long, q: Long): DataFrame =
-    cand
+    atVerifyWidth(cand)
       .join(la.select(col("doc_a"), col("s").as("sa")), Seq("doc_a"))
       .join(rb.select(col("doc_b"), col("s").as("sb")), Seq("doc_b"))
-      // see verifyWidth: keeps the intersection stage at full
-      // parallelism under AQE's size-based coalescing
-      .repartition(verifyWidth(cand))
       .withColumn("inter", call_function("graft_intersect_count", col("sa"), col("sb")))
       .withColumn("uni", (size(col("sa")) + size(col("sb"))).cast("long") - col("inter"))
       .filter(col("inter") * q >= col("uni") * p)

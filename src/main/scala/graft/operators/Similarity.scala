@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -196,40 +196,34 @@ object Similarity {
     Array.fill(nPlanes)(Array.fill(dim)(next()))
   }
 
-  /** Sign-bit LSH code (one long, nPlanes ≤ 63 bits) for an embedding
-    * column, against the deterministic hyperplanes of table
-    * `tableIdx` (each table draws an independent plane set from the
-    * seeded generator).
+  /** Sign-bit LSH codes of an embedding column, one long (nPlanes ≤ 63
+    * bits) per hash table, from the codegen'd `graft_lsh_codes` kernel
+    * ([[graft.functions.LshCodes]]): table t uses the deterministic
+    * planes `hyperplanes(nPlanes, dim, seed = 42 + 1000·t)`, so each
+    * table draws an independent plane set, and no plane value enters
+    * the plan.
+    */
+  private def codes(emb: Column, nPlanes: Int, nTables: Int, dim: Int): Column =
+    call_function("graft_lsh_codes", emb, lit(nPlanes), lit(nTables), lit(dim))
+
+  /** The sign-bit LSH code of table `tableIdx` for an embedding column,
+    * as column `lsh_code`.
     */
   def lshCode(spark: SparkSession, df: DataFrame, embCol: String,
-      nPlanes: Int, dim: Int, tableIdx: Int = 0): DataFrame = {
-    val planes = hyperplanes(nPlanes, dim, seed = 42L + 1000L * tableIdx)
-    val bits = (0 until nPlanes).map { p =>
-      val w = array(planes(p).map(lit).toIndexedSeq: _*)
-      val d = dot(col(embCol), w) // codegen'd ArrayDotProduct
-      when(d > 0, shiftleft(lit(1L), p)).otherwise(lit(0L))
-    }
-    df.withColumn("lsh_code", bits.reduce(_.bitwiseOR(_)))
-  }
+      nPlanes: Int, dim: Int, tableIdx: Int = 0): DataFrame =
+    df.withColumn("lsh_code", codes(col(embCol), nPlanes, tableIdx + 1, dim)(tableIdx))
 
   /** Codes for all tables at once: one row per (row, table) with the
     * table's code — the multi-table form that makes bucket-join recall
     * tunable (1−(1−p^nPlanes)^nTables, amplified by multi-probe).
     */
-  private def lshCodes(spark: SparkSession, df: DataFrame, embCol: String,
-      nPlanes: Int, dim: Int, nTables: Int): DataFrame = {
+  private def lshCodes(df: DataFrame, embCol: String,
+      nPlanes: Int, dim: Int, nTables: Int): DataFrame =
     // All tables' codes in ONE projection + posexplode — a single scan
     // of the input, where a per-table union would rescan it nTables
     // times (plan audit: 8 parquet scans → 2 for the kNN query).
-    val codes = array((0 until nTables).map { t =>
-      val planes = hyperplanes(nPlanes, dim, seed = 42L + 1000L * t)
-      (0 until nPlanes).map { p =>
-        val w = array(planes(p).map(lit).toIndexedSeq: _*)
-        when(dot(col(embCol), w) > 0, shiftleft(lit(1L), p)).otherwise(lit(0L))
-      }.reduce(_.bitwiseOR(_))
-    }: _*)
-    df.select(col("*"), posexplode(codes).as(Seq("lsh_table", "lsh_code")))
-  }
+    df.select(col("*"), posexplode(codes(col(embCol), nPlanes, nTables, dim))
+      .as(Seq("lsh_table", "lsh_code")))
 
   /** Hash-plane count that keeps expected bucket occupancy ~constant
     * (~`target` rows/bucket) as the corpus grows: 2^planes buckets ∝ N.
@@ -291,9 +285,9 @@ object Similarity {
       val est = estimatedRows(corpus, dim)
       autoPlanes(if (est > 0) est else corpus.count())
     }
-    val qc = lshCodes(spark, queries.select(col("vec_id").as("query_id"),
+    val qc = lshCodes(queries.select(col("vec_id").as("query_id"),
       col("embedding").as("qv")), "qv", nPlanes0, dim, nTables)
-    val cc = lshCodes(spark, corpus.select(col("vec_id").as("cand_id"),
+    val cc = lshCodes(corpus.select(col("vec_id").as("cand_id"),
       col("embedding").as("cv")), "cv", nPlanes0, dim, nTables)
     // multi-probe: explode each query into its code + nPlanes 1-bit flips
     val probes = qc.select(col("query_id"), col("qv"), col("lsh_table"), col("lsh_code"),
@@ -304,8 +298,12 @@ object Similarity {
     val cands = probes.join(cc,
         probes("lsh_table") === cc("lsh_table") && col("probe_code") === cc("lsh_code"))
       .filter(col("query_id") =!= col("cand_id"))
+      // a pair found through several tables has the same cosine in
+      // each: rounding it per candidate row lets the dedup carry one
+      // double instead of both vectors (a hash aggregate, not a sort
+      // aggregate over array columns)
+      .select(col("query_id"), col("cand_id"), round(cosine(col("qv"), col("cv")), 9).as("cos"))
       .dropDuplicates("query_id", "cand_id")
-      .withColumn("cos", round(cosine(col("qv"), col("cv")), 9))
     val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("cand_id"))
     cands.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)

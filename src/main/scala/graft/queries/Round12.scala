@@ -3,8 +3,6 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables.table
-
 /** Round-12 wave 1 (SURVEY.md §2.8f): partial autocorrelation — the
   * AR-order diagnostic q_x_acf cannot answer ("is the lag-2
   * correlation real or just lag-1 twice?"), a closed-form fold over

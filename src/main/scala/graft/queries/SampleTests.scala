@@ -303,9 +303,13 @@ object SampleTests {
     // sup|F₁−F₂| numerator is exact integers (c₁·n₂ − c₂·n₁) from the
     // inclusive running counts (cbelow + cnt, below + tot), max'd
     // BEFORE the one division, so the statistic is engine-exact.
-    Query("q_x_ks", (s, d) =>
-      pooledGrid(lengthCounts(s, d))
-        .withColumn("ns", sum(col("cnt")).over(Window.partitionBy(col("g"))))
+    Query("q_x_ks", (s, d) => {
+      val counts = lengthCounts(s, d)
+      // the per-group total as a grouped aggregate of the (g, v) counts,
+      // broadcast onto the grid, not a window over the whole grid
+      val ns = counts.groupBy(col("g")).agg(sum(col("cnt")).as("ns"))
+      pooledGrid(counts)
+        .join(broadcast(ns), "g")
         .withColumn("c1", col("cbelow") + col("cnt"))
         .withColumn("num", abs(col("c1") * (col("n") - col("ns"))
           - (col("below") + col("tot") - col("c1")) * col("ns")))
@@ -316,7 +320,8 @@ object SampleTests {
           // sums of counts, never NULL: declared non-null in the output
           coalesce(col("ns"), lit(0L)).as("n_source"),
           coalesce(col("n") - col("ns"), lit(0L)).as("n_rest"))
-        .orderBy(col("source")), Some(
+        .orderBy(col("source"))
+    }, Some(
       s"""WITH ${pooledGridSql(LengthCountsSql)},
          nums AS (SELECT g, ns, n,
                     abs((cbelow + cnt) * (n - ns) - (below + tot - cbelow - cnt) * ns) AS num

@@ -1,8 +1,11 @@
 package graft
 
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, REPARTITION_BY_NUM, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 
-import graft.functions.TextFunctions
+import graft.functions.{ArrayIntersectCount, TextFunctions}
 import graft.operators.Dedup
 
 /** Dedup-family behavior (SURVEY.md §2.8) on handmade corpora with
@@ -377,5 +380,32 @@ class DedupSpec extends SparkSuite {
     // cluster_id = min id in component under STRING ordering
     assert(out.find(_._1 == "doc-e").get._2 === "doc-a")
     assert(out.groupBy(_._2).values.forall(_.count(_._3) === 1))
+  }
+
+  test("set verify runs graft_intersect_count only in the verify-width stage") {
+    // Catalyst pushes the threshold filter into the set joins'
+    // condition, so the candidate pairs must reach verify width before
+    // those joins: every operator evaluating the intersection reads,
+    // below it in its stage, only the user-specified repartition
+    def shufflesBelow(p: SparkPlan): Seq[ShuffleExchangeExec] = p.children.flatMap {
+      case s: ShuffleExchangeExec => Seq(s)
+      case _: BroadcastExchangeExec => Nil
+      case c => shufflesBelow(c)
+    }
+    for (q <- Seq("q_x_incr_near_dedup", "q_x_containment", "q_x_allpairs_jaccard")) {
+      val plan = SparkEntry.queries(q)(spark, sfDir).queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.initialPlan
+        case p => p
+      }
+      val users = plan.collect {
+        case p if p.expressions.exists(_.exists(_.isInstanceOf[ArrayIntersectCount])) => p
+      }
+      assert(users.nonEmpty, s"$q: no graft_intersect_count in\n$plan")
+      for (u <- users) {
+        val origins = shufflesBelow(u).map(_.shuffleOrigin)
+        assert(origins.nonEmpty && origins.forall(_ == REPARTITION_BY_NUM),
+          s"$q: ${u.nodeName} evaluates the intersection above $origins\n$plan")
+      }
+    }
   }
 }

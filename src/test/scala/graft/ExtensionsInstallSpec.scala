@@ -30,7 +30,7 @@ class ExtensionsInstallSpec extends SparkSuite {
 
   test("every declared function resolves in a brand-new session") {
     val names = GraftSparkExtensions.functions.map(_.name)
-    assert(names.size === 17 && names.distinct === names, names)
+    assert(names.size === 18 && names.distinct === names, names)
     val missing = names.filterNot(n =>
       fresh.sessionState.functionRegistry.functionExists(FunctionIdentifier(n)))
     assert(missing.isEmpty, s"not resolvable in newSession(): $missing")

@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, SortAggregateExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.ArrayType
 
 import graft.functions.VectorFunctions
 import graft.operators.Similarity
@@ -100,6 +103,22 @@ class SimilaritySpec extends SparkSuite {
       assert(jobs.isEmpty,
         s"query construction launched Spark jobs (driver-side materialization): $jobs")
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("lshKnn dedups candidate pairs with no sort aggregate and no array column") {
+    // the cosine is rounded per candidate row before the dedup, so the
+    // aggregate carries (query_id, cand_id, cos), never the vectors
+    val plan = Similarity.lshKnn(spark, emb.filter(col("vec_id") % 25 === 0), emb, k = 10)
+      .queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.initialPlan
+        case p => p
+      }
+    val aggs = plan.collect { case a: BaseAggregateExec => a }
+    assert(aggs.nonEmpty, plan)
+    assert(plan.collect { case a: SortAggregateExec => a }.isEmpty, plan)
+    val arrays = aggs.flatMap(a => a.child.output ++ a.output)
+      .filter(_.dataType.isInstanceOf[ArrayType])
+    assert(arrays.isEmpty, plan)
   }
 
   test("hyperplanes are deterministic across invocations") {
